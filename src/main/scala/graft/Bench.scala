@@ -27,7 +27,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passesRaw = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3")
     // Clamp to >=1 (0 passes would leave `best` empty and crash at report
     // time); fail with context on non-numeric input.
@@ -35,18 +34,7 @@ object Bench {
       case _: NumberFormatException =>
         sys.error(s"SPARK_GRAFT_BENCH_PASSES must be an integer, got '$passesRaw'")
     })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Optional A/B lever for the scan fan-out (Tables.maybeFanout). The
-    // driver never sets it, so driver runs measure the default (auto).
-    sys.env.get("SPARK_GRAFT_FANOUT")
-      .foreach(v => spark.conf.set("spark.graft.scan.fanout", v))
+    val spark = SparkEntry.session()
 
     def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

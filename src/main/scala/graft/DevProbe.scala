@@ -1,70 +1,64 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev tool: stage-level timing probe for hotspot queries (not part of the
-  * driver contract; run with `runMain graft.DevProbe <sfDir> [name ...]`).
-  * With query names as args, times exactly those registered queries (two
-  * passes each, min reported); with none, times the round's hotspot list.
+/** Dev tool with two modes (Bench and Verify do not use it):
+  *
+  *  - `runMain graft.DevProbe floor <sfDir>` — the fixed cost every query
+  *    pays before its own work, each the min of 3 runs:
+  *     - submit: plan + schedule + noop-commit an in-memory 1-row frame
+  *       (no I/O at all), the pure session/job floor;
+  *     - scan1: the same plus opening lineitem.parquet for a 1-column
+  *       LIMIT 1, which adds the footer/row-group open;
+  *     - agg1: a full orders scan plus one shuffle aggregate.
+  *  - `runMain graft.DevProbe explain <query> <sfDir> [outFile]` — the
+  *    query's `explain("formatted")` text (the plans/r{n}/ artifact
+  *    format), to stdout or `outFile`.
+  *
+  * Per-query timing is Bench's job: SPARK_GRAFT_BENCH_ONLY names the
+  * queries, SPARK_GRAFT_BENCH_PASSES the passes. The session comes from
+  * [[SparkEntry.session]], so SPARK_GRAFT_CPUS and SPARK_GRAFT_FANOUT
+  * apply here as in every main.
   */
 object DevProbe {
+  private val usage = "usage: DevProbe floor <sfDir> | " +
+    "DevProbe explain <query> <sfDir> [outFile]"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // A/B lever for the scan fan-out (Tables.maybeFanout): default auto.
-    sys.env.get("SPARK_GRAFT_FANOUT")
-      .foreach(v => spark.conf.set("spark.graft.scan.fanout", v))
+    val mode: SparkSession => Unit = args.toSeq match {
+      case Seq("floor", sfDir) => floor(_, sfDir)
+      case Seq("explain", name, sfDir, out @ _*) if out.size <= 1 =>
+        explain(_, name, sfDir, out.headOption)
+      case _ => sys.error(usage)
+    }
+    val spark = SparkEntry.session()
+    try mode(spark) finally spark.stop()
+  }
 
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+  private def floor(spark: SparkSession, sfDir: String): Unit = {
+    def minOf3(df: => DataFrame): Double = (1 to 3).map { _ =>
+      val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
-    def time1(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+      (System.nanoTime() - t0) / 1e9
+    }.min
+    val submit = minOf3(spark.range(1).toDF())
+    val scan1 = minOf3(Tables.lineitem(spark, sfDir).select("l_orderkey").limit(1))
+    val agg1 = minOf3(Tables.orders(spark, sfDir).groupBy("o_orderstatus").count())
+    println(f"[probe] floor.submit (noop 1-row, no I/O)   $submit%.3f s")
+    println(f"[probe] floor.scan1  (open parquet, LIMIT 1) $scan1%.3f s")
+    println(f"[probe] floor.agg1   (scan + 1 shuffle agg)  $agg1%.3f s")
+  }
+
+  private def explain(spark: SparkSession, name: String,
+      sfDir: String, out: Option[String]): Unit = {
+    val formatted = SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(FormattedMode)
+    out match {
+      case Some(path) =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(path), formatted)
+        println(s"wrote $path")
+      case None => println(formatted)
     }
-
-    val hotspots = Seq("dd_canonical", "dd_components", "ev_range_join",
-      "q16_supplier_variety", "pipe_curate", "q9_product_profit",
-      "ns_snapshot_diff", "ns_list_v2_page", "q15_top_supplier")
-    val names = if (args.length > 1) args.drop(1).toSeq else hotspots
-
-    // Warm up: JIT + codegen cache + parquet footers.
-    noop(operators.Dedup.ddMinhashLsh(spark, sfDir))
-    noop(operators.Relational.q1PricingSummary(spark, sfDir))
-
-    // `floor` pseudo-query: decompose the per-query fixed cost trivial
-    // queries pay in Bench (r8 verdict #8). Three warm measurements:
-    //  - submit: plan + schedule + noop-commit an in-memory 1-row frame
-    //    (no I/O at all) — the pure session/job floor;
-    //  - scan1: the same plus opening lineitem.parquet for a 1-column
-    //    LIMIT 1 — adds footer/row-group open cost;
-    //  - q_set_ops-style trivial aggregates then measure against these.
-    if (names.contains("floor")) {
-      val submit = (1 to 3).map(_ => time1(noop(spark.range(1).toDF()))).min
-      val scan1 = (1 to 3).map(_ => time1(noop(
-        Tables.lineitem(spark, sfDir).select("l_orderkey").limit(1)))).min
-      val agg1 = (1 to 3).map(_ => time1(noop(
-        Tables.orders(spark, sfDir).groupBy("o_orderstatus").count()))).min
-      println(f"[probe] floor.submit (noop 1-row, no I/O)   $submit%.3f s")
-      println(f"[probe] floor.scan1  (open parquet, LIMIT 1) $scan1%.3f s")
-      println(f"[probe] floor.agg1   (scan + 1 shuffle agg)  $agg1%.3f s")
-    }
-
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
-    names.filterNot(_ == "floor").foreach { n =>
-      SparkEntry.queries.get(n) match {
-        case Some(fn) =>
-          val secs = (1 to runs).map(_ => time1(noop(fn(spark, sfDir))))
-          println(f"[probe] $n%-28s min ${secs.min}%.2f s  runs ${secs.map(s => f"$s%.2f").mkString(" ")}")
-        case None => println(s"[probe] $n: not registered")
-      }
-    }
-    spark.stop()
   }
 }

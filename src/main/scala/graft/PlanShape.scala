@@ -124,15 +124,7 @@ object AqePlanProbe {
     // PlanShapeSpec gates the flips against an explicit allowlist.
     val sfDirs =
       if (args.length > 1) args.drop(1).toSeq else Seq("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session()
     val sections = sfDirs.map { sfDir =>
       // Recorded scale indicator (ADVICE r15 #1): the flip gate must order
       // sections by ACTUAL data size, not probe argument order — a run
@@ -209,14 +201,9 @@ object PlanProbe {
     val out = if (args.nonEmpty) args(0) else "PLANS.json"
     val sfDirs = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Pinned to the spec session's 4 cores: PlanShapeSpec compares these
+    // counts with its own plans, and the fan-out reads defaultParallelism.
+    val spark = SparkEntry.session(cores = 4)
     val sections = sfDirs.map { sfDir =>
       val lines = (SparkEntry.queries ++ extraPlans).toSeq.sortBy(_._1)
         .map { case (name, fn) =>

@@ -43,15 +43,7 @@ object ScalingProbe {
     val base = "/root/testdata/sf0.1"
     val scaled =
       if (organic) s"/tmp/graft_scaled_org_x$n" else s"/tmp/graft_scaled_x$n"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     val shuffleRead = new LongAdder
     val shuffleWrite = new LongAdder

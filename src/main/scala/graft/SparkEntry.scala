@@ -6,6 +6,34 @@ import graft.operators._
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
+  /** `local[n]` core count every main uses unless it pins its own:
+    * SPARK_GRAFT_CPUS, default 4.
+    */
+  def cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The one session contract every graft main and spec builds through:
+    * `local[cores]` with as many shuffle partitions as cores, UTC session
+    * time, the `nanosAsLong` parquet read [[Tables.normalizeTs]] relies
+    * on, no UI, WARN logging. `fair` turns on the FAIR scheduler for
+    * callers that run queries concurrently (Verify). SPARK_GRAFT_FANOUT,
+    * when set, becomes `spark.graft.scan.fanout` (off / auto / on), the
+    * A/B and force lever of the scan fan-out in [[Tables.load]].
+    */
+  def session(cores: Int = SparkEntry.cores, fair: Boolean = false): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+    if (fair) b.config("spark.scheduler.mode", "FAIR")
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_FANOUT")
+      .foreach(v => spark.conf.set("spark.graft.scan.fanout", v))
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")

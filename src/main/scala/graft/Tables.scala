@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.LongType
 
 /** Parquet table loaders for the driver-generated TPC-H-ish testdata.
@@ -18,13 +19,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Deterministic per-table shuffle keys for the scan fan-out exchange —
-    * the natural row identity of each FACT/corpus table (uniqueness is not
-    * required; an even hash spread is). Dimension tables (region, nation,
-    * customer, supplier, part) are deliberately absent: they are
-    * broadcast-sized by definition, and an exchange below a broadcast
-    * build is pure overhead.
-    */
   /** Registry queries where the scan fan-out measurably pays — the
     * allowlist driving [[maybeFanout]] when construction runs under
     * [[withQuery]] (i.e. through `SparkEntry.queries`). Decision data:
@@ -128,6 +122,13 @@ object Tables {
     }
   }
 
+  /** Deterministic per-table shuffle keys for the scan fan-out exchange —
+    * the natural row identity of each FACT/corpus table (uniqueness is not
+    * required; an even hash spread is). Dimension tables (region, nation,
+    * customer, supplier, part) are deliberately absent: they are
+    * broadcast-sized by definition, and an exchange below a broadcast
+    * build is pure overhead.
+    */
   private val fanoutKeys: Map[String, Seq[String]] = Map(
     "orders" -> Seq("o_orderkey"),
     "lineitem" -> Seq("l_orderkey", "l_linenumber"),
@@ -165,17 +166,7 @@ object Tables {
     * Deterministic hash keys keep retries and the cross-layout determinism
     * gates exact (guide §2.5 warns against rand-derived keys).
     */
-  /** (dir mtime, data files) per path — `maybeFanout` runs at
-    * query-construction time on the driver, and re-listing the same table
-    * directory for every query adds measurable driver latency on an
-    * object store with many files (ADVICE r17 #6). The single
-    * `getFileStatus` RPC revalidates the entry: a rewritten table bumps
-    * the directory mtime and refreshes the listing.
-    */
-  private val listingCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Seq[org.apache.hadoop.fs.FileStatus])]()
-
-  private def maybeFanout(spark: SparkSession, df: DataFrame, path: String,
+  private def maybeFanout(spark: SparkSession, df: DataFrame,
       name: String): DataFrame = {
     val mode = spark.conf.get("spark.graft.scan.fanout", "auto")
     if (mode == "off") return df
@@ -193,22 +184,12 @@ object Tables {
     if (mode == "on") return df.repartition(para, keyCols.map(df.col): _*)
     val minBytes = q.flatMap(fanoutMinBytesOverride.get).getOrElse(
       spark.conf.get("spark.graft.scan.fanout.minBytes", "262144").toLong)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return df
-    val st = fs.getFileStatus(p)
-    val files =
-      if (st.isDirectory) {
-        val cached = listingCache.get(path)
-        if (cached != null && cached._1 == st.getModificationTime) cached._2
-        else {
-          val listed = fs.listStatus(p).toSeq.filter(f => f.isFile &&
-            !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          listingCache.put(path, (st.getModificationTime, listed))
-          listed
-        }
-      } else Seq(st)
+    // The data files the scan reads, from the file index Spark listed when
+    // it resolved the read (hidden `_`/`.` files already filtered out).
+    val files = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files)
+    }.getOrElse(Nil)
     val totalBytes = files.map(_.getLen).sum
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
@@ -251,9 +232,8 @@ object Tables {
     */
   def load(spark: SparkSession, sfDir: String, name: String,
       fanout: Boolean = true): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val df = spark.read.parquet(path)
-    if (fanout) maybeFanout(spark, df, path, name) else df
+    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    if (fanout) maybeFanout(spark, df, name) else df
   }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
@@ -275,8 +255,8 @@ object Tables {
     * break the 21 events-derived operators again — every consumer
     * (EventOps, Audit, StreamOps) routes through this one normalizer.
     *
-    * The `spark.sql.legacy.parquet.nanosAsLong=true` config in the
-    * entrypoint sessions (Bench/Verify/Probe/specs) is retained
+    * The `spark.sql.legacy.parquet.nanosAsLong=true` config of the one
+    * session factory ([[SparkEntry.session]]) is retained
     * DELIBERATELY even though current data is µs: it is a no-op for µs
     * parquet, and it is what makes a ns-parquet revert read as LongType
     * (handled here) instead of failing at the scan with an illegal-type

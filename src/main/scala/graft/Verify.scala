@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -37,25 +36,12 @@ object Verify {
     // comma-separated query names to restrict the dump to.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val threads = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // A/B + force lever for the scan fan-out (Tables.maybeFanout): the
-    // driver never sets it; the forced-fanout oracle gate (VERDICT r17 #3)
-    // runs this main with SPARK_GRAFT_FANOUT=on so every allowlisted
-    // query's fanned plan is hash-checked against DuckDB even at scales
-    // where the auto heuristic would skip the exchange.
-    sys.env.get("SPARK_GRAFT_FANOUT")
-      .foreach(v => spark.conf.set("spark.graft.scan.fanout", v))
+    // SPARK_GRAFT_FANOUT=on (read by the session factory) runs the
+    // forced-fanout oracle gate: every allowlisted query's fanned plan is
+    // hash-checked against DuckDB even where auto would skip the exchange.
+    val spark = SparkEntry.session(fair = true)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -100,7 +86,7 @@ object Verify {
     pool.awaitTermination(24, TimeUnit.HOURS)
     System.err.println(f"[verify] DONE ok=${ok.get} fail=${failed.get} " +
       f"of ${names.size} in ${(System.nanoTime() - t0) / 1e9}%.1fs " +
-      f"(threads=$threads, cpus=$cpus)")
+      f"(threads=$threads, cpus=${SparkEntry.cores})")
     selfCheck(sfDir, outDir)
     spark.stop()
   }
