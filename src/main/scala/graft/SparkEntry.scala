@@ -63,7 +63,7 @@ object SparkEntry {
     * the full 273-oracle compare 1216 s → ~80 s). The driver's
     * correctness leg runs these strings under a wall budget that the
     * r14/r15 registry outgrew — this is the fix that lets ANY DuckDB
-    * consumer (driver, tools/check.py, the sf1 gate) evaluate each CTE
+    * consumer (tools/check.py included) evaluate each CTE
     * exactly once, Spark-style. The guard `AS (\s*SELECT|VALUES` keeps
     * window clauses (`WINDOW w AS (PARTITION …)`) untouched; results are
     * bit-identical (materialization changes evaluation, not semantics).

@@ -94,7 +94,10 @@ object Tables {
     "q_grouping_sets", "q_join_skew_salted", "q_order_lateness",
     "q_promo_revenue", "q_rollup_sales", "q_small_qty_revenue")
 
-  /** Per-query OVERRIDE of `spark.graft.scan.fanout.minBytes` (ADVICE r17 /
+  /** Inputs below this size skip the fan-out (see [[maybeFanout]]). */
+  private val fanoutMinBytes: Long = 256L << 10
+
+  /** Per-query OVERRIDE of [[fanoutMinBytes]] (ADVICE r17 /
     * VERDICT r17 #8): the mm_* codec paths do per-row work (PNG/WAV encode +
     * decode) whose cost tracks ROW COUNT, not input bytes — at the bench
     * scale (~0.6 MB documents, 5 k rows) the exchange + 32-task scheduling
@@ -160,9 +163,9 @@ object Tables {
     * more scan tasks than any executor count and the fan-out disables
     * itself; a pathological monolithic input (one giant unsplittable file)
     * fans out, which is exactly the remediation the guide prescribes.
-    * Tiny inputs (< spark.graft.scan.fanout.minBytes, default 256 KiB —
-    * broadcast-side dimensions, sf0.01 correctness tables) skip the
-    * exchange; `spark.graft.scan.fanout=off` disables it globally.
+    * Tiny inputs (< [[fanoutMinBytes]], 256 KiB — broadcast-side
+    * dimensions, sf0.01 correctness tables) skip the exchange;
+    * `spark.graft.scan.fanout=off` disables it globally.
     * Deterministic hash keys keep retries and the cross-layout determinism
     * gates exact (guide §2.5 warns against rand-derived keys).
     */
@@ -182,8 +185,8 @@ object Tables {
     // (VERDICT r17 #3). The per-query allowlist still applies: a query
     // opted out never fans out in any mode, so there is no plan to gate.
     if (mode == "on") return df.repartition(para, keyCols.map(df.col): _*)
-    val minBytes = q.flatMap(fanoutMinBytesOverride.get).getOrElse(
-      spark.conf.get("spark.graft.scan.fanout.minBytes", "262144").toLong)
+    val minBytes =
+      q.flatMap(fanoutMinBytesOverride.get).getOrElse(fanoutMinBytes)
     // The data files the scan reads, from the file index Spark listed when
     // it resolved the read (hidden `_`/`.` files already filtered out).
     val files = df.queryExecution.analyzed.collectFirst {

@@ -145,8 +145,8 @@ class SurveySyncSpec extends AnyFunSuite {
   /** VERDICT r16 #5: the r12/r14/r15 empty driver artifacts were an
     * ORACLE-BUDGET overrun growing back silently as the registry grew.
     * The budget is now a standing gate: every round commits an
-    * ORACLE_TIMES_r{n}.json (tools/oracle_times.py over the Verify
-    * dump's oracle_sql.json), and this test fails if the artifact is
+    * ORACLE_TIMES_r{n}.json (`tools/check.py --times` over the Verify
+    * dump), and this test fails if the artifact is
     * missing, trails the registry, contains an errored oracle, or the
     * serial sf0.01 compare total exceeds 120 s (r16 measured 33.6 s —
     * ~4× headroom for growth; the driver's own budget sits well above).
@@ -154,7 +154,7 @@ class SurveySyncSpec extends AnyFunSuite {
   test("committed oracle-time profile is current and inside the 120s budget") {
     val f = PlanShapeSpec.latestArtifact("ORACLE_TIMES_r(\\d+)\\.json")
     assert(f.nonEmpty,
-      "no ORACLE_TIMES_r{n}.json committed — run tools/oracle_times.py")
+      "no ORACLE_TIMES_r{n}.json committed — run tools/check.py --times")
     val text = java.nio.file.Files.readString(f.get.toPath)
     val total = """"total_sec": ([0-9.]+)""".r
       .findFirstMatchIn(text).map(_.group(1).toDouble)

@@ -11,10 +11,10 @@ makes that state loud and machine-checkable:
 Exit 1: file missing, unparseable, or empty (`{}`) — the r12/r14 failure
         mode; the round has NO driver correctness signal and must fall
         back to CORRECTNESS_LOCAL_r{N}.json + a full local re-run
-        (tools/correctness_artifact.py over a graft.Verify dump).
-Exit 2: populated but has red rows (hash/schema/row mismatches) or far
-        fewer rows than expected_min (default 262) — a real failure or a
-        truncated run.
+        (tools/check.py --artifact over a graft.Verify dump).
+Exit 2: populated but has red rows (hash/schema/row mismatches, missing
+        dumps) or fewer rows than expected_min (default 277, the registry
+        size) — a real failure or a truncated run.
 Exit 0: populated and fully green (rows-only entries count as green only
         when declared so via their err note, e.g. q_approx_distinct).
 """
@@ -27,7 +27,7 @@ import sys, json
 # The r12/r14/r15 empty artifacts were a BUDGET overrun growing back
 # silently as the registry grew (root-caused r16: DuckDB CTE inlining).
 # This mode fails round prep if the serial sf0.01 oracle compare
-# (tools/oracle_times.py output) exceeds the budget (default 120 s —
+# (tools/check.py --times output) exceeds the budget (default 120 s —
 # r16 measured 33.6 s, so ~4x headroom), or if any oracle errored.
 if len(sys.argv) > 1 and sys.argv[1] == "--oracle-budget":
     tpath = sys.argv[2]
@@ -36,7 +36,7 @@ if len(sys.argv) > 1 and sys.argv[1] == "--oracle-budget":
         t = json.load(open(tpath))
     except Exception as e:
         print(f"FAIL: {tpath} missing/unparseable ({e}) — run "
-              f"tools/oracle_times.py this round")
+              f"tools/check.py --times this round")
         sys.exit(1)
     errs = [n for n, s in t.get("times", {}).items() if s < 0]
     total = t.get("total_sec", 1e9)
@@ -54,7 +54,7 @@ if len(sys.argv) > 1 and sys.argv[1] == "--oracle-budget":
     sys.exit(0)
 
 path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_r15.json"
-expected_min = int(sys.argv[2]) if len(sys.argv) > 2 else 262
+expected_min = int(sys.argv[2]) if len(sys.argv) > 2 else 277
 
 try:
     data = json.load(open(path))
@@ -80,7 +80,7 @@ for name, row in sorted(data.items()):
         continue
     err = (row.get("err") or "")
     # Declared rows-only design (no oracle). The driver writes
-    # err="no_oracle" with spark_rows; correctness_artifact.py writes
+    # err="no_oracle" with spark_rows; tools/check.py writes
     # err="rows-only: ..." with rows_match. Green iff rows landed.
     if ("rows-only" in err or err == "no_oracle") and (
             row.get("rows_match") or (row.get("spark_rows") or 0) > 0):
