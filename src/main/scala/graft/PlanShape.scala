@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Per-query physical plan-shape counters (VERDICT r10 #7): the numbers a
@@ -19,8 +19,23 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   * static plan (codegen stages collapsed, no runtime re-plan wrappers) and
   * the numbers are deterministic for fixed testdata — the runtime AQE plan
   * can only improve on this static shape.
+  *
+  * `exchanges` is the total shuffle count; `exchanges_fanout` is the part
+  * of it that the layout-conditional scan fan-out adds (see
+  * [[fanoutExchange]]), so `exchanges - exchanges_fanout` is the
+  * algorithmic count — the one that grows when an operator's algorithm
+  * does, whatever the input's file layout.
   */
 object PlanShape {
+
+  /** A shuffle from [[Tables]]' scan fan-out: the only `repartition(n,
+    * cols)` in `src/main`, so the only producer of the REPARTITION_BY_NUM
+    * origin.
+    */
+  private def fanoutExchange(p: SparkPlan): Boolean = p match {
+    case e: ShuffleExchangeExec => e.shuffleOrigin == REPARTITION_BY_NUM
+    case _ => false
+  }
 
   /** Every node of the plan, including subquery plans (scalar subqueries,
     * IN-subqueries, DPP), with any adaptive wrapper unwrapped.
@@ -51,7 +66,8 @@ object PlanShape {
       // any emitted scale was previously invisible to the artifact diff.
       "cartesian_joins" -> ns.count(
         _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
-      "bnl_joins" -> ns.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+      "bnl_joins" -> ns.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "exchanges_fanout" -> ns.count(fanoutExchange))
   }
 
   /** Plan-build under the SAME conf the artifact and the spec share: AQE
@@ -104,7 +120,8 @@ object PlanShape {
       "shuffled_hash_joins" -> ns.count(_.isInstanceOf[ShuffledHashJoinExec]),
       "cartesian_joins" -> ns.count(
         _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
-      "bnl_joins" -> ns.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+      "bnl_joins" -> ns.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "exchanges_fanout" -> ns.count(fanoutExchange))
   }
 }
 
@@ -166,9 +183,12 @@ object PlanProbe {
     * LogicalRDD and the exchange-regression gate cannot see the stages
     * before it). Keys carry a `__pre_ckpt` suffix so they can never
     * collide with registry names (SurveySyncSpec owns that namespace).
+    * Each subtree is built under [[Tables.withQuery]] of its registered
+    * query, so it takes that query's scan fan-out decision and the probe
+    * records the plan the query actually checkpoints.
     */
-  val extraPlans: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-      DataFrame] = Map(
+  type Plan = (SparkSession, String) => DataFrame
+  val extraPlans: Map[String, Plan] = Map[String, Plan](
     "dd_incremental__pre_ckpt" ->
       ((s, dir) => graft.operators.Dedup.ddIncrementalRawCand(s, dir)),
     // The verified-edge pipeline shared by dd_canonical, dd_components,
@@ -189,6 +209,10 @@ object PlanProbe {
     // ns_fso_du (resolvePaths checkpoints it before the level loop).
     "ns_fso_paths__pre_ckpt" ->
       ((s, dir) => graft.ObjectStoreView.dirTable(s, dir)))
+    .map { case (key, fn) =>
+      key -> ((s: SparkSession, dir: String) =>
+        Tables.withQuery(key.stripSuffix("__pre_ckpt"))(fn(s, dir)))
+    }
   /** `runMain graft.PlanProbe <out.json> [sfDir ...]` — one section per sf
     * directory (default: sf0.001 AND sf0.1, VERDICT r13 #1: static
     * broadcast-vs-SMJ decisions are size-dependent, so the exchange gate

@@ -270,17 +270,42 @@ class PlanShapeSpec extends SparkSpec {
     val q1 = PlanShape.countsNoAqe(spark,
       SparkEntry.queries("q1_pricing_summary")(spark, sf)).toMap
     assert(q1("exchanges") >= 1 && q1("codegen_spans") >= 1)
+    // The fan-out counter must see the scan fan-out where it fires (the
+    // one-file sf0.1 lineitem on 4 cores: 1 fan-out + 1 aggregate
+    // exchange) and nowhere else (sf0.001 is below the 256 KiB floor), in
+    // the static and the runtime plan alike.
+    val q1Fn = SparkEntry.queries("q1_pricing_summary")
+    val bench = s"${new java.io.File(sf).getParent}/sf0.1"
+    Seq("countsNoAqe" -> PlanShape.countsNoAqe _,
+        "countsAqeFinal" -> PlanShape.countsAqeFinal _).foreach {
+      case (how, counts) =>
+        val big = counts(spark, q1Fn(spark, bench)).toMap
+        assert(big("exchanges_fanout") == 1 &&
+          big("exchanges") - big("exchanges_fanout") == 1,
+          s"q1 $how at sf0.1: $big")
+        val tiny = counts(spark, q1Fn(spark, sf)).toMap
+        assert(tiny("exchanges_fanout") == 0, s"q1 $how at sf0.001: $tiny")
+    }
   }
 
   /** Cross-round plan-shape regression gate (VERDICT r10 #7 / r11 #4):
     * the latest committed PLANS_r{n}.json is the baseline; every query's
-    * live static (AQE-off) shuffle-exchange count must not EXCEED it — an
+    * live static (AQE-off) shuffle exchanges must not EXCEED it — an
     * extra exchange is the one plan drift that silently costs a corpus
-    * shuffle at 100 TB. Other counter drifts (broadcast joins, codegen
-    * spans) are reported via info(), not failed: they move for benign
-    * reasons (operator rewrites, span fusion). After a DELIBERATE plan
-    * improvement, regenerate with
-    * `sbt "runMain graft.PlanProbe PLANS_r{n}.json"` and commit.
+    * shuffle at 100 TB. Two counts are gated, each on its own:
+    *  - algorithmic, `exchanges - exchanges_fanout`: the shuffles the
+    *    operators' algorithms need, whatever the input's file layout;
+    *  - fan-out, `exchanges_fanout`: the layout-conditional scan fan-out
+    *    (REPARTITION_BY_NUM, [[Tables]]), which fires only where a table
+    *    is laid out as a few large files.
+    * A baseline written before the split (no `exchanges_fanout` field,
+    * r≤16) had no fan-out, so its `exchanges` is the algorithmic
+    * baseline and the fan-out count is reported via info(), not gated.
+    * Other counter drifts (broadcast joins, codegen spans) are reported
+    * via info(), not failed: they move for benign reasons (operator
+    * rewrites, span fusion). After a DELIBERATE plan improvement,
+    * regenerate with `sbt "runMain graft.PlanProbe PLANS_r{n}.json"` and
+    * commit.
     */
   test("no query grew a shuffle exchange vs the latest PLANS_r{n} artifact (per sf section)") {
     val arts = Option(new java.io.File(".").listFiles()).get.toSeq
@@ -289,18 +314,23 @@ class PlanShapeSpec extends SparkSpec {
     val latest = arts.maxBy(f =>
       f.getName.stripPrefix("PLANS_r").stripSuffix(".json").toInt)
     val entry = ("\"([a-z0-9_]+)\": \\{\"exchanges\": (\\d+), " +
-      "\"broadcast_exchanges\": (\\d+), \"broadcast_joins\": (\\d+)").r
+      "\"broadcast_exchanges\": (\\d+), \"broadcast_joins\": (\\d+)" +
+      "[^{}]*?(?:\"exchanges_fanout\": (\\d+))?\\}").r
     val text = java.nio.file.Files.readString(latest.toPath)
     // Dual-scale artifact (VERDICT r13 #1): one section per sf directory,
     // each gated against live plans built on ITS OWN sf — static
     // broadcast-vs-SMJ choices are size-dependent, so sf0.001 green does
     // not imply bench-scale green. The pre-r14 single-section artifacts
     // parse as the one-section degenerate case of the same split.
-    val sections: Seq[(String, Map[String, (Int, Int)])] =
+    // Per entry: (algorithmic, fan-out if recorded, broadcast joins).
+    val sections: Seq[(String, Map[String, (Int, Option[Int], Int)])] =
       text.split("\"sf\": \"").toSeq.drop(1).map { chunk =>
         val sfDir = chunk.takeWhile(_ != '"')
-        val baseline = entry.findAllMatchIn(chunk)
-          .map(m => m.group(1) -> (m.group(2).toInt, m.group(4).toInt)).toMap
+        val baseline = entry.findAllMatchIn(chunk).map { m =>
+          val fan = Option(m.group(5)).map(_.toInt)
+          m.group(1) -> (m.group(2).toInt - fan.getOrElse(0), fan,
+            m.group(4).toInt)
+        }.toMap
         sfDir -> baseline
       }
     assert(sections.nonEmpty && sections.forall(_._2.size > 200),
@@ -313,16 +343,27 @@ class PlanShapeSpec extends SparkSpec {
         info(s"section $sfDir skipped: directory absent on this host")
         Nil
       } else gated.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) => baseline.get(name).flatMap {
-          case (baseEx, baseBj) =>
+        case (name, fn) => baseline.get(name).toSeq.flatMap {
+          case (baseAlg, baseFan, baseBj) =>
             val live = PlanShape.countsNoAqe(spark, fn(spark, sfDir)).toMap
-            if (live("exchanges") > baseEx)
-              Some(s"$name@$sfDir: ${live("exchanges")} exchanges vs $baseEx in ${latest.getName}")
-            else {
-              if (live("broadcast_joins") != baseBj)
-                info(s"$name@$sfDir broadcast_joins drifted: ${live("broadcast_joins")} vs $baseBj (not gated)")
-              None
+            val fan = live("exchanges_fanout")
+            val alg = live("exchanges") - fan
+            if (live("broadcast_joins") != baseBj)
+              info(s"$name@$sfDir broadcast_joins drifted: ${live("broadcast_joins")} vs $baseBj (not gated)")
+            val algBad =
+              if (alg > baseAlg) Seq(s"$name@$sfDir: $alg algorithmic " +
+                s"exchanges vs $baseAlg in ${latest.getName} (+$fan fan-out)")
+              else Nil
+            val fanBad = baseFan match {
+              case Some(b) if fan > b => Seq(s"$name@$sfDir: $fan fan-out " +
+                s"exchanges vs $b in ${latest.getName}")
+              case None if fan > 0 =>
+                info(s"$name@$sfDir: $fan fan-out exchanges, ungated " +
+                  s"(${latest.getName} predates exchanges_fanout)")
+                Nil
+              case _ => Nil
             }
+            algBad ++ fanBad
         }
       }
     }
@@ -460,7 +501,9 @@ class PlanShapeSpec extends SparkSpec {
     // dd_* verify/edge joins carry the near-dup candidate frame; the
     // snapshot-diff family joins two corpus-sized namespace states;
     // ev_asof/range join day/hour-blocked event frames; q18/q21/q_cust_*
-    // join order-keyed fact aggregates that track the fact table.
+    // join order-keyed fact aggregates that track the fact table;
+    // pipe_token_budget joins two one-row-per-document frames (token
+    // counts, quality scores) on doc_id, both the size of the corpus.
     val intendedGrowth = Set(
       "dd_ngram_jaccard", "dd_threshold_sweep", "dd_band_sweep",
       "dd_sig_width_sweep", "dd_containment", "dd_source_dup_matrix",
@@ -479,7 +522,7 @@ class PlanShapeSpec extends SparkSpec {
       "q_cust_with_big_orders", "q_cust_no_orders", "q_order_gap",
       "q_integrity_audit", "q_bloom_semijoin", "q_join_skew_salted",
       "ns_key_versions", "ns_lookup_key", "ns_liststatus",
-      "mm_phash_dedup", "mm_scene_cut")
+      "mm_phash_dedup", "mm_scene_cut", "pipe_token_budget")
     val (sfA, base) = sections.head
     val violations = sections.drop(1).flatMap { case (sfB, big) =>
       big.toSeq.sortBy(_._1).flatMap { case (name, (bBj, bSmj)) =>
