@@ -18,47 +18,160 @@ import org.apache.spark.sql.functions._
   * '/'-separated), size BIGINT (bytes), mtime TIMESTAMP, replication INT
   * (actual replica count), state STRING (OPEN | CLOSED).
   *
-  * Every column below is expressible in ANSI SQL so the driver's DuckDB
-  * oracle can rebuild the identical namespace (see SparkEntry.keysSql).
+  * This object is the only place the binding is spelled. Each decision —
+  * volume, bucket, directory and key path, key size, container id, replica
+  * count and replica node — is one Spark `Column` function here with a
+  * DuckDB SQL-string twin beside it, and every view below has an ANSI SQL
+  * twin (`keysSql`, `containerKeysSql`, ...) that selects from one shared
+  * SQL fragment, so the DuckDB oracle rebuilds the identical namespace.
   */
 object ObjectStoreView {
 
-  /** The keys table: one object per lineitem row. Path layout
-    * data/<year>/<month>/<orderkey>-<linenumber>.obj gives a 3-level
+  /** Volume of a source row: vol<id % 3> (lineitem orderkey; the audit
+    * log binds its event id).
+    */
+  def volume(id: Column): Column = volumeName(id % 3)
+
+  /** Volume name from its index v3 = id % 3. */
+  def volumeName(v3: Column): Column = concat(lit("vol"), v3.cast("string"))
+
+  def volumeSql(id: String): String = s"'vol' || CAST($id % 3 AS VARCHAR)"
+
+  /** Bucket of a source row: b<id % 5> (lineitem suppkey; the audit log
+    * binds its user id).
+    */
+  def bucket(id: Column): Column = bucketName(id % 5)
+
+  /** Bucket name from its index b5 = id % 5. */
+  def bucketName(b5: Column): Column = concat(lit("b"), b5.cast("string"))
+
+  def bucketSql(id: String): String = s"'b' || CAST($id % 5 AS VARCHAR)"
+
+  /** Year directory data/<year>. */
+  private def yearDir(yr: Column): Column =
+    concat(lit("data/"), yr.cast("string"))
+
+  /** Month directory data/<year>/<month, 2 digits> — the depth-3 directory
+    * of every key, and the audit log's prefix.
+    */
+  def monthDir(yr: Column, mo: Column): Column =
+    concat(monthDirParts(yr, mo): _*)
+
+  /** Key path data/<year>/<month>/<orderkey>-<linenumber>.obj: a 3-level
     * directory tree for du / listing semantics.
     */
-  def keys(spark: SparkSession, sfDir: String): DataFrame = {
-    val l = Tables.lineitem(spark, sfDir)
-    l.select(
-      concat(lit("vol"), (col("l_orderkey") % 3).cast("string")).as("volume"),
-      concat(lit("b"), (col("l_suppkey") % 5).cast("string")).as("bucket"),
-      concat(
-        lit("data/"), year(col("l_shipdate")).cast("string"),
-        lit("/"), lpad(month(col("l_shipdate")).cast("string"), 2, "0"),
-        lit("/"), col("l_orderkey").cast("string"),
-        lit("-"), col("l_linenumber").cast("string"), lit(".obj")).as("key"),
-      (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint").as("size"),
-      col("l_shipdate").as("mtime"),
-      (lit(1) + (col("l_partkey") % 4)).cast("int").as("replication"),
-      when(col("l_linestatus") === "O", "OPEN").otherwise("CLOSED").as("state"))
-  }
+  def keyPath(yr: Column, mo: Column, o: Column, ln: Column): Column =
+    concat(monthDirParts(yr, mo) ++ Seq(lit("/"), o.cast("string"),
+      lit("-"), ln.cast("string"), lit(".obj")): _*)
 
-  /** DuckDB SQL building the identical keys table (kept in lock-step with
-    * [[keys]]); interpolated into namespace oracle queries as a CTE.
+  private def monthDirParts(yr: Column, mo: Column): Seq[Column] =
+    Seq(lit("data/"), yr.cast("string"), lit("/"),
+      lpad(mo.cast("string"), 2, "0"))
+
+  def monthDirSql(ts: String): String =
+    s"'data/' || CAST(year($ts) AS VARCHAR) || '/' || " +
+      s"lpad(CAST(month($ts) AS VARCHAR), 2, '0')"
+
+  def keyPathSql(o: String, ln: String, ts: String): String =
+    s"${monthDirSql(ts)} || '/' || CAST($o AS VARCHAR) || '-' || " +
+      s"CAST($ln AS VARCHAR) || '.obj'"
+
+  /** Key size in bytes: the extended price in cents. */
+  def keySize(price: Column): Column =
+    (price.cast("decimal(12,2)") * 100).cast("bigint")
+
+  def keySizeSql(price: String): String =
+    s"CAST(CAST($price AS DECIMAL(12,2)) * 100 AS BIGINT)"
+
+  /** Ordinal of key (o, ln): o*7 + ln. It numbers the key's blocks
+    * ([[keyBlocks]]) and places the key in its container.
+    */
+  def keyOrdinal(o: Column, ln: Column): Column = o * 7 + ln
+
+  def keyOrdinalSql(o: String, ln: String): String = s"($o * 7 + $ln)"
+
+  /** Container of key (o, ln), in [0, 1024). */
+  def containerId(o: Column, ln: Column): Column = keyOrdinal(o, ln) % 1024
+
+  def containerIdSql(o: String, ln: String): String =
+    s"(${keyOrdinalSql(o, ln)} % 1024)"
+
+  /** Actual replica count of a container (0 = MISSING), fixed arithmetic
+    * standing in for SCM's replica reports (reference: replication health
+    * states in recon/.../api/ContainerEndpoint.java:285 `/unhealthy/{state}`
+    * and SCM ReplicationManager semantics).
+    */
+  def containerReplicas(containerId: Column): Column =
+    (containerId * 31 + 7) % 5
+
+  def containerReplicasSql(e: String): String = s"(($e * 31 + 7) % 5)"
+
+  /** Replica slot r of container c lives on datanode (c*31 + r*17) % 20 —
+    * fixed arithmetic placement over a 20-node fleet (the reference tracks
+    * real datanode reports; recon/.../api/NodeEndpoint.java:84).
+    */
+  def replicaNode(containerId: Column, r: Column): Column =
+    (containerId * 31 + r * 17) % 20
+
+  def replicaNodeSql(c: String, r: String): String =
+    s"(($c * 31 + $r * 17) % 20)"
+
+  /** Every live replica of the containers in `cont` (a frame carrying
+    * container_id and replicas): one row per slot r in 1..replicas with its
+    * node_id, keeping container_id and the `keep` columns. A container with
+    * 0 replicas places none. Bounded: ≤ 4 rows per container.
+    */
+  def placedReplicas(cont: DataFrame, keep: String*): DataFrame =
+    cont.filter(col("replicas") >= 1)
+      .select((col("container_id") +: keep.map(col)) :+
+        explode(sequence(lit(1), col("replicas"))).as("r"): _*)
+      .withColumn("node_id", replicaNode(col("container_id"), col("r")))
+
+  /** SQL twin of [[placedReplicas]]: a derived table with every column of
+    * `rel` plus r and node_id.
+    */
+  def placedReplicasSql(rel: String): String =
+    s"""(SELECT p.*, u.r, ${replicaNodeSql("p.container_id", "u.r")} AS node_id
+       |  FROM $rel p, UNNEST(range(1, p.replicas + 1)) AS u(r)
+       |  WHERE p.replicas >= 1)""".stripMargin
+
+  /** The key columns of [[keys]], over lineitem's columns. */
+  private def keyColumns: Seq[Column] = Seq(
+    volume(col("l_orderkey")).as("volume"),
+    bucket(col("l_suppkey")).as("bucket"),
+    keyPath(year(col("l_shipdate")), month(col("l_shipdate")),
+      col("l_orderkey"), col("l_linenumber")).as("key"),
+    keySize(col("l_extendedprice")).as("size"),
+    col("l_shipdate").as("mtime"),
+    (lit(1) + (col("l_partkey") % 4)).cast("int").as("replication"),
+    when(col("l_linestatus") === "O", "OPEN").otherwise("CLOSED").as("state"))
+
+  /** lineitem plus every derived binding column: the one SQL spelling of
+    * the namespace, which every view twin below selects from.
+    */
+  private val binding: String =
+    s"""(SELECT *,
+       |    ${volumeSql("l_orderkey")} AS volume,
+       |    ${bucketSql("l_suppkey")} AS bucket,
+       |    ${keyPathSql("l_orderkey", "l_linenumber", "l_shipdate")} AS key,
+       |    ${keySizeSql("l_extendedprice")} AS size,
+       |    l_shipdate AS mtime,
+       |    CAST(1 + (l_partkey % 4) AS INTEGER) AS replication,
+       |    CASE WHEN l_linestatus = 'O' THEN 'OPEN' ELSE 'CLOSED' END AS state,
+       |    CAST(${containerIdSql("l_orderkey", "l_linenumber")} AS BIGINT)
+       |      AS container_id
+       |  FROM lineitem) binding""".stripMargin
+
+  /** The keys table: one object per lineitem row. */
+  def keys(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.lineitem(spark, sfDir).select(keyColumns: _*)
+
+  /** DuckDB SQL building the identical keys table; interpolated into
+    * namespace oracle queries as a CTE.
     */
   val keysSql: String =
-    """SELECT
-      |  'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-      |  'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-      |  'data/' || CAST(year(l_shipdate) AS VARCHAR) || '/' ||
-      |    lpad(CAST(month(l_shipdate) AS VARCHAR), 2, '0') || '/' ||
-      |    CAST(l_orderkey AS VARCHAR) || '-' ||
-      |    CAST(l_linenumber AS VARCHAR) || '.obj' AS key,
-      |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS size,
-      |  l_shipdate AS mtime,
-      |  CAST(1 + (l_partkey % 4) AS INTEGER) AS replication,
-      |  CASE WHEN l_linestatus = 'O' THEN 'OPEN' ELSE 'CLOSED' END AS state
-      |FROM lineitem""".stripMargin
+    s"""SELECT volume, bucket, key, size, mtime, replication, state
+       |FROM $binding""".stripMargin
 
   /** Two snapshot states of the namespace for snapshot-diff semantics
     * (reference: OM snapshot machinery, /root/reference/hadoop-ozone/
@@ -108,8 +221,7 @@ object ObjectStoreView {
       (col("l_suppkey") % 5).as("b5"),
       year(col("l_shipdate")).as("yr"),
       month(col("l_shipdate")).as("mo"),
-      (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint")
-        .as("size"))
+      keySize(col("l_extendedprice")).as("size"))
   }
 
   /** The (volume, bucket, key) string columns rebuilt from the numeric
@@ -118,26 +230,13 @@ object ObjectStoreView {
     * yr/mo, which [[keys]] casts to string the same way).
     */
   def buildKeyColumns(df: DataFrame): DataFrame =
-    df.withColumn("volume",
-        concat(lit("vol"), (col("o") % 3).cast("string")))
-      .withColumn("bucket", concat(lit("b"), col("b5").cast("string")))
-      .withColumn("key", concat(
-        lit("data/"), col("yr").cast("string"),
-        lit("/"), lpad(col("mo").cast("string"), 2, "0"),
-        lit("/"), col("o").cast("string"),
-        lit("-"), col("ln").cast("string"), lit(".obj")))
+    df.withColumn("volume", volume(col("o")))
+      .withColumn("bucket", bucketName(col("b5")))
+      .withColumn("key", keyPath(col("yr"), col("mo"), col("o"), col("ln")))
 
   val keysWithFlagSql: String =
-    """SELECT l_returnflag AS rflag,
-      |  'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-      |  'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-      |  'data/' || CAST(year(l_shipdate) AS VARCHAR) || '/' ||
-      |    lpad(CAST(month(l_shipdate) AS VARCHAR), 2, '0') || '/' ||
-      |    CAST(l_orderkey AS VARCHAR) || '-' ||
-      |    CAST(l_linenumber AS VARCHAR) || '.obj' AS key,
-      |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS size,
-      |  l_shipdate AS mtime
-      |FROM lineitem""".stripMargin
+    s"""SELECT l_returnflag AS rflag, volume, bucket, key, size, mtime
+       |FROM $binding""".stripMargin
 
   private def withFlag(spark: SparkSession, sfDir: String): DataFrame = {
     val l = Tables.lineitem(spark, sfDir)
@@ -148,18 +247,7 @@ object ObjectStoreView {
 
   /** keys() but keeping the source columns alongside (for flag access). */
   private def keysFrom(l: DataFrame): DataFrame =
-    l.select(col("*"),
-      concat(lit("vol"), (col("l_orderkey") % 3).cast("string")).as("volume"),
-      concat(lit("b"), (col("l_suppkey") % 5).cast("string")).as("bucket"),
-      concat(
-        lit("data/"), year(col("l_shipdate")).cast("string"),
-        lit("/"), lpad(month(col("l_shipdate")).cast("string"), 2, "0"),
-        lit("/"), col("l_orderkey").cast("string"),
-        lit("-"), col("l_linenumber").cast("string"), lit(".obj")).as("key"),
-      (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint").as("size"),
-      col("l_shipdate").as("mtime"),
-      (lit(1) + (col("l_partkey") % 4)).cast("int").as("replication"),
-      when(col("l_linestatus") === "O", "OPEN").otherwise("CLOSED").as("state"))
+    l.select(col("*") +: keyColumns: _*)
 
   /** Oracle CTE text for snapshots A and B. */
   val snapshotASql: String =
@@ -168,24 +256,12 @@ object ObjectStoreView {
        |WHERE mtime < TIMESTAMP '1997-01-01'""".stripMargin
 
   val snapshotBSql: String =
-    """SELECT volume, bucket, key,
-      |  CASE WHEN l_returnflag = 'A' THEN size + 1024 ELSE size END AS size,
-      |  mtime, replication, state
-      |FROM (
-      |  SELECT l_returnflag,
-      |    'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-      |    'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-      |    'data/' || CAST(year(l_shipdate) AS VARCHAR) || '/' ||
-      |      lpad(CAST(month(l_shipdate) AS VARCHAR), 2, '0') || '/' ||
-      |      CAST(l_orderkey AS VARCHAR) || '-' ||
-      |      CAST(l_linenumber AS VARCHAR) || '.obj' AS key,
-      |    CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS size,
-      |    l_shipdate AS mtime,
-      |    CAST(1 + (l_partkey % 4) AS INTEGER) AS replication,
-      |    CASE WHEN l_linestatus = 'O' THEN 'OPEN' ELSE 'CLOSED' END AS state
-      |  FROM lineitem
-      |  WHERE l_shipdate < TIMESTAMP '1998-01-01' AND l_returnflag <> 'R'
-      |) snap_b_base""".stripMargin
+    s"""SELECT volume, bucket, key,
+       |  CASE WHEN l_returnflag = 'A' THEN size + 1024 ELSE size END AS size,
+       |  mtime, replication, state
+       |FROM $binding
+       |WHERE mtime < TIMESTAMP '1998-01-01'
+       |  AND l_returnflag <> 'R'""".stripMargin
 
   /** Container → key mapping: every key's data lives in a storage
     * container, derived with fixed arithmetic (container_id in [0, 1024)).
@@ -196,34 +272,14 @@ object ObjectStoreView {
     */
   def containerKeys(spark: SparkSession, sfDir: String): DataFrame =
     keysFrom(Tables.lineitem(spark, sfDir)).select(
-      ((col("l_orderkey") * 7 + col("l_linenumber")) % 1024)
+      containerId(col("l_orderkey"), col("l_linenumber"))
         .cast("bigint").as("container_id"),
       col("volume"), col("bucket"), col("key"), col("size"), col("mtime"),
       col("state"))
 
   val containerKeysSql: String =
-    """SELECT
-      |  CAST((l_orderkey * 7 + l_linenumber) % 1024 AS BIGINT) AS container_id,
-      |  'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-      |  'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-      |  'data/' || CAST(year(l_shipdate) AS VARCHAR) || '/' ||
-      |    lpad(CAST(month(l_shipdate) AS VARCHAR), 2, '0') || '/' ||
-      |    CAST(l_orderkey AS VARCHAR) || '-' ||
-      |    CAST(l_linenumber AS VARCHAR) || '.obj' AS key,
-      |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS size,
-      |  l_shipdate AS mtime,
-      |  CASE WHEN l_linestatus = 'O' THEN 'OPEN' ELSE 'CLOSED' END AS state
-      |FROM lineitem""".stripMargin
-
-  /** Actual replica count of a container (0 = MISSING), fixed arithmetic
-    * standing in for SCM's replica reports (reference: replication health
-    * states in recon/.../api/ContainerEndpoint.java:285 `/unhealthy/{state}`
-    * and SCM ReplicationManager semantics).
-    */
-  def containerReplicas(containerId: Column): Column =
-    (containerId * 31 + 7) % 5
-
-  def containerReplicasSql(e: String): String = s"(($e * 31 + 7) % 5)"
+    s"""SELECT container_id, volume, bucket, key, size, mtime, state
+       |FROM $binding""".stripMargin
 
   /** Replica-report event stream: Recon builds its per-container replica
     * history from datanode container reports — each report updates the
@@ -232,33 +288,30 @@ object ObjectStoreView {
     * persisted as recon/.../persistence/ContainerHistory.java). The test
     * binding makes every key commit a report from ONE of the container's
     * TARGET-placement datanodes: key (o, l) in container c reports replica
-    * slot r = (o*13 + l) % 3 + 1, which the shared placement arithmetic
-    * (see [[graft.operators.Containers]] ct_node_report) maps to node
-    * (c*31 + r*17) % 20, at report_time = the key's mtime. History covers
-    * the 3-slot target placement regardless of CURRENT replica count, so
-    * missing containers keep a timeline — exactly why the endpoint exists.
+    * slot r = (o*13 + l) % 3 + 1, which [[replicaNode]] maps to its node,
+    * at report_time = the key's mtime. History covers the 3-slot target
+    * placement regardless of CURRENT replica count, so missing containers
+    * keep a timeline — exactly why the endpoint exists.
     */
   def replicaReports(spark: SparkSession, sfDir: String): DataFrame = {
     val l = Tables.lineitem(spark, sfDir)
-    val cid = (col("l_orderkey") * 7 + col("l_linenumber")) % 1024
+    val cid = containerId(col("l_orderkey"), col("l_linenumber"))
     val rep = (col("l_orderkey") * 13 + col("l_linenumber")) % 3 + 1
     l.select(
       cid.cast("bigint").as("container_id"),
       rep.cast("int").as("replica_index"),
-      ((cid * 31 + rep * 17) % 20).cast("bigint").as("node_id"),
+      replicaNode(cid, rep).cast("bigint").as("node_id"),
       col("l_shipdate").as("report_time"))
   }
 
-  val replicaReportsSql: String =
-    """SELECT
-      |  CAST((l_orderkey * 7 + l_linenumber) % 1024 AS BIGINT) AS container_id,
-      |  CAST((l_orderkey * 13 + l_linenumber) % 3 + 1 AS INTEGER)
-      |    AS replica_index,
-      |  CAST((((l_orderkey * 7 + l_linenumber) % 1024) * 31
-      |    + ((l_orderkey * 13 + l_linenumber) % 3 + 1) * 17) % 20 AS BIGINT)
-      |    AS node_id,
-      |  l_shipdate AS report_time
-      |FROM lineitem""".stripMargin
+  val replicaReportsSql: String = {
+    val rep = "((l_orderkey * 13 + l_linenumber) % 3 + 1)"
+    s"""SELECT container_id,
+       |  CAST($rep AS INTEGER) AS replica_index,
+       |  CAST(${replicaNodeSql("container_id", rep)} AS BIGINT) AS node_id,
+       |  mtime AS report_time
+       |FROM $binding""".stripMargin
+  }
 
   /** Block-level layout of every key — the granularity below key →
     * container that the fsck tooling walks (tools/.../fsck/
@@ -283,9 +336,10 @@ object ObjectStoreView {
   def keyBlocks(spark: SparkSession, sfDir: String): DataFrame = {
     val l = Tables.lineitem(spark, sfDir)
     val base = keysFrom(l).select(
-      ((col("l_orderkey") * 7 + col("l_linenumber")) % 1024)
+      containerId(col("l_orderkey"), col("l_linenumber"))
         .cast("bigint").as("container_id"),
-      (col("l_orderkey") * 7 + col("l_linenumber")).cast("bigint").as("ord"),
+      keyOrdinal(col("l_orderkey"), col("l_linenumber")).cast("bigint")
+        .as("ord"),
       col("volume"), col("bucket"), col("key"), col("size"))
     base
       .withColumn("n_blocks", expr(s"(size + ${BlockBytes - 1}) DIV $BlockBytes"))
@@ -300,23 +354,15 @@ object ObjectStoreView {
   }
 
   val keyBlocksSql: String =
-    s"""SELECT
-       |  CAST((l_orderkey * 7 + l_linenumber) % 1024 AS BIGINT) AS container_id,
-       |  CAST((l_orderkey * 7 + l_linenumber) * 64 + u.block_seq AS BIGINT)
-       |    AS block_local_id,
+    s"""SELECT container_id,
+       |  CAST(${keyOrdinalSql("l_orderkey", "l_linenumber")} * 64
+       |    + u.block_seq AS BIGINT) AS block_local_id,
        |  CAST(u.block_seq AS BIGINT) AS block_seq,
-       |  'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-       |  'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-       |  'data/' || CAST(year(l_shipdate) AS VARCHAR) || '/' ||
-       |    lpad(CAST(month(l_shipdate) AS VARCHAR), 2, '0') || '/' ||
-       |    CAST(l_orderkey AS VARCHAR) || '-' ||
-       |    CAST(l_linenumber AS VARCHAR) || '.obj' AS key,
-       |  least($BlockBytes,
-       |    CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-       |    - u.block_seq * $BlockBytes) AS block_bytes
-       |FROM lineitem, UNNEST(range(
-       |  (CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
-       |   + ${BlockBytes - 1}) // $BlockBytes)) AS u(block_seq)""".stripMargin
+       |  volume, bucket, key,
+       |  least($BlockBytes, size - u.block_seq * $BlockBytes) AS block_bytes
+       |FROM $binding,
+       |  UNNEST(range((size + ${BlockBytes - 1}) // $BlockBytes))
+       |    AS u(block_seq)""".stripMargin
 
   /** Deleted keys awaiting purge (the trash / deletion pipeline). The
     * RETURNFLAG='R' slice of the namespace stands in for keys moved to the
@@ -331,19 +377,8 @@ object ObjectStoreView {
         col("mtime").as("deletion_time"))
 
   val trashKeysSql: String =
-    """SELECT volume, bucket, key, size, mtime AS deletion_time
-      |FROM (
-      |  SELECT l_returnflag,
-      |    'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-      |    'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-      |    'data/' || CAST(year(l_shipdate) AS VARCHAR) || '/' ||
-      |      lpad(CAST(month(l_shipdate) AS VARCHAR), 2, '0') || '/' ||
-      |      CAST(l_orderkey AS VARCHAR) || '-' ||
-      |      CAST(l_linenumber AS VARCHAR) || '.obj' AS key,
-      |    CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS size,
-      |    l_shipdate AS mtime
-      |  FROM lineitem
-      |) t WHERE l_returnflag = 'R'""".stripMargin
+    s"""SELECT volume, bucket, key, size, mtime AS deletion_time
+       |FROM $binding WHERE l_returnflag = 'R'""".stripMargin
 
   /** Trash keys with their container placement — the join of [[trashKeys]]
     * and the container arithmetic of [[containerKeys]], derived in one
@@ -355,21 +390,13 @@ object ObjectStoreView {
     keysFrom(Tables.lineitem(spark, sfDir))
       .filter(col("l_returnflag") === "R")
       .select(
-        ((col("l_orderkey") * 7 + col("l_linenumber")) % 1024)
+        containerId(col("l_orderkey"), col("l_linenumber"))
           .cast("bigint").as("container_id"),
         col("volume"), col("bucket"), col("key"), col("size"))
 
   val trashContainerKeysSql: String =
-    """SELECT
-      |  CAST((l_orderkey * 7 + l_linenumber) % 1024 AS BIGINT) AS container_id,
-      |  'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-      |  'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-      |  'data/' || CAST(year(l_shipdate) AS VARCHAR) || '/' ||
-      |    lpad(CAST(month(l_shipdate) AS VARCHAR), 2, '0') || '/' ||
-      |    CAST(l_orderkey AS VARCHAR) || '-' ||
-      |    CAST(l_linenumber AS VARCHAR) || '.obj' AS key,
-      |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS size
-      |FROM lineitem WHERE l_returnflag = 'R'""".stripMargin
+    s"""SELECT container_id, volume, bucket, key, size
+       |FROM $binding WHERE l_returnflag = 'R'""".stripMargin
 
   /** GDPR / encryption posture of every key — the compliance dimension of
     * the namespace (reference: buckets carry a `gdprEnabled` metadata flag,
@@ -398,16 +425,13 @@ object ObjectStoreView {
   }
 
   val gdprKeysSql: String =
-    """SELECT
-      |  'vol' || CAST(l_orderkey % 3 AS VARCHAR) AS volume,
-      |  'b' || CAST(l_suppkey % 5 AS VARCHAR) AS bucket,
-      |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS size,
-      |  (l_suppkey % 5) % 2 = 0 AS gdpr_enabled,
-      |  ((l_suppkey % 5) % 2 = 0 OR l_partkey % 5 = 0) AS encrypted,
-      |  l_returnflag = 'R' AS deleted,
-      |  (l_returnflag = 'R' AND (l_suppkey % 5) % 2 = 0
-      |    AND l_orderkey % 97 = 0) AS hygiene_violation
-      |FROM lineitem""".stripMargin
+    s"""SELECT volume, bucket, size,
+       |  (l_suppkey % 5) % 2 = 0 AS gdpr_enabled,
+       |  ((l_suppkey % 5) % 2 = 0 OR l_partkey % 5 = 0) AS encrypted,
+       |  l_returnflag = 'R' AS deleted,
+       |  (l_returnflag = 'R' AND (l_suppkey % 5) % 2 = 0
+       |    AND l_orderkey % 97 = 0) AS hygiene_violation
+       |FROM $binding""".stripMargin
 
   /** Multipart uploads in flight: one upload per open order, parts = its
     * lineitems (reference: S3InitiateMultipartUploadRequest + part key
@@ -421,15 +445,14 @@ object ObjectStoreView {
       .select(
         concat(lit("upload-"), col("o_orderkey").cast("string")).as("upload_id"),
         col("l_linenumber").as("part_number"),
-        (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint").as("part_bytes"))
+        keySize(col("l_extendedprice")).as("part_bytes"))
   }
 
   val mpuPartsSql: String =
-    """SELECT 'upload-' || CAST(o_orderkey AS VARCHAR) AS upload_id,
-      |  l_linenumber AS part_number,
-      |  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS part_bytes
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |WHERE o_orderstatus = 'O'""".stripMargin
+    s"""SELECT 'upload-' || CAST(o_orderkey AS VARCHAR) AS upload_id,
+       |  l_linenumber AS part_number, size AS part_bytes
+       |FROM $binding JOIN orders ON l_orderkey = o_orderkey
+       |WHERE o_orderstatus = 'O'""".stripMargin
 
   /** FSO (FILE_SYSTEM_OPTIMIZED) directory table: one row per directory
     * with (obj_id, parent_id, name) — paths are NOT stored; they must be
@@ -461,8 +484,7 @@ object ObjectStoreView {
       (col("l_suppkey") % 5).as("b5"),
       year(col("l_shipdate")).as("yr"),
       month(col("l_shipdate")).as("mo"),
-      (col("l_extendedprice").cast("decimal(12,2)") * 100).cast("bigint")
-        .as("size"))
+      keySize(col("l_extendedprice")).as("size"))
   }
 
   def dirTable(spark: SparkSession, sfDir: String): DataFrame = {
@@ -487,17 +509,16 @@ object ObjectStoreView {
         col("s.yr").as("yr"), col("s.mo").as("mo"))
       .distinct()
     val path = when(col("lvl") === 1, lit("data"))
-      .when(col("lvl") === 2, concat(lit("data/"), col("yr").cast("string")))
-      .otherwise(concat(lit("data/"), col("yr").cast("string"), lit("/"),
-        lpad(col("mo").cast("string"), 2, "0")))
+      .when(col("lvl") === 2, yearDir(col("yr")))
+      .otherwise(monthDir(col("yr"), col("mo")))
     val parentPath = when(col("lvl") === 2, lit("data"))
-      .otherwise(concat(lit("data/"), col("yr").cast("string")))
+      .otherwise(yearDir(col("yr")))
     def id(p: Column): Column = graft.functions.Codes.foldCode(
       concat(col("volume"), lit("/"), col("bucket"), lit("/"), p),
       131L, graft.functions.Codes.P)
     lv.select(
-        concat(lit("vol"), col("v3").cast("string")).as("volume"),
-        concat(lit("b"), col("b5").cast("string")).as("bucket"),
+        volumeName(col("v3")).as("volume"),
+        bucketName(col("b5")).as("bucket"),
         col("lvl"), col("yr"), col("mo"))
       .select(col("volume"), col("bucket"),
         id(path).as("obj_id"),

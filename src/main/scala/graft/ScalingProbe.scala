@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.LongAdder
 
 /** Dev-only scale experiment (NOT part of the driver contract): replicate
-  * the sf0.1 tables N× with remapped keys into /tmp, run headline queries
+  * the sf0.1 tables N× with remapped keys into the git-ignored
+  * `target/graft_scaled_x<N>` (`target/graft_scaled_org_x<N>` in organic
+  * mode), relative to the working directory, run headline queries
   * at both scales, and report wall-time and shuffle-byte scaling ratios.
   * A query whose shuffle bytes or time grow faster than N is hiding
   * superlinear work that 1000 executors cannot save at 100 TB; ~N ratios
@@ -42,7 +44,7 @@ object ScalingProbe {
     val organic = args.length > 3 && args(3) == "organic"
     val base = "/root/testdata/sf0.1"
     val scaled =
-      if (organic) s"/tmp/graft_scaled_org_x$n" else s"/tmp/graft_scaled_x$n"
+      if (organic) s"target/graft_scaled_org_x$n" else s"target/graft_scaled_x$n"
     val spark = SparkEntry.session()
 
     val shuffleRead = new LongAdder

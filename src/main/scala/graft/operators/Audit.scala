@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ObjectStoreView, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,27 +53,26 @@ object Audit {
           .otherwise("DELETE_KEY").as("op"),
         when(col("event_type") === "error", "FAILURE")
           .otherwise("SUCCESS").as("result"),
-        concat(lit("vol"), (col("event_id") % 3).cast("string")).as("volume"),
-        concat(lit("b"), (col("user_id") % 5).cast("string")).as("bucket"),
-        concat(lit("data/"), year(col("ts")).cast("string"), lit("/"),
-          lpad(month(col("ts")).cast("string"), 2, "0")).as("prefix"))
+        ObjectStoreView.volume(col("event_id")).as("volume"),
+        ObjectStoreView.bucket(col("user_id")).as("bucket"),
+        ObjectStoreView.monthDir(year(col("ts")), month(col("ts")))
+          .as("prefix"))
 
   val auditLogSql: String =
-    """SELECT
-      |  date_trunc('minute', ts) AS ts_minute,
-      |  'u' || CAST(user_id AS VARCHAR) AS user,
-      |  CASE event_type WHEN 'signup' THEN 'ALLOCATE_KEY'
-      |    WHEN 'purchase' THEN 'COMMIT_KEY'
-      |    WHEN 'click' THEN 'READ_KEY'
-      |    WHEN 'view' THEN 'LIST_KEYS'
-      |    ELSE 'DELETE_KEY' END AS op,
-      |  CASE WHEN event_type = 'error' THEN 'FAILURE'
-      |    ELSE 'SUCCESS' END AS result,
-      |  'vol' || CAST(event_id % 3 AS VARCHAR) AS volume,
-      |  'b' || CAST(user_id % 5 AS VARCHAR) AS bucket,
-      |  'data/' || CAST(year(ts) AS VARCHAR) || '/' ||
-      |    lpad(CAST(month(ts) AS VARCHAR), 2, '0') AS prefix
-      |FROM events""".stripMargin
+    s"""SELECT
+       |  date_trunc('minute', ts) AS ts_minute,
+       |  'u' || CAST(user_id AS VARCHAR) AS user,
+       |  CASE event_type WHEN 'signup' THEN 'ALLOCATE_KEY'
+       |    WHEN 'purchase' THEN 'COMMIT_KEY'
+       |    WHEN 'click' THEN 'READ_KEY'
+       |    WHEN 'view' THEN 'LIST_KEYS'
+       |    ELSE 'DELETE_KEY' END AS op,
+       |  CASE WHEN event_type = 'error' THEN 'FAILURE'
+       |    ELSE 'SUCCESS' END AS result,
+       |  ${ObjectStoreView.volumeSql("event_id")} AS volume,
+       |  ${ObjectStoreView.bucketSql("user_id")} AS bucket,
+       |  ${ObjectStoreView.monthDirSql("ts")} AS prefix
+       |FROM events""".stripMargin
 
   // --- ns_audit_op_mix: per-op audit rollup (top5cmds generalized) --------
   /** Per-op entry counts, distinct users, failure counts, and first/last

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.ObjectStoreView
+import graft.ObjectStoreView.{placedReplicas, placedReplicasSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -170,16 +171,12 @@ object Containers {
        |FROM container_keys""".stripMargin
 
   // --- ct_node_report: per-datanode hosted replicas -----------------------
-  /** Replica r of container c lives on node (c*31 + r*17) % 20 — fixed
+  /** Replicas placed on nodes by [[ObjectStoreView.replicaNode]] — fixed
     * arithmetic placement (the reference tracks real datanode reports;
     * NodeEndpoint.java:84). Bounded explode: ≤ 4 replica rows/container.
     */
   def ctNodeReport(spark: SparkSession, dir: String): DataFrame =
-    containerStats(spark, dir)
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"), col("n_keys"), col("total_bytes"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    placedReplicas(containerStats(spark, dir), "n_keys", "total_bytes")
       .groupBy(col("node_id"))
       .agg(count(lit(1)).as("n_container_replicas"),
         sum(col("total_bytes")).as("hosted_bytes"))
@@ -187,10 +184,7 @@ object Containers {
 
   val ctNodeReportSql: String =
     s"""WITH $containerStatsSql, placed AS (
-       |  SELECT (cont.container_id * 31 + u.r * 17) % 20 AS node_id,
-       |    cont.total_bytes
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT node_id, total_bytes FROM ${placedReplicasSql("cont")} pr
        |)
        |SELECT node_id, COUNT(*) AS n_container_replicas,
        |  CAST(SUM(total_bytes) AS BIGINT) AS hosted_bytes
@@ -207,11 +201,7 @@ object Containers {
     * over the 4-row rack frame.
     */
   def ctRackReport(spark: SparkSession, dir: String): DataFrame =
-    containerStats(spark, dir)
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"), col("total_bytes"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    placedReplicas(containerStats(spark, dir), "total_bytes")
       .withColumn("rack", col("node_id") % 4)
       .groupBy(col("rack"))
       .agg(countDistinct(col("node_id")).as("n_nodes"),
@@ -224,10 +214,7 @@ object Containers {
 
   val ctRackReportSql: String =
     s"""WITH $containerStatsSql, placed AS (
-       |  SELECT (cont.container_id * 31 + u.r * 17) % 20 AS node_id,
-       |    cont.total_bytes
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT node_id, total_bytes FROM ${placedReplicasSql("cont")} pr
        |), racks AS (
        |  SELECT node_id % 4 AS rack, COUNT(DISTINCT node_id) AS n_nodes,
        |    COUNT(*) AS n_replicas,
@@ -337,11 +324,7 @@ object Containers {
     * tiny). Threshold ±10%, the balancer's default shape.
     */
   def ctBalancerReport(spark: SparkSession, dir: String): DataFrame = {
-    val perNode = containerStats(spark, dir)
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"), col("total_bytes"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    val perNode = placedReplicas(containerStats(spark, dir), "total_bytes")
       .groupBy(col("node_id"))
       .agg(sum(col("total_bytes")).as("hosted_bytes"))
     val w = org.apache.spark.sql.expressions.Window
@@ -364,10 +347,7 @@ object Containers {
 
   val ctBalancerReportSql: String =
     s"""WITH $containerStatsSql, placed AS (
-       |  SELECT (cont.container_id * 31 + u.r * 17) % 20 AS node_id,
-       |    cont.total_bytes
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT node_id, total_bytes FROM ${placedReplicasSql("cont")} pr
        |), pernode AS (
        |  SELECT node_id, CAST(SUM(total_bytes) AS BIGINT) AS hosted_bytes
        |  FROM placed GROUP BY node_id
@@ -399,11 +379,8 @@ object Containers {
     * the same bounded expand as [[ctNodeReport]]; no joins.
     */
   def ctDecommissionImpact(spark: SparkSession, dir: String): DataFrame =
-    containerStats(spark, dir)
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"), col("n_keys"), col("total_bytes"),
-        col("replicas"), explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    placedReplicas(containerStats(spark, dir), "n_keys", "total_bytes",
+        "replicas")
       .withColumn("under_after", col("replicas") - 1 < Target)
       .groupBy(col("node_id"))
       .agg(count(lit(1)).as("n_containers"),
@@ -415,10 +392,8 @@ object Containers {
 
   val ctDecommissionImpactSql: String =
     s"""WITH $containerStatsSql, placed AS (
-       |  SELECT (cont.container_id * 31 + u.r * 17) % 20 AS node_id,
-       |    cont.replicas, cont.n_keys, cont.total_bytes
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT node_id, replicas, n_keys, total_bytes
+       |  FROM ${placedReplicasSql("cont")} pr
        |)
        |SELECT node_id, COUNT(*) AS n_containers,
        |  CAST(SUM(CASE WHEN replicas - 1 < $Target THEN 1 ELSE 0 END) AS BIGINT) AS n_under_after,
@@ -478,7 +453,7 @@ object Containers {
       // real replica row for r >= 1); countDistinct skips its NULL rack.
       .withColumn("rack",
         when(col("r") >= 1,
-          ((col("container_id") * 31 + col("r") * 17) % 20) % 4))
+          ObjectStoreView.replicaNode(col("container_id"), col("r")) % 4))
       .groupBy(col("container_id"), col("n_keys"), col("total_bytes"),
         col("replicas"))
       .agg(countDistinct(col("rack")).as("n_racks"))
@@ -495,13 +470,10 @@ object Containers {
 
   val ctPlacementViolationsSql: String =
     s"""WITH $containerStatsSql, racks AS (
-       |  SELECT cont.container_id, cont.n_keys, cont.total_bytes,
-       |    cont.replicas,
-       |    COUNT(DISTINCT ((cont.container_id * 31 + u.r * 17) % 20) % 4)
-       |      AS n_racks
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  GROUP BY cont.container_id, cont.n_keys, cont.total_bytes,
-       |    cont.replicas
+       |  SELECT container_id, n_keys, total_bytes, replicas,
+       |    COUNT(DISTINCT node_id % 4) AS n_racks
+       |  FROM ${placedReplicasSql("cont")} pr
+       |  GROUP BY container_id, n_keys, total_bytes, replicas
        |  UNION ALL
        |  SELECT container_id, n_keys, total_bytes, replicas, 0 AS n_racks
        |  FROM cont WHERE replicas = 0
@@ -542,7 +514,8 @@ object Containers {
           .otherwise(sequence(lit(1L), col("replicas")))).as("r"))
       .withColumn("node_id",
         when(col("r") === -1L, -1L)
-          .otherwise((col("container_id") * 31 + col("r") * 17) % 20))
+          .otherwise(
+            ObjectStoreView.replicaNode(col("container_id"), col("r"))))
       .groupBy(col("node_id"))
       .agg(countDistinct(col("container_id")).as("n_containers"),
         sum(col("n_txns")).as("n_txns"),
@@ -557,10 +530,8 @@ object Containers {
        |    ${repl("container_id")} AS replicas
        |  FROM trash_ck GROUP BY container_id
        |), placed AS (
-       |  SELECT (tc.container_id * 31 + u.r * 17) % 20 AS node_id,
-       |    tc.container_id, tc.n_txns, tc.bytes
-       |  FROM tc, UNNEST(range(1, tc.replicas + 1)) AS u(r)
-       |  WHERE tc.replicas >= 1
+       |  SELECT node_id, container_id, n_txns, bytes
+       |  FROM ${placedReplicasSql("tc")} pr
        |  UNION ALL
        |  SELECT -1 AS node_id, container_id, n_txns, bytes
        |  FROM tc WHERE replicas = 0
@@ -590,10 +561,7 @@ object Containers {
     val contAgg = cont.agg(
       count(lit(1)).as("n_cont"),
       sum(when(col("replicas") >= 1, 1L).otherwise(0L)).as("n_reported"))
-    val nodeAgg = cont.filter(col("replicas") >= 1)
-      .select(col("container_id"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .select(((col("container_id") * 31 + col("r") * 17) % 20).as("node_id"))
+    val nodeAgg = placedReplicas(cont)
       .agg(countDistinct(col("node_id")).as("n_nodes"))
     val pipeAgg = cont.filter(col("replicas") >= 1)
       .withColumn("pipeline_id", col("container_id") % 30)
@@ -627,10 +595,8 @@ object Containers {
        |      AS n_reported
        |  FROM cont
        |), nagg AS (
-       |  SELECT COUNT(DISTINCT (cont.container_id * 31 + u.r * 17) % 20)
-       |    AS n_nodes
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT COUNT(DISTINCT node_id) AS n_nodes
+       |  FROM ${placedReplicasSql("cont")} pr
        |), pipes AS (
        |  SELECT container_id % 30 AS pipeline_id, MIN(replicas) AS min_r
        |  FROM cont WHERE replicas >= 1 GROUP BY pipeline_id
@@ -684,11 +650,7 @@ object Containers {
     */
   def ctBalancerMoves(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val placed = containerStats(spark, dir)
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"), col("total_bytes"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    val placed = placedReplicas(containerStats(spark, dir), "total_bytes")
     val perNode = placed.groupBy(col("node_id"))
       .agg(sum(col("total_bytes")).as("hosted"))
       .withColumn("tot", sum(col("hosted")).over(Window.partitionBy(lit(1))))
@@ -730,10 +692,8 @@ object Containers {
 
   val ctBalancerMovesSql: String =
     s"""WITH $containerStatsSql, placed AS (
-       |  SELECT cont.container_id, cont.total_bytes,
-       |    (cont.container_id * 31 + u.r * 17) % 20 AS node_id
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT container_id, total_bytes, node_id
+       |  FROM ${placedReplicasSql("cont")} pr
        |), pernode AS (
        |  SELECT node_id, CAST(SUM(total_bytes) AS BIGINT) AS hosted,
        |    CAST(SUM(SUM(total_bytes)) OVER () AS BIGINT) AS tot,
@@ -930,11 +890,7 @@ object Containers {
     */
   def ctServiceList(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val dn = containerStats(spark, dir)
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    val dn = placedReplicas(containerStats(spark, dir))
       .groupBy(col("node_id"))
       .agg(count(lit(1)).as("n_container_replicas"))
       .select(lit("DATANODE").as("node_type"),
@@ -951,9 +907,7 @@ object Containers {
 
   val ctServiceListSql: String =
     s"""WITH $containerStatsSql, placed AS (
-       |  SELECT (cont.container_id * 31 + u.r * 17) % 20 AS node_id
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT node_id FROM ${placedReplicasSql("cont")} pr
        |), dn AS (
        |  SELECT 'DATANODE' AS node_type,
        |    'dn' || CAST(node_id AS VARCHAR) AS host,
@@ -1035,11 +989,7 @@ object Containers {
     * 10-row union. All map-side combinable.
     */
   def insScmMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val hosted = containerStats(spark, dir)
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    val hosted = placedReplicas(containerStats(spark, dir))
       .agg(countDistinct(col("node_id")).as("healthy"))
       .select(explode(array(
         struct(lit("scm_node_manager_healthy_nodes").as("metric"),
@@ -1079,9 +1029,7 @@ object Containers {
 
   val insScmMetricsSql: String =
     s"""WITH $containerStatsSql, placed AS (
-       |  SELECT DISTINCT (cont.container_id * 31 + u.r * 17) % 20 AS node_id
-       |  FROM cont, UNNEST(range(1, cont.replicas + 1)) AS u(r)
-       |  WHERE cont.replicas >= 1
+       |  SELECT DISTINCT node_id FROM ${placedReplicasSql("cont")} pr
        |), reports AS (${ObjectStoreView.replicaReportsSql})
        |SELECT metric, value FROM (
        |  SELECT 'scm_node_manager_healthy_nodes' AS metric,
@@ -1221,10 +1169,7 @@ object Containers {
           .as("corrupt"))
       .withColumn("replicas",
         ObjectStoreView.containerReplicas(col("container_id")))
-    perContainer.filter(col("replicas") >= 1)
-      .select(col("container_id"), col("bytes"), col("corrupt"),
-        explode(sequence(lit(1L), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    placedReplicas(perContainer, "bytes", "corrupt")
       .groupBy(col("node_id"))
       .agg(count(lit(1)).as("n_containers_scanned"),
         sum(col("bytes")).as("bytes_verified"),
@@ -1245,10 +1190,7 @@ object Containers {
        |    ${repl("container_id")} AS replicas
        |  FROM container_keys GROUP BY container_id
        |), placed AS (
-       |  SELECT (sc.container_id * 31 + u.r * 17) % 20 AS node_id,
-       |    sc.bytes, sc.corrupt
-       |  FROM sc, UNNEST(range(1, sc.replicas + 1)) AS u(r)
-       |  WHERE sc.replicas >= 1
+       |  SELECT node_id, bytes, corrupt FROM ${placedReplicasSql("sc")} pr
        |)
        |SELECT node_id, COUNT(*) AS n_containers_scanned,
        |  CAST(SUM(bytes) AS BIGINT) AS bytes_verified,
@@ -1351,7 +1293,7 @@ object Containers {
   def insScmContainerProtocol(spark: SparkSession, dir: String): DataFrame = {
     val l = graft.Tables.lineitem(spark, dir)
     val perContainer = l.select(
-        ((col("l_orderkey") * 7 + col("l_linenumber")) % 1024)
+        ObjectStoreView.containerId(col("l_orderkey"), col("l_linenumber"))
           .cast("bigint").as("container_id"),
         when(col("l_returnflag") === "R", 1).otherwise(0).as("del"))
       .groupBy(col("container_id"))
@@ -1379,7 +1321,8 @@ object Containers {
 
   val insScmContainerProtocolSql: String =
     s"""WITH audit AS (${Audit.auditLogSql}), pc AS (
-       |  SELECT (l_orderkey * 7 + l_linenumber) % 1024 AS container_id,
+       |  SELECT ${ObjectStoreView.containerIdSql("l_orderkey", "l_linenumber")}
+       |      AS container_id,
        |    MIN(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS all_deleted
        |  FROM lineitem GROUP BY container_id
        |), c AS (
@@ -1439,16 +1382,13 @@ object Containers {
     // Wide product AND wide sum (the nsChargeback discipline): at 100 TB
     // a (reads ≈ 5e9) × (keys ≈ 3e6) cell already sits at 1.5e16 and the
     // per-node rollup of ~50 containers × 180 months crosses int64.
-    val perNode = ck.join(broadcast(reads), Seq("volume", "bucket", "month"))
+    val exposure = ck.join(broadcast(reads), Seq("volume", "bucket", "month"))
       .groupBy(col("container_id"))
       .agg(sum(col("n_reads").cast("decimal(38,0)") * col("n_keys"))
         .as("exposure"))
       .withColumn("replicas",
         ObjectStoreView.containerReplicas(col("container_id")))
-      .filter(col("replicas") >= 1)
-      .select(col("container_id"), col("exposure"),
-        explode(sequence(lit(1), col("replicas"))).as("r"))
-      .withColumn("node_id", (col("container_id") * 31 + col("r") * 17) % 20)
+    val perNode = placedReplicas(exposure, "exposure")
       .groupBy(col("node_id"))
       .agg(count(lit(1)).as("n_container_replicas"),
         sum(col("exposure")).as("read_exposure"))
@@ -1478,17 +1418,14 @@ object Containers {
        |  FROM ck GROUP BY container_id, volume, bucket, month
        |), expo AS (
        |  SELECT ckm.container_id,
-       |    SUM(CAST(reads.n_reads AS HUGEINT) * ckm.n_keys) AS exposure
+       |    SUM(CAST(reads.n_reads AS HUGEINT) * ckm.n_keys) AS exposure,
+       |    ${repl("ckm.container_id")} AS replicas
        |  FROM ckm JOIN reads USING (volume, bucket, month)
        |  GROUP BY ckm.container_id
        |), per_node AS (
-       |  SELECT (e.container_id * 31 + u.r * 17) % 20 AS node_id,
-       |    COUNT(*) AS n_container_replicas,
-       |    SUM(e.exposure) AS exposure_wide
-       |  FROM expo e, UNNEST(range(1,
-       |    ${ObjectStoreView.containerReplicasSql("e.container_id")} + 1))
-       |    AS u(r)
-       |  WHERE ${ObjectStoreView.containerReplicasSql("e.container_id")} >= 1
+       |  SELECT node_id, COUNT(*) AS n_container_replicas,
+       |    SUM(exposure) AS exposure_wide
+       |  FROM ${placedReplicasSql("expo")} pr
        |  GROUP BY node_id
        |)
        |SELECT node_id, n_container_replicas,

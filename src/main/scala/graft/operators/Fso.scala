@@ -122,10 +122,9 @@ object Fso {
       .groupBy(col("v3"), col("b5"), col("yr"), col("mo"))
       .agg(count(lit(1)).as("f"), sum(col("size")).as("b"))
       .select(
-        concat(lit("vol"), col("v3").cast("string")).as("volume"),
-        concat(lit("b"), col("b5").cast("string")).as("bucket"),
-        concat(lit("data/"), col("yr").cast("string"), lit("/"),
-          lpad(col("mo").cast("string"), 2, "0")).as("leaf"),
+        ObjectStoreView.volumeName(col("v3")).as("volume"),
+        ObjectStoreView.bucketName(col("b5")).as("bucket"),
+        ObjectStoreView.monthDir(col("yr"), col("mo")).as("leaf"),
         col("f"), col("b"))
     val sub = leaf
       .select(col("volume"), col("bucket"), col("f"), col("b"),

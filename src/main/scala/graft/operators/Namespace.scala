@@ -52,30 +52,16 @@ object Namespace {
     * counts/bytes (reference: s3gateway BucketEndpoint + CommonPrefix).
     */
   def commonPrefixes(keys: DataFrame, prefix: String): DataFrame = {
-    // Narrow pre-aggregate (guide §2.3, VERDICT r17 #6): per ROW compute
-    // only the delimiter segment and a has-delimiter bit — the group
-    // identity — and aggregate on those; the common_prefix/is_prefix
-    // strings are built once per surviving GROUP after the collapse.
-    // (seg, has_delim) ↔ (common_prefix, is_prefix) is a bijection for a
-    // fixed `prefix`: seg never contains '/' (substring_index up to the
-    // first delimiter), so the delimiter branch — and only that branch —
-    // ends in '/'. The pre-exchange row therefore carries the short seg
-    // instead of the full rebuilt prefix text, and the per-row
-    // when/concat/endsWith chain drops out of the scan stage.
     val rest = expr(s"substring(key, ${prefix.length + 1})")
     keys.filter(col("key").startsWith(prefix))
-      .select(
-        substring_index(rest, "/", 1).as("seg"),
-        (expr("position('/' in substring(key, " + (prefix.length + 1) +
-          "))") > 0).as("has_delim"),
-        col("size"))
-      .groupBy(col("seg"), col("has_delim"))
+      .withColumn("seg", substring_index(rest, "/", 1))
+      .withColumn("common_prefix",
+        when(expr("position('/' in substring(key, " + (prefix.length + 1) +
+          "))") > 0, concat(lit(prefix), col("seg"), lit("/")))
+          .otherwise(col("seg")))
+      .withColumn("is_prefix", col("common_prefix").endsWith("/"))
+      .groupBy(col("common_prefix"), col("is_prefix"))
       .agg(count(lit(1)).as("n_objects"), sum(col("size")).as("total_bytes"))
-      .select(
-        when(col("has_delim"), concat(lit(prefix), col("seg"), lit("/")))
-          .otherwise(col("seg")).as("common_prefix"),
-        col("has_delim").as("is_prefix"),
-        col("n_objects"), col("total_bytes"))
       .orderBy(col("common_prefix").asc)
   }
 
@@ -177,10 +163,9 @@ object Namespace {
       .groupBy(col("v3"), col("b5"), col("yr"), col("mo"))
       .agg(count(lit(1)).as("num_files"), sum(col("size")).as("size_of_files"))
       .select(
-        concat(lit("vol"), col("v3").cast("string")).as("volume"),
-        concat(lit("b"), col("b5").cast("string")).as("bucket"),
-        concat(lit("data/"), col("yr").cast("string"), lit("/"),
-          lpad(col("mo").cast("string"), 2, "0")).as("dir"),
+        ObjectStoreView.volumeName(col("v3")).as("volume"),
+        ObjectStoreView.bucketName(col("b5")).as("bucket"),
+        ObjectStoreView.monthDir(col("yr"), col("mo")).as("dir"),
         col("num_files"), col("size_of_files"))
       .orderBy(col("volume").asc, col("bucket").asc, col("dir").asc)
 

@@ -1,11 +1,47 @@
 package graft
 
 import graft.operators.Containers
+import java.io.File
+import scala.io.Source
 
 /** Semantic invariants of the SCM-derived container operators (value-level
   * equality is the DuckDB oracle's job; these pin the rule/plan semantics).
   */
 class ContainersSpec extends SparkSpec {
+
+  /** The test binding is spelled in [[ObjectStoreView]] alone: once as a
+    * Spark Column function and once as its DuckDB SQL twin. The tests below
+    * pin the formulas' values; this one pins where they are written.
+    */
+  test("only ObjectStoreView spells the namespace and placement binding") {
+    def scala(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val lines = scala(new File("src/main")).flatMap { f =>
+      val src = Source.fromFile(f, "UTF-8")
+      val path = f.getPath.replace(File.separatorChar, '/')
+      try src.getLines().toList.map(path -> _) finally src.close()
+    }
+    val owner = "src/main/scala/graft/ObjectStoreView.scala"
+    val decisions = Seq(
+      "replica node" -> """\* 17\) % 20""",
+      "container id" -> """\* 7 \+ (\$?ln\b|.*linenumber)""",
+      "volume literal" -> """'vol' \|\||lit\("vol"\)""",
+      "key suffix" -> """\.obj['"]""",
+      "placed-replica explode" ->
+        ("""explode\(sequence\(lit\(1\), col\("replicas"\)\)\)|""" +
+          """UNNEST\(range\(1, \w*\.?replicas \+ 1\)\)"""))
+    decisions.foreach { case (name, re) =>
+      val hits = lines.filter { case (_, l) => re.r.findFirstIn(l).isDefined }
+      val elsewhere = hits.map(_._1).filter(_ != owner).distinct
+      assert(elsewhere.isEmpty, s"$name spelled outside $owner: $elsewhere")
+      assert(hits.size == 2, s"$name spelled on ${hits.size} lines, not 2")
+    }
+    val keySize = """(?i)decimal\(12,2\)"?\) \* 100""".r
+    val sizeHits = lines.count { case (f, l) =>
+      f == owner && keySize.findFirstIn(l).isDefined }
+    assert(sizeHits == 2, s"key size spelled on $sizeHits lines, not 2")
+  }
 
   test("safemode status reports the four SCM exit rules with verdicts") {
     val rows = Containers.ctSafemodeStatus(spark, sf).collect()

@@ -391,7 +391,7 @@ class GrowthOpsSpec extends SparkSpec {
 
   test("q1_incremental merge is bit-identical to the full-rescan Q1") {
     def key(r: org.apache.spark.sql.Row): String =
-      r.toSeq.map(String.valueOf).mkString(" ")
+      r.toSeq.map(String.valueOf).mkString("\u0000")
     val full = graft.operators.Relational.q1PricingSummary(spark, sf)
       .collect().map(key).toSet
     val inc = graft.operators.Relational.q1Incremental(spark, sf)

@@ -8,13 +8,18 @@
 # Usage: ab_bench.sh <out.log> [baseline_dir] [baseline_tag] [cluster]
 #   baseline_dir: checkout of the comparison round (default /tmp/graft_r13)
 #   cluster:      comma-joined query names (default: the r14 ns_* cluster)
-# SPARK_GRAFT_CPUS, when set, overrides the default local[32].
+# SPARK_GRAFT_CPUS, when set, overrides the default local[32];
+# SPARK_GRAFT_SF_DIR, when set, overrides the default sf0.1 testdata; give
+# it as an absolute path (each run starts in its own checkout), e.g. the
+# 10x replica "$PWD/target/graft_scaled_x10" for a 10x run.
 set -u
 OUT=${1:-/tmp/ab_bench.log}
 BASE_DIR=${2:-/tmp/graft_r13}
 BASE_TAG=${3:-r13}
 CLUSTER=${4:-ns_scan_plan,ns_list_v2_page,ns_key_versions,ns_common_prefixes,q_approx_distinct,dd_cluster_sizes,ns_acl_effective,ns_fso_du}
+if [ -z "${SPARK_GRAFT_SF_DIR:-}" ]; then
 export SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1
+fi
 export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
 export SPARK_GRAFT_BENCH_PASSES=5
 export SPARK_GRAFT_BENCH_ONLY=$CLUSTER
