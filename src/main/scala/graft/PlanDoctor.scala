@@ -69,20 +69,26 @@ object PlanDoctor {
   /** One row per finding (severity ERROR | WARN), most severe first. */
   def report(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val ns = nodes(df.queryExecution.executedPlan)
-    val findings = scala.collection.mutable.ArrayBuffer[Row]()
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      findings(df.queryExecution.executedPlan), 1), schema)
+  }
+
+  /** The findings of [[report]] for one physical plan, without a job. */
+  private[graft] def findings(plan: SparkPlan): Seq[Row] = {
+    val ns = nodes(plan)
+    val out = scala.collection.mutable.ArrayBuffer[Row]()
 
     ns.foreach {
       case c: CartesianProductExec =>
-        findings += Row("ERROR", "CARTESIAN_PRODUCT", c.nodeName,
+        out += Row("ERROR", "CARTESIAN_PRODUCT", c.nodeName,
           "O(left x right) row blow-up; rewrite as an equi/range/broadcast " +
             "join - this never survives a 100 TB input")
       case w: WindowExec if w.partitionSpec.isEmpty && !aggBounded(w.child) =>
-        findings += Row("ERROR", "UNPARTITIONED_WINDOW", w.nodeName,
+        out += Row("ERROR", "UNPARTITIONED_WINDOW", w.nodeName,
           "window with no PARTITION BY over unaggregated input moves ALL " +
             "rows to one task; partition the window or aggregate below it")
       case j: BroadcastNestedLoopJoinExec =>
-        findings += Row("WARN", "NESTED_LOOP_JOIN", j.nodeName,
+        out += Row("WARN", "NESTED_LOOP_JOIN", j.nodeName,
           "streamed side is re-scanned per broadcast row; acceptable only " +
             "when the broadcast side is provably tiny (scalar/dimension). " +
             s"Broadcast side: ${j.buildSide}")
@@ -90,7 +96,7 @@ object PlanDoctor {
           if e.output.exists(_.dataType == StringType) =>
         val cols = e.output.filter(_.dataType == StringType)
           .map(_.name).mkString(", ")
-        findings += Row("WARN", "WIDE_SHUFFLE_ROW", e.nodeName,
+        out += Row("WARN", "WIDE_SHUFFLE_ROW", e.nodeName,
           s"shuffle row carries string column(s) [$cols]; at corpus scale " +
             "prefer shuffling a fixed-width fingerprint/key and re-joining " +
             "payloads after the aggregate")
@@ -98,8 +104,6 @@ object PlanDoctor {
     }
 
     val sevRank = Map("ERROR" -> 0, "WARN" -> 1)
-    val sorted = findings.sortBy(r => (sevRank(r.getString(0)), r.getString(1)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(sorted.toSeq, 1), schema)
+    out.sortBy(r => (sevRank(r.getString(0)), r.getString(1))).toSeq
   }
 }

@@ -10,10 +10,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
 /** Per-query physical plan-shape counters (VERDICT r10 #7): the numbers a
   * scale review reads first — how many shuffles, how many broadcast joins,
   * how wide the codegen spans. `PlanProbe` dumps them for every registered
-  * query into PLANS_r{n}.json; PlanShapeSpec reads the latest committed
-  * artifact back as its cross-round regression baseline, so a plan-shape
-  * drift (an extra exchange sneaking into an operator) fails `sbt test`
-  * instead of staying invisible between rounds.
+  * query into PLANS.json; PlanShapeSpec reads the committed artifact back
+  * as its cross-round regression baseline, so a plan-shape drift (an extra
+  * exchange sneaking into an operator) fails `sbt test` instead of staying
+  * invisible between rounds.
   *
   * Counts are taken with AQE disabled so the executedPlan IS the final
   * static plan (codegen stages collapsed, no runtime re-plan wrappers) and
@@ -61,9 +61,8 @@ object PlanShape {
       "shuffled_hash_joins" -> ns.count(_.isInstanceOf[ShuffledHashJoinExec]),
       "codegen_spans" -> ns.count(_.isInstanceOf[WholeStageCodegenExec]),
       // VERDICT r15 #4: the quadratic join shapes get their own artifact
-      // fields (appended — the PlanShapeSpec baseline regex parses an
-      // entry PREFIX, so older artifacts stay readable). A cartesian at
-      // any emitted scale was previously invisible to the artifact diff.
+      // fields. A cartesian at any emitted scale was previously invisible
+      // to the artifact diff.
       "cartesian_joins" -> ns.count(
         _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
       "bnl_joins" -> ns.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
@@ -125,12 +124,13 @@ object PlanShape {
   }
 }
 
-/** Emits PLANS_AQE_r{n}.json — the RUNTIME plan-shape record: every
-  * registered query executed with AQE ON at the given sf (default: the
-  * bench scale, sf0.1), final adaptive plan counted. Where the static
-  * artifact pins what the planner would do, this pins what execution
-  * actually did — the broadcast→SMJ (and reverse) runtime decisions the
-  * static gate cannot see. `runMain graft.AqePlanProbe <out.json> [sfDir]`.
+/** Emits PLANS_AQE.json — the RUNTIME plan-shape record: every registered
+  * query executed with AQE ON at each given sf (default: the bench scale,
+  * sf0.1), final adaptive plan counted. Where the static artifact pins
+  * what the planner would do, this pins what execution actually did — the
+  * broadcast→SMJ (and reverse) runtime decisions the static gate cannot
+  * see. `runMain graft.AqePlanProbe [out.json] [sfDir ...]`; the layout is
+  * PlanProbe's, `{"sections": [...]}`, one section per sf directory.
   */
 object AqePlanProbe {
   def main(args: Array[String]): Unit = {
@@ -162,18 +162,14 @@ object AqePlanProbe {
         s"""{"sf": "$sfDir", "scale_rows": $scaleRows, "aqe": true, "queries": {\n""",
         ",\n", tail)
     }
-    // Multi-dir runs wrap sections (the PlanProbe layout); a single-dir
-    // run keeps the flat pre-r15 shape so older parsers stay valid.
-    val json =
-      if (sections.size == 1) sections.head + "\n"
-      else sections.mkString("{\"sections\": [\n", ",\n", "\n]}\n")
+    val json = sections.mkString("{\"sections\": [\n", ",\n", "\n]}\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(s"wrote $out (${sections.size} sections, AQE-final)")
     spark.stop()
   }
 }
 
-/** Emits PLANS_r{n}.json: `runMain graft.PlanProbe <out.json> [sfDir]`. */
+/** Emits PLANS.json: `runMain graft.PlanProbe [out.json] [sfDir ...]`. */
 object PlanProbe {
 
   /** Plans probed IN ADDITION to the registry: pre-checkpoint subtrees
@@ -213,12 +209,11 @@ object PlanProbe {
       key -> ((s: SparkSession, dir: String) =>
         Tables.withQuery(key.stripSuffix("__pre_ckpt"))(fn(s, dir)))
     }
-  /** `runMain graft.PlanProbe <out.json> [sfDir ...]` — one section per sf
+  /** `runMain graft.PlanProbe [out.json] [sfDir ...]` — one section per sf
     * directory (default: sf0.001 AND sf0.1, VERDICT r13 #1: static
     * broadcast-vs-SMJ decisions are size-dependent, so the exchange gate
     * needs the bench-scale shapes too, not only the tiny-sf ones).
-    * Artifact layout (and the single-sf r≤13 artifacts are the degenerate
-    * one-section case of the same layout):
+    * Artifact layout:
     * `{"sections": [{"sf": dir, "queries": {name: counters}}, ...]}`.
     */
   def main(args: Array[String]): Unit = {

@@ -81,8 +81,11 @@ object Dedup {
     * shuffles nothing. The three-stage projection keeps each kernel input
     * an attribute, not an inlined expression (the CollapseProject trap:
     * a non-cheap producer referenced 64 times must stay materialized).
+    * `carry` names input columns passed through beside `doc_id` (the
+    * streaming twin carries its event time).
     */
-  private[graft] def signatures(docs: DataFrame): DataFrame = {
+  private[graft] def signatures(docs: DataFrame, carry: String*): DataFrame = {
+    val keys = col("doc_id") +: carry.map(col)
     // The shingle-set-nonempty guard is expressed as token count AT THE
     // SCAN (< 3 tokens ⟺ zero shingles): a filter on the scs column would
     // be predicate-pushed below the projections and re-evaluate the whole
@@ -90,10 +93,10 @@ object Dedup {
     // per element, the O(tokens²) txContamination trap.
     val sh = docs
       .filter(size(tokens(col("text"))) >= 3)
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("scs"))
-      .select(col("doc_id"), Codes.minHash64(col("scs")).as("mh"))
-    sh.select(col("doc_id") +:
+      .select(keys :+ strCodes(tokens(col("text"))).as("tcs"): _*)
+      .select(keys :+ shingleCodes3(col("tcs")).as("scs"): _*)
+      .select(keys :+ Codes.minHash64(col("scs")).as("mh"): _*)
+    sh.select(keys ++
       (0 until NumHashes).map(i => col("mh").getItem(i).as(s"mh$i")): _*)
   }
 
@@ -127,17 +130,18 @@ object Dedup {
     * [[Codes.pairs]] — no self-join, signatures computed exactly once;
     * buckets over [[MaxBucket]] are dropped (skew guard).
     */
-  /** (band, sig, doc_id) rows — one explode over an array of (band, sig)
-    * structs, so the 64 minhash columns in `sigs` are computed exactly once
-    * per doc (a 16-way union of selects would re-run the signature
-    * projection per band).
+  /** (band, sig, doc_id, carry…) rows — one explode over an array of
+    * (band, sig) structs, so the 64 minhash columns in `sigs` are computed
+    * exactly once per doc (a 16-way union of selects would re-run the
+    * signature projection per band).
     */
-  private[graft] def bandRows(sigs: DataFrame): DataFrame = {
+  private[graft] def bandRows(sigs: DataFrame, carry: String*): DataFrame = {
+    val keys = col("doc_id") +: carry.map(col)
     val bandStructs = array((0 until Bands).map(b =>
       struct(lit(b).as("band"), bandSig(b).as("sig"))): _*)
     sigs
-      .select(col("doc_id"), explode(bandStructs).as("bs"))
-      .select(col("bs.band").as("band"), col("bs.sig").as("sig"), col("doc_id"))
+      .select(keys :+ explode(bandStructs).as("bs"): _*)
+      .select(Seq(col("bs.band").as("band"), col("bs.sig").as("sig")) ++ keys: _*)
   }
 
   private[graft] def lshPairs(sigs: DataFrame): DataFrame = {
@@ -456,7 +460,7 @@ object Dedup {
     * the end to attach identity labels.
     */
   /** The symmetrized verified-edge frame of [[canonicalLabels]] BEFORE its
-    * localCheckpoint (the PLANS_r{n} pre-checkpoint probe,
+    * localCheckpoint (the PLANS.json pre-checkpoint probe,
     * `dd_canonical__pre_ckpt`): the whole MinHash/LSH/Jaccard verify
     * pipeline lives in this prefix, invisible to the registered query's
     * physical plan once the checkpoint truncates it.
@@ -1271,7 +1275,7 @@ object Dedup {
   private[graft] val IncrMod = 10L
 
   /** The candidate-bucket frame of [[ddIncremental]] BEFORE its
-    * localCheckpoint — exposed so the PLANS_r{n} plan-shape gate can count
+    * localCheckpoint — exposed so the PLANS.json plan-shape gate can count
     * the pre-checkpoint stages: the eager checkpoint truncates the
     * physical plan, so drift in this prefix (the corpus band scan, the
     * broadcast of the batch bands, the (band, sig) repartition) would

@@ -304,42 +304,6 @@ object StreamOps {
 
   private val NearDupHorizonMs = 3600L * 1000L
 
-  /** Per-row MinHash band signatures — the same hash family and band fold
-    * as the batch [[graft.operators.Dedup]] pipeline, but computed with
-    * per-row array expressions (a streaming query can't run the batch
-    * path's grouped aggregate over exploded shingles without another
-    * stateful stage). min over the same shingle-code set under the same
-    * (a_i x + b_i) mod P family ⇒ identical signatures, so streamed
-    * candidates agree with batch candidates by construction.
-    */
-  private[graft] def bandRows(docs: DataFrame): DataFrame = {
-    import graft.functions.Codes
-    // Two-stage projection: the shingle lambda must read an attribute, not
-    // an inlined token-code expression (same CollapseProject trap as the
-    // batch signatures — see Dedup.signatures).
-    // Token-count guard at the source (< 3 tokens ⟺ zero shingles): a
-    // filter on scs would predicate-push below the projections and
-    // re-evaluate the interpreted shingle lambda per row (see
-    // Dedup.signatures).
-    val tcs = docs
-      .filter(size(Codes.tokens(col("text"))) >= 3)
-      .select(col("doc_id"), col("ts"),
-        Codes.strCodes(Codes.tokens(col("text"))).as("tcs"))
-    val sh = tcs
-      .select(col("doc_id"), col("ts"), Codes.shingleCodes3(col("tcs")).as("scs"))
-      .select(col("doc_id"), col("ts"), Codes.minHash64(col("scs")).as("mh"))
-    // One compiled traversal for all 64 minima (MinHash64Expr) — replaces
-    // 64 interpreted array_min(transform(...)) passes of the same array.
-    val sigs = sh.select(col("doc_id") +: col("ts") +:
-      (0 until Codes.NumHashes).map(i => col("mh").getItem(i).as(s"mh$i")): _*)
-    val bandStructs = array((0 until graft.operators.Dedup.Bands).map(b =>
-      struct(lit(b).as("band"),
-        graft.operators.Dedup.bandSig(b).as("sig"))): _*)
-    sigs.select(col("doc_id"), col("ts"), explode(bandStructs).as("bs"))
-      .select(col("bs.band").as("band"), col("bs.sig").as("sig"),
-        col("doc_id"), col("ts"))
-  }
-
   /** Streaming near-dup candidate detection — the incremental twin of
     * [[graft.operators.Dedup.ddMinhashLsh]] (SURVEY §6's last open item).
     * Documents stream in; each lands in its 16 LSH band buckets; a keyed
@@ -357,8 +321,9 @@ object StreamOps {
     */
   def nearDupStream(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
+    import graft.operators.Dedup
     import graft.operators.Dedup.MaxBucket
-    bandRows(docs)
+    Dedup.bandRows(Dedup.signatures(docs, "ts"), "ts")
       .withWatermark("ts", "1 hour")
       .as[BandRow]
       .groupByKey(r => (r.band, r.sig))

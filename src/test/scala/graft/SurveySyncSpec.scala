@@ -144,33 +144,30 @@ class SurveySyncSpec extends AnyFunSuite {
 
   /** VERDICT r16 #5: the r12/r14/r15 empty driver artifacts were an
     * ORACLE-BUDGET overrun growing back silently as the registry grew.
-    * The budget is now a standing gate: every round commits an
-    * ORACLE_TIMES_r{n}.json (`tools/check.py --times` over the Verify
-    * dump), and this test fails if the artifact is
-    * missing, trails the registry, contains an errored oracle, or the
-    * serial sf0.01 compare total exceeds 120 s (r16 measured 33.6 s —
-    * ~4× headroom for growth; the driver's own budget sits well above).
+    * The budget is now a standing gate: ORACLE_TIMES.json is the
+    * committed profile (`tools/check.py --times` over the Verify dump),
+    * and this test fails if the artifact is missing, trails the registry,
+    * contains an errored oracle, or the serial sf0.01 compare total
+    * exceeds 120 s (r16 measured 33.6 s — ~4× headroom for growth; the
+    * driver's own budget sits well above).
     */
   test("committed oracle-time profile is current and inside the 120s budget") {
-    val f = PlanShapeSpec.latestArtifact("ORACLE_TIMES_r(\\d+)\\.json")
-    assert(f.nonEmpty,
-      "no ORACLE_TIMES_r{n}.json committed — run tools/check.py --times")
-    val text = java.nio.file.Files.readString(f.get.toPath)
+    val text = PlanShapeSpec.artifact("ORACLE_TIMES")
     val total = """"total_sec": ([0-9.]+)""".r
       .findFirstMatchIn(text).map(_.group(1).toDouble)
     assert(total.nonEmpty && total.get <= 120.0,
-      s"${f.get.getName}: serial oracle compare ${total.orNull}s exceeds " +
+      s"ORACLE_TIMES.json: serial oracle compare ${total.orNull}s exceeds " +
         "the 120s budget — the r12/r14/r15 failure mode is growing back")
     val timed = """"([a-z0-9_]+)": (-?[0-9.]+)""".r.findAllMatchIn(text)
       .map(m => (m.group(1), m.group(2).toDouble)).toMap
       .removedAll(Seq("total_sec", "n"))
     val errored = timed.filter(_._2 < 0).keys.toSeq.sorted
     assert(errored.isEmpty,
-      s"${f.get.getName}: oracles errored in the profile: " +
+      s"ORACLE_TIMES.json: oracles errored in the profile: " +
         errored.mkString(", "))
     val missing = SparkEntry.oracleSql.keySet -- timed.keySet
     assert(missing.isEmpty,
-      s"${f.get.getName} trails the registry by ${missing.size}: " +
+      s"ORACLE_TIMES.json trails the registry by ${missing.size}: " +
         missing.toSeq.sorted.take(5).mkString(", ") +
         " — regenerate after the last oracle lands")
   }

@@ -22,7 +22,7 @@ Prints one line per query and a summary; exits 1 on any red row.
   --artifact  per-query rows: rows_match, schema_match, hash_match,
               spark_rows, oracle_rows, err (the CORRECTNESS_*.json schema)
   --times     each oracle's serial DuckDB wall time: total_sec, n, times
-              (the ORACLE_TIMES_r{n}.json schema)
+              (the ORACLE_TIMES.json schema)
   --budget    run the queries in parallel worker processes, killing any
               worker that stays SEC seconds in one phase (view_setup,
               oracle, read_dump, compare); the query is then red with
