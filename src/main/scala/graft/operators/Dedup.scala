@@ -180,38 +180,69 @@ object Dedup {
     s"""WITH $signaturesSql, $lshPairsSql
        |SELECT doc_a, doc_b FROM cand ORDER BY doc_a ASC, doc_b ASC""".stripMargin
 
-  // --- dd_ngram_jaccard: exact verify over LSH candidates -----------------
-  /** Jaccard-verified near-dup edges (≥ 0.6 over LSH candidates). */
-  private[graft] def verifiedPairs(docs: DataFrame): DataFrame = {
-    // Two-stage projection: shingleCodes3's lambda must read an attribute,
-    // not an inlined token-code expression (see signatures()).
-    val sets = docs
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
+  // --- the shingle-pair verify, once per engine ----------------------------
+  /** Per-doc distinct word-3-gram shingle codes (doc_id, sg). Two-stage
+    * projection: shingleCodes3's lambda must read an attribute, not an
+    * inlined token-code expression (see signatures()).
+    */
+  private[graft] def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
       .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
-    val cand = lshPairs(signatures(docs))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sg").as("sg_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sg").as("sg_b")), "doc_b")
-      .withColumn("n_inter", size(array_intersect(col("sg_a"), col("sg_b"))))
+
+  /** Attaches each candidate pair's two shingle sets: sg_a for doc `a`
+    * (a doc of `docsA`) and sg_b for doc `b` (of `docsB`).
+    */
+  private[graft] def withShingleSets(pairs: DataFrame, docsA: DataFrame,
+      docsB: DataFrame, a: String = "doc_a", b: String = "doc_b"): DataFrame =
+    pairs
+      .join(shingleSets(docsA).select(col("doc_id").as(a), col("sg").as("sg_a")), a)
+      .join(shingleSets(docsB).select(col("doc_id").as(b), col("sg").as("sg_b")), b)
+
+  /** The pair verify over attached sets: intersection and union sizes
+    * n_inter and n_union, and the Jaccard n_inter / n_union rounded to 6
+    * places.
+    */
+  private[graft] def jaccard(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("n_inter",
+        size(array_intersect(col("sg_a"), col("sg_b"))).cast("bigint"))
       .withColumn("n_union",
         size(col("sg_a")) + size(col("sg_b")) - col("n_inter"))
       .withColumn("jaccard",
         round(col("n_inter").cast("double") / col("n_union"), 6))
-      .filter(col("jaccard") >= 0.6)
-  }
 
-  /** Shared CTE chain ending in scored(doc_a, doc_b, jaccard). */
-  private val scoredSqlCtes: String =
-    s"""$signaturesSql, $lshPairsSql, sets AS (
+  /** SQL twin of [[shingleSets]], [[withShingleSets]] and [[jaccard]]:
+    * the CTEs `sets` (over signaturesSql's `sc`) and `cte`, which is every
+    * column of the pair CTE `pairs` plus size_a, size_b, n_inter, n_union
+    * and jaccard.
+    */
+  private def verifySql(cte: String, pairs: String, a: String = "doc_a",
+      b: String = "doc_b"): String =
+    s"""sets AS (
        |  SELECT doc_id, scs AS sg FROM sc
-       |), scored AS (
-       |  SELECT c.doc_a, c.doc_b,
-       |    round(CAST(len(list_intersect(sa.sg, sb.sg)) AS DOUBLE) /
-       |      (len(sa.sg) + len(sb.sg) - len(list_intersect(sa.sg, sb.sg))), 6) AS jaccard
-       |  FROM cand c
-       |  JOIN sets sa ON c.doc_a = sa.doc_id
-       |  JOIN sets sb ON c.doc_b = sb.doc_id
+       |), $cte AS (
+       |  SELECT *, round(CAST(n_inter AS DOUBLE) / n_union, 6) AS jaccard
+       |  FROM (
+       |    SELECT *, size_a + size_b - n_inter AS n_union FROM (
+       |      SELECT c.*, CAST(len(sa.sg) AS BIGINT) AS size_a,
+       |        CAST(len(sb.sg) AS BIGINT) AS size_b,
+       |        CAST(len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_inter
+       |      FROM $pairs c
+       |      JOIN sets sa ON c.$a = sa.doc_id
+       |      JOIN sets sb ON c.$b = sb.doc_id
+       |    ) i
+       |  ) u
        |)""".stripMargin
+
+  // --- dd_ngram_jaccard: exact verify over LSH candidates -----------------
+  /** Jaccard-verified near-dup edges (≥ 0.6 over LSH candidates). */
+  private[graft] def verifiedPairs(docs: DataFrame): DataFrame =
+    jaccard(withShingleSets(lshPairs(signatures(docs)), docs, docs))
+      .filter(col("jaccard") >= 0.6)
+
+  /** Shared CTE chain ending in scored(doc_a, doc_b, …, jaccard). */
+  private val scoredSqlCtes: String =
+    s"$signaturesSql, $lshPairsSql, ${verifySql("scored", "cand")}"
 
   def ddNgramJaccard(spark: SparkSession, dir: String): DataFrame =
     verifiedPairs(Tables.documents(spark, dir))
@@ -257,18 +288,11 @@ object Dedup {
     * floor and relation classifier are exercised through the SAME code
     * the registered query runs.
     */
-  private[graft] def containmentScores(docs: DataFrame): DataFrame = {
-    val sets = docs
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
-    lshPairs(signatures(docs))
-      .join(sets.select(col("doc_id").as("doc_a"), col("sg").as("sg_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sg").as("sg_b")), "doc_b")
+  private[graft] def containmentScores(docs: DataFrame): DataFrame =
+    jaccard(withShingleSets(lshPairs(signatures(docs)), docs, docs))
       .select(col("doc_a"), col("doc_b"),
         size(col("sg_a")).cast("long").as("size_a"),
-        size(col("sg_b")).cast("long").as("size_b"),
-        size(array_intersect(col("sg_a"), col("sg_b"))).cast("long")
-          .as("n_inter"))
+        size(col("sg_b")).cast("long").as("size_b"), col("n_inter"))
       .withColumn("jaccard_ppm",
         expr("n_inter * 1000000 DIV greatest(size_a + size_b - n_inter, 1)"))
       .withColumn("cont_a_ppm",
@@ -281,20 +305,9 @@ object Dedup {
           .when(greatest(col("cont_a_ppm"), col("cont_b_ppm")) >= 900000L,
             "containment")
           .otherwise("overlap"))
-  }
 
   val ddContainmentSql: String =
-    s"""WITH $signaturesSql, $lshPairsSql, sets AS (
-       |  SELECT doc_id, scs AS sg FROM sc
-       |), pairs AS (
-       |  SELECT c.doc_a, c.doc_b,
-       |    CAST(len(sa.sg) AS BIGINT) AS size_a,
-       |    CAST(len(sb.sg) AS BIGINT) AS size_b,
-       |    CAST(len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_inter
-       |  FROM cand c
-       |  JOIN sets sa ON c.doc_a = sa.doc_id
-       |  JOIN sets sb ON c.doc_b = sb.doc_id
-       |), scored AS (
+    s"""WITH $signaturesSql, $lshPairsSql, ${verifySql("pairs", "cand")}, scored AS (
        |  SELECT doc_a, doc_b, size_a, size_b, n_inter,
        |    CAST(n_inter * 1000000 // greatest(size_a + size_b - n_inter, 1)
        |      AS BIGINT) AS jaccard_ppm,
@@ -466,13 +479,74 @@ object Dedup {
     * physical plan once the checkpoint truncates it.
     */
   private[graft] def canonicalEdgesRaw(docs: DataFrame): DataFrame =
-    verifiedPairs(docs).select("doc_a", "doc_b")
-      // Symmetrize via explode, not union — a union of (a,b) and (b,a)
-      // selects would run the whole verify pipeline twice.
+    symmetric(verifiedPairs(docs), "doc_a", "doc_b")
+
+  /** Both directions (src, dst) of every pair (`a`, `b`), by one explode —
+    * a union of the (a, b) and (b, a) selects would run the pairs'
+    * pipeline twice.
+    */
+  private def symmetric(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.select(a, b)
       .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** SQL twin of [[symmetric]]: the CTE `cte` over the pairs CTE `pairs`. */
+  private def symmetricSql(cte: String, pairs: String, a: String,
+      b: String): String =
+    s"""$cte AS (
+       |  SELECT $a AS src, $b AS dst FROM $pairs
+       |  UNION ALL
+       |  SELECT $b AS src, $a AS dst FROM $pairs
+       |)""".stripMargin
+
+  /** The starting labels of min-label propagation over `edges`: every
+    * edge endpoint labels itself.
+    */
+  private def endpointLabels(edges: DataFrame, key: String): DataFrame =
+    edges.select(col("src").as(key)).distinct()
+      .select(col(key), col(key).as("label"))
+
+  /** One min-label propagation round: each `key` takes the least of its
+    * own label and its `edges` neighbours' labels.
+    */
+  private def propagate(edges: DataFrame, labels: DataFrame,
+      key: String): DataFrame = {
+    val nbr = edges
+      .join(labels.select(col(key).as("dst"), col("label")), "dst")
+      .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
+    labels
+      .join(nbr.select(col("src").as(key), col("nbr_min")), Seq(key), "left")
+      .select(col(key),
+        least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+  }
+
+  /** Every id of `ids` with its propagated label, or itself when no edge
+    * touches it, as `out`.
+    */
+  private def labelAll(ids: DataFrame, labels: DataFrame, key: String,
+      out: String): DataFrame =
+    ids.select(col(key))
+      .join(labels.withColumnRenamed("label", "lp"), Seq(key), "left")
+      .select(col(key), coalesce(col("lp"), col(key)).as(out))
+
+  /** SQL twin of [[propagate]], 3 rounds: CTEs `lab`1..3 from `lab`0 over
+    * `edges`, with neighbour minima in `nbr`1..3.
+    */
+  private def propagateSql(edges: String, lab: String, nbr: String,
+      key: String): String =
+    (1 to 3).map { i =>
+      s"""$nbr$i AS (
+         |  SELECT e.src, MIN(l.label) AS nbr_min
+         |  FROM $edges e JOIN $lab${i - 1} l ON e.dst = l.$key
+         |  GROUP BY e.src
+         |), $lab$i AS (
+         |  SELECT l.$key,
+         |    least(l.label, coalesce(n.nbr_min, l.label)) AS label
+         |  FROM $lab${i - 1} l LEFT JOIN $nbr$i n ON l.$key = n.src
+         |)""".stripMargin
+    }.mkString(", ")
 
   private[graft] def canonicalLabels(docs: DataFrame): DataFrame = {
     // The edge set is localCheckpoint'ed: it appears in all 3 propagation
@@ -480,21 +554,9 @@ object Dedup {
     // verify pipeline from re-executing per round (measured 4.6s → edge
     // materialization cuts the rounds to pure id-join work).
     val edges = canonicalEdgesRaw(docs).localCheckpoint()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("label"))
-    for (_ <- 1 to 3) {
-      val nbr = edges
-        .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      labels = labels
-        .join(nbr.select(col("src").as("doc_id"), col("nbr_min")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-    }
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("label", "lp"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lp"), col("doc_id")).as("label"))
+    var labels = endpointLabels(edges, "doc_id")
+    for (_ <- 1 to 3) labels = propagate(edges, labels, "doc_id")
+    labelAll(docs, labels, "doc_id", "label")
   }
 
   def ddCanonical(spark: SparkSession, dir: String): DataFrame =
@@ -508,28 +570,12 @@ object Dedup {
   /** CTE chain ending in lab3(doc_id, label) — shared with the curation
     * pipeline oracle.
     */
-  private[graft] val canonicalCtes: String = {
-    val rounds = (1 to 3).map { i =>
-      s"""nm$i AS (
-         |  SELECT e.src, MIN(l.label) AS nbr_min
-         |  FROM edges e JOIN lab${i - 1} l ON e.dst = l.doc_id
-         |  GROUP BY e.src
-         |), lab$i AS (
-         |  SELECT l.doc_id,
-         |    least(l.label, coalesce(n.nbr_min, l.label)) AS label
-         |  FROM lab${i - 1} l LEFT JOIN nm$i n ON l.doc_id = n.src
-         |)""".stripMargin
-    }.mkString(", ")
+  private[graft] val canonicalCtes: String =
     s"""$scoredSqlCtes, verified AS (
        |  SELECT doc_a, doc_b FROM scored WHERE jaccard >= 0.6
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM verified
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM verified
-       |), lab0 AS (
+       |), ${symmetricSql("edges", "verified", "doc_a", "doc_b")}, lab0 AS (
        |  SELECT doc_id, doc_id AS label FROM documents
-       |), $rounds""".stripMargin
-  }
+       |), ${propagateSql("edges", "lab", "nm", "doc_id")}""".stripMargin
 
   val ddCanonicalSql: String =
     s"""WITH $canonicalCtes
@@ -584,21 +630,11 @@ object Dedup {
     // Fixpoint iteration over edge-endpoint docs only (isolated docs can
     // never change label — see canonicalLabels); the convergence probe and
     // every round's joins run on the small endpoint frame.
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("label"))
-      .localCheckpoint()
+    var labels = endpointLabels(edges, "doc_id").localCheckpoint()
     var converged = false
     var rounds = 0
     while (!converged && rounds < 50) {
-      val nbr = edges
-        .join(labels.select(col("doc_id").as("dst"), col("label")), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      val next = labels
-        .join(nbr.select(col("src").as("doc_id"), col("nbr_min")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .localCheckpoint()
+      val next = propagate(edges, labels, "doc_id").localCheckpoint()
       converged = next
         .join(labels.withColumnRenamed("label", "prev"), "doc_id")
         .filter(col("label") =!= col("prev"))
@@ -606,9 +642,7 @@ object Dedup {
       labels = next
       rounds += 1
     }
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("label", "lp"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lp"), col("doc_id")).as("label"))
+    labelAll(docs, labels, "doc_id", "label")
   }
 
   def ddComponents(spark: SparkSession, dir: String): DataFrame =
@@ -625,11 +659,7 @@ object Dedup {
   val ddComponentsSql: String =
     s"""WITH RECURSIVE $scoredSqlCtes, verified AS (
        |  SELECT doc_a, doc_b FROM scored WHERE jaccard >= 0.6
-       |), edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM verified
-       |  UNION ALL
-       |  SELECT doc_b AS src, doc_a AS dst FROM verified
-       |), reach AS (
+       |), ${symmetricSql("edges", "verified", "doc_a", "doc_b")}, reach AS (
        |  SELECT src, dst FROM edges
        |  UNION
        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
@@ -642,6 +672,31 @@ object Dedup {
        |SELECT doc_id, component_id,
        |  CAST(COUNT(*) OVER (PARTITION BY component_id) AS BIGINT) AS component_size
        |FROM comp ORDER BY doc_id ASC""".stripMargin
+
+  // --- signature agreement, once per engine ---------------------------------
+  /** Attaches each candidate pair's 64-hash signature as the arrays sig_a
+    * and sig_b.
+    */
+  private def withSignatures(pairs: DataFrame, sigs: DataFrame): DataFrame = {
+    val sigArr = sigs.select(col("doc_id"),
+      array((0 until NumHashes).map(i => col(s"mh$i")): _*).as("sig"))
+    pairs
+      .join(sigArr.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
+      .join(sigArr.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
+  }
+
+  /** Positions where two signature arrays agree (compiled kernel). */
+  private def eqCount(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.functions.EqCountExpr(
+      org.apache.spark.sql.GraftBridge.expression(a),
+      org.apache.spark.sql.GraftBridge.expression(b)))
+
+  /** SQL twin of [[eqCount]] over the first `w` hashes of the signature
+    * rows a and b.
+    */
+  private def agreeSql(w: Int = NumHashes): String = (0 until w)
+    .map(i => s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)")
+    .mkString(" + ")
 
   // --- dd_minhash_est: signature-agreement Jaccard estimate ----------------
   /** Estimated Jaccard for every LSH candidate pair straight from the
@@ -660,37 +715,24 @@ object Dedup {
     // ReuseExchange materializes the MinHash scan+partial-agg once (no
     // blocking checkpoint needed — measured faster without one).
     val sigs = signatures(Tables.documents(spark, dir))
-    val sigArr = sigs.select(col("doc_id"),
-      array((0 until NumHashes).map(i => col(s"mh$i")): _*).as("sig"))
-    lshPairs(sigs)
-      .join(sigArr.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
-        "doc_a")
-      .join(sigArr.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")),
-        "doc_b")
-      .withColumn("n_eq", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.EqCountExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("sig_a")),
-          org.apache.spark.sql.GraftBridge.expression(col("sig_b")))))
+    withSignatures(lshPairs(sigs), sigs)
+      .withColumn("n_eq", eqCount(col("sig_a"), col("sig_b")))
       .withColumn("est_jaccard",
         round(col("n_eq").cast("double") / NumHashes, 6))
       .select("doc_a", "doc_b", "n_eq", "est_jaccard")
       .orderBy(col("doc_a").asc, col("doc_b").asc)
   }
 
-  val ddMinhashEstSql: String = {
-    val agree = (0 until NumHashes)
-      .map(i => s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+  val ddMinhashEstSql: String =
     s"""WITH $signaturesSql, $lshPairsSql
        |SELECT doc_a, doc_b, n_eq,
        |  round(CAST(n_eq AS DOUBLE) / $NumHashes, 6) AS est_jaccard
        |FROM (
-       |  SELECT c.doc_a, c.doc_b, CAST($agree AS BIGINT) AS n_eq
+       |  SELECT c.doc_a, c.doc_b, CAST(${agreeSql()} AS BIGINT) AS n_eq
        |  FROM cand c
        |  JOIN sigs a ON c.doc_a = a.doc_id
        |  JOIN sigs b ON c.doc_b = b.doc_id
        |) t ORDER BY doc_a ASC, doc_b ASC""".stripMargin
-  }
 
   // --- dd_lsh_audit: candidate-stage precision / estimate-error report ----
   /** One-row audit of the banded-LSH candidate stage — the go/no-go gauge
@@ -710,29 +752,11 @@ object Dedup {
   def ddLshAudit(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val sigs = signatures(docs)
-    val sigArr = sigs.select(col("doc_id"),
-      array((0 until NumHashes).map(i => col(s"mh$i")): _*).as("sig"))
-    val sets = docs
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
     val err = abs(col("est_ppm") - col("exact_ppm"))
-    lshPairs(sigs)
-      .join(sets.select(col("doc_id").as("doc_a"), col("sg").as("sg_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sg").as("sg_b")), "doc_b")
-      .join(sigArr.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sigArr.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .withColumn("n_inter",
-        size(array_intersect(col("sg_a"), col("sg_b"))).cast("bigint"))
-      .withColumn("n_union",
-        size(col("sg_a")) + size(col("sg_b")) - col("n_inter"))
-      .withColumn("n_eq", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.EqCountExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("sig_a")),
-          org.apache.spark.sql.GraftBridge.expression(col("sig_b")))))
+    jaccard(withSignatures(withShingleSets(lshPairs(sigs), docs, docs), sigs))
+      .withColumn("n_eq", eqCount(col("sig_a"), col("sig_b")))
       .withColumn("exact_ppm", expr("n_inter * 1000000 DIV n_union"))
       .withColumn("est_ppm", expr(s"n_eq * 1000000 DIV $NumHashes"))
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") / col("n_union"), 6))
       .agg(count(lit(1)).as("n_candidates"),
         sum(when(col("jaccard") >= 0.6, 1L).otherwise(0L))
           .as("n_verified"),
@@ -744,27 +768,16 @@ object Dedup {
         "mean_abs_err_ppm", "max_abs_err_ppm")
   }
 
-  val ddLshAuditSql: String = {
-    val agree = (0 until NumHashes)
-      .map(i => s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH $signaturesSql, $lshPairsSql, sets AS (
-       |  SELECT doc_id, scs AS sg FROM sc
-       |), p AS (
-       |  SELECT
-       |    CAST(len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_inter,
-       |    CAST(len(sa.sg) + len(sb.sg)
-       |      - len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_union,
-       |    CAST($agree AS BIGINT) AS n_eq
-       |  FROM cand c
-       |  JOIN sets sa ON c.doc_a = sa.doc_id
-       |  JOIN sets sb ON c.doc_b = sb.doc_id
+  val ddLshAuditSql: String =
+    s"""WITH $signaturesSql, $lshPairsSql, ${verifySql("v", "cand")}, p AS (
+       |  SELECT c.n_inter, c.n_union, c.jaccard,
+       |    CAST(${agreeSql()} AS BIGINT) AS n_eq
+       |  FROM v c
        |  JOIN sigs a ON c.doc_a = a.doc_id
        |  JOIN sigs b ON c.doc_b = b.doc_id
        |), e AS (
        |  SELECT n_inter * 1000000 // n_union AS exact_ppm,
-       |    n_eq * 1000000 // $NumHashes AS est_ppm,
-       |    round(CAST(n_inter AS DOUBLE) / n_union, 6) AS jaccard
+       |    n_eq * 1000000 // $NumHashes AS est_ppm, jaccard
        |  FROM p
        |)
        |SELECT COUNT(*) AS n_candidates,
@@ -776,7 +789,6 @@ object Dedup {
        |    AS mean_abs_err_ppm,
        |  CAST(MAX(ABS(est_ppm - exact_ppm)) AS BIGINT) AS max_abs_err_ppm
        |FROM e""".stripMargin
-  }
 
   // --- dd_shingle_hist: duplicate-shingle-level histogram ------------------
   /** Corpus duplication profile at the shingle level: how many distinct
@@ -836,29 +848,13 @@ object Dedup {
     */
   private[graft] def semanticEdgesRaw(spark: SparkSession,
       dir: String): DataFrame =
-    ddEmbedCosine(spark, dir).select("vec_a", "vec_b")
-      .select(explode(array(
-        struct(col("vec_a").as("src"), col("vec_b").as("dst")),
-        struct(col("vec_b").as("src"), col("vec_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    symmetric(ddEmbedCosine(spark, dir), "vec_a", "vec_b")
 
   def ddSemanticClusters(spark: SparkSession, dir: String): DataFrame = {
     val edges = semanticEdgesRaw(spark, dir).localCheckpoint()
-    var labels = edges.select(col("src").as("vec_id")).distinct()
-      .select(col("vec_id"), col("vec_id").as("label"))
-    for (_ <- 1 to 3) {
-      val nbr = edges
-        .join(labels.select(col("vec_id").as("dst"), col("label")), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      labels = labels
-        .join(nbr.select(col("src").as("vec_id"), col("nbr_min")),
-          Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-    }
-    Tables.embeddings(spark, dir).select(col("vec_id"))
-      .join(labels.withColumnRenamed("label", "lp"), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("lp"), col("vec_id")).as("cluster_id"))
+    var labels = endpointLabels(edges, "vec_id")
+    for (_ <- 1 to 3) labels = propagate(edges, labels, "vec_id")
+    labelAll(Tables.embeddings(spark, dir), labels, "vec_id", "cluster_id")
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("cluster_id"))))
@@ -867,31 +863,15 @@ object Dedup {
 
   // lazy: ddEmbedCosineSql is declared later in the file (object vals
   // initialize in declaration order — eager interpolation would read null).
-  lazy val ddSemanticClustersSql: String = {
-    val rounds = (1 to 3).map { i =>
-      s"""vn$i AS (
-         |  SELECT e.src, MIN(l.label) AS nbr_min
-         |  FROM vedges e JOIN vlab${i - 1} l ON e.dst = l.vec_id
-         |  GROUP BY e.src
-         |), vlab$i AS (
-         |  SELECT l.vec_id,
-         |    least(l.label, coalesce(n.nbr_min, l.label)) AS label
-         |  FROM vlab${i - 1} l LEFT JOIN vn$i n ON l.vec_id = n.src
-         |)""".stripMargin
-    }.mkString(", ")
+  lazy val ddSemanticClustersSql: String =
     s"""WITH vpairs AS (
        |  SELECT vec_a, vec_b FROM ($ddEmbedCosineSql) p
-       |), vedges AS (
-       |  SELECT vec_a AS src, vec_b AS dst FROM vpairs
-       |  UNION ALL
-       |  SELECT vec_b AS src, vec_a AS dst FROM vpairs
-       |), vlab0 AS (
+       |), ${symmetricSql("vedges", "vpairs", "vec_a", "vec_b")}, vlab0 AS (
        |  SELECT vec_id, vec_id AS label FROM embeddings
-       |), $rounds
+       |), ${propagateSql("vedges", "vlab", "vn", "vec_id")}
        |SELECT vec_id, label AS cluster_id,
        |  CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT) AS cluster_size
        |FROM vlab3 ORDER BY vec_id ASC""".stripMargin
-  }
 
   // --- dd_threshold_sweep: pair yield per Jaccard threshold ----------------
   private val SweepThresholds = Seq(50, 60, 70, 80, 90)
@@ -907,16 +887,7 @@ object Dedup {
     */
   def ddThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val sets = docs
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
-    val scored = lshPairs(signatures(docs))
-      .join(sets.select(col("doc_id").as("doc_a"), col("sg").as("sg_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sg").as("sg_b")), "doc_b")
-      .withColumn("n_inter",
-        size(array_intersect(col("sg_a"), col("sg_b"))).cast("bigint"))
-      .withColumn("n_union",
-        size(col("sg_a")) + size(col("sg_b")) - col("n_inter"))
+    val scored = jaccard(withShingleSets(lshPairs(signatures(docs)), docs, docs))
     val aggCols = count(lit(1)).as("n_candidates") +:
       SweepThresholds.map(t =>
         sum(when(col("n_inter") * 100 >= col("n_union") * t, 1L)
@@ -940,17 +911,7 @@ object Dedup {
       .map(t => s"SELECT $t AS threshold_pct, ge$t AS n_pairs, " +
         s"n_candidates FROM agg")
       .mkString("\n       |  UNION ALL\n       |  ")
-    s"""WITH $signaturesSql, $lshPairsSql, sets AS (
-       |  SELECT doc_id, scs AS sg FROM sc
-       |), p AS (
-       |  SELECT
-       |    CAST(len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_inter,
-       |    CAST(len(sa.sg) + len(sb.sg)
-       |      - len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_union
-       |  FROM cand c
-       |  JOIN sets sa ON c.doc_a = sa.doc_id
-       |  JOIN sets sb ON c.doc_b = sb.doc_id
-       |), agg AS (
+    s"""WITH $signaturesSql, $lshPairsSql, ${verifySql("p", "cand")}, agg AS (
        |  SELECT COUNT(*) AS n_candidates,
        |    $conds
        |  FROM p
@@ -1065,10 +1026,7 @@ object Dedup {
       col("vec_id"), col("label"),
       transform(col("embedding"),
         x => round(x.cast("double") * 1000).cast("long")).as("q"))
-      .withColumn("n2", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.DotLongExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("q")),
-          org.apache.spark.sql.GraftBridge.expression(col("q")))))
+      .withColumn("n2", dot(col("q"), col("q")))
 
   private[graft] val quantizedSql: String =
     """qv AS (
@@ -1081,17 +1039,20 @@ object Dedup {
       |  FROM qv
       |)""".stripMargin
 
+  /** Exact-integer dot product of two quantized vectors, by the compiled
+    * [[graft.functions.DotLongExpr]] kernel.
+    */
+  private[graft] def dot(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.functions.DotLongExpr(
+      org.apache.spark.sql.GraftBridge.expression(a),
+      org.apache.spark.sql.GraftBridge.expression(b)))
+
   /** Exact-integer cosine via the compiled dot kernel (the zip_with +
     * aggregate form evaluates interpreted per candidate pair — the hot
     * path of every similarity verify).
     */
-  private[graft] def cosine(qa: Column, qb: Column, na: Column, nb: Column): Column = {
-    val dot = org.apache.spark.sql.GraftBridge.column(
-      graft.functions.DotLongExpr(
-        org.apache.spark.sql.GraftBridge.expression(qa),
-        org.apache.spark.sql.GraftBridge.expression(qb)))
-    dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
-  }
+  private[graft] def cosine(qa: Column, qb: Column, na: Column, nb: Column): Column =
+    dot(qa, qb).cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
 
   private[graft] def cosineSql(qa: String, qb: String, na: String, nb: String): String =
     s"CAST(list_sum(list_transform(range(1, len($qa) + 1), i -> $qa[i] * $qb[i])) AS DOUBLE)" +
@@ -1329,17 +1290,7 @@ object Dedup {
     val cand = rawCand.join(bn.select("band", "sig"), Seq("band", "sig"))
       .select(col("new_id"), col("corp_id")).distinct()
 
-    def sets(d: DataFrame): DataFrame = d
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
-    val nearHits = cand
-      .join(sets(newDocs).select(col("doc_id").as("new_id"), col("sg").as("sg_a")),
-        "new_id")
-      .join(sets(corpus).select(col("doc_id").as("corp_id"), col("sg").as("sg_b")),
-        "corp_id")
-      .withColumn("n_inter", size(array_intersect(col("sg_a"), col("sg_b"))))
-      .withColumn("jaccard", round(col("n_inter").cast("double") /
-        (size(col("sg_a")) + size(col("sg_b")) - col("n_inter")), 6))
+    val nearHits = jaccard(withShingleSets(cand, newDocs, corpus, "new_id", "corp_id"))
       .filter(col("jaccard") >= 0.6)
       .select(col("new_id")).distinct()
       .withColumn("is_near_dup", lit(true))
@@ -1406,15 +1357,8 @@ object Dedup {
        |), cand AS (
        |  SELECT DISTINCT r.new_id, r.corp_id FROM rawc r
        |  JOIN bn ON r.band = bn.band AND r.sig = bn.sig
-       |), sets AS (
-       |  SELECT doc_id, scs AS sg FROM sc
-       |), near_m AS (
-       |  SELECT DISTINCT c.new_id AS doc_id
-       |  FROM cand c JOIN sets sa ON c.new_id = sa.doc_id
-       |  JOIN sets sb ON c.corp_id = sb.doc_id
-       |  WHERE round(CAST(len(list_intersect(sa.sg, sb.sg)) AS DOUBLE) /
-       |    (len(sa.sg) + len(sb.sg) - len(list_intersect(sa.sg, sb.sg))), 6)
-       |    >= 0.6
+       |), ${verifySql("vc", "cand", "new_id", "corp_id")}, near_m AS (
+       |  SELECT DISTINCT new_id AS doc_id FROM vc WHERE jaccard >= 0.6
        |)
        |SELECT d.doc_id,
        |  (e.doc_id IS NOT NULL) AS is_exact_dup,
@@ -1444,30 +1388,12 @@ object Dedup {
   private[graft] val SigWidths = Seq(8, 16, 32, 64)
 
   def ddSigWidthSweep(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     val docs = Tables.documents(spark, dir)
     val sigs = signatures(docs)
-    val sigArr = sigs.select(col("doc_id"),
-      array((0 until NumHashes).map(i => col(s"mh$i")): _*).as("sig"))
-    val sets = docs
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
-    def eqPrefix(w: Int): Column = GraftBridge.column(
-      graft.functions.EqCountExpr(
-        GraftBridge.expression(slice(col("sig_a"), 1, w)),
-        GraftBridge.expression(slice(col("sig_b"), 1, w))))
-    val base = lshPairs(sigs)
-      .join(sets.select(col("doc_id").as("doc_a"), col("sg").as("sg_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sg").as("sg_b")), "doc_b")
-      .join(sigArr.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sigArr.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .withColumn("n_inter",
-        size(array_intersect(col("sg_a"), col("sg_b"))).cast("bigint"))
-      .withColumn("n_union",
-        size(col("sg_a")) + size(col("sg_b")) - col("n_inter"))
+    val base = jaccard(withSignatures(withShingleSets(lshPairs(sigs), docs, docs), sigs))
       .withColumn("exact_ppm", expr("n_inter * 1000000 DIV n_union"))
-    val withEq = SigWidths.foldLeft(base)((df, w) =>
-      df.withColumn(s"n_eq_$w", eqPrefix(w)))
+    val withEq = SigWidths.foldLeft(base)((df, w) => df.withColumn(s"n_eq_$w",
+      eqCount(slice(col("sig_a"), 1, w), slice(col("sig_b"), 1, w))))
     withEq
       .select(col("exact_ppm"), explode(array(SigWidths.map(w =>
         struct(lit(w.toLong).as("width"),
@@ -1484,25 +1410,15 @@ object Dedup {
   }
 
   val ddSigWidthSweepSql: String = {
-    def agree(w: Int): String = (0 until w)
-      .map(i => s"(CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
     val eqCols = SigWidths
-      .map(w => s"CAST(${agree(w)} AS BIGINT) AS n_eq_$w").mkString(",\n    ")
+      .map(w => s"CAST(${agreeSql(w)} AS BIGINT) AS n_eq_$w").mkString(",\n    ")
     val widthRows = SigWidths.map(w =>
       s"SELECT $w AS width, n_eq_$w * 1000000 // $w AS est_ppm, exact_ppm FROM e")
       .mkString("\n  UNION ALL\n  ")
-    s"""WITH $signaturesSql, $lshPairsSql, sets AS (
-       |  SELECT doc_id, scs AS sg FROM sc
-       |), p AS (
-       |  SELECT
-       |    CAST(len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_inter,
-       |    CAST(len(sa.sg) + len(sb.sg)
-       |      - len(list_intersect(sa.sg, sb.sg)) AS BIGINT) AS n_union,
+    s"""WITH $signaturesSql, $lshPairsSql, ${verifySql("v", "cand")}, p AS (
+       |  SELECT c.n_inter, c.n_union,
        |    $eqCols
-       |  FROM cand c
-       |  JOIN sets sa ON c.doc_a = sa.doc_id
-       |  JOIN sets sb ON c.doc_b = sb.doc_id
+       |  FROM v c
        |  JOIN sigs a ON c.doc_a = a.doc_id
        |  JOIN sigs b ON c.doc_b = b.doc_id
        |), e AS (
@@ -1568,15 +1484,7 @@ object Dedup {
       .select(bandsOfG.as("bands"), col("pr.doc_a").as("doc_a"),
         col("pr.doc_b").as("doc_b"))
       .distinct()
-    val sets = docs
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
-    candAll
-      .join(sets.select(col("doc_id").as("doc_a"), col("sg").as("sg_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sg").as("sg_b")), "doc_b")
-      .withColumn("n_inter", size(array_intersect(col("sg_a"), col("sg_b"))))
-      .withColumn("jaccard", round(col("n_inter").cast("double") /
-        (size(col("sg_a")) + size(col("sg_b")) - col("n_inter")), 6))
+    jaccard(withShingleSets(candAll, docs, docs))
       .groupBy(col("bands"))
       .agg(count(lit(1)).as("n_candidates"),
         sum(when(col("jaccard") >= 0.6, 1L).otherwise(0L)).as("n_verified"))
@@ -1614,17 +1522,7 @@ object Dedup {
       .map(nb => s"SELECT * FROM cand_$nb").mkString("\nUNION ALL\n")
     s"""WITH $signaturesSql, $candCtes, candall AS (
        |$candUnion
-       |), sets AS (
-       |  SELECT doc_id, scs AS sg FROM sc
-       |), scored AS (
-       |  SELECT c.bands,
-       |    round(CAST(len(list_intersect(sa.sg, sb.sg)) AS DOUBLE) /
-       |      (len(sa.sg) + len(sb.sg) - len(list_intersect(sa.sg, sb.sg))), 6)
-       |      AS jaccard
-       |  FROM candall c
-       |  JOIN sets sa ON c.doc_a = sa.doc_id
-       |  JOIN sets sb ON c.doc_b = sb.doc_id
-       |)
+       |), ${verifySql("scored", "candall")}
        |SELECT CAST(bands AS BIGINT) AS bands,
        |  CAST($NumHashes // bands AS BIGINT) AS rows_per_band,
        |  COUNT(*) AS n_candidates,

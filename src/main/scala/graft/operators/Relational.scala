@@ -21,21 +21,29 @@ import org.apache.spark.sql.functions._
 object Relational {
 
   /** Exact-decimal money term (2-decimal source values cast losslessly). */
-  private def m(c: Column) = c.cast("decimal(12,2)")
+  private[operators] def m(c: Column) = c.cast("decimal(12,2)")
 
   /** Small multiplier term like (1 - discount), value in [0, 9.99]. */
-  private def f(c: Column) = c.cast("decimal(4,2)")
+  private[operators] def f(c: Column) = c.cast("decimal(4,2)")
 
   /** Money aggregate: decimal terms multiply exactly (no rounding, bounded
     * precision), decimal addition is associative, so Spark's parallel sum
-    * equals DuckDB's serial sum exactly; emitted as DOUBLE.
+    * equals DuckDB's serial sum exactly; emitted as DOUBLE, correctly
+    * rounded from the exact decimal.
     */
-  private def sumMoney(c: Column) = sum(c).cast("double")
+  private[operators] def sumMoney(c: Column) = sum(c).cast("double")
 
-  /** DuckDB fragments matching [[m]]/[[f]]/[[sumMoney]]. */
-  private def mSql(e: String) = s"CAST($e AS DECIMAL(12,2))"
-  private def fSql(e: String) = s"CAST($e AS DECIMAL(4,2))"
-  private def sumMoneySql(expr: String) = s"CAST(SUM($expr) AS DOUBLE)"
+  /** DuckDB fragments matching [[m]]/[[f]]/[[sumMoney]]. DuckDB's direct
+    * DECIMAL → DOUBLE cast converts the unscaled integer to a double before
+    * dividing by the scale, which is not correctly rounded once that
+    * integer passes 2^53; the exact decimal text parses to the correctly
+    * rounded double, as Spark's cast does. A DOUBLE argument's text
+    * round-trips, so its value is unchanged.
+    */
+  private[operators] def mSql(e: String) = s"CAST($e AS DECIMAL(12,2))"
+  private[operators] def fSql(e: String) = s"CAST($e AS DECIMAL(4,2))"
+  private[operators] def sumMoneySql(e: String) =
+    s"CAST(CAST(SUM($e) AS VARCHAR) AS DOUBLE)"
 
   // --- q1_pricing_summary: TPC-H Q1 shape -------------------------------
   def q1PricingSummary(spark: SparkSession, dir: String): DataFrame = {

@@ -27,12 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object RelationalExt {
 
-  private def m(c: Column) = c.cast("decimal(12,2)")
-  private def f(c: Column) = c.cast("decimal(4,2)")
-  private def sumMoney(c: Column) = sum(c).cast("double")
-  private def mSql(e: String) = s"CAST($e AS DECIMAL(12,2))"
-  private def fSql(e: String) = s"CAST($e AS DECIMAL(4,2))"
-  private def sumMoneySql(e: String) = s"CAST(SUM($e) AS DOUBLE)"
+  import Relational.{f, fSql, m, mSql, sumMoney, sumMoneySql}
   private def revenue: Column = m(col("l_extendedprice")) * f(lit(1) - col("l_discount"))
   private def revenueSql: String = mSql("l_extendedprice") + " * " + fSql("1 - l_discount")
 

@@ -66,38 +66,147 @@ object Similarity {
 
   private def bucketSql(q: String): String = bandBucketSql(q, 0 until NumPlanes)
 
-  // --- sim_topk_bruteforce: exact cosine top-k ----------------------------
-  def simTopkBruteforce(spark: SparkSession, dir: String): DataFrame = {
-    val nm = Dedup.quantized(spark, dir)
-    val queries = nm.filter(col("vec_id") < 10)
+  // --- the near-neighbour decisions, once per engine ------------------------
+  // Each is one Spark function plus its DuckDB SQL twin; every sim_* query
+  // and oracle below is assembled from them.
+
+  /** Roles of the embeddings rows, by vec_id: ids below 10 are the query
+    * set, the rest is the corpus, and its first 16 rows (10..25) seed the
+    * IVF coarse centroids and the PQ codebooks alike.
+    */
+  private def isQuery(v: Column): Column = v < 10
+  private def isCorpus(v: Column): Column = v >= 10
+  private def isSeed(v: Column): Column = v.between(10, 9 + PqK)
+  private def isQuerySql(v: String): String = s"$v < 10"
+  private def isCorpusSql(v: String): String = s"$v >= 10"
+  private def isSeedSql(v: String): String = s"$v BETWEEN 10 AND ${9 + PqK}"
+
+  /** The query set as (query_id, qq, nq). */
+  private def queryVecs(nm: DataFrame): DataFrame =
+    nm.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-    val corpus = nm.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("qc"), col("n2").as("nc"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    corpus.crossJoin(broadcast(queries))
+
+  /** The corpus as (neighbor_id, `q`, `n2`). */
+  private def corpusVecs(nm: DataFrame, q: String, n2: String): DataFrame =
+    nm.filter(isCorpus(col("vec_id")))
+      .select(col("vec_id").as("neighbor_id"), col("q").as(q), col("n2").as(n2))
+
+  /** The seed centroids as (c_id, qc, nc), and their SQL CTE. */
+  private def seedCentroids(nm: DataFrame): DataFrame =
+    nm.filter(isSeed(col("vec_id")))
+      .select(col("vec_id").as("c_id"), col("q").as("qc"), col("n2").as("nc"))
+
+  private def seedCentroidsSql(cte: String): String =
+    s"""$cte AS (
+       |  SELECT vec_id AS c_id, q AS qc, n2 AS nc FROM nm
+       |  WHERE ${isSeedSql("vec_id")}
+       |)""".stripMargin
+
+  /** The nearest-cell rule: each row of `vecs` (keyed by `key`, vector `q`,
+    * norm² `n2`) ranks the centroids (c_id, qc, nc) by cosine descending,
+    * c_id ascending, as `rank`, and keeps its `depth` nearest: depth 1 is a
+    * cell assignment, a deeper list a query's probes.
+    */
+  private def nearestCells(vecs: DataFrame, key: String, q: String, n2: String,
+      centroids: DataFrame, depth: Int, rank: String): DataFrame =
+    vecs.crossJoin(broadcast(centroids))
+      .withColumn("cos_c", Dedup.cosine(col(q), col("qc"), col(n2), col("nc")))
+      .withColumn(rank, row_number().over(Window.partitionBy(col(key))
+        .orderBy(col("cos_c").desc, col("c_id").asc)))
+      .filter(if (depth == 1) col(rank) === 1 else col(rank) <= depth)
+
+  /** SQL twin of [[nearestCells]]: CTE `cte` holds `cols` of the `role`
+    * rows of nm (alias v), each with its `depth` nearest `cent` rows' ids
+    * as `cell`.
+    */
+  private def nearestCellsSql(cte: String, cols: String, role: String,
+      cent: String, depth: Int, rank: String): String =
+    s"""$cte AS (
+       |  SELECT * FROM (
+       |    SELECT $cols, c.c_id AS cell,
+       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
+       |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC, c.c_id ASC) AS $rank
+       |    FROM nm v CROSS JOIN $cent c WHERE $role
+       |  ) t WHERE $rank <= $depth
+       |)""".stripMargin
+
+  /** Corpus cell assignment: (neighbor_id, qv, nv, cell). */
+  private def assignCells(corpus: DataFrame, centroids: DataFrame): DataFrame =
+    nearestCells(corpus, "neighbor_id", "qv", "nv", centroids, 1, "crk")
+      .select(col("neighbor_id"), col("qv"), col("nv"), col("c_id").as("cell"))
+
+  private def assignCellsSql(cte: String, cent: String): String =
+    nearestCellsSql(cte, "v.vec_id AS neighbor_id, v.q AS qv, v.n2 AS nv",
+      isCorpusSql("v.vec_id"), cent, 1, "crk")
+
+  /** Query probe lists: (query_id, qq, nq, cell, prk) for the `depth`
+    * nearest cells.
+    */
+  private def probeCells(queries: DataFrame, centroids: DataFrame,
+      depth: Int): DataFrame =
+    nearestCells(queries, "query_id", "qq", "nq", centroids, depth, "prk")
+      .select(col("query_id"), col("qq"), col("nq"), col("c_id").as("cell"),
+        col("prk"))
+
+  private def probeCellsSql(cent: String, depth: Int): String =
+    nearestCellsSql("probes", "v.vec_id AS query_id, v.q AS qq, v.n2 AS nq",
+      isQuerySql("v.vec_id"), cent, depth, "prk")
+
+  /** The top-k rule: within `part`, rank by `score` descending, then
+    * neighbor_id ascending, as `rk`, and keep ranks 1..k.
+    */
+  private def topK(scored: DataFrame, score: String, k: Int,
+      part: String*): DataFrame =
+    scored.withColumn("rk", row_number().over(Window.partitionBy(part.map(col): _*)
+        .orderBy(col(score).desc, col("neighbor_id").asc)))
+      .filter(col("rk") <= k)
+
+  /** Per-query [[topK]] as a search result: (query_id, neighbor_id,
+    * rk BIGINT, score), ordered by query and rank.
+    */
+  private def topKResult(scored: DataFrame, score: String, k: Int): DataFrame =
+    topK(scored, score, k, "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        col("rk").cast("bigint").as("rk"), col(score))
+      .orderBy(col("query_id").asc, col("rk").asc)
+
+  /** SQL twins of [[topK]]'s rank and of [[topKResult]]: the statement's
+    * last CTE, `ranked` over the CTE named `scored`, and its final SELECT.
+    */
+  private def topKRankSql(score: String, part: String = "query_id"): String =
+    s"CAST(ROW_NUMBER() OVER (PARTITION BY $part ORDER BY $score DESC, neighbor_id ASC) AS BIGINT)"
+
+  private def topKResultSql(scored: String, score: String, k: Int): String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, $score, ${topKRankSql(score)} AS rk
+       |  FROM $scored
+       |)
+       |SELECT query_id, neighbor_id, rk, $score FROM ranked
+       |WHERE rk <= $k ORDER BY query_id ASC, rk ASC""".stripMargin
+
+  /** Every (query, corpus vector) pair with its exact cosine, rounded to
+    * 6 places as `cos_sim`: the broadcast linear scan of the exact search.
+    */
+  private def exactScores(nm: DataFrame): DataFrame =
+    corpusVecs(nm, "qc", "nc").crossJoin(broadcast(queryVecs(nm)))
       .withColumn("cos_sim",
         round(Dedup.cosine(col("qq"), col("qc"), col("nq"), col("nc")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rk").cast("bigint").as("rk"),
-        col("cos_sim"))
-      .orderBy(col("query_id").asc, col("rk").asc)
-  }
 
-  val simTopkBruteforceSql: String =
-    s"""WITH ${Dedup.quantizedSql}, scored AS (
+  // --- sim_topk_bruteforce: exact cosine top-k ----------------------------
+  def simTopkBruteforce(spark: SparkSession, dir: String): DataFrame =
+    topKResult(exactScores(Dedup.quantized(spark, dir)), "cos_sim", K)
+
+  /** The SQL twin of [[exactScores]], as the CTE `scored`. */
+  private def exactScoresSql: String =
+    s"""scored AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |    round(${Dedup.cosineSql("a.q", "b.q", "a.n2", "b.n2")}, 6) AS cos_sim
-       |  FROM nm a JOIN nm b ON a.vec_id < 10 AND b.vec_id >= 10
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, rk, cos_sim FROM ranked
-       |WHERE rk <= $K ORDER BY query_id ASC, rk ASC""".stripMargin
+       |  FROM nm a JOIN nm b ON ${isQuerySql("a.vec_id")} AND ${isCorpusSql("b.vec_id")}
+       |)""".stripMargin
+
+  val simTopkBruteforceSql: String =
+    s"""WITH ${Dedup.quantizedSql}, $exactScoresSql,
+       |${topKResultSql("scored", "cos_sim", K)}""".stripMargin
 
   // --- sim_mips_topk: exact maximum-inner-product top-k -------------------
   /** Top-k by raw inner product (MIPS) — the retrieval objective when
@@ -113,22 +222,12 @@ object Similarity {
     */
   def simMipsTopk(spark: SparkSession, dir: String): DataFrame = {
     val nm = Dedup.quantized(spark, dir)
-    val queries = nm.filter(col("vec_id") < 10)
+    val queries = nm.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val corpus = nm.filter(col("vec_id") >= 10)
+    val corpus = nm.filter(isCorpus(col("vec_id")))
       .select(col("vec_id").as("neighbor_id"), col("q").as("qc"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dot").desc, col("neighbor_id").asc)
-    corpus.crossJoin(broadcast(queries))
-      .withColumn("dot", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.DotLongExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("qq")),
-          org.apache.spark.sql.GraftBridge.expression(col("qc")))))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("query_id"), col("neighbor_id"),
-        col("rk").cast("bigint").as("rk"), col("dot"))
-      .orderBy(col("query_id").asc, col("rk").asc)
+    topKResult(corpus.crossJoin(broadcast(queries))
+      .withColumn("dot", Dedup.dot(col("qq"), col("qc"))), "dot", K)
   }
 
   val simMipsTopkSql: String =
@@ -136,15 +235,8 @@ object Similarity {
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |    CAST(list_sum(list_transform(range(1, len(a.q) + 1),
        |      i -> a.q[i] * b.q[i])) AS BIGINT) AS dot
-       |  FROM nm a JOIN nm b ON a.vec_id < 10 AND b.vec_id >= 10
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, dot,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY dot DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, rk, dot FROM ranked
-       |WHERE rk <= $K ORDER BY query_id ASC, rk ASC""".stripMargin
+       |  FROM nm a JOIN nm b ON ${isQuerySql("a.vec_id")} AND ${isCorpusSql("b.vec_id")}
+       |), ${topKResultSql("scored", "dot", K)}""".stripMargin
 
   // --- sim_knn_lsh: hyperplane-bucketed approximate search ----------------
   /** Multi-probe: each query probes its exact bucket plus the 8 buckets at
@@ -158,22 +250,16 @@ object Similarity {
     val probeArr = array(
       col("bkt") +: (0 until NumPlanes).map(j =>
         col("bkt").bitwiseXOR(lit(1L << j))): _*)
-    val queries = nm.filter(col("vec_id") < 10)
+    val queries = nm.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("q").as("qq"),
         col("n2").as("nq"), explode(probeArr).as("bkt"))
-    val corpus = nm.filter(col("vec_id") >= 10)
+    val corpus = nm.filter(isCorpus(col("vec_id")))
       .select(col("vec_id").as("neighbor_id"), col("q").as("qc"),
         col("n2").as("nc"), col("bkt"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    corpus.join(broadcast(queries), Seq("bkt"))
+    topKResult(corpus.join(broadcast(queries), Seq("bkt"))
       .withColumn("cos_sim",
-        round(Dedup.cosine(col("qq"), col("qc"), col("nq"), col("nc")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("query_id"), col("neighbor_id"), col("rk").cast("bigint").as("rk"),
-        col("cos_sim"))
-      .orderBy(col("query_id").asc, col("rk").asc)
+        round(Dedup.cosine(col("qq"), col("qc"), col("nq"), col("nc")), 6)),
+      "cos_sim", 3)
   }
 
   val simKnnLshSql: String = {
@@ -184,20 +270,13 @@ object Similarity {
        |), probes AS (
        |  SELECT a.vec_id, a.q, a.n2, u.pbkt
        |  FROM bk a, UNNEST($probeList) AS u(pbkt)
-       |  WHERE a.vec_id < 10
+       |  WHERE ${isQuerySql("a.vec_id")}
        |), scored AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |    round(${Dedup.cosineSql("a.q", "b.q", "a.n2", "b.n2")}, 6) AS cos_sim
        |  FROM probes a JOIN bk b ON a.pbkt = b.bkt
-       |  WHERE b.vec_id >= 10
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, rk, cos_sim FROM ranked
-       |WHERE rk <= 3 ORDER BY query_id ASC, rk ASC""".stripMargin
+       |  WHERE ${isCorpusSql("b.vec_id")}
+       |), ${topKResultSql("scored", "cos_sim", 3)}""".stripMargin
   }
 
   // --- sim_range_search: threshold retrieval over the LSH buckets ---------
@@ -254,10 +333,10 @@ object Similarity {
     val nm = rangeBuckets(Dedup.quantized(spark, dir))
     val probeArr = array(RangeProbeMasks.map(m =>
       col("bkt").bitwiseXOR(lit(m))): _*)
-    val queries = nm.filter(col("vec_id") < 10)
+    val queries = nm.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("q").as("qq"),
         col("n2").as("nq"), col("tbl"), explode(probeArr).as("bkt"))
-    val corpus = nm.filter(col("vec_id") >= 10)
+    val corpus = nm.filter(isCorpus(col("vec_id")))
       .select(col("vec_id").as("neighbor_id"), col("q").as("qc"),
         col("n2").as("nc"), col("tbl"), col("bkt"))
     corpus.join(broadcast(queries), Seq("tbl", "bkt"))
@@ -288,12 +367,12 @@ object Similarity {
        |), probes AS (
        |  SELECT a.vec_id, a.q, a.n2, a.tbl, u.pbkt
        |  FROM bk a, UNNEST($probeList) AS u(pbkt)
-       |  WHERE a.vec_id < 10
+       |  WHERE ${isQuerySql("a.vec_id")}
        |), rscored AS (
        |  SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |    round(${Dedup.cosineSql("a.q", "b.q", "a.n2", "b.n2")}, 6) AS cos_sim
        |  FROM probes a JOIN bk b ON a.tbl = b.tbl AND a.pbkt = b.bkt
-       |  WHERE b.vec_id >= 10
+       |  WHERE ${isCorpusSql("b.vec_id")}
        |)""".stripMargin
   }
 
@@ -335,14 +414,7 @@ object Similarity {
     * the same construction prunes far harder at the same recall.
     */
   def simRangeAudit(spark: SparkSession, dir: String): DataFrame = {
-    val nm = Dedup.quantized(spark, dir)
-    val queries = nm.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-    val corpus = nm.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("qc"), col("n2").as("nc"))
-    val exact = corpus.crossJoin(broadcast(queries))
-      .withColumn("cos_sim",
-        round(Dedup.cosine(col("qq"), col("qc"), col("nq"), col("nc")), 6))
+    val exact = exactScores(Dedup.quantized(spark, dir))
       .filter(col("cos_sim") >= RangeThresh)
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_exact"))
@@ -360,12 +432,9 @@ object Similarity {
     s"""WITH ${Dedup.quantizedSql}, $rangeScoredCtes, approx AS (
        |  SELECT query_id, COUNT(*) AS n_lsh FROM rscored
        |  WHERE cos_sim >= $RangeThresh GROUP BY query_id
-       |), exact AS (
-       |  SELECT a.vec_id AS query_id, COUNT(*) AS n_exact
-       |  FROM nm a JOIN nm b ON a.vec_id < 10 AND b.vec_id >= 10
-       |  WHERE round(${Dedup.cosineSql("a.q", "b.q", "a.n2", "b.n2")}, 6)
-       |    >= $RangeThresh
-       |  GROUP BY a.vec_id
+       |), $exactScoresSql, exact AS (
+       |  SELECT query_id, COUNT(*) AS n_exact FROM scored
+       |  WHERE cos_sim >= $RangeThresh GROUP BY query_id
        |)
        |SELECT e.query_id, e.n_exact,
        |  CAST(COALESCE(x.n_lsh, 0) AS BIGINT) AS n_lsh,
@@ -385,73 +454,34 @@ object Similarity {
     */
   def simKnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val nm = Dedup.quantized(spark, dir)
-    val centroids = nm.filter(col("vec_id").between(10, 25))
-      .select(col("vec_id").as("c_id"), col("q").as("qc"), col("n2").as("nc"))
-    val corpus = nm.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("qv"), col("n2").as("nv"))
-    val queries = nm.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-
-    val wAssign = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val assigned = corpus.crossJoin(broadcast(centroids))
-      .withColumn("cos_c", Dedup.cosine(col("qv"), col("qc"), col("nv"), col("nc")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") === 1)
-      .select(col("neighbor_id"), col("qv"), col("nv"), col("c_id").as("cell"))
-
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("cos_c", Dedup.cosine(col("qq"), col("qc"), col("nq"), col("nc")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= 2)
-      .select(col("query_id"), col("qq"), col("nq"), col("c_id").as("cell"))
-
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    assigned.join(broadcast(probes), Seq("cell"))
-      .withColumn("cos_sim",
-        round(Dedup.cosine(col("qq"), col("qv"), col("nq"), col("nv")), 6))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= 3)
-      .select(col("query_id"), col("neighbor_id"),
-        col("rk").cast("bigint").as("rk"), col("cos_sim"))
-      .orderBy(col("query_id").asc, col("rk").asc)
+    ivfSearch(nm, seedCentroids(nm))
   }
 
-  val simKnnIvfSql: String =
-    s"""WITH ${Dedup.quantizedSql}, cent AS (
-       |  SELECT vec_id AS c_id, q AS qc, n2 AS nc FROM nm
-       |  WHERE vec_id BETWEEN 10 AND 25
-       |), asg AS (
-       |  SELECT * FROM (
-       |    SELECT v.vec_id AS neighbor_id, v.q AS qv, v.n2 AS nv, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS crk
-       |    FROM nm v CROSS JOIN cent c WHERE v.vec_id >= 10
-       |  ) t WHERE crk = 1
-       |), probes AS (
-       |  SELECT * FROM (
-       |    SELECT s.vec_id AS query_id, s.q AS qq, s.n2 AS nq, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-       |        ${Dedup.cosineSql("s.q", "c.qc", "s.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS prk
-       |    FROM nm s CROSS JOIN cent c WHERE s.vec_id < 10
-       |  ) t WHERE prk <= 2
-       |), scored AS (
+  /** The IVF search over a centroid set: corpus assigned to its nearest
+    * cell, each query probing its 2 nearest cells, exact cosine top-3
+    * inside them. Shared by the seeded and the trained quantizer.
+    */
+  private def ivfSearch(nm: DataFrame, centroids: DataFrame): DataFrame = {
+    val assigned = assignCells(corpusVecs(nm, "qv", "nv"), centroids)
+    val probes = probeCells(queryVecs(nm), centroids, 2)
+      .select(col("query_id"), col("qq"), col("nq"), col("cell"))
+    topKResult(assigned.join(broadcast(probes), Seq("cell"))
+      .withColumn("cos_sim",
+        round(Dedup.cosine(col("qq"), col("qv"), col("nq"), col("nv")), 6)),
+      "cos_sim", 3)
+  }
+
+  /** SQL twin of [[ivfSearch]] over the centroid CTE `cent`. */
+  private def ivfSearchSql(cent: String): String =
+    s"""${assignCellsSql("asg", cent)}, ${probeCellsSql(cent, 2)}, scored AS (
        |  SELECT p.query_id, a.neighbor_id,
        |    round(${Dedup.cosineSql("p.qq", "a.qv", "p.nq", "a.nv")}, 6) AS cos_sim
        |  FROM probes p JOIN asg a ON p.cell = a.cell
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, rk, cos_sim FROM ranked
-       |WHERE rk <= 3 ORDER BY query_id ASC, rk ASC""".stripMargin
+       |), ${topKResultSql("scored", "cos_sim", 3)}""".stripMargin
+
+  val simKnnIvfSql: String =
+    s"""WITH ${Dedup.quantizedSql}, ${seedCentroidsSql("cent")},
+       |${ivfSearchSql("cent")}""".stripMargin
 
   // --- sim_cluster_purity: IVF cell vs label agreement audit --------------
   /** Clustering-quality audit of the IVF coarse quantizer against the
@@ -467,16 +497,9 @@ object Similarity {
     */
   def simClusterPurity(spark: SparkSession, dir: String): DataFrame = {
     val nm = Dedup.quantized(spark, dir)
-    val centroids = nm.filter(col("vec_id").between(10, 25))
-      .select(col("vec_id").as("c_id"), col("q").as("qc"), col("n2").as("nc"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val assigned = nm.crossJoin(broadcast(centroids))
-      .withColumn("cos_c",
-        Dedup.cosine(col("q"), col("qc"), col("n2"), col("nc")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") === 1)
-      .select(col("vec_id"), col("label"), col("c_id").as("cell"))
+    val assigned =
+      nearestCells(nm, "vec_id", "q", "n2", seedCentroids(nm), 1, "crk")
+        .select(col("vec_id"), col("label"), col("c_id").as("cell"))
     val cellLabel = assigned.groupBy(col("cell"), col("label"))
       .agg(count(lit(1)).as("n"))
     val byCell = Window.partitionBy(col("cell"))
@@ -494,18 +517,8 @@ object Similarity {
   }
 
   val simClusterPuritySql: String =
-    s"""WITH ${Dedup.quantizedSql}, cent AS (
-       |  SELECT vec_id AS c_id, q AS qc, n2 AS nc FROM nm
-       |  WHERE vec_id BETWEEN 10 AND 25
-       |), asg AS (
-       |  SELECT * FROM (
-       |    SELECT v.vec_id, v.label, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS crk
-       |    FROM nm v CROSS JOIN cent c
-       |  ) t WHERE crk = 1
-       |), cl AS (
+    s"""WITH ${Dedup.quantizedSql}, ${seedCentroidsSql("cent")},
+       |${nearestCellsSql("asg", "v.vec_id, v.label", "TRUE", "cent", 1, "crk")}, cl AS (
        |  SELECT cell, label, COUNT(*) AS n FROM asg GROUP BY cell, label
        |), t AS (
        |  SELECT cell, label, n,
@@ -521,13 +534,6 @@ object Similarity {
 
   // --- sim_knn_ivf_trained: IVF with Lloyd-trained centroids --------------
   private val TrainRounds = 2
-
-  /** Exact-integer self dot product (norm²) of a quantized vector. */
-  private def dotSelf(c: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.functions.DotLongExpr(
-        org.apache.spark.sql.GraftBridge.expression(c),
-        org.apache.spark.sql.GraftBridge.expression(c)))
 
   /** IVF with TRAINED coarse centroids (closes SURVEY §6's k-means item):
     * [[TrainRounds]] Lloyd iterations of spherical k-means, seeded from the
@@ -550,18 +556,10 @@ object Similarity {
     * through training because the update groups by cell.
     */
   private def trainedCentroidsPlan(nm: DataFrame): DataFrame = {
-    val corpus = nm.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("qv"), col("n2").as("nv"))
-    var centroids = nm.filter(col("vec_id").between(10, 25))
-      .select(col("vec_id").as("c_id"), col("q").as("qc"), col("n2").as("nc"))
-    val wAssign = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
+    val corpus = corpusVecs(nm, "qv", "nv")
+    var centroids = seedCentroids(nm)
     for (_ <- 1 to TrainRounds) {
-      val sums = corpus.crossJoin(broadcast(centroids))
-        .withColumn("cos_c",
-          Dedup.cosine(col("qv"), col("qc"), col("nv"), col("nc")))
-        .withColumn("crk", row_number().over(wAssign))
-        .filter(col("crk") === 1)
+      val sums = nearestCells(corpus, "neighbor_id", "qv", "nv", centroids, 1, "crk")
         .select(col("c_id").as("cell"), posexplode(col("qv")).as(Seq("pos", "v")))
         .groupBy(col("cell"), col("pos"))
         .agg(sum(col("v")).as("s"))
@@ -569,7 +567,7 @@ object Similarity {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("s")))),
           x => x.getField("s")).as("qc"))
       centroids = sums
-        .select(col("cell").as("c_id"), col("qc"), dotSelf(col("qc")).as("nc"))
+        .select(col("cell").as("c_id"), col("qc"), Dedup.dot(col("qc"), col("qc")).as("nc"))
     }
     centroids
   }
@@ -639,17 +637,7 @@ object Similarity {
     * TrainRounds × (assign → sum-update), ending in the CTE named `cent2`.
     * Interpolated by both trained-quantizer consumers' oracles.
     */
-  private val trainedCentroidsSqlCtes: String = {
-    def assignSql(cent: String, asg: String): String =
-      s"""$asg AS (
-         |  SELECT * FROM (
-         |    SELECT v.vec_id AS neighbor_id, v.q AS qv, v.n2 AS nv, c.c_id AS cell,
-         |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC,
-         |        c.c_id ASC) AS crk
-         |    FROM nm v CROSS JOIN $cent c WHERE v.vec_id >= 10
-         |  ) t WHERE crk = 1
-         |)""".stripMargin
+  private def trainedCentroidsSqlCtes: String = {
     def updateSql(asg: String, cent: String): String =
       s"""$cent AS (
          |  SELECT c_id, qc,
@@ -664,82 +652,17 @@ object Similarity {
          |    ) sums GROUP BY cell
          |  ) lists
          |)""".stripMargin
-    s"""cent0 AS (
-       |  SELECT vec_id AS c_id, q AS qc, n2 AS nc FROM nm
-       |  WHERE vec_id BETWEEN 10 AND 25
-       |), ${assignSql("cent0", "asg1")}, ${updateSql("asg1", "cent1")},
-       |${assignSql("cent1", "asg2")}, ${updateSql("asg2", "cent2")}""".stripMargin
+    s"""${seedCentroidsSql("cent0")}, ${assignCellsSql("asg1", "cent0")},
+       |${updateSql("asg1", "cent1")}, ${assignCellsSql("asg2", "cent1")},
+       |${updateSql("asg2", "cent2")}""".stripMargin
   }
 
-  def simKnnIvfTrained(spark: SparkSession, dir: String): DataFrame = {
-    val nm = Dedup.quantized(spark, dir)
-    val corpus = nm.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("qv"), col("n2").as("nv"))
-    val centroids = trainedCentroids(spark, dir)
+  def simKnnIvfTrained(spark: SparkSession, dir: String): DataFrame =
+    ivfSearch(Dedup.quantized(spark, dir), trainedCentroids(spark, dir))
 
-    val wAssign = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val assigned = corpus.crossJoin(broadcast(centroids))
-      .withColumn("cos_c",
-        Dedup.cosine(col("qv"), col("qc"), col("nv"), col("nc")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") === 1)
-      .select(col("neighbor_id"), col("qv"), col("nv"), col("c_id").as("cell"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val probes = nm.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cos_c", Dedup.cosine(col("qq"), col("qc"), col("nq"), col("nc")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= 2)
-      .select(col("query_id"), col("qq"), col("nq"), col("c_id").as("cell"))
-
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    assigned.join(broadcast(probes), Seq("cell"))
-      .withColumn("cos_sim",
-        round(Dedup.cosine(col("qq"), col("qv"), col("nq"), col("nv")), 6))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= 3)
-      .select(col("query_id"), col("neighbor_id"),
-        col("rk").cast("bigint").as("rk"), col("cos_sim"))
-      .orderBy(col("query_id").asc, col("rk").asc)
-  }
-
-  val simKnnIvfTrainedSql: String = {
-    def assignSql(cent: String, asg: String): String =
-      s"""$asg AS (
-         |  SELECT * FROM (
-         |    SELECT v.vec_id AS neighbor_id, v.q AS qv, v.n2 AS nv, c.c_id AS cell,
-         |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC,
-         |        c.c_id ASC) AS crk
-         |    FROM nm v CROSS JOIN $cent c WHERE v.vec_id >= 10
-         |  ) t WHERE crk = 1
-         |)""".stripMargin
+  val simKnnIvfTrainedSql: String =
     s"""WITH ${Dedup.quantizedSql}, $trainedCentroidsSqlCtes,
-       |${assignSql("cent2", "asgf")}, probes AS (
-       |  SELECT * FROM (
-       |    SELECT s.vec_id AS query_id, s.q AS qq, s.n2 AS nq, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-       |        ${Dedup.cosineSql("s.q", "c.qc", "s.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS prk
-       |    FROM nm s CROSS JOIN cent2 c WHERE s.vec_id < 10
-       |  ) t WHERE prk <= 2
-       |), scored AS (
-       |  SELECT p.query_id, a.neighbor_id,
-       |    round(${Dedup.cosineSql("p.qq", "a.qv", "p.nq", "a.nv")}, 6) AS cos_sim
-       |  FROM probes p JOIN asgf a ON p.cell = a.cell
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, rk, cos_sim FROM ranked
-       |WHERE rk <= 3 ORDER BY query_id ASC, rk ASC""".stripMargin
-  }
+       |${ivfSearchSql("cent2")}""".stripMargin
 
   // --- sim_ivf_balance: IVF cell-population balance audit ------------------
   /** Cell-population balance of the trained IVF index — the tail-latency
@@ -766,10 +689,7 @@ object Similarity {
     * the full Lloyd training chain.
     */
   def simIvfBalance(spark: SparkSession, dir: String): DataFrame = {
-    val nm = Dedup.quantized(spark, dir)
-    val corpus = nm.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("neighbor_id"),
-        col("q").as("qv"), col("n2").as("nv"))
+    val corpus = corpusVecs(Dedup.quantized(spark, dir), "qv", "nv")
     val centroids = trainedCentroids(spark, dir)
     // argmax by (cosine DESC, c_id ASC) == lexicographic max of
     // (cosine, -c_id): identical selection to the oracle's ROW_NUMBER.
@@ -796,19 +716,9 @@ object Similarity {
       .orderBy(col("n_vecs").desc, col("cell").asc)
   }
 
-  val simIvfBalanceSql: String = {
-    val assignSql =
-      s"""asgf AS (
-         |  SELECT * FROM (
-         |    SELECT v.vec_id AS neighbor_id, c.c_id AS cell,
-         |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC,
-         |        c.c_id ASC) AS crk
-         |    FROM nm v CROSS JOIN cent2 c WHERE v.vec_id >= 10
-         |  ) t WHERE crk = 1
-         |)""".stripMargin
+  val simIvfBalanceSql: String =
     s"""WITH ${Dedup.quantizedSql}, $trainedCentroidsSqlCtes,
-       |$assignSql, cells AS (
+       |${assignCellsSql("asgf", "cent2")}, cells AS (
        |  SELECT cell, COUNT(*) AS n_vecs FROM asgf GROUP BY cell
        |), tot AS (
        |  SELECT CAST(SUM(n_vecs) AS BIGINT) AS n_total,
@@ -821,7 +731,6 @@ object Similarity {
        |    AS load_ppm
        |FROM cells, tot
        |ORDER BY n_vecs DESC, cell ASC""".stripMargin
-  }
 
   // --- sim_dim_stats: per-dimension embedding audit ------------------------
   /** Per-dimension statistics of the (quantized) embedding corpus — the
@@ -963,42 +872,17 @@ object Similarity {
     */
   def simProbeSweep(spark: SparkSession, dir: String): DataFrame = {
     val nm = Dedup.quantized(spark, dir)
-    val centroids = nm.filter(col("vec_id").between(10, 25))
-      .select(col("vec_id").as("c_id"), col("q").as("qc"), col("n2").as("nc"))
-    val corpus = nm.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("qv"), col("n2").as("nv"))
-    val queriesDf = nm.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-
-    val wAssign = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val assigned = corpus.crossJoin(broadcast(centroids))
-      .withColumn("cos_c", Dedup.cosine(col("qv"), col("qc"), col("nv"), col("nc")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") === 1)
-      .select(col("neighbor_id"), col("qv"), col("nv"), col("c_id").as("cell"))
-
-    val maxProbe = ProbeSweepDepths.max
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val probes = queriesDf.crossJoin(broadcast(centroids))
-      .withColumn("cos_c", Dedup.cosine(col("qq"), col("qc"), col("nq"), col("nc")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= maxProbe)
-      .select(col("query_id"), col("qq"), col("nq"), col("c_id").as("cell"),
-        col("prk"))
+    val centroids = seedCentroids(nm)
+    val assigned = assignCells(corpusVecs(nm, "qv", "nv"), centroids)
+    val probes = probeCells(queryVecs(nm), centroids, ProbeSweepDepths.max)
 
     val nps = array(ProbeSweepDepths.map(lit): _*)
-    val wTop = Window.partitionBy(col("nprobe"), col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    val topk = assigned.join(broadcast(probes), Seq("cell"))
+    val topk = topK(assigned.join(broadcast(probes), Seq("cell"))
       .withColumn("cos_sim",
         round(Dedup.cosine(col("qq"), col("qv"), col("nq"), col("nv")), 6))
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("prk"))
       .withColumn("nprobe", explode(nps))
-      .filter(col("prk") <= col("nprobe"))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= 3)
+      .filter(col("prk") <= col("nprobe")), "cos_sim", 3, "nprobe", "query_id")
 
     val truth = simTopkBruteforce(spark, dir)
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
@@ -1043,36 +927,18 @@ object Similarity {
 
   val simProbeSweepSql: String = {
     val npList = ProbeSweepDepths.mkString(", ")
-    s"""WITH ${Dedup.quantizedSql}, cent AS (
-       |  SELECT vec_id AS c_id, q AS qc, n2 AS nc FROM nm
-       |  WHERE vec_id BETWEEN 10 AND 25
-       |), asg AS (
-       |  SELECT * FROM (
-       |    SELECT v.vec_id AS neighbor_id, v.q AS qv, v.n2 AS nv, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS crk
-       |    FROM nm v CROSS JOIN cent c WHERE v.vec_id >= 10
-       |  ) t WHERE crk = 1
-       |), probes AS (
-       |  SELECT * FROM (
-       |    SELECT s.vec_id AS query_id, s.q AS qq, s.n2 AS nq, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-       |        ${Dedup.cosineSql("s.q", "c.qc", "s.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS prk
-       |    FROM nm s CROSS JOIN cent c WHERE s.vec_id < 10
-       |  ) t WHERE prk <= ${ProbeSweepDepths.max}
-       |), nps AS (
+    s"""WITH ${Dedup.quantizedSql}, ${seedCentroidsSql("cent")},
+       |${assignCellsSql("asg", "cent")}, ${probeCellsSql("cent", ProbeSweepDepths.max)}, nps AS (
        |  SELECT unnest([$npList]) AS nprobe
-       |), ranked AS (
+       |), cand AS (
        |  SELECT np.nprobe, p.query_id, a.neighbor_id,
-       |    round(${Dedup.cosineSql("p.qq", "a.qv", "p.nq", "a.nv")}, 6)
-       |      AS cos_sim,
-       |    ROW_NUMBER() OVER (PARTITION BY np.nprobe, p.query_id ORDER BY
-       |      round(${Dedup.cosineSql("p.qq", "a.qv", "p.nq", "a.nv")}, 6)
-       |        DESC, a.neighbor_id ASC) AS rk
+       |    round(${Dedup.cosineSql("p.qq", "a.qv", "p.nq", "a.nv")}, 6) AS cos_sim
        |  FROM probes p JOIN asg a ON p.cell = a.cell
        |  CROSS JOIN nps np WHERE p.prk <= np.nprobe
+       |), ranked AS (
+       |  SELECT nprobe, query_id, neighbor_id,
+       |    ${topKRankSql("cos_sim", "nprobe, query_id")} AS rk
+       |  FROM cand
        |), topk AS (
        |  SELECT nprobe, query_id, neighbor_id FROM ranked WHERE rk <= 3
        |), tr AS (
@@ -1124,37 +990,72 @@ object Similarity {
   private def pqSlices(q: Column) = array((0 until PqM).map(m =>
     slice(q, m * PqSub + 1, PqSub)): _*)
 
-  private def pqDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.functions.DotLongExpr(
-        org.apache.spark.sql.GraftBridge.expression(a),
-        org.apache.spark.sql.GraftBridge.expression(b)))
-
   /** Per-subspace codebook: (c_id, m, cs, cn2) — [[PqK]]×[[PqM]] rows. */
   private def pqCodebook(nm: DataFrame): DataFrame =
-    nm.filter(col("vec_id").between(10, 9 + PqK))
+    nm.filter(isSeed(col("vec_id")))
       .select(col("vec_id").as("c_id"),
         posexplode(pqSlices(col("q"))).as(Seq("m", "cs")))
-      .withColumn("cn2", dotSelf(col("cs")))
+      .withColumn("cn2", Dedup.dot(col("cs"), col("cs")))
+
+  /** The PQ assignment rule: each corpus subvector (vec_id, m, xs, …)
+    * takes the codebook entry (c_id, m, cs, cn2) maximizing dot/√cn2 (an
+    * all-zero entry scores −1e18), c_id ascending on ties, and keeps `dot`
+    * and `cn2` for the reconstruction. `tags` are further join and
+    * partition keys (the M sweep's config).
+    */
+  private def pqBest(sub: DataFrame, codebook: DataFrame,
+      tags: String*): DataFrame =
+    sub.join(broadcast(codebook), tags :+ "m")
+      .withColumn("dot", Dedup.dot(col("xs"), col("cs")))
+      .withColumn("score", when(col("cn2") === 0, lit(-1.0e18))
+        .otherwise(col("dot").cast("double") / sqrt(col("cn2").cast("double"))))
+      .withColumn("crk", row_number().over(
+        Window.partitionBy((tags :+ "vec_id" :+ "m").map(col): _*)
+          .orderBy(col("score").desc, col("c_id").asc)))
+      .filter(col("crk") === 1)
 
   /** Per-(corpus vector, subspace) best codebook entry:
     * (vec_id, m, code, n2, dot, cn2). Shared by the code dump and the ADC
     * search.
     */
   private def pqAssign(nm: DataFrame): DataFrame = {
-    val sub = nm.filter(col("vec_id") >= 10)
+    val sub = nm.filter(isCorpus(col("vec_id")))
       .select(col("vec_id"), col("n2"),
         posexplode(pqSlices(col("q"))).as(Seq("m", "xs")))
-    val scored = sub.join(broadcast(pqCodebook(nm)), "m")
-      .withColumn("dot", pqDot(col("xs"), col("cs")))
-      .withColumn("score", when(col("cn2") === 0, lit(-1.0e18))
-        .otherwise(col("dot").cast("double") / sqrt(col("cn2").cast("double"))))
-    val w = Window.partitionBy(col("vec_id"), col("m"))
-      .orderBy(col("score").desc, col("c_id").asc)
-    scored.withColumn("crk", row_number().over(w))
-      .filter(col("crk") === 1)
+    pqBest(sub, pqCodebook(nm))
       .select(col("vec_id"), col("m"), (col("c_id") - 10).as("code"),
         col("n2"), col("dot"), col("cn2"))
+  }
+
+  /** Subspace `u.m` (`sub` dims wide) of `src`.q in DuckDB. */
+  private def pqSliceSql(src: String, sub: Int): String =
+    s"$src.q[(u.m*$sub+1):(u.m*$sub+$sub)]"
+
+  /** SQL twin of [[pqCodebook]] and [[pqAssign]] over `m` subspaces of
+    * `sub` dims: the CTEs pqsub`tag` (corpus subvectors), pqcent`tag` (the
+    * codebook) and pqbest`tag` (vec_id, m, code, n2, cn2, dot).
+    */
+  private def pqAssignSql(tag: String, m: Int, sub: Int): String = {
+    val dot = s"list_sum(list_transform(range(1, $sub + 1), i -> s.xs[i] * c.cs[i]))"
+    s"""pqsub$tag AS (
+       |  SELECT v.vec_id, v.n2, u.m AS m, ${pqSliceSql("v", sub)} AS xs
+       |  FROM nm v, UNNEST(range($m)) AS u(m) WHERE ${isCorpusSql("v.vec_id")}
+       |), pqcent$tag AS (
+       |  SELECT c.vec_id AS c_id, u.m AS m, ${pqSliceSql("c", sub)} AS cs,
+       |    CAST(list_sum(list_transform(${pqSliceSql("c", sub)}, x -> x * x))
+       |      AS BIGINT) AS cn2
+       |  FROM nm c, UNNEST(range($m)) AS u(m) WHERE ${isSeedSql("c.vec_id")}
+       |), pqbest$tag AS (
+       |  SELECT * FROM (
+       |    SELECT s.vec_id, s.m, c.c_id - 10 AS code, s.n2, c.cn2,
+       |      CAST($dot AS BIGINT) AS dot,
+       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
+       |        CASE WHEN c.cn2 = 0 THEN -1e18
+       |          ELSE CAST($dot AS DOUBLE) / sqrt(CAST(c.cn2 AS DOUBLE)) END DESC,
+       |        c.c_id ASC) AS crk
+       |    FROM pqsub$tag s JOIN pqcent$tag c ON s.m = c.m
+       |  ) t WHERE crk = 1
+       |)""".stripMargin
   }
 
   // --- sim_pq_m_sweep: PQ compression-level distortion curve --------------
@@ -1182,24 +1083,16 @@ object Similarity {
       (0 until cm).map(m => struct(lit(cm).as("cfg"), lit(m).as("m"),
         slice(qc, m * sub + 1, sub).as("xs")))
     }: _*)
-    val cents = nm.filter(col("vec_id").between(10, 9 + PqK))
+    val cents = nm.filter(isSeed(col("vec_id")))
       .select(col("vec_id").as("c_id"), explode(slicesFor(col("q"))).as("c0"))
       .select(col("c0.cfg").as("cfg"), col("c0.m").as("m"), col("c_id"),
         col("c0.xs").as("cs"))
-      .withColumn("cn2", dotSelf(col("cs")))
-    val sub = nm.filter(col("vec_id") >= 10)
+      .withColumn("cn2", Dedup.dot(col("cs"), col("cs")))
+    val sub = nm.filter(isCorpus(col("vec_id")))
       .select(col("vec_id"), col("n2"), explode(slicesFor(col("q"))).as("s0"))
       .select(col("vec_id"), col("n2"), col("s0.cfg").as("cfg"),
         col("s0.m").as("m"), col("s0.xs").as("xs"))
-    val w = Window.partitionBy(col("cfg"), col("vec_id"), col("m"))
-      .orderBy(col("score").desc, col("c_id").asc)
-    val best = sub.join(broadcast(cents), Seq("cfg", "m"))
-      .withColumn("dot", pqDot(col("xs"), col("cs")))
-      .withColumn("score", when(col("cn2") === 0, lit(-1.0e18))
-        .otherwise(col("dot").cast("double") / sqrt(col("cn2").cast("double"))))
-      .withColumn("crk", row_number().over(w))
-      .filter(col("crk") === 1)
-    best.groupBy(col("cfg"), col("vec_id"))
+    pqBest(sub, cents, "cfg").groupBy(col("cfg"), col("vec_id"))
       .agg(max(col("n2")).as("n2"),
         sum(col("dot")).as("rdot"), sum(col("cn2")).as("rn2"))
       .withColumn("recon_ppm",
@@ -1220,39 +1113,14 @@ object Similarity {
 
   lazy val simPqMSweepSql: String = {
     val perCfg = PqSweepM.map { cm =>
-      val sub = PqM * PqSub / cm
-      val sliceOf = (src: String) =>
-        s"$src.q[(u.m*$sub+1):(u.m*$sub+$sub)]"
-      s"""sub_$cm AS (
-         |  SELECT v.vec_id, v.n2, u.m AS m, ${sliceOf("v")} AS xs
-         |  FROM nm v, UNNEST(range($cm)) AS u(m) WHERE v.vec_id >= 10
-         |), cent_$cm AS (
-         |  SELECT c.vec_id AS c_id, u.m AS m, ${sliceOf("c")} AS cs,
-         |    CAST(list_sum(list_transform(${sliceOf("c")}, x -> x * x))
-         |      AS BIGINT) AS cn2
-         |  FROM nm c, UNNEST(range($cm)) AS u(m)
-         |  WHERE c.vec_id BETWEEN 10 AND ${9 + PqK}
-         |), best_$cm AS (
-         |  SELECT * FROM (
-         |    SELECT s.vec_id, s.m, s.n2, c.cn2,
-         |      CAST(list_sum(list_transform(range(1, $sub + 1),
-         |        i -> s.xs[i] * c.cs[i])) AS BIGINT) AS dot,
-         |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-         |        CASE WHEN c.cn2 = 0 THEN -1e18
-         |          ELSE CAST(list_sum(list_transform(range(1, $sub + 1),
-         |            i -> s.xs[i] * c.cs[i])) AS DOUBLE) /
-         |            sqrt(CAST(c.cn2 AS DOUBLE)) END DESC,
-         |        c.c_id ASC) AS crk
-         |    FROM sub_$cm s JOIN cent_$cm c ON s.m = c.m
-         |  ) t WHERE crk = 1
-         |), pv_$cm AS (
+      s"""${pqAssignSql(s"_$cm", cm, PqM * PqSub / cm)}, pv_$cm AS (
          |  SELECT $cm AS cfg, vec_id,
          |    CASE WHEN MAX(n2) = 0 OR SUM(cn2) = 0 THEN 0
          |      ELSE CAST(round(CAST(SUM(dot) AS DOUBLE) * 1000000.0 /
          |        (sqrt(CAST(MAX(n2) AS DOUBLE)) *
          |          sqrt(CAST(SUM(cn2) AS DOUBLE))), 0) AS BIGINT)
          |      END AS recon_ppm
-         |  FROM best_$cm GROUP BY vec_id
+         |  FROM pqbest_$cm GROUP BY vec_id
          |)""".stripMargin
     }.mkString(", ")
     val pvUnion = PqSweepM.map(cm => s"SELECT * FROM pv_$cm")
@@ -1291,32 +1159,8 @@ object Similarity {
       .orderBy(col("vec_id").asc)
   }
 
-  lazy val simPqCodesSql: String = {
-    val sliceOf = (src: String) =>
-      s"$src.q[(u.m*$PqSub+1):(u.m*$PqSub+$PqSub)]"
-    s"""WITH ${Dedup.quantizedSql}, sub AS (
-       |  SELECT v.vec_id, v.n2, u.m AS m, ${sliceOf("v")} AS xs
-       |  FROM nm v, UNNEST(range($PqM)) AS u(m) WHERE v.vec_id >= 10
-       |), cent AS (
-       |  SELECT c.vec_id AS c_id, u.m AS m, ${sliceOf("c")} AS cs,
-       |    CAST(list_sum(list_transform(${sliceOf("c")}, x -> x * x))
-       |      AS BIGINT) AS cn2
-       |  FROM nm c, UNNEST(range($PqM)) AS u(m)
-       |  WHERE c.vec_id BETWEEN 10 AND ${9 + PqK}
-       |), best AS (
-       |  SELECT * FROM (
-       |    SELECT s.vec_id, s.m, c.c_id - 10 AS code, s.n2, c.cn2,
-       |      CAST(list_sum(list_transform(range(1, $PqSub + 1),
-       |        i -> s.xs[i] * c.cs[i])) AS BIGINT) AS dot,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |        CASE WHEN c.cn2 = 0 THEN -1e18
-       |          ELSE CAST(list_sum(list_transform(range(1, $PqSub + 1),
-       |            i -> s.xs[i] * c.cs[i])) AS DOUBLE) /
-       |            sqrt(CAST(c.cn2 AS DOUBLE)) END DESC,
-       |        c.c_id ASC) AS crk
-       |    FROM sub s JOIN cent c ON s.m = c.m
-       |  ) t WHERE crk = 1
-       |), agg AS (
+  lazy val simPqCodesSql: String =
+    s"""WITH ${Dedup.quantizedSql}, ${pqAssignSql("", PqM, PqSub)}, agg AS (
        |  SELECT vec_id, MAX(n2) AS n2,
        |    CAST(SUM(dot) AS BIGINT) AS rdot, CAST(SUM(cn2) AS BIGINT) AS rn2,
        |    CAST(MAX(CASE WHEN m = 0 THEN code END) AS BIGINT) AS code0,
@@ -1324,7 +1168,7 @@ object Similarity {
        |    CAST(MAX(CASE WHEN m = 2 THEN code END) AS BIGINT) AS code2,
        |    CAST(MAX(CASE WHEN m = 3 THEN code END) AS BIGINT) AS code3,
        |    CAST(SUM(code * [4096, 256, 16, 1][m + 1]) AS BIGINT) AS pq_code
-       |  FROM best GROUP BY vec_id
+       |  FROM pqbest GROUP BY vec_id
        |)
        |SELECT vec_id, code0, code1, code2, code3, pq_code,
        |  CASE WHEN n2 = 0 OR rn2 = 0 THEN 0.0
@@ -1332,7 +1176,6 @@ object Similarity {
        |      (sqrt(CAST(n2 AS DOUBLE)) * sqrt(CAST(rn2 AS DOUBLE))), 6)
        |  END AS recon_cos
        |FROM agg ORDER BY vec_id ASC""".stripMargin
-  }
 
   // --- sim_knn_pq: ANN search over the PQ codes (ADC) ---------------------
   /** Approximate top-3 neighbors per query via ASYMMETRIC DISTANCE
@@ -1350,90 +1193,76 @@ object Similarity {
     */
   def simKnnPq(spark: SparkSession, dir: String): DataFrame = {
     val nm = Dedup.quantized(spark, dir)
-    val dist = nm.filter(col("vec_id") < 10)
+    val codes = pqAssign(nm)
+      .select(col("vec_id").as("neighbor_id"), col("m"), col("code"))
+    adcTop3(codes.join(broadcast(pqDistances(nm)), Seq("m", "code")))
+  }
+
+  /** The ADC distance table: every query subvector's dot with every
+    * codebook entry, (query_id, qn2, m, code, qdot, cn2). The codebook
+    * norm rides on the table (identical per (m, code) to the
+    * assignment's), so the code frame stays code-only.
+    */
+  private def pqDistances(nm: DataFrame): DataFrame =
+    nm.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("n2").as("qn2"),
         posexplode(pqSlices(col("q"))).as(Seq("m", "qs")))
       .join(pqCodebook(nm), "m")
       .select(col("query_id"), col("qn2"), col("m"),
         (col("c_id") - 10).as("code"),
-        pqDot(col("qs"), col("cs")).as("qdot"), col("cn2"))
-    // The codebook norm rides on the distance table (identical per
-    // (m, code) to the assignment's), so the code frame stays code-only.
-    val codes = pqAssign(nm)
-      .select(col("vec_id").as("neighbor_id"), col("m"), col("code"))
-    val scored = codes.join(broadcast(dist), Seq("m", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("qdot")).as("adot"), sum(col("cn2")).as("rn2"),
-        max(col("qn2")).as("qn2"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("approx_cos",
-        when(col("qn2") === 0 || col("rn2") === 0, lit(0.0))
-          .otherwise(round(col("adot").cast("double") /
-            (sqrt(col("qn2").cast("double")) * sqrt(col("rn2").cast("double"))),
-            6)))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
-      .filter(col("rk") <= 3)
-      .select("query_id", "neighbor_id", "rk", "approx_cos")
-      .orderBy(col("query_id").asc, col("rk").asc)
-  }
+        Dedup.dot(col("qs"), col("cs")).as("qdot"), col("cn2"))
 
-  lazy val simKnnPqSql: String = {
-    val sliceOf = (src: String) =>
-      s"$src.q[(u.m*$PqSub+1):(u.m*$PqSub+$PqSub)]"
-    s"""WITH ${Dedup.quantizedSql}, cent AS (
-       |  SELECT c.vec_id AS c_id, u.m AS m, ${sliceOf("c")} AS cs,
-       |    CAST(list_sum(list_transform(${sliceOf("c")}, x -> x * x))
-       |      AS BIGINT) AS cn2
-       |  FROM nm c, UNNEST(range($PqM)) AS u(m)
-       |  WHERE c.vec_id BETWEEN 10 AND ${9 + PqK}
-       |), sub AS (
-       |  SELECT v.vec_id, v.n2, u.m AS m, ${sliceOf("v")} AS xs
-       |  FROM nm v, UNNEST(range($PqM)) AS u(m) WHERE v.vec_id >= 10
-       |), best AS (
-       |  SELECT * FROM (
-       |    SELECT s.vec_id, s.m, c.c_id - 10 AS code, c.cn2,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |        CASE WHEN c.cn2 = 0 THEN -1e18
-       |          ELSE CAST(list_sum(list_transform(range(1, $PqSub + 1),
-       |            i -> s.xs[i] * c.cs[i])) AS DOUBLE) /
-       |            sqrt(CAST(c.cn2 AS DOUBLE)) END DESC,
-       |        c.c_id ASC) AS crk
-       |    FROM sub s JOIN cent c ON s.m = c.m
-       |  ) t WHERE crk = 1
-       |), dist AS (
+  /** SQL twin of [[pqDistances]] over the codebook CTE `pqcent`. */
+  private def pqDistancesSql: String =
+    s"""dist AS (
        |  SELECT s.vec_id AS query_id, s.n2 AS qn2, s.m, c.c_id - 10 AS code,
        |    CAST(list_sum(list_transform(range(1, $PqSub + 1),
        |      i -> s.qs[i] * c.cs[i])) AS BIGINT) AS qdot,
        |    c.cn2
        |  FROM (
-       |    SELECT q.vec_id, q.n2, u.m AS m, ${sliceOf("q")} AS qs
-       |    FROM nm q, UNNEST(range($PqM)) AS u(m) WHERE q.vec_id < 10
-       |  ) s JOIN cent c ON s.m = c.m
-       |), scored AS (
+       |    SELECT q.vec_id, q.n2, u.m AS m, ${pqSliceSql("q", PqSub)} AS qs
+       |    FROM nm q, UNNEST(range($PqM)) AS u(m) WHERE ${isQuerySql("q.vec_id")}
+       |  ) s JOIN pqcent c ON s.m = c.m
+       |)""".stripMargin
+
+  /** ADC scoring of the (query, code) matches: a candidate's approx_cos is
+    * Σ_m qdot / (‖q‖·‖recon‖) with ‖recon‖² = Σ_m cn2 (0 for a zero
+    * norm), rounded to 6 places; the top 3 per query.
+    */
+  private def adcTop3(matched: DataFrame): DataFrame =
+    topKResult(matched.groupBy(col("query_id"), col("neighbor_id"))
+      .agg(sum(col("qdot")).as("adot"), sum(col("cn2")).as("rn2"),
+        max(col("qn2")).as("qn2"))
+      .withColumn("approx_cos",
+        when(col("qn2") === 0 || col("rn2") === 0, lit(0.0))
+          .otherwise(round(col("adot").cast("double") /
+            (sqrt(col("qn2").cast("double")) * sqrt(col("rn2").cast("double"))),
+            6))), "approx_cos", 3)
+
+  /** SQL twin of [[adcTop3]]: `matched` is the FROM clause, binding the
+    * distance table as d and the code rows as b.
+    */
+  private def adcTop3Sql(matched: String): String =
+    s"""scored AS (
        |  SELECT d.query_id, b.vec_id AS neighbor_id,
        |    CAST(SUM(d.qdot) AS BIGINT) AS adot,
        |    CAST(SUM(d.cn2) AS BIGINT) AS rn2,
        |    MAX(d.qn2) AS qn2
-       |  FROM best b JOIN dist d ON b.m = d.m AND b.code = d.code
+       |  FROM $matched
        |  GROUP BY d.query_id, b.vec_id
-       |), ranked AS (
+       |), adc AS (
        |  SELECT query_id, neighbor_id,
        |    CASE WHEN qn2 = 0 OR rn2 = 0 THEN 0.0
        |      ELSE round(CAST(adot AS DOUBLE) /
        |        (sqrt(CAST(qn2 AS DOUBLE)) * sqrt(CAST(rn2 AS DOUBLE))), 6)
        |    END AS approx_cos
        |  FROM scored
-       |), rk AS (
-       |  SELECT query_id, neighbor_id, approx_cos,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY approx_cos DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM ranked
-       |)
-       |SELECT query_id, neighbor_id, rk, approx_cos FROM rk
-       |WHERE rk <= 3 ORDER BY query_id ASC, rk ASC""".stripMargin
-  }
+       |), ${topKResultSql("adc", "approx_cos", 3)}""".stripMargin
+
+  lazy val simKnnPqSql: String =
+    s"""WITH ${Dedup.quantizedSql}, ${pqAssignSql("", PqM, PqSub)},
+       |$pqDistancesSql,
+       |${adcTop3Sql("pqbest b JOIN dist d ON b.m = d.m AND b.code = d.code")}""".stripMargin
 
   // --- sim_knn_ivfpq: IVF cell probing + ADC over PQ codes ----------------
   /** The production 100 TB ANN shape — IVF and PQ COMPOSED: the corpus is
@@ -1452,128 +1281,31 @@ object Similarity {
   def simKnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val nm = Dedup.quantized(spark, dir)
     val centroids = trainedCentroids(spark, dir)
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val cells = nm.filter(col("vec_id") >= 10)
-      .crossJoin(broadcast(centroids))
-      .withColumn("cos_c",
-        Dedup.cosine(col("q"), col("qc"), col("n2"), col("nc")))
-      .withColumn("crk", row_number().over(wAssign))
-      .filter(col("crk") === 1)
+    val cells = nearestCells(nm.filter(isCorpus(col("vec_id"))), "vec_id",
+        "q", "n2", centroids, 1, "crk")
       .select(col("vec_id").as("neighbor_id"), col("c_id").as("cell"))
     val codes = pqAssign(nm)
       .select(col("vec_id").as("neighbor_id"), col("m"), col("code"))
       .join(cells, "neighbor_id")
-    val queriesDf = nm.filter(col("vec_id") < 10)
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_c").desc, col("c_id").asc)
-    val probes = queriesDf
-      .select(col("vec_id").as("query_id"), col("q"), col("n2"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cos_c",
-        Dedup.cosine(col("q"), col("qc"), col("n2"), col("nc")))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= IvfPqProbes)
+    val probes = nearestCells(nm.filter(isQuery(col("vec_id")))
+        .select(col("vec_id").as("query_id"), col("q"), col("n2")),
+        "query_id", "q", "n2", centroids, IvfPqProbes, "prk")
       .select(col("query_id"), col("c_id").as("cell"))
-    val dist = queriesDf
-      .select(col("vec_id").as("query_id"), col("n2").as("qn2"),
-        posexplode(pqSlices(col("q"))).as(Seq("m", "qs")))
-      .join(pqCodebook(nm), "m")
-      .select(col("query_id"), col("qn2"), col("m"),
-        (col("c_id") - 10).as("code"),
-        pqDot(col("qs"), col("cs")).as("qdot"), col("cn2"))
-      .join(probes, "query_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
-    codes.join(broadcast(dist), Seq("cell", "m", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("qdot")).as("adot"), sum(col("cn2")).as("rn2"),
-        max(col("qn2")).as("qn2"))
-      .withColumn("approx_cos",
-        when(col("qn2") === 0 || col("rn2") === 0, lit(0.0))
-          .otherwise(round(col("adot").cast("double") /
-            (sqrt(col("qn2").cast("double")) * sqrt(col("rn2").cast("double"))),
-            6)))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
-      .filter(col("rk") <= 3)
-      .select("query_id", "neighbor_id", "rk", "approx_cos")
-      .orderBy(col("query_id").asc, col("rk").asc)
+    adcTop3(codes.join(broadcast(pqDistances(nm).join(probes, "query_id")),
+      Seq("cell", "m", "code")))
   }
 
   lazy val simKnnIvfPqSql: String = {
-    val sliceOf = (src: String) =>
-      s"$src.q[(u.m*$PqSub+1):(u.m*$PqSub+$PqSub)]"
-    s"""WITH ${Dedup.quantizedSql}, $trainedCentroidsSqlCtes, cells AS (
-       |  SELECT * FROM (
-       |    SELECT v.vec_id AS neighbor_id, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${Dedup.cosineSql("v.q", "c.qc", "v.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS crk
-       |    FROM nm v CROSS JOIN cent2 c WHERE v.vec_id >= 10
-       |  ) t WHERE crk = 1
-       |), pqcent AS (
-       |  SELECT c.vec_id AS c_id, u.m AS m, ${sliceOf("c")} AS cs,
-       |    CAST(list_sum(list_transform(${sliceOf("c")}, x -> x * x))
-       |      AS BIGINT) AS cn2
-       |  FROM nm c, UNNEST(range($PqM)) AS u(m)
-       |  WHERE c.vec_id BETWEEN 10 AND ${9 + PqK}
-       |), sub AS (
-       |  SELECT v.vec_id, v.n2, u.m AS m, ${sliceOf("v")} AS xs
-       |  FROM nm v, UNNEST(range($PqM)) AS u(m) WHERE v.vec_id >= 10
-       |), best AS (
-       |  SELECT * FROM (
-       |    SELECT s.vec_id, s.m, c.c_id - 10 AS code,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-       |        CASE WHEN c.cn2 = 0 THEN -1e18
-       |          ELSE CAST(list_sum(list_transform(range(1, $PqSub + 1),
-       |            i -> s.xs[i] * c.cs[i])) AS DOUBLE) /
-       |            sqrt(CAST(c.cn2 AS DOUBLE)) END DESC,
-       |        c.c_id ASC) AS crk
-       |    FROM sub s JOIN pqcent c ON s.m = c.m
-       |  ) t WHERE crk = 1
-       |), probes AS (
-       |  SELECT * FROM (
-       |    SELECT s.vec_id AS query_id, c.c_id AS cell,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-       |        ${Dedup.cosineSql("s.q", "c.qc", "s.n2", "c.nc")} DESC,
-       |        c.c_id ASC) AS prk
-       |    FROM nm s CROSS JOIN cent2 c WHERE s.vec_id < 10
-       |  ) t WHERE prk <= $IvfPqProbes
-       |), dist AS (
-       |  SELECT s.vec_id AS query_id, s.n2 AS qn2, s.m, c.c_id - 10 AS code,
-       |    CAST(list_sum(list_transform(range(1, $PqSub + 1),
-       |      i -> s.qs[i] * c.cs[i])) AS BIGINT) AS qdot,
-       |    c.cn2
-       |  FROM (
-       |    SELECT q.vec_id, q.n2, u.m AS m, ${sliceOf("q")} AS qs
-       |    FROM nm q, UNNEST(range($PqM)) AS u(m) WHERE q.vec_id < 10
-       |  ) s JOIN pqcent c ON s.m = c.m
-       |), scored AS (
-       |  SELECT d.query_id, b.vec_id AS neighbor_id,
-       |    CAST(SUM(d.qdot) AS BIGINT) AS adot,
-       |    CAST(SUM(d.cn2) AS BIGINT) AS rn2,
-       |    MAX(d.qn2) AS qn2
-       |  FROM best b
-       |  JOIN cells cl ON b.vec_id = cl.neighbor_id
-       |  JOIN probes p ON cl.cell = p.cell
-       |  JOIN dist d ON d.query_id = p.query_id
-       |    AND b.m = d.m AND b.code = d.code
-       |  GROUP BY d.query_id, b.vec_id
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |    CASE WHEN qn2 = 0 OR rn2 = 0 THEN 0.0
-       |      ELSE round(CAST(adot AS DOUBLE) /
-       |        (sqrt(CAST(qn2 AS DOUBLE)) * sqrt(CAST(rn2 AS DOUBLE))), 6)
-       |    END AS approx_cos
-       |  FROM scored
-       |), rkd AS (
-       |  SELECT query_id, neighbor_id, approx_cos,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY approx_cos DESC, neighbor_id ASC) AS BIGINT) AS rk
-       |  FROM ranked
-       |)
-       |SELECT query_id, neighbor_id, rk, approx_cos FROM rkd
-       |WHERE rk <= 3 ORDER BY query_id ASC, rk ASC""".stripMargin
+    val matched =
+      """pqbest b
+        |  JOIN cells cl ON b.vec_id = cl.neighbor_id
+        |  JOIN probes p ON cl.cell = p.cell
+        |  JOIN dist d ON d.query_id = p.query_id
+        |    AND b.m = d.m AND b.code = d.code""".stripMargin
+    s"""WITH ${Dedup.quantizedSql}, $trainedCentroidsSqlCtes,
+       |${assignCellsSql("cells", "cent2")}, ${pqAssignSql("", PqM, PqSub)},
+       |${probeCellsSql("cent2", IvfPqProbes)}, $pqDistancesSql,
+       |${adcTop3Sql(matched)}""".stripMargin
   }
 
   // --- sim_knn_graph: k-NN graph reciprocity / homophily audit ------------

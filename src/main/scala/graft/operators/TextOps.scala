@@ -670,9 +670,7 @@ object TextOps {
     * ≥ 50% shared shingles.
     */
   def txCrossdup(spark: SparkSession, dir: String): DataFrame = {
-    val sh = Tables.documents(spark, dir)
-      .select(col("doc_id"), strCodes(tokens(col("text"))).as("tcs"))
-      .select(col("doc_id"), shingleCodes3(col("tcs")).as("sg"))
+    val sh = Dedup.shingleSets(Tables.documents(spark, dir))
     // explode_outer + post-filter: keeps the shingle pipeline a projection
     // (see txContamination — plain explode inlines it into a per-element
     // interpreted filter).

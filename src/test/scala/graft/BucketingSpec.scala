@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("co-bucketed fact tables join with no exchange and no sort") {
-    val base = java.nio.file.Files.createTempDirectory("graft-bucketed")
+    val base = tempDir("bucketed")
     val orders = Tables.orders(spark, sf)
     val lineitem = Tables.lineitem(spark, sf)
     Bucketed.writeBucketed(orders, "graft_orders_b",

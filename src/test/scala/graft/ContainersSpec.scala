@@ -1,8 +1,6 @@
 package graft
 
 import graft.operators.Containers
-import java.io.File
-import scala.io.Source
 
 /** Semantic invariants of the SCM-derived container operators (value-level
   * equality is the DuckDB oracle's job; these pin the rule/plan semantics).
@@ -14,14 +12,7 @@ class ContainersSpec extends SparkSpec {
     * pin the formulas' values; this one pins where they are written.
     */
   test("only ObjectStoreView spells the namespace and placement binding") {
-    def scala(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val lines = scala(new File("src/main")).flatMap { f =>
-      val src = Source.fromFile(f, "UTF-8")
-      val path = f.getPath.replace(File.separatorChar, '/')
-      try src.getLines().toList.map(path -> _) finally src.close()
-    }
+    val lines = SparkSpec.mainSourceLines
     val owner = "src/main/scala/graft/ObjectStoreView.scala"
     val decisions = Seq(
       "replica node" -> """\* 17\) % 20""",
@@ -174,7 +165,7 @@ class ContainersSpec extends SparkSpec {
     // attribution — not just that the oracle twin agrees with itself.
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions.lit
-    val d = Files.createTempDirectory("graft-scrub")
+    val d = tempDir("scrub")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "events", "documents", "embeddings").foreach { t =>
       Files.createSymbolicLink(d.resolve(s"$t.parquet"),

@@ -185,7 +185,7 @@ class DedupSpec extends SparkSpec {
     val near = (1 to 40).map(i => if (i == 20) "CHANGED" else s"w$i").mkString(" ")
     val novel = (100 to 140).map(i => s"z$i").mkString(" ")
     val newPair = (200 to 240).map(i => s"y$i").mkString(" ")
-    val d = Files.createTempDirectory("graft-incr")
+    val d = tempDir("incr")
     Seq(
       (1L, base, "en", "src0"),
       (2L, (50 to 90).map(i => s"q$i").mkString(" "), "en", "src0"),

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions.col
 class EmptyTablesSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-empty-tables").toString
+    val dir = tempDir("empty-tables").toString
     Tables.names.foreach { t =>
       spark.read.parquet(s"$sf/$t.parquet")
         .limit(0).coalesce(1)

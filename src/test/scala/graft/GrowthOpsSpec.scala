@@ -155,7 +155,7 @@ class GrowthOpsSpec extends SparkSpec {
 
   test("q_integrity_audit detects an injected orphan (and only it)") {
     import java.nio.file.{Files, Paths}
-    val d = Files.createTempDirectory("graft-integrity")
+    val d = tempDir("integrity")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "events", "documents", "embeddings").foreach { t =>
       Files.createSymbolicLink(d.resolve(s"$t.parquet"),

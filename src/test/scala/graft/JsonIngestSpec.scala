@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 class JsonIngestSpec extends SparkSpec {
 
   test("jsonl ingest round-trips events and quarantines corrupt lines") {
-    val base = java.nio.file.Files.createTempDirectory("graft-jsonl")
+    val base = tempDir("jsonl")
     val ev = operators.EventOps.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("value"))

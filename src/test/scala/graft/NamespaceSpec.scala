@@ -209,7 +209,7 @@ class NamespaceSpec extends SparkSpec {
     // picks the live version by (mtime, size) and never reports
     // single-version keys.
     import java.nio.file.{Files, Paths}
-    val d = Files.createTempDirectory("graft-versions")
+    val d = tempDir("versions")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "events", "documents", "embeddings").foreach { t =>
       Files.createSymbolicLink(d.resolve(s"$t.parquet"),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class PartitionedSpec extends SparkSpec {
 
   test("day-range query prunes partitions at plan time") {
-    val base = java.nio.file.Files.createTempDirectory("graft-part")
+    val base = tempDir("part")
     val ev = operators.EventOps.events(spark, sf)
     Partitioned.writeByDay(ev, "ts", s"$base/byday", 2)
 

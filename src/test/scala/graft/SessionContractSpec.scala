@@ -59,7 +59,7 @@ class SessionContractSpec extends SparkSpec {
   }
 
   test("the same rows as 8 files do not fan out at auto") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fanout").toString
+    val dir = tempDir("fanout").toString
     spark.read.parquet(s"$sf001/lineitem.parquet").repartition(8)
       .write.parquet(s"$dir/lineitem.parquet")
     val parts = new File(dir, "lineitem.parquet").listFiles()

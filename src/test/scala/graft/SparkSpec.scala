@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,8 +11,39 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh `graft-<prefix>…` temp directory, deleted with its contents
+    * after the suite. Symbolic links inside it are deleted, not followed.
+    */
+  def tempDir(prefix: String): Path = tempDirs.synchronized {
+    val d = Files.createTempDirectory(s"graft-$prefix")
+    tempDirs += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach { d =>
+      val walk = Files.walk(d)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }) finally super.afterAll()
 }
 
 object SparkSpec {
   lazy val session: SparkSession = SparkEntry.session(cores = 4)
+
+  /** Every line of every `.scala` file under src/main, as (path, line). */
+  lazy val mainSourceLines: Seq[(String, String)] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    files(new java.io.File("src/main")).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val path = f.getPath.replace(java.io.File.separatorChar, '/')
+      try src.getLines().toList.map(path -> _) finally src.close()
+    }
+  }
 }

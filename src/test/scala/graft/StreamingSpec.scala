@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
     * file into one via symlink.
     */
   lazy val eventsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-events-stream")
+    val d = tempDir("events-stream")
     java.nio.file.Files.createSymbolicLink(
       d.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$sf/events.parquet"))
@@ -176,7 +176,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming trash accounting equals the batch pending-deletion rollup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-trash-stream")
+    val dir = tempDir("trash-stream")
     val trash = ObjectStoreView.trashKeys(spark, sf)
     trash.coalesce(2).write.mode("overwrite").parquet(dir.toString)
 
@@ -201,7 +201,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming replica history equals the batch timeline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-replica-stream")
+    val dir = tempDir("replica-stream")
     val reports = ObjectStoreView.replicaReports(spark, sf)
     reports.coalesce(3).write.mode("overwrite").parquet(dir.toString)
 
@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSpec {
     val puts = keys.select(lit("PUT").as("op"), col("size"))
     val dels = keys.filter(col("size") % 3 === 0)
       .select(lit("DELETE").as("op"), col("size"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-stream")
+    val dir = tempDir("cdc-stream")
     puts.coalesce(2).write.mode("overwrite").parquet(dir.toString)
     dels.coalesce(1).write.mode("append").parquet(dir.toString)
 
@@ -263,7 +263,7 @@ class StreamingSpec extends SparkSpec {
     val dels = keys.filter(col("size") % 3 === 0)
       .select(lit("DELETE").as("op"), col("volume"), col("bucket"),
         col("key"), col("size"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-du")
+    val dir = tempDir("cdc-du")
     puts.coalesce(2).write.mode("overwrite").parquet(dir.toString)
     dels.coalesce(1).write.mode("append").parquet(dir.toString)
 
@@ -297,7 +297,7 @@ class StreamingSpec extends SparkSpec {
     val dels = ck.filter(col("size") % 3 === 0)
       .select(lit("DELETE").as("op"), col("container_id"),
         col("volume"), col("bucket"), col("key"), col("size"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-ckm")
+    val dir = tempDir("cdc-ckm")
     puts.coalesce(2).write.mode("overwrite").parquet(dir.toString)
     dels.coalesce(1).write.mode("append").parquet(dir.toString)
 
@@ -352,7 +352,7 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.attribute.FileTime
     // Stage the events as 4 time-ordered files so the stream runs 4
     // micro-batches and the watermark advances between them.
-    val base = Files.createTempDirectory("graft-stream-multi")
+    val base = tempDir("stream-multi")
     val streamDir = base.resolve("in")
     Files.createDirectory(streamDir)
     val raw = spark.read.parquet(s"$sf/events.parquet")
@@ -431,7 +431,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val isNew = col("doc_id") % graft.operators.Dedup.IncrMod ===
       (graft.operators.Dedup.IncrMod - 1)
-    val base = java.nio.file.Files.createTempDirectory("graft-ingest-gate")
+    val base = tempDir("ingest-gate")
     docs.filter(isNew).repartitionByRange(2, col("doc_id"))
       .write.mode("overwrite").parquet(base.toString)
 
@@ -459,7 +459,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming near-dup candidates equal the batch LSH pairs") {
-    val base = java.nio.file.Files.createTempDirectory("graft-neardup-stream")
+    val base = tempDir("neardup-stream")
     // 3 doc-id-ranged files → 3 micro-batches: pairs whose members arrive
     // in different batches must match through the keyed bucket state.
     val docs = Tables.documents(spark, sf)
@@ -498,7 +498,7 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.attribute.FileTime
     // 4 time-ordered files → the watermark advances across micro-batches
     // and hours finalize incrementally through the keyed ring state.
-    val base = Files.createTempDirectory("graft-anomaly-stream")
+    val base = tempDir("anomaly-stream")
     val streamDir = base.resolve("in")
     Files.createDirectory(streamDir)
     val raw = spark.read.parquet(s"$sf/events.parquet")
@@ -547,7 +547,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming first-seen dedup keeps exactly the batch fingerprint set") {
-    val base = java.nio.file.Files.createTempDirectory("graft-dedup-stream")
+    val base = tempDir("dedup-stream")
     // Stage documents with a synthetic arrival time into 3 doc-id-ranged
     // files so the stream deduplicates across micro-batches, not just
     // within one.
@@ -606,7 +606,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("key", "kind", "sec")
       .select(col("key"), col("kind"), timestamp_seconds(col("sec")).as("ts"))
 
-    val base = Files.createTempDirectory("graft-fk-stream")
+    val base = tempDir("fk-stream")
     val streamDir = base.resolve("in")
     Files.createDirectory(streamDir)
     Seq(parents, children.unionByName(injected), tick).zipWithIndex.foreach {
@@ -644,7 +644,7 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.attribute.FileTime
     // 3 time-ordered files → purchases in a later micro-batch must be
     // credited to touches carried across batches through the keyed state.
-    val base = Files.createTempDirectory("graft-attr-stream")
+    val base = tempDir("attr-stream")
     val streamDir = base.resolve("in")
     Files.createDirectory(streamDir)
     val raw = spark.read.parquet(s"$sf/events.parquet")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class ZOrderSpec extends SparkSpec {
 
   test("2-D box predicate touches fewer z-ordered files than linear layout") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder")
+    val base = tempDir("zorder")
     val li = Tables.lineitem(spark, sf)
       .select(col("l_partkey").cast("int").as("pk"),
         col("l_suppkey").cast("int").as("sk"),

@@ -4,9 +4,10 @@
 Two rounds (r12, r14) ended with the driver's correctness artifact
 silently written as `{}` while its bench leg ran fine — formally zeroing
 the round's hard correctness signal. This guard makes that state loud and
-machine-checkable for any per-query artifact in the `tools/check.py
---artifact` schema (e.g. CORRECTNESS_SELF_LATEST.json, which Verify
-writes):
+machine-checkable for any per-query artifact `tools/check.py --artifact`
+writes: the flat name -> row map (e.g. CORRECTNESS_SELF_LATEST.json,
+which Verify writes) or the budgeted run's {"meta", "queries"} layout
+(e.g. CORRECTNESS_SF1.json), whose `queries` map is scored:
 
     python3 tools/artifact_guard.py <artifact.json> [expected_min]
 
@@ -35,6 +36,8 @@ except Exception as e:
     print(f"FAIL: {path} unparseable ({e}) — treat as empty")
     sys.exit(1)
 
+if isinstance(data, dict) and isinstance(data.get("queries"), dict):
+    data = data["queries"]
 if not isinstance(data, dict) or not data:
     print(f"FAIL: {path} is EMPTY ({{}}) — the r12/r14 silent-verify failure "
           f"mode. This is a FAILURE, not an absence of signal; re-run "

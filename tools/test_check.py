@@ -70,6 +70,17 @@ class CheckTest(unittest.TestCase):
             capture_output=True)
         self.assertEqual(guard.returncode, 2)
 
+    def test_guard_scores_the_queries_of_a_budgeted_artifact(self):
+        rc, rows = self.score(
+            {"a": pd.DataFrame({"v": [1]}), "b": pd.DataFrame({"v": [2]})},
+            {"a": "SELECT 1 AS v", "b": "SELECT 2 AS v"}, "--budget", "60")
+        self.assertEqual(rc, 0)
+        guard = subprocess.run(
+            [sys.executable, f"{HERE}/artifact_guard.py", self.artifact, "2"],
+            capture_output=True, text=True)
+        self.assertEqual(guard.returncode, 0, guard.stdout)
+        self.assertIn("2 green, 0 red, 2 total", guard.stdout)
+
     def test_float_off_by_1e11_is_red_on_every_path(self):
         wrong = pd.DataFrame({"v": [194.2800000019428, 1.0]})
         sql = "SELECT * FROM (VALUES (194.28::DOUBLE), (1.0::DOUBLE)) t(v)"
