@@ -105,11 +105,11 @@ object Bench {
       .mkString("[bench] detail {", ",", "}"))
 
     // Promote the FULL per-query map to a file artifact (VERDICT r14 #5):
-    // the 1800-char stdout budget forces the driver's BENCH_r{N}.json to
-    // drop ~200 fast queries, so round-over-round regression diffing only
-    // sees the slow tail. BENCH_DETAIL.json in the working directory
-    // carries every query (plus the per-query plan-error sweep) at full
-    // precision; each round commits it as BENCH_DETAIL_r{N}.json.
+    // the 1800-char stdout budget forces the JSON line to drop ~200 fast
+    // queries, so round-over-round regression diffing would only see the
+    // slow tail. BENCH_DETAIL.json in the working directory carries every
+    // query (plus the per-query plan-error sweep) at full precision; it is
+    // committed under that fixed name, earlier rounds in git history.
     // Best-effort: a read-only cwd must not fail the bench.
     try {
       val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",

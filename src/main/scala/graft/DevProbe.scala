@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev tool with two modes (Bench and Verify do not use it):
+/** Dev tool with three modes (Bench and Verify do not use it):
   *
   *  - `runMain graft.DevProbe floor <sfDir>` — the fixed cost every query
   *    pays before its own work, each the min of 3 runs:
@@ -13,8 +13,12 @@ import org.apache.spark.sql.execution.FormattedMode
   *       LIMIT 1, which adds the footer/row-group open;
   *     - agg1: a full orders scan plus one shuffle aggregate.
   *  - `runMain graft.DevProbe explain <query> <sfDir> [outFile]` — the
-  *    query's `explain("formatted")` text (the plans/r{n}/ artifact
-  *    format), to stdout or `outFile`.
+  *    query's `explain("formatted")` text, to stdout or `outFile`;
+  *  - `runMain graft.DevProbe explain all <sfDir> <outFile>` — every
+  *    registry query's optimized logical and physical plan in one file,
+  *    sorted by name, with expression ids, lambda names, RDD ids and
+  *    exchange plan ids normalized, so two commits' plans compare with a
+  *    plain `diff`. Fields are not truncated.
   *
   * Per-query timing is Bench's job: SPARK_GRAFT_BENCH_ONLY names the
   * queries, SPARK_GRAFT_BENCH_PASSES the passes. The session comes from
@@ -23,11 +27,13 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object DevProbe {
   private val usage = "usage: DevProbe floor <sfDir> | " +
-    "DevProbe explain <query> <sfDir> [outFile]"
+    "DevProbe explain <query> <sfDir> [outFile] | " +
+    "DevProbe explain all <sfDir> <outFile>"
 
   def main(args: Array[String]): Unit = {
     val mode: SparkSession => Unit = args.toSeq match {
       case Seq("floor", sfDir) => floor(_, sfDir)
+      case Seq("explain", "all", sfDir, out) => explainAll(_, sfDir, out)
       case Seq("explain", name, sfDir, out @ _*) if out.size <= 1 =>
         explain(_, name, sfDir, out.headOption)
       case _ => sys.error(usage)
@@ -60,5 +66,27 @@ object DevProbe {
         println(s"wrote $path")
       case None => println(formatted)
     }
+  }
+
+  /** Run-dependent names: JVM lambda classes, lambda-variable suffixes,
+    * RDD ids and exchange plan ids. Expression ids are renumbered in order
+    * of first appearance within one query, so a changed reference differs.
+    */
+  private val runIds = """(\$Lambda\$|\blambda \w+?_|RDD\[|plan_id=)[\dxa-f/@]+""".r
+  private val exprId = """#(\d+)""".r
+
+  private def explainAll(spark: SparkSession, sfDir: String, out: String): Unit = {
+    val dump = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+      val qe = q(spark, sfDir).queryExecution
+      val text = s"== $name: optimized ==\n" +
+        qe.optimizedPlan.treeString(verbose = true, maxFields = Int.MaxValue) +
+        s"== $name: physical ==\n" +
+        qe.executedPlan.treeString(verbose = true, maxFields = Int.MaxValue)
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      exprId.replaceAllIn(runIds.replaceAllIn(text, "$1"),
+        m => "#" + ids.getOrElseUpdate(m.group(1), ids.size))
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), dump.mkString)
+    println(s"wrote ${dump.size} plans to $out")
   }
 }

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import PrefixScan.{nearestRank, nearestRankSql}
 
 /** Event-log analytics (SURVEY §2.C, batch forms). The streaming twins in
   * [[graft.streaming.StreamOps]] run the same logic incrementally.
@@ -23,10 +24,119 @@ object EventOps {
   def events(spark: SparkSession, dir: String): DataFrame =
     Tables.normalizeTs(Tables.events(spark, dir))
 
-  private def sumValue(c: Column) =
+  // --- events-family decisions, each spelled once per engine, called by
+  // every query, oracle and stream twin (EventDecisionsSpec pins them) ----
+
+  /** Event value summed exactly as DECIMAL(12,2), emitted as DOUBLE. */
+  private[graft] def sumValue(c: Column) =
     sum(c.cast("decimal(12,2)")).cast("double")
 
   private val sumValueSql = "CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE)"
+
+  /** Event value in exact integer cents (the DECIMAL(12,2) cast rounds
+    * identically in both engines; never a float).
+    */
+  private val valueCents: Column =
+    (col("value").cast("decimal(12,2)") * 100).cast("bigint")
+
+  private val valueCentsSql = "CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)"
+
+  /** How many of the aggregated events are of type `t`. */
+  private def typeCount(t: String): Column =
+    sum(when(col("event_type") === t, 1L).otherwise(0L))
+
+  private def typeCountSql(t: String) =
+    s"CAST(SUM(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT)"
+
+  /** Per-user event order: ts, then the unique event_id tie-break. */
+  private val byUser =
+    Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
+
+  private val byUserSql = "PARTITION BY user_id ORDER BY ts ASC, event_id ASC"
+
+  /** Inactivity (µs) after which a user's next event opens a new session. */
+  private[graft] val SessionGapUs = 1800L * 1000000L
+
+  /** `ev` plus is_new (1 when the event opens a session: the user's first
+    * event, or more than [[SessionGapUs]] after the previous one) and
+    * session_seq (the user's running session number, from 1).
+    */
+  private def sessions(ev: DataFrame): DataFrame =
+    ev.withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+      .withColumn("is_new",
+        when(col("prev_ts").isNull ||
+          unix_micros(col("ts")) - unix_micros(col("prev_ts")) > SessionGapUs,
+          1L).otherwise(0L))
+      .withColumn("session_seq", sum(col("is_new")).over(
+        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+  /** SQL twin of [[sessions]]: CTEs marked, then sessions. */
+  private val sessionsSql: String =
+    s"""marked AS (
+       |  SELECT user_id, ts, event_id, value,
+       |    CASE WHEN lag(ts) OVER w IS NULL
+       |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > $SessionGapUs
+       |      THEN 1 ELSE 0 END AS is_new
+       |  FROM events
+       |  WINDOW w AS ($byUserSql)
+       |), sessions AS (
+       |  SELECT user_id, ts, event_id, value,
+       |    CAST(SUM(is_new) OVER ($byUserSql ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) AS session_seq
+       |  FROM marked
+       |)""".stripMargin
+
+  /** Each (user_id, day) with at least one event. */
+  private def userDays(spark: SparkSession, dir: String): DataFrame =
+    events(spark, dir)
+      .select(col("user_id"), date_trunc("day", col("ts")).as("day")).distinct()
+
+  private val userDaysSql = "SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events"
+
+  /** Each signing-up user's first signup time, as column `out`. */
+  private def firstSignup(ev: DataFrame, out: String = "first_signup"): DataFrame =
+    ev.filter(col("event_type") === "signup")
+      .groupBy(col("user_id")).agg(min(col("ts")).as(out))
+
+  private def firstSignupSql(out: String = "first_signup"): String =
+    s"SELECT user_id, MIN(ts) AS $out FROM events WHERE event_type = 'signup' GROUP BY user_id"
+
+  /** `frame` (user_id, week) joined to each user's first-seen week
+    * (cohort_week), with the whole weeks since it (weeks_since).
+    */
+  private def byCohortWeek(ev: DataFrame, frame: DataFrame): DataFrame = {
+    val firstSeen = ev.groupBy(col("user_id"))
+      .agg(date_trunc("week", min(col("ts"))).as("cohort_week"))
+    frame.join(firstSeen, "user_id")
+      .withColumn("weeks_since",
+        expr("CAST(datediff(week, cohort_week) DIV 7 AS BIGINT)"))
+  }
+
+  /** SQL twin of [[byCohortWeek]]: CTE first_seen, and weeks_since of a
+    * frame aliased `t` joined to it as f.
+    */
+  private val firstSeenWeekSql = "first_seen AS (SELECT user_id, " +
+    "date_trunc('week', MIN(ts)) AS cohort_week FROM events GROUP BY user_id)"
+
+  private def weeksSinceSql(t: String) =
+    s"CAST(datediff('day', f.cohort_week, $t.week) // 7 AS BIGINT)"
+
+  /** Per `key` of a per-purchase frame: purchases, exact revenue and the
+    * share of all purchases in integer ppm.
+    */
+  private def purchaseShares(perPurchase: DataFrame, key: String): DataFrame =
+    perPurchase.groupBy(col(key))
+      .agg(count(lit(1)).as("n_purchases"), sumValue(col("value")).as("revenue"))
+      .withColumn("share_ppm", expr(
+        "n_purchases * 1000000 DIV sum(n_purchases) OVER ()"))
+      .orderBy(col(key).asc)
+
+  private def purchaseSharesSql(key: String, from: String): String =
+    s"""SELECT $key, COUNT(*) AS n_purchases,
+       |  $sumValueSql AS revenue,
+       |  CAST(COUNT(*) * 1000000 // SUM(COUNT(*)) OVER () AS BIGINT)
+       |    AS share_ppm
+       |FROM $from GROUP BY $key ORDER BY $key ASC""".stripMargin
 
   // --- ev_tumbling_counts: tumbling-window aggregation -------------------
   def evTumblingCounts(spark: SparkSession, dir: String): DataFrame =
@@ -44,18 +154,8 @@ object EventOps {
        |ORDER BY window_start ASC, event_type ASC""".stripMargin
 
   // --- ev_sessionize: gap-based sessionization via lag + cumsum ----------
-  def evSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val gapSec = 1800 // 30-minute inactivity gap
-    events(spark, dir)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev_ts").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("prev_ts")) > gapSec * 1000000L,
-          1L).otherwise(0L))
-      .withColumn("session_seq", sum(col("is_new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  def evSessionize(spark: SparkSession, dir: String): DataFrame =
+    sessions(events(spark, dir))
       .groupBy(col("user_id"), col("session_seq"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -63,21 +163,9 @@ object EventOps {
         date_trunc("second", max(col("ts"))).as("session_end"),
         sumValue(col("value")).as("sum_value"))
       .orderBy(col("user_id").asc, col("session_seq").asc)
-  }
 
   val evSessionizeSql: String =
-    s"""WITH marked AS (
-       |  SELECT user_id, ts, event_id, value,
-       |    CASE WHEN lag(ts) OVER w IS NULL
-       |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS is_new
-       |  FROM events
-       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-       |), sessions AS (
-       |  SELECT user_id, ts, value,
-       |    CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-       |  FROM marked
-       |)
+    s"""WITH $sessionsSql
        |SELECT user_id, session_seq, COUNT(*) AS n_events,
        |  date_trunc('second', MIN(ts)) AS session_start,
        |  date_trunc('second', MAX(ts)) AS session_end,
@@ -89,8 +177,7 @@ object EventOps {
   // --- ev_funnel: signup → purchase conversion ----------------------------
   def evFunnel(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-    val signups = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("first_signup"))
+    val signups = firstSignup(ev)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"))
     val converted = signups.join(purchases, Seq("user_id"), "left")
@@ -116,8 +203,7 @@ object EventOps {
     */
   def evFunnelTime(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-    val signups = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("first_signup"))
+    val signups = firstSignup(ev)
     val purch = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"))
     val conv = signups.join(purch, Seq("user_id"))
@@ -130,22 +216,18 @@ object EventOps {
       conv.select(col("user_id"), col("lat_us")),
       Seq.empty, Seq(col("lat_us"), col("user_id")), lit(1L),
       rankOut = Some("rn"), totalOut = Some("n"))
-    def rk(p: Int) = expr(s"(n * $p + 99) DIV 100")
     ranked.groupBy(col("n").as("n_converted"))
       .agg(
-        max(when(col("rn") === rk(50), expr("lat_us DIV 1000000")))
+        max(when(col("rn") === nearestRank(50), expr("lat_us DIV 1000000")))
           .as("p50_secs"),
-        max(when(col("rn") === rk(90), expr("lat_us DIV 1000000")))
+        max(when(col("rn") === nearestRank(90), expr("lat_us DIV 1000000")))
           .as("p90_secs"),
-        max(when(col("rn") === rk(99), expr("lat_us DIV 1000000")))
+        max(when(col("rn") === nearestRank(99), expr("lat_us DIV 1000000")))
           .as("p99_secs"))
   }
 
   val evFunnelTimeSql: String =
-    """WITH signups AS (
-      |  SELECT user_id, MIN(ts) AS first_signup FROM events
-      |  WHERE event_type = 'signup' GROUP BY user_id
-      |), conv AS (
+    s"""WITH signups AS (${firstSignupSql()}), conv AS (
       |  SELECT s.user_id, s.first_signup, MIN(p.ts) AS first_conv
       |  FROM signups s JOIN (
       |    SELECT user_id, ts FROM events WHERE event_type = 'purchase'
@@ -162,19 +244,16 @@ object EventOps {
       |  FROM lat
       |)
       |SELECT n AS n_converted,
-      |  CAST(MAX(CASE WHEN rn = (n * 50 + 99) // 100
+      |  CAST(MAX(CASE WHEN rn = ${nearestRankSql(50)}
       |    THEN lat_us // 1000000 END) AS BIGINT) AS p50_secs,
-      |  CAST(MAX(CASE WHEN rn = (n * 90 + 99) // 100
+      |  CAST(MAX(CASE WHEN rn = ${nearestRankSql(90)}
       |    THEN lat_us // 1000000 END) AS BIGINT) AS p90_secs,
-      |  CAST(MAX(CASE WHEN rn = (n * 99 + 99) // 100
+      |  CAST(MAX(CASE WHEN rn = ${nearestRankSql(99)}
       |    THEN lat_us // 1000000 END) AS BIGINT) AS p99_secs
       |FROM ranked GROUP BY n""".stripMargin
 
   val evFunnelSql: String =
-    """WITH signups AS (
-      |  SELECT user_id, MIN(ts) AS first_signup FROM events
-      |  WHERE event_type = 'signup' GROUP BY user_id
-      |), conv AS (
+    s"""WITH signups AS (${firstSignupSql()}), conv AS (
       |  SELECT s.user_id,
       |    MAX(CASE WHEN p.ts > s.first_signup THEN 1 ELSE 0 END) AS converted
       |  FROM signups s LEFT JOIN (
@@ -193,8 +272,7 @@ object EventOps {
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_purchases"),
+        typeCount("purchase").as("n_purchases"),
         sumValue(col("value")).as("total_value"),
         date_trunc("hour", min(col("ts"))).as("first_seen_hour"),
         date_trunc("hour", max(col("ts"))).as("last_seen_hour"))
@@ -202,7 +280,7 @@ object EventOps {
 
   val evUserActivitySql: String =
     s"""SELECT user_id, COUNT(*) AS n_events,
-       |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases,
+       |  ${typeCountSql("purchase")} AS n_purchases,
        |  $sumValueSql AS total_value,
        |  date_trunc('hour', MIN(ts)) AS first_seen_hour,
        |  date_trunc('hour', MAX(ts)) AS last_seen_hour
@@ -329,14 +407,10 @@ object EventOps {
     */
   def evRetentionCohorts(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-    val firstSeen = ev.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).as("cohort_week"))
     val activity = ev
       .select(col("user_id"), date_trunc("week", col("ts")).as("week"))
       .distinct()
-    val byCohort = activity.join(firstSeen, "user_id")
-      .withColumn("weeks_since",
-        expr("CAST(datediff(week, cohort_week) DIV 7 AS BIGINT)"))
+    val byCohort = byCohortWeek(ev, activity)
       .groupBy(col("cohort_week"), col("weeks_since"))
       .agg(countDistinct(col("user_id")).as("n_active"))
     val w = org.apache.spark.sql.expressions.Window
@@ -364,14 +438,10 @@ object EventOps {
     */
   def evCohortRevenue(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-    val firstSeen = ev.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).as("cohort_week"))
     val purch = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), date_trunc("week", col("ts")).as("week"),
-        (col("value").cast("decimal(12,2)") * 100).cast("bigint").as("cents"))
-    val byCell = purch.join(firstSeen, "user_id")
-      .withColumn("weeks_since",
-        expr("CAST(datediff(week, cohort_week) DIV 7 AS BIGINT)"))
+        valueCents.as("cents"))
+    val byCell = byCohortWeek(ev, purch)
       .groupBy(col("cohort_week"), col("weeks_since"))
       .agg(countDistinct(col("user_id")).as("n_buyers"),
         sum(col("cents")).as("revenue_cents"))
@@ -389,17 +459,11 @@ object EventOps {
   }
 
   val evCohortRevenueSql: String =
-    """WITH first_seen AS (
-      |  SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
-      |  FROM events GROUP BY user_id
-      |), purch AS (
-      |  SELECT user_id, date_trunc('week', ts) AS week,
-      |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
+    s"""WITH $firstSeenWeekSql, purch AS (
+      |  SELECT user_id, date_trunc('week', ts) AS week, $valueCentsSql AS cents
       |  FROM events WHERE event_type = 'purchase'
       |), cell AS (
-      |  SELECT f.cohort_week,
-      |    CAST(datediff('day', f.cohort_week, p.week) // 7 AS BIGINT)
-      |      AS weeks_since,
+      |  SELECT f.cohort_week, ${weeksSinceSql("p")} AS weeks_since,
       |    COUNT(DISTINCT p.user_id) AS n_buyers,
       |    CAST(SUM(p.cents) AS BIGINT) AS revenue_cents
       |  FROM purch p JOIN first_seen f USING (user_id)
@@ -417,14 +481,10 @@ object EventOps {
       |FROM w0 ORDER BY cohort_week ASC, weeks_since ASC""".stripMargin
 
   val evRetentionCohortsSql: String =
-    """WITH first_seen AS (
-      |  SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
-      |  FROM events GROUP BY user_id
-      |), activity AS (
+    s"""WITH $firstSeenWeekSql, activity AS (
       |  SELECT DISTINCT user_id, date_trunc('week', ts) AS week FROM events
       |), by_cohort AS (
-      |  SELECT f.cohort_week,
-      |    CAST(datediff('day', f.cohort_week, a.week) // 7 AS BIGINT) AS weeks_since,
+      |  SELECT f.cohort_week, ${weeksSinceSql("a")} AS weeks_since,
       |    COUNT(DISTINCT a.user_id) AS n_active
       |  FROM activity a JOIN first_seen f ON a.user_id = f.user_id
       |  GROUP BY f.cohort_week, weeks_since
@@ -505,12 +565,10 @@ object EventOps {
     * via the inner join with the DAU set.
     */
   def evDauWau(spark: SparkSession, dir: String): DataFrame = {
-    val userDays = events(spark, dir)
-      .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .distinct()
-    val dau = userDays.groupBy(col("day"))
+    val ud = userDays(spark, dir)
+    val dau = ud.groupBy(col("day"))
       .agg(count(lit(1)).as("dau"))
-    val wau = userDays
+    val wau = ud
       .select(col("user_id"), explode(sequence(col("day"),
         col("day") + expr("INTERVAL '6' DAY"),
         expr("INTERVAL '1' DAY"))).as("day"))
@@ -524,9 +582,7 @@ object EventOps {
   }
 
   val evDauWauSql: String =
-    """WITH ud AS (
-      |  SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events
-      |), dau AS (
+    s"""WITH ud AS ($userDaysSql), dau AS (
       |  SELECT day, COUNT(*) AS dau FROM ud GROUP BY day
       |), wau AS (
       |  SELECT g.day AS day, COUNT(DISTINCT u.user_id) AS wau
@@ -609,12 +665,9 @@ object EventOps {
     * deterministic both engines), then a tiny (≤ types²) aggregate.
     */
   def evTransitions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
     events(spark, dir)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .withColumn("next_type", lead(col("event_type"), 1).over(byUser))
       .filter(col("next_type").isNotNull)
       .groupBy(col("event_type"), col("next_type"))
       .agg(count(lit(1)).as("n_transitions"))
@@ -628,10 +681,9 @@ object EventOps {
   }
 
   val evTransitionsSql: String =
-    """WITH seq AS (
+    s"""WITH seq AS (
       |  SELECT user_id, event_type,
-      |    LEAD(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY epoch_us(ts) ASC, event_id ASC) AS next_type
+      |    LEAD(event_type) OVER ($byUserSql) AS next_type
       |  FROM events
       |), pairs AS (
       |  SELECT event_type, next_type, COUNT(*) AS n_transitions
@@ -663,12 +715,12 @@ object EventOps {
       .orderBy(col("month").asc)
 
   val evPivotMonthlySql: String =
-    """SELECT date_trunc('month', ts) AS month,
-      |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-      |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
-      |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-      |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-      |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
+    s"""SELECT date_trunc('month', ts) AS month,
+      |  ${typeCountSql("click")} AS click,
+      |  ${typeCountSql("error")} AS error,
+      |  ${typeCountSql("purchase")} AS purchase,
+      |  ${typeCountSql("signup")} AS signup,
+      |  ${typeCountSql("view")} AS view
       |FROM events
       |GROUP BY month ORDER BY month ASC""".stripMargin
 
@@ -690,16 +742,15 @@ object EventOps {
         .select("hour", "value", "event_id"),
       Seq("hour"), Seq(col("value"), col("event_id")), lit(1L),
       rankOut = Some("rn"), totalOut = Some("n"))
-    def rank(p: Int) = expr(s"(n * $p + 99) DIV 100") // ⌈n·p/100⌉
     ranked.groupBy(col("hour"), col("n").as("n_events"))
-      .agg(max(when(col("rn") === rank(50), col("value"))).as("p50"),
-        max(when(col("rn") === rank(95), col("value"))).as("p95"),
-        max(when(col("rn") === rank(99), col("value"))).as("p99"))
+      .agg(max(when(col("rn") === nearestRank(50), col("value"))).as("p50"),
+        max(when(col("rn") === nearestRank(95), col("value"))).as("p95"),
+        max(when(col("rn") === nearestRank(99), col("value"))).as("p99"))
       .orderBy(col("hour").asc)
   }
 
   val evValueQuantilesSql: String =
-    """WITH ranked AS (
+    s"""WITH ranked AS (
       |  SELECT date_trunc('hour', ts) AS hour, value,
       |    ROW_NUMBER() OVER (PARTITION BY date_trunc('hour', ts)
       |      ORDER BY value ASC, event_id ASC) AS rn,
@@ -707,9 +758,9 @@ object EventOps {
       |  FROM events
       |)
       |SELECT hour, n AS n_events,
-      |  MAX(CASE WHEN rn = (n * 50 + 99) // 100 THEN value END) AS p50,
-      |  MAX(CASE WHEN rn = (n * 95 + 99) // 100 THEN value END) AS p95,
-      |  MAX(CASE WHEN rn = (n * 99 + 99) // 100 THEN value END) AS p99
+      |  MAX(CASE WHEN rn = ${nearestRankSql(50)} THEN value END) AS p50,
+      |  MAX(CASE WHEN rn = ${nearestRankSql(95)} THEN value END) AS p95,
+      |  MAX(CASE WHEN rn = ${nearestRankSql(99)} THEN value END) AS p99
       |FROM ranked GROUP BY hour, n
       |ORDER BY hour ASC""".stripMargin
 
@@ -817,56 +868,32 @@ object EventOps {
     * duration) over the aggregated session frame, each fully parallel.
     */
   def evSessionStats(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val gapSec = 1800
-    val sess = events(spark, dir)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev_ts").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("prev_ts")) > gapSec * 1000000L,
-          1L).otherwise(0L))
-      .withColumn("session_seq", sum(col("is_new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = sessions(events(spark, dir))
       .groupBy(col("user_id"), col("session_seq"))
       .agg(count(lit(1)).as("n_events"),
         (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
           .as("dur_us"))
-    def rk(p: Int) = expr(s"(n * $p + 99) DIV 100") // ⌈n·p/100⌉
     val byLen = PrefixScan.scanState(sess, Seq.empty,
       Seq(col("n_events"), col("user_id"), col("session_seq")), lit(1L),
       rankOut = Some("rn"), totalOut = Some("n"))
     val lenStats = byLen.agg(
       max(col("n")).as("n_sessions"),
       sum(when(col("n_events") === 1, 1L).otherwise(0L)).as("n_single_event"),
-      max(when(col("rn") === rk(50), col("n_events"))).as("p50_events"),
-      max(when(col("rn") === rk(90), col("n_events"))).as("p90_events"))
+      max(when(col("rn") === nearestRank(50), col("n_events"))).as("p50_events"),
+      max(when(col("rn") === nearestRank(90), col("n_events"))).as("p90_events"))
     val byDur = PrefixScan.scanState(sess, Seq.empty,
       Seq(col("dur_us"), col("user_id"), col("session_seq")), lit(1L),
       rankOut = Some("rn"), totalOut = Some("n"))
     val durStats = byDur.agg(
-      max(when(col("rn") === rk(50), expr("dur_us DIV 1000000")))
+      max(when(col("rn") === nearestRank(50), expr("dur_us DIV 1000000")))
         .as("p50_duration_s"),
-      max(when(col("rn") === rk(90), expr("dur_us DIV 1000000")))
+      max(when(col("rn") === nearestRank(90), expr("dur_us DIV 1000000")))
         .as("p90_duration_s"))
     lenStats.crossJoin(durStats)
   }
 
   val evSessionStatsSql: String =
-    """WITH marked AS (
-      |  SELECT user_id, ts, event_id,
-      |    CASE WHEN lag(ts) OVER w IS NULL
-      |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-      |      THEN 1 ELSE 0 END AS is_new
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-      |), sessions AS (
-      |  SELECT user_id, ts,
-      |    CAST(SUM(is_new) OVER (PARTITION BY user_id
-      |      ORDER BY ts ASC, event_id ASC ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) AS session_seq
-      |  FROM marked
-      |), sess AS (
+    s"""WITH $sessionsSql, sess AS (
       |  SELECT user_id, session_seq, COUNT(*) AS n_events,
       |    MAX(epoch_us(ts)) - MIN(epoch_us(ts)) AS dur_us
       |  FROM sessions GROUP BY user_id, session_seq
@@ -886,16 +913,16 @@ object EventOps {
       |  SELECT CAST(MAX(n) AS BIGINT) AS n_sessions,
       |    CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT)
       |      AS n_single_event,
-      |    MAX(CASE WHEN rn = (n * 50 + 99) // 100 THEN n_events END)
+      |    MAX(CASE WHEN rn = ${nearestRankSql(50)} THEN n_events END)
       |      AS p50_events,
-      |    MAX(CASE WHEN rn = (n * 90 + 99) // 100 THEN n_events END)
+      |    MAX(CASE WHEN rn = ${nearestRankSql(90)} THEN n_events END)
       |      AS p90_events
       |  FROM by_len
       |), dur_stats AS (
       |  SELECT
-      |    CAST(MAX(CASE WHEN rn = (n * 50 + 99) // 100
+      |    CAST(MAX(CASE WHEN rn = ${nearestRankSql(50)}
       |      THEN dur_us // 1000000 END) AS BIGINT) AS p50_duration_s,
-      |    CAST(MAX(CASE WHEN rn = (n * 90 + 99) // 100
+      |    CAST(MAX(CASE WHEN rn = ${nearestRankSql(90)}
       |      THEN dur_us // 1000000 END) AS BIGINT) AS p90_duration_s
       |  FROM by_dur
       |)
@@ -944,12 +971,10 @@ object EventOps {
     * events twice).
     */
   def evNewVsReturning(spark: SparkSession, dir: String): DataFrame = {
-    val ev = events(spark, dir)
-      .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
-    val userDays = ev.distinct()
-    val firstSeen = userDays.groupBy(col("user_id"))
+    val ud = userDays(spark, dir)
+    val firstSeen = ud.groupBy(col("user_id"))
       .agg(min(col("day")).as("first_day"))
-    userDays.join(firstSeen, "user_id")
+    ud.join(firstSeen, "user_id")
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_users"),
         sum(when(col("day") === col("first_day"), 1L).otherwise(0L))
@@ -961,9 +986,7 @@ object EventOps {
   }
 
   val evNewVsReturningSql: String =
-    """WITH ud AS (
-      |  SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events
-      |), fs AS (
+    s"""WITH ud AS ($userDaysSql), fs AS (
       |  SELECT user_id, MIN(day) AS first_day FROM ud GROUP BY user_id
       |)
       |SELECT ud.day, COUNT(*) AS n_users,
@@ -987,17 +1010,15 @@ object EventOps {
     events(spark, dir)
       .groupBy(date_trunc("hour", col("ts")).as("hour"))
       .agg(count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L))
-          .as("n_errors"))
+        typeCount("error").as("n_errors"))
       .withColumn("error_ppm", expr("n_errors * 1000000 DIV n_events"))
       .withColumn("slo_breach", col("error_ppm") > 250000L)
       .orderBy(col("hour").asc)
 
   val evErrorRateSql: String =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT date_trunc('hour', ts) AS hour, COUNT(*) AS n_events,
-      |    CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_errors
+      |    ${typeCountSql("error")} AS n_errors
       |  FROM events GROUP BY hour
       |)
       |SELECT hour, n_events, n_errors,
@@ -1017,8 +1038,7 @@ object EventOps {
     */
   def evFunnelSteps(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
-    val s1 = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
+    val s1 = firstSignup(ev, "t1")
     val s2 = ev.filter(col("event_type") === "click")
       .join(s1, "user_id")
       .filter(col("ts") > col("t1"))
@@ -1047,10 +1067,7 @@ object EventOps {
   }
 
   val evFunnelStepsSql: String =
-    """WITH s1 AS (
-      |  SELECT user_id, MIN(ts) AS t1 FROM events
-      |  WHERE event_type = 'signup' GROUP BY user_id
-      |), s2 AS (
+    s"""WITH s1 AS (${firstSignupSql("t1")}), s2 AS (
       |  SELECT e.user_id, MIN(e.ts) AS t2
       |  FROM events e JOIN s1 ON e.user_id = s1.user_id
       |  WHERE e.event_type = 'click' AND e.ts > s1.t1
@@ -1124,9 +1141,7 @@ object EventOps {
     * and a TakeOrdered top-20 with full-path tie-break — the raw stream is
     * shuffled once for the windows and never again.
     */
-  def evPathTrigrams(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
+  def evPathTrigrams(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
       .withColumn("e2", lead(col("event_type"), 1).over(byUser))
       .withColumn("e3", lead(col("event_type"), 2).over(byUser))
@@ -1136,15 +1151,14 @@ object EventOps {
       .orderBy(col("n_paths").desc, col("e1").asc, col("e2").asc,
         col("e3").asc)
       .limit(20)
-  }
 
   val evPathTrigramsSql: String =
-    """WITH seq AS (
+    s"""WITH seq AS (
       |  SELECT user_id, event_type AS e1,
       |    lead(event_type, 1) OVER w AS e2,
       |    lead(event_type, 2) OVER w AS e3
       |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+      |  WINDOW w AS ($byUserSql)
       |)
       |SELECT e1, e2, e3, COUNT(*) AS n_paths
       |FROM seq WHERE e3 IS NOT NULL
@@ -1172,8 +1186,6 @@ object EventOps {
       .agg(sum(col("n")).as("n_events"),
         count(lit(1)).as("active_minutes"),
         max(col("n")).as("max_per_minute"))
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
     val gaps = ev
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("gap_us",
@@ -1191,7 +1203,7 @@ object EventOps {
   }
 
   val evBotDetectionSql: String =
-    """WITH cells AS (
+    s"""WITH cells AS (
       |  SELECT user_id, date_trunc('minute', ts) AS minute, COUNT(*) AS n
       |  FROM events GROUP BY user_id, minute
       |), peru AS (
@@ -1205,8 +1217,7 @@ object EventOps {
       |      AS subsecond_gaps
       |  FROM (
       |    SELECT user_id,
-      |      epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id
-      |        ORDER BY ts ASC, event_id ASC)) AS gap_us
+      |      epoch_us(ts) - epoch_us(lag(ts) OVER ($byUserSql)) AS gap_us
       |    FROM events
       |  ) g GROUP BY user_id
       |)
@@ -1217,7 +1228,8 @@ object EventOps {
       |ORDER BY p.user_id ASC""".stripMargin
 
   // --- ev_attribution: last-touch purchase attribution ---------------------
-  private val AttributionLookbackUs = 24L * 3600L * 1000000L
+  /** How far back (µs) a click or view can take credit for a purchase. */
+  private[graft] val AttributionLookbackUs = 24L * 3600L * 1000000L
 
   /** Last-touch attribution: every purchase is credited to the user's most
     * recent preceding click or view within a 24 h lookback (else 'direct')
@@ -1237,15 +1249,13 @@ object EventOps {
     * twin (`StreamOps.attributionStream`) must reproduce row-for-row.
     */
   private[graft] def attributionPerPurchase(spark: SparkSession,
-      dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
+      dir: String): DataFrame =
     events(spark, dir)
       .withColumn("touch",
         last(when(col("event_type").isin("click", "view"),
           struct(col("ts").as("tts"), col("event_type").as("ttype"))),
-          ignoreNulls = true).over(byUser))
+          ignoreNulls = true)
+          .over(byUser.rowsBetween(Window.unboundedPreceding, -1)))
       .filter(col("event_type") === "purchase")
       .withColumn("source",
         when(col("touch").isNull ||
@@ -1256,37 +1266,38 @@ object EventOps {
         when(col("source") =!= "direct",
           unix_micros(col("ts")) - unix_micros(col("touch.tts")))
           .as("lag_us"))
-  }
 
-  def evAttribution(spark: SparkSession, dir: String): DataFrame =
-    attributionPerPurchase(spark, dir)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_purchases"),
-        sumValue(col("value")).as("revenue"))
-      .withColumn("share_ppm", expr(
-        "n_purchases * 1000000 DIV sum(n_purchases) OVER ()"))
-      .orderBy(col("source").asc)
-
-  val evAttributionSql: String =
-    s"""WITH t AS (
+  /** SQL twin of [[attributionPerPurchase]]: CTE p (event_id, user_id,
+    * source, value, lag_us), by way of CTEs t and a.
+    */
+  private val attributionPerPurchaseSql: String =
+    s"""t AS (
        |  SELECT user_id, event_id, ts, event_type, value,
        |    LAST_VALUE(CASE WHEN event_type IN ('click', 'view')
        |        THEN struct_pack(tts := ts, ttype := event_type) END
        |        IGNORE NULLS)
-       |      OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+       |      OVER ($byUserSql
        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
        |  FROM events
-       |), p AS (
-       |  SELECT CASE WHEN touch IS NULL
+       |), a AS (
+       |  SELECT event_id, user_id, value,
+       |    CASE WHEN touch IS NULL
        |      OR epoch_us(ts) - epoch_us(touch.tts) > $AttributionLookbackUs
-       |      THEN 'direct' ELSE touch.ttype END AS source, value
+       |      THEN 'direct' ELSE touch.ttype END AS source,
+       |    epoch_us(ts) - epoch_us(touch.tts) AS touch_us
        |  FROM t WHERE event_type = 'purchase'
-       |)
-       |SELECT source, COUNT(*) AS n_purchases,
-       |  $sumValueSql AS revenue,
-       |  CAST(COUNT(*) * 1000000 // SUM(COUNT(*)) OVER () AS BIGINT)
-       |    AS share_ppm
-       |FROM p GROUP BY source ORDER BY source ASC""".stripMargin
+       |), p AS (
+       |  SELECT event_id, user_id, source, value,
+       |    CASE WHEN source <> 'direct' THEN touch_us END AS lag_us
+       |  FROM a
+       |)""".stripMargin
+
+  def evAttribution(spark: SparkSession, dir: String): DataFrame =
+    purchaseShares(attributionPerPurchase(spark, dir), "source")
+
+  val evAttributionSql: String =
+    s"""WITH $attributionPerPurchaseSql
+       |${purchaseSharesSql("source", "p")}""".stripMargin
 
   // --- ev_rfm: recency / frequency / monetary segmentation -----------------
   /** RFM segmentation of the purchase base — per user: days since last
@@ -1308,8 +1319,7 @@ object EventOps {
       .groupBy(col("user_id"))
       .agg(max(col("ts")).as("last_purchase"),
         count(lit(1)).as("freq"),
-        sum((col("value").cast("decimal(12,2)") * 100).cast("bigint"))
-          .as("cents"))
+        sum(valueCents).as("cents"))
       .crossJoin(anchor)
       .withColumn("rec_days",
         datediff(col("anchor_ts").cast("date"),
@@ -1330,10 +1340,9 @@ object EventOps {
   }
 
   val evRfmSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT user_id, MAX(ts) AS last_purchase, COUNT(*) AS freq,
-      |    CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
-      |      AS BIGINT) AS cents
+      |    CAST(SUM($valueCentsSql) AS BIGINT) AS cents
       |  FROM events WHERE event_type = 'purchase' GROUP BY user_id
       |), seg AS (
       |  SELECT
@@ -1364,36 +1373,16 @@ object EventOps {
     * ≤5-row aggregate.
     */
   def evConversionLag(spark: SparkSession, dir: String): DataFrame =
-    attributionPerPurchase(spark, dir)
+    purchaseShares(attributionPerPurchase(spark, dir)
       .withColumn("lag_bucket",
         when(col("lag_us").isNull, "direct")
           .when(col("lag_us") <= 60L * 1000000L, "le_1m")
           .when(col("lag_us") <= 3600L * 1000000L, "le_1h")
           .when(col("lag_us") <= 6L * 3600L * 1000000L, "le_6h")
-          .otherwise("le_24h"))
-      .groupBy(col("lag_bucket"))
-      .agg(count(lit(1)).as("n_purchases"),
-        sumValue(col("value")).as("revenue"))
-      .withColumn("share_ppm", expr(
-        "n_purchases * 1000000 DIV sum(n_purchases) OVER ()"))
-      .orderBy(col("lag_bucket").asc)
+          .otherwise("le_24h")), "lag_bucket")
 
   val evConversionLagSql: String =
-    s"""WITH t AS (
-       |  SELECT user_id, event_id, ts, event_type, value,
-       |    LAST_VALUE(CASE WHEN event_type IN ('click', 'view')
-       |        THEN struct_pack(tts := ts, ttype := event_type) END
-       |        IGNORE NULLS)
-       |      OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-       |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
-       |  FROM events
-       |), p AS (
-       |  SELECT CASE WHEN touch IS NULL
-       |      OR epoch_us(ts) - epoch_us(touch.tts) > $AttributionLookbackUs
-       |      THEN NULL ELSE epoch_us(ts) - epoch_us(touch.tts) END AS lag_us,
-       |    value
-       |  FROM t WHERE event_type = 'purchase'
-       |), b AS (
+    s"""WITH $attributionPerPurchaseSql, b AS (
        |  SELECT CASE WHEN lag_us IS NULL THEN 'direct'
        |      WHEN lag_us <= 60000000 THEN 'le_1m'
        |      WHEN lag_us <= 3600000000 THEN 'le_1h'
@@ -1401,11 +1390,7 @@ object EventOps {
        |      ELSE 'le_24h' END AS lag_bucket, value
        |  FROM p
        |)
-       |SELECT lag_bucket, COUNT(*) AS n_purchases,
-       |  $sumValueSql AS revenue,
-       |  CAST(COUNT(*) * 1000000 // SUM(COUNT(*)) OVER () AS BIGINT)
-       |    AS share_ppm
-       |FROM b GROUP BY lag_bucket ORDER BY lag_bucket ASC""".stripMargin
+       |${purchaseSharesSql("lag_bucket", "b")}""".stripMargin
 
   /** Deterministic Knuth arm assignment, shared by [[evAbTest]] and
     * [[abSignificanceOf]]. The hash input is widened to DECIMAL(38,0)
@@ -1443,10 +1428,8 @@ object EventOps {
     events(spark, dir)
       .groupBy(col("user_id"))
       .agg(
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_purchases"),
-        sum(when(col("event_type") === "purchase",
-          (col("value").cast("decimal(12,2)") * 100).cast("bigint"))
+        typeCount("purchase").as("n_purchases"),
+        sum(when(col("event_type") === "purchase", valueCents)
           .otherwise(0L)).as("cents"))
       .withColumn("arm", armCol)
       .groupBy(col("arm"))
@@ -1460,10 +1443,8 @@ object EventOps {
   val evAbTestSql: String =
     s"""WITH u AS (
       |  SELECT user_id,
-      |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-      |      AS BIGINT) AS n_purchases,
-      |    CAST(SUM(CASE WHEN event_type = 'purchase'
-      |      THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
+      |    ${typeCountSql("purchase")} AS n_purchases,
+      |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN $valueCentsSql
       |      ELSE 0 END) AS BIGINT) AS cents
       |  FROM events GROUP BY user_id
       |), armed AS (
@@ -1571,21 +1552,10 @@ object EventOps {
   }
 
   val evConcurrencySql: String =
-    """WITH marked AS (
-      |  SELECT user_id, ts, event_id,
-      |    CASE WHEN lag(ts) OVER w IS NULL
-      |      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS is_new
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-      |), numbered AS (
-      |  SELECT user_id, ts,
-      |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-      |      ROWS UNBOUNDED PRECEDING) AS session_seq
-      |  FROM marked
-      |), sess AS (
+    s"""WITH $sessionsSql, sess AS (
       |  SELECT epoch_us(date_trunc('second', MIN(ts))) // 1000000 AS s,
       |    epoch_us(date_trunc('second', MAX(ts))) // 1000000 AS e
-      |  FROM numbered GROUP BY user_id, session_seq
+      |  FROM sessions GROUP BY user_id, session_seq
       |), segs AS (
       |  SELECT u.k AS k,
       |    greatest(s, u.k * 86400) AS seg_s,
@@ -1622,8 +1592,6 @@ object EventOps {
     * until the final 3-row ORDER BY.
     */
   def evBurstiness(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
     val gaps = events(spark, dir)
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .filter(col("prev_ts").isNotNull)
@@ -1653,11 +1621,11 @@ object EventOps {
   }
 
   val evBurstinessSql: String =
-    """WITH gaps AS (
+    s"""WITH gaps AS (
       |  SELECT user_id,
       |    (epoch_us(ts) - epoch_us(lag(ts) OVER w)) // 1000000 AS gap_s
       |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+      |  WINDOW w AS ($byUserSql)
       |), per_user AS (
       |  SELECT user_id, COUNT(*) AS n, SUM(gap_s) AS s, SUM(gap_s * gap_s) AS q
       |  FROM gaps WHERE gap_s IS NOT NULL GROUP BY user_id
@@ -1858,8 +1826,7 @@ object EventOps {
   private[graft] def abSignificanceOf(ev: DataFrame): DataFrame = {
     val u = ev
       .groupBy(col("user_id"))
-      .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-        >= 14L, 1L).otherwise(0L).as("conv"))
+      .agg(when(typeCount("purchase") >= 14L, 1L).otherwise(0L).as("conv"))
       .withColumn("arm", armCol)
     u.groupBy()
       .agg(
@@ -1920,8 +1887,7 @@ object EventOps {
   val evAbSignificanceSql: String =
     s"""WITH u AS (
       |  SELECT user_id,
-      |    CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-      |      >= 14 THEN 1 ELSE 0 END AS conv
+      |    CASE WHEN ${typeCountSql("purchase")} >= 14 THEN 1 ELSE 0 END AS conv
       |  FROM events GROUP BY user_id
       |), armed AS (
       |  SELECT $armSql AS arm, conv FROM u
@@ -2046,8 +2012,7 @@ object EventOps {
       .agg(
         countDistinct(col("user_id")).as("n_users"),
         count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L))
-          .as("n_errors"))
+        typeCount("error").as("n_errors"))
       .withColumn("error_ppm", expr("n_errors * 1000000 div n_events"))
       .withColumn("events_per_user_milli", expr("n_events * 1000 div n_users"))
       .orderBy(col("arm").asc)
@@ -2058,9 +2023,8 @@ object EventOps {
       |)
       |SELECT arm, COUNT(DISTINCT user_id) AS n_users,
       |  COUNT(*) AS n_events,
-      |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_errors,
-      |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
+      |  ${typeCountSql("error")} AS n_errors,
+      |  CAST(${typeCountSql("error")}
       |    * 1000000 // COUNT(*) AS BIGINT) AS error_ppm,
       |  CAST(COUNT(*) * 1000 // COUNT(DISTINCT user_id) AS BIGINT)
       |    AS events_per_user_milli
@@ -2096,10 +2060,8 @@ object EventOps {
     entries
       .groupBy(col("ts_minute"), col("arm"))
       .agg(count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_purchases"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L))
-          .as("n_errors"))
+        typeCount("purchase").as("n_purchases"),
+        typeCount("error").as("n_errors"))
 
   val evAbTimelineSql: String =
     s"""WITH armed AS (
@@ -2108,10 +2070,8 @@ object EventOps {
       |  FROM events
       |)
       |SELECT ts_minute, arm, COUNT(*) AS n_events,
-      |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_purchases,
-      |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_errors
+      |  ${typeCountSql("purchase")} AS n_purchases,
+      |  ${typeCountSql("error")} AS n_errors
       |FROM armed GROUP BY ts_minute, arm
       |ORDER BY ts_minute ASC, arm ASC""".stripMargin
 

@@ -337,21 +337,15 @@ object Namespace {
   def nsGrowthTrend(spark: SparkSession, dir: String): DataFrame =
     growthTrend(ObjectStoreView.keys(spark, dir))
 
-  /** Capacity forecast per volume: ordinary least squares over the monthly
-    * bytes-added series (x = month rank, y = bytes), projecting the next
-    * month — the capacity-planning read on the Recon utilization trend.
-    * All regression sums are exact integers over the ≤|months| aggregated
-    * frame (slope = (nΣxy−ΣxΣy)/D, D = nΣx²−(Σx)²); only the final
-    * slope/forecast divisions go to rounded doubles (the cross-engine emit
-    * discipline of SURVEY §4). One corpus scan + one monthly shuffle; the
-    * regression itself is a per-volume aggregate over month rows.
+  /** Per-volume least-squares sums over the monthly bytes-added series
+    * (x = month rank 0..n-1, y = bytes added that month): n_months, sx,
+    * sy, sxy and sxx, all exact integers. The month rank is a window over
+    * the aggregated monthly frame (metadata-sized), not the corpus.
     */
-  def growthForecast(keys: DataFrame): DataFrame = {
+  private def monthlyFit(keys: DataFrame): DataFrame = {
     val monthly = keys
       .groupBy(col("volume"), date_trunc("month", col("mtime")).as("month"))
       .agg(sum(col("size")).as("y"))
-    // Month rank 0..n-1 per volume — a window over the aggregated monthly
-    // frame (metadata-sized), not the corpus.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("volume")).orderBy(col("month").asc)
     monthly
@@ -361,20 +355,66 @@ object Namespace {
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("x")).as("sxx"))
+  }
+
+  /** SQL twin of [[monthlyFit]]: CTEs monthly, xy and s over `keys`. */
+  private val monthlyFitSql: String =
+    """monthly AS (
+      |  SELECT volume, date_trunc('month', mtime) AS month,
+      |    CAST(SUM(size) AS BIGINT) AS y
+      |  FROM keys GROUP BY volume, month
+      |), xy AS (
+      |  SELECT volume, y,
+      |    CAST(ROW_NUMBER() OVER (PARTITION BY volume ORDER BY month ASC)
+      |      - 1 AS BIGINT) AS x
+      |  FROM monthly
+      |), s AS (
+      |  SELECT volume, COUNT(*) AS n_months,
+      |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+      |    CAST(SUM(x * y) AS BIGINT) AS sxy,
+      |    CAST(SUM(x * x) AS BIGINT) AS sxx
+      |  FROM xy GROUP BY volume
+      |)""".stripMargin
+
+  /** num / d (integers, d > 0) rounded half away from zero to 6 decimals in
+    * exact decimal arithmetic, then emitted as the correctly rounded
+    * DOUBLE. Rounding the double quotient instead disagrees across engines
+    * near 1e11 (DuckDB's double `round` is not Spark's HALF_UP).
+    */
+  private def exactRatio(num: Column, d: Column): Column =
+    (num.cast("decimal(38,0)") / d.cast("decimal(38,0)")).cast("double")
+
+  /** SQL twin of [[exactRatio]]: the same half-away-from-zero rounding in
+    * HUGEINT, converted through the exact decimal text (as `sumMoneySql`).
+    */
+  private def exactRatioSql(num: String, d: String): String =
+    s"""CAST(CAST(CAST(sign($num) * ((abs(CAST($num AS HUGEINT)) * 2000000 + ($d))
+       |  // (2 * ($d))) AS DECIMAL(38,0)) * 0.000001 AS VARCHAR) AS DOUBLE)""".stripMargin
+
+  /** Capacity forecast per volume: ordinary least squares over the monthly
+    * bytes-added series ([[monthlyFit]]), projecting the next month — the
+    * capacity-planning read on the Recon utilization trend. All regression
+    * sums are exact integers over the ≤|months| aggregated frame
+    * (slope = (nΣxy−ΣxΣy)/D, D = nΣx²−(Σx)² ≥ 0); the slope and forecast
+    * quotients are rounded exactly ([[exactRatio]]) and only then become
+    * doubles (the cross-engine emit discipline of SURVEY §4). One corpus
+    * scan + one monthly shuffle; the regression itself is a per-volume
+    * aggregate over month rows.
+    */
+  def growthForecast(keys: DataFrame): DataFrame =
+    monthlyFit(keys)
       .withColumn("d", col("n_months") * col("sxx") - col("sx") * col("sx"))
       .withColumn("slope_bytes_per_month",
-        when(col("d") =!= 0,
-          round((col("n_months") * col("sxy") - col("sx") * col("sy"))
-            .cast("double") / col("d").cast("double"), 6)))
+        when(col("d") =!= 0, exactRatio(
+          col("n_months") * col("sxy") - col("sx") * col("sy"), col("d"))))
       .withColumn("forecast_next_month_bytes",
-        when(col("d") =!= 0,
-          round(((col("sy") * col("sxx") - col("sx") * col("sxy")) +
+        when(col("d") =!= 0, exactRatio(
+          (col("sy") * col("sxx") - col("sx") * col("sxy")) +
             (col("n_months") * col("sxy") - col("sx") * col("sy")) *
-              col("n_months")).cast("double") / col("d").cast("double"), 6)))
+              col("n_months"), col("d"))))
       .select("volume", "n_months", "slope_bytes_per_month",
         "forecast_next_month_bytes")
       .orderBy(col("volume").asc)
-  }
 
   def nsGrowthForecast(spark: SparkSession, dir: String): DataFrame =
     growthForecast(ObjectStoreView.keys(spark, dir))
@@ -403,19 +443,8 @@ object Namespace {
     * verdict run over the metadata-sized monthly frame.
     */
   def quotaExhaustion(keys: DataFrame): DataFrame = {
-    val monthly = keys
-      .groupBy(col("volume"), date_trunc("month", col("mtime")).as("month"))
-      .agg(sum(col("size")).as("y"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("volume")).orderBy(col("month").asc)
     val digit = substring(col("volume"), 4, 8).cast("long")
-    monthly
-      .withColumn("x", (row_number().over(w) - 1).cast("bigint"))
-      .groupBy(col("volume"))
-      .agg(count(lit(1)).as("n_months"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"))
+    monthlyFit(keys)
       .withColumn("quota_bytes", (digit + 1) * 50000000000L)
       .withColumn("headroom_bytes", col("quota_bytes") - col("sy"))
       .withColumn("d", col("n_months") * col("sxx") - col("sx") * col("sx"))
@@ -444,23 +473,7 @@ object Namespace {
     quotaExhaustion(ObjectStoreView.keys(spark, dir))
 
   val nsQuotaExhaustionSql: String =
-    s"""WITH keys AS ($ks), monthly AS (
-       |  SELECT volume, date_trunc('month', mtime) AS month,
-       |    CAST(SUM(size) AS BIGINT) AS y
-       |  FROM keys GROUP BY volume, month
-       |), xy AS (
-       |  SELECT volume, y,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY volume ORDER BY month ASC)
-       |      - 1 AS BIGINT) AS x
-       |  FROM monthly
-       |), s AS (
-       |  SELECT volume, COUNT(*) AS n_months,
-       |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-       |    CAST(SUM(x * y) AS BIGINT) AS sxy,
-       |    CAST(SUM(x * x) AS BIGINT) AS sxx
-       |  FROM xy
-       |  GROUP BY volume
-       |), e AS (
+    s"""WITH keys AS ($ks), $monthlyFitSql, e AS (
        |  SELECT volume, n_months, sy,
        |    (CAST(substring(volume, 4, 8) AS BIGINT) + 1) * 50000000000
        |      AS quota_bytes,
@@ -484,34 +497,18 @@ object Namespace {
        |       ELSE 'OK' END AS status
        |FROM e ORDER BY volume ASC""".stripMargin
 
-  val nsGrowthForecastSql: String =
-    s"""WITH keys AS ($ks), monthly AS (
-       |  SELECT volume, date_trunc('month', mtime) AS month,
-       |    CAST(SUM(size) AS BIGINT) AS y
-       |  FROM keys GROUP BY volume, month
-       |), xy AS (
-       |  SELECT volume, y,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY volume ORDER BY month ASC)
-       |      - 1 AS BIGINT) AS x
-       |  FROM monthly
-       |), s AS (
-       |  SELECT volume, COUNT(*) AS n_months,
-       |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-       |    CAST(SUM(x * y) AS BIGINT) AS sxy,
-       |    CAST(SUM(x * x) AS BIGINT) AS sxx
-       |  FROM xy GROUP BY volume
-       |)
+  val nsGrowthForecastSql: String = {
+    val d = "n_months * sxx - sx * sx"
+    val snum = "n_months * sxy - sx * sy"
+    s"""WITH keys AS ($ks), $monthlyFitSql
        |SELECT volume, n_months,
-       |  CASE WHEN n_months * sxx - sx * sx <> 0 THEN
-       |    round(CAST(n_months * sxy - sx * sy AS DOUBLE) /
-       |      CAST(n_months * sxx - sx * sx AS DOUBLE), 6)
+       |  CASE WHEN $d <> 0 THEN ${exactRatioSql(snum, d)}
        |  END AS slope_bytes_per_month,
-       |  CASE WHEN n_months * sxx - sx * sx <> 0 THEN
-       |    round(CAST((sy * sxx - sx * sxy) +
-       |        (n_months * sxy - sx * sy) * n_months AS DOUBLE) /
-       |      CAST(n_months * sxx - sx * sx AS DOUBLE), 6)
+       |  CASE WHEN $d <> 0 THEN
+       |    ${exactRatioSql(s"(sy * sxx - sx * sxy) + ($snum) * n_months", d)}
        |  END AS forecast_next_month_bytes
        |FROM s ORDER BY volume ASC""".stripMargin
+  }
 
   val nsGrowthTrendSql: String =
     s"""WITH keys AS ($ks), monthly AS (

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import PrefixScan.{nearestRank, nearestRankSql}
 
 /** The end-to-end training-data curation flow as ONE declarative plan
   * (SURVEY §2.D composition): exact dedup (fold-hash fingerprint groups) →
@@ -642,11 +643,10 @@ object Pipeline {
     val ranked = PrefixScan.scanState(scored, Seq("lang"),
       Seq(col("quality_score"), col("doc_id")), lit(1L),
       rankOut = Some("rn"), totalOut = Some("n"))
-    def rk(p: Int) = expr(s"(n * $p + 99) DIV 100")
     ranked.groupBy(col("lang"), col("n").as("n_docs"))
-      .agg(max(when(col("rn") === rk(10), col("quality_score"))).as("p10"),
-        max(when(col("rn") === rk(50), col("quality_score"))).as("p50"),
-        max(when(col("rn") === rk(90), col("quality_score"))).as("p90"))
+      .agg(max(when(col("rn") === nearestRank(10), col("quality_score"))).as("p10"),
+        max(when(col("rn") === nearestRank(50), col("quality_score"))).as("p50"),
+        max(when(col("rn") === nearestRank(90), col("quality_score"))).as("p90"))
       .orderBy(col("lang").asc)
   }
 
@@ -660,11 +660,11 @@ object Pipeline {
        |  FROM q JOIN documents d ON q.doc_id = d.doc_id
        |)
        |SELECT lang, n AS n_docs,
-       |  MAX(CASE WHEN rn = (n * 10 + 99) // 100 THEN quality_score END)
+       |  MAX(CASE WHEN rn = ${nearestRankSql(10)} THEN quality_score END)
        |    AS p10,
-       |  MAX(CASE WHEN rn = (n * 50 + 99) // 100 THEN quality_score END)
+       |  MAX(CASE WHEN rn = ${nearestRankSql(50)} THEN quality_score END)
        |    AS p50,
-       |  MAX(CASE WHEN rn = (n * 90 + 99) // 100 THEN quality_score END)
+       |  MAX(CASE WHEN rn = ${nearestRankSql(90)} THEN quality_score END)
        |    AS p90
        |FROM ranked GROUP BY lang, n
        |ORDER BY lang ASC""".stripMargin

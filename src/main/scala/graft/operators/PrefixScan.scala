@@ -120,4 +120,12 @@ object PrefixScan {
     out3.drop("__ps_shard", "__ps_run", "__ps_rcnt",
       "__ps_roff", "__ps_coff", "__ps_n", "__ps_rcnt0", "__ps_run0")
   }
+
+  /** The nearest-rank rule over a [[scanState]] frame ranked as `rn` with
+    * group total `n`: the p-th percentile is the row with rn = ⌈n·p/100⌉.
+    */
+  def nearestRank(p: Int): Column = expr(s"(n * $p + 99) DIV 100")
+
+  /** SQL twin of [[nearestRank]] (columns rn and n). */
+  def nearestRankSql(p: Int): String = s"(n * $p + 99) // 100"
 }

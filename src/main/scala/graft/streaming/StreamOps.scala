@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.operators.EventOps
+import graft.operators.EventOps.{AttributionLookbackUs, SessionGapUs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -42,7 +44,7 @@ object StreamOps {
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"))
+        EventOps.sumValue(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
@@ -57,7 +59,7 @@ object StreamOps {
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"))
+        EventOps.sumValue(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
@@ -375,8 +377,6 @@ object StreamOps {
   case class SessionOut(user_id: Long, session_seq: Long, n_events: Long,
     session_start: Timestamp, session_end: Timestamp, sum_value: Double)
 
-  private val GapMicros = 1800L * 1000000L
-
   private def emit(user: Long, st: SessionState): SessionOut =
     SessionOut(user, st.sessionSeq, st.n,
       new Timestamp(st.start / 1000L), new Timestamp(st.lastTs / 1000L),
@@ -415,7 +415,7 @@ object StreamOps {
               val cents = math.round(e.value * 100)
               if (st == null) {
                 st = SessionState(1L, tsMicros, tsMicros, 1L, cents)
-              } else if (tsMicros - st.lastTs > GapMicros) {
+              } else if (tsMicros - st.lastTs > SessionGapUs) {
                 out += emit(user, st)
                 st = SessionState(st.sessionSeq + 1, tsMicros, tsMicros, 1L, cents)
               } else {
@@ -426,7 +426,7 @@ object StreamOps {
             if (st != null) {
               state.update(st)
               // Flush when the watermark passes last event + gap.
-              state.setTimeoutTimestamp(st.lastTs / 1000L + GapMicros / 1000L)
+              state.setTimeoutTimestamp(st.lastTs / 1000L + SessionGapUs / 1000L)
             }
             out.iterator
           }
@@ -516,7 +516,6 @@ object StreamOps {
   case class AttrOut(event_id: Long, user_id: Long, source: String,
     cents: Long)
 
-  private val AttrLookbackUs = 24L * 3600L * 1000000L
 
   /** Exact µs of a Timestamp (getTime alone floors to ms — the 24 h
     * lookback boundary and the (ts, event_id) ordering must see the same
@@ -563,7 +562,7 @@ object StreamOps {
                   touch = TouchState(m, e.event_type)
                 case "purchase" =>
                   val source =
-                    if (touch == null || m - touch.touchMicros > AttrLookbackUs)
+                    if (touch == null || m - touch.touchMicros > AttributionLookbackUs)
                       "direct"
                     else touch.touchType
                   out += AttrOut(e.event_id, user, source,
@@ -573,7 +572,7 @@ object StreamOps {
             }
             if (touch != null) {
               val deadlineMs =
-                touch.touchMicros / 1000L + AttrLookbackUs / 1000L + 1000L
+                touch.touchMicros / 1000L + AttributionLookbackUs / 1000L + 1000L
               if (deadlineMs > state.getCurrentWatermarkMs()) {
                 state.update(touch)
                 state.setTimeoutTimestamp(deadlineMs)
@@ -683,7 +682,7 @@ object StreamOps {
           val tsMicros = e.ts.getTime * 1000L
           val cents = math.round(e.value * 100)
           if (st == null) st = SessionState(1L, tsMicros, tsMicros, 1L, cents)
-          else if (tsMicros - st.lastTs > GapMicros) {
+          else if (tsMicros - st.lastTs > SessionGapUs) {
             out += emit(user, st)
             st = SessionState(st.sessionSeq + 1, tsMicros, tsMicros, 1L, cents)
           } else st = st.copy(lastTs = tsMicros, n = st.n + 1,

@@ -12,7 +12,6 @@ class ContainersSpec extends SparkSpec {
     * pin the formulas' values; this one pins where they are written.
     */
   test("only ObjectStoreView spells the namespace and placement binding") {
-    val lines = SparkSpec.mainSourceLines
     val owner = "src/main/scala/graft/ObjectStoreView.scala"
     val decisions = Seq(
       "replica node" -> """\* 17\) % 20""",
@@ -23,15 +22,10 @@ class ContainersSpec extends SparkSpec {
         ("""explode\(sequence\(lit\(1\), col\("replicas"\)\)\)|""" +
           """UNNEST\(range\(1, \w*\.?replicas \+ 1\)\)"""))
     decisions.foreach { case (name, re) =>
-      val hits = lines.filter { case (_, l) => re.r.findFirstIn(l).isDefined }
-      val elsewhere = hits.map(_._1).filter(_ != owner).distinct
-      assert(elsewhere.isEmpty, s"$name spelled outside $owner: $elsewhere")
-      assert(hits.size == 2, s"$name spelled on ${hits.size} lines, not 2")
+      SparkSpec.assertSpelled(name, owner, re, 2)
     }
-    val keySize = """(?i)decimal\(12,2\)"?\) \* 100""".r
-    val sizeHits = lines.count { case (f, l) =>
-      f == owner && keySize.findFirstIn(l).isDefined }
-    assert(sizeHits == 2, s"key size spelled on $sizeHits lines, not 2")
+    SparkSpec.assertSpelled("key size", owner,
+      """(?i)decimal\(12,2\)"?\) \* 100""", 2, elsewhereToo = true)
   }
 
   test("safemode status reports the four SCM exit rules with verdicts") {

@@ -36,14 +36,9 @@ class NearNeighbourSpec extends AnyFunSuite {
         """list_intersect\(sa\.sg, sb\.sg\)"""),
       ("rounded Jaccard", dedup,
         """round\(col\("n_inter"\)""", """round\(CAST\((n_inter|len\(list_intersect)"""))
-    val lines = SparkSpec.mainSourceLines
     decisions.foreach { case (name, owner, spark, sql) =>
-      Seq("Spark" -> spark, "SQL" -> sql).foreach { case (engine, re) =>
-        val hits = lines.filter { case (_, l) => re.r.findFirstIn(l).isDefined }
-        val elsewhere = hits.map(_._1).filter(_ != owner).distinct
-        assert(elsewhere.isEmpty, s"$name ($engine) spelled outside $owner: $elsewhere")
-        assert(hits.size == 1, s"$name ($engine) spelled on ${hits.size} lines, not 1")
-      }
+      SparkSpec.assertSpelled(s"$name (Spark)", owner, spark, 1)
+      SparkSpec.assertSpelled(s"$name (SQL)", owner, sql, 1)
     }
   }
 }

@@ -46,4 +46,21 @@ object SparkSpec {
       try src.getLines().toList.map(path -> _) finally src.close()
     }
   }
+
+  /** Pins where a decision is written: `re` matches exactly `count` lines
+    * of `owner`, and (unless `elsewhereToo`) no line of any other file
+    * under src/main. `what` names the decision in failure messages.
+    */
+  def assertSpelled(what: String, owner: String, re: String, count: Int,
+      elsewhereToo: Boolean = false): Unit = {
+    import org.scalatest.Assertions.assert
+    val r = re.r
+    val (mine, elsewhere) = mainSourceLines
+      .filter { case (_, l) => r.findFirstIn(l).isDefined }
+      .partition(_._1 == owner)
+    if (!elsewhereToo)
+      assert(elsewhere.isEmpty,
+        s"$what spelled outside $owner: ${elsewhere.map(_._1).distinct}")
+    assert(mine.size == count, s"$what spelled on ${mine.size} lines, not $count")
+  }
 }
