@@ -212,6 +212,11 @@ object Codes {
   def tokensSql(e: String): String =
     s"list_filter(string_split_regex(trim(lower($e)), ' +'), t -> length(t) > 0)"
 
+  /** A document's token count, BIGINT. */
+  def tokenCount(text: Column): Column = size(tokens(text)).cast("bigint")
+
+  def tokenCountSql(e: String): String = s"CAST(len(${tokensSql(e)}) AS BIGINT)"
+
   /** Distinct word 3-gram shingles (empty array if < 3 tokens; the guard
     * matters because Spark's sequence(1, n) runs DESCENDING when n < 1).
     */

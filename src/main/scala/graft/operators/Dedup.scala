@@ -39,23 +39,48 @@ object Dedup {
     * document body (VERDICT r2 #2); the hash pair makes a false merge a
     * ~2^-62 event.
     */
-  /** Per-doc dual fold-hash fingerprints of the normalized text. */
-  private[graft] def fingerprints(docs: DataFrame): DataFrame =
+  /** Per-doc dual fold-hash fingerprints of the normalized (trimmed,
+    * lower-cased) text: h1 folds by 31 mod P, h2 by 131 mod P2. `carry`
+    * names input columns passed through beside `doc_id`.
+    */
+  private[graft] def fingerprints(docs: DataFrame, carry: String*): DataFrame = {
+    val keys = col("doc_id") +: carry.map(col)
     docs
-      .select(col("doc_id"), lower(trim(col("text"))).as("norm"))
-      .select(col("doc_id"),
+      .select(keys :+ lower(trim(col("text"))).as("norm"): _*)
+      .select(keys ++ Seq(
         Codes.foldCode(col("norm"), 31L, P).as("h1"),
-        Codes.foldCode(col("norm"), 131L, P2).as("h2"))
+        Codes.foldCode(col("norm"), 131L, P2).as("h2")): _*)
+  }
 
-  private[graft] val fingerprintsSql: String = {
+  /** The CTE fp(doc_id, carry..., h1, h2): SQL twin of [[fingerprints]]. */
+  private[graft] def fingerprintsOf(carry: String*): String = {
     val norm = "lower(trim(text))"
     s"""fp AS (
-       |  SELECT doc_id,
+       |  SELECT ${("doc_id" +: carry).mkString(", ")},
        |    ${foldCodeSql(norm, 31L, P)} AS h1,
        |    ${foldCodeSql(norm, 131L, P2)} AS h2
        |  FROM documents
        |)""".stripMargin
   }
+
+  private[graft] val fingerprintsSql: String = fingerprintsOf()
+
+  /** Exact duplicates over a [[fingerprints]] frame: is_exact_dup marks
+    * every fingerprint-group member but the canonical, the group's minimum
+    * doc_id (grp_min).
+    */
+  private[graft] def exactDups(fp: DataFrame): DataFrame =
+    fp.withColumn("grp_min",
+        min(col("doc_id")).over(Window.partitionBy(col("h1"), col("h2"))))
+      .withColumn("is_exact_dup", col("doc_id") =!= col("grp_min"))
+
+  /** The CTE exact(doc_id, is_exact_dup) over fp: SQL twin of [[exactDups]]. */
+  private[graft] val exactDupsSql: String =
+    """exact AS (
+      |  SELECT doc_id,
+      |    doc_id <> MIN(doc_id) OVER (PARTITION BY h1, h2) AS is_exact_dup
+      |  FROM fp
+      |)""".stripMargin
 
   def ddExact(spark: SparkSession, dir: String): DataFrame = {
     fingerprints(Tables.documents(spark, dir))
@@ -358,8 +383,7 @@ object Dedup {
     */
   private[graft] def repSelection(docs: DataFrame): DataFrame = {
     val lab = canonicalLabels(docs)
-    val meta = docs.select(col("doc_id"),
-      size(tokens(col("text"))).cast("long").as("nt"))
+    val meta = docs.select(col("doc_id"), tokenCount(col("text")).as("nt"))
     lab.join(meta, Seq("doc_id"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_docs"),
@@ -379,8 +403,7 @@ object Dedup {
   // last val) forces it after every CTE builder exists.
   lazy val ddRepSelectionSql: String =
     s"""WITH $canonicalCtes, meta AS (
-       |  SELECT doc_id, CAST(len(${Codes.tokensSql("text")}) AS BIGINT) AS nt
-       |  FROM documents
+       |  SELECT doc_id, ${tokenCountSql("text")} AS nt FROM documents
        |), j AS (
        |  SELECT l.doc_id, l.label, m.nt FROM lab3 l
        |  JOIN meta m ON l.doc_id = m.doc_id
@@ -1195,12 +1218,10 @@ object Dedup {
     */
   def ddDupBytes(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    fingerprints(docs)
+    exactDups(fingerprints(docs)
       .join(docs.select(col("doc_id"), col("source"), col("n_chars")),
-        "doc_id")
-      .withColumn("grp_min",
-        min(col("doc_id")).over(Window.partitionBy(col("h1"), col("h2"))))
-      .withColumn("is_dup", col("doc_id") =!= col("grp_min"))
+        "doc_id"))
+      .withColumnRenamed("is_exact_dup", "is_dup")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_bytes"),
@@ -1213,11 +1234,9 @@ object Dedup {
   }
 
   val ddDupBytesSql: String =
-    s"""WITH $fingerprintsSql, marked AS (
-       |  SELECT d.source, d.n_chars,
-       |    f.doc_id <> MIN(f.doc_id) OVER (PARTITION BY f.h1, f.h2)
-       |      AS is_dup
-       |  FROM fp f JOIN documents d ON f.doc_id = d.doc_id
+    s"""WITH $fingerprintsSql, $exactDupsSql, marked AS (
+       |  SELECT d.source, d.n_chars, e.is_exact_dup AS is_dup
+       |  FROM exact e JOIN documents d ON e.doc_id = d.doc_id
        |)
        |SELECT source, COUNT(*) AS n_docs,
        |  CAST(SUM(n_chars) AS BIGINT) AS total_bytes,

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.Codes
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import PrefixScan.{nearestRank, nearestRankSql}
@@ -22,13 +23,12 @@ object Pipeline {
 
   def pipeCurate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val exact = Dedup.fingerprints(docs)
-      .withColumn("grp_min",
-        min(col("doc_id")).over(Window.partitionBy(col("h1"), col("h2"))))
-      .select(col("doc_id"), (col("doc_id") =!= col("grp_min")).as("is_exact_dup"))
+    val exact = Dedup.exactDups(Dedup.fingerprints(docs))
+      .select("doc_id", "is_exact_dup")
     val near = Dedup.canonicalLabels(docs)
       .select(col("doc_id"), (col("doc_id") =!= col("label")).as("is_near_dup"))
-    val quality = TextOps.txQuality(spark, dir).select("doc_id", "quality_score")
+    val quality = TextOps.qualityScores(Tables.documents(spark, dir))
+      .select("doc_id", "quality_score")
     exact.join(near, "doc_id").join(quality, "doc_id")
       .withColumn("kept",
         !col("is_exact_dup") && !col("is_near_dup") &&
@@ -38,15 +38,10 @@ object Pipeline {
   }
 
   val pipeCurateSql: String =
-    s"""WITH ${Dedup.canonicalCtes}, ${Dedup.fingerprintsSql}, exact AS (
-       |  SELECT doc_id,
-       |    doc_id <> MIN(doc_id) OVER (PARTITION BY h1, h2) AS is_exact_dup
-       |  FROM fp
-       |), near AS (
+    s"""WITH ${Dedup.canonicalCtes}, ${Dedup.fingerprintsSql},
+       |${Dedup.exactDupsSql}, near AS (
        |  SELECT doc_id, doc_id <> label AS is_near_dup FROM lab3
-       |), quality AS (
-       |  SELECT doc_id, quality_score FROM (${TextOps.txQualitySql}) q
-       |)
+       |), quality AS (${TextOps.qualityScoresSql})
        |SELECT e.doc_id, e.is_exact_dup, n.is_near_dup, q.quality_score,
        |  (NOT e.is_exact_dup) AND (NOT n.is_near_dup)
        |    AND q.quality_score >= $QualityMin AS kept
@@ -56,6 +51,18 @@ object Pipeline {
        |ORDER BY e.doc_id ASC""".stripMargin
 
   // --- pipe_split: deterministic hash-based train/val/test split ----------
+  /** A document's split bucket (h1 mod 1000) and split: train below 900,
+    * val below 950, else test.
+    */
+  private val SplitBucket: Column = col("h1") % 1000
+  private val SplitBucketSql = "h1 % 1000"
+
+  private def splitOf(bucket: Column): Column =
+    when(bucket < 900, "train").when(bucket < 950, "val").otherwise("test")
+
+  private def splitOfSql(bucket: String): String =
+    s"CASE WHEN $bucket < 900 THEN 'train' WHEN $bucket < 950 THEN 'val' ELSE 'test' END"
+
   /** Content-hash dataset split — assignment depends only on the document
     * text (stable across reshuffles, re-ingests and cluster sizes, unlike
     * random splits), using the same dual fold-hash fingerprint as exact
@@ -64,20 +71,15 @@ object Pipeline {
     */
   def pipeSplit(spark: SparkSession, dir: String): DataFrame =
     Dedup.fingerprints(Tables.documents(spark, dir))
-      .withColumn("split_bucket", col("h1") % 1000)
-      .withColumn("split",
-        when(col("split_bucket") < 900, "train")
-          .when(col("split_bucket") < 950, "val")
-          .otherwise("test"))
+      .withColumn("split_bucket", SplitBucket)
+      .withColumn("split", splitOf(col("split_bucket")))
       .select("doc_id", "split_bucket", "split")
       .orderBy(col("doc_id").asc)
 
   val pipeSplitSql: String =
     s"""WITH ${Dedup.fingerprintsSql}
-       |SELECT doc_id, h1 % 1000 AS split_bucket,
-       |  CASE WHEN h1 % 1000 < 900 THEN 'train'
-       |    WHEN h1 % 1000 < 950 THEN 'val'
-       |    ELSE 'test' END AS split
+       |SELECT doc_id, $SplitBucketSql AS split_bucket,
+       |  ${splitOfSql(SplitBucketSql)} AS split
        |FROM fp ORDER BY doc_id ASC""".stripMargin
 
   // --- pipe_split_drift: split-balance audit ------------------------------
@@ -93,10 +95,7 @@ object Pipeline {
   def pipeSplitDrift(spark: SparkSession, dir: String): DataFrame = {
     val langs = Tables.documents(spark, dir).select("doc_id", "lang")
     val sp = Dedup.fingerprints(Tables.documents(spark, dir))
-      .withColumn("split",
-        when(col("h1") % 1000 < 900, "train")
-          .when(col("h1") % 1000 < 950, "val")
-          .otherwise("test"))
+      .withColumn("split", splitOf(SplitBucket))
       .select("doc_id", "split")
     val cell = sp.join(langs, "doc_id")
       .groupBy(col("split"), col("lang"))
@@ -118,10 +117,7 @@ object Pipeline {
 
   val pipeSplitDriftSql: String =
     s"""WITH ${Dedup.fingerprintsSql}, sp AS (
-       |  SELECT doc_id,
-       |    CASE WHEN h1 % 1000 < 900 THEN 'train'
-       |      WHEN h1 % 1000 < 950 THEN 'val' ELSE 'test' END AS split
-       |  FROM fp
+       |  SELECT doc_id, ${splitOfSql(SplitBucketSql)} AS split FROM fp
        |), cell AS (
        |  SELECT s.split, d.lang, COUNT(*) AS n_docs
        |  FROM sp s JOIN documents d ON s.doc_id = d.doc_id
@@ -143,6 +139,13 @@ object Pipeline {
   // --- pipe_pack_plan: token-stream packing layout per shard --------------
   private val ChunkTokens = 512
 
+  /** The context chunk holding token offset `x` of a shard's stream. */
+  private def chunkOf(x: Column): Column =
+    floor(x / ChunkTokens.toDouble).cast("bigint")
+
+  private def chunkOfSql(x: String): String =
+    s"CAST(floor(($x) / ${ChunkTokens.toDouble}) AS BIGINT)"
+
   /** Sequence-packing plan: documents are concatenated per shard (source)
     * in doc_id order into a token stream cut into [[ChunkTokens]]-token
     * context chunks — each doc's stream offset and starting chunk. The
@@ -156,20 +159,17 @@ object Pipeline {
   def pipePackPlan(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
-        size(graft.functions.Codes.tokens(col("text"))).cast("bigint")
-          .as("n_tokens"))
+        Codes.tokenCount(col("text")).as("n_tokens"))
     PrefixScan.scanState(d, Seq("source"), Seq(col("doc_id")),
         col("n_tokens"), cumOut = Some("offset_in_shard"))
-      .withColumn("chunk_id",
-        floor(col("offset_in_shard") / ChunkTokens.toDouble).cast("bigint"))
+      .withColumn("chunk_id", chunkOf(col("offset_in_shard")))
       .select("doc_id", "source", "n_tokens", "offset_in_shard", "chunk_id")
       .orderBy(col("doc_id").asc)
   }
 
   val pipePackPlanSql: String =
     s"""WITH d AS (
-       |  SELECT doc_id, source,
-       |    CAST(len(${graft.functions.Codes.tokensSql("text")}) AS BIGINT) AS n_tokens
+       |  SELECT doc_id, source, ${Codes.tokenCountSql("text")} AS n_tokens
        |  FROM documents
        |), off AS (
        |  SELECT doc_id, source, n_tokens,
@@ -180,7 +180,7 @@ object Pipeline {
        |  FROM d
        |)
        |SELECT doc_id, source, n_tokens, offset_in_shard,
-       |  CAST(floor(offset_in_shard / ${ChunkTokens.toDouble}) AS BIGINT) AS chunk_id
+       |  ${chunkOfSql("offset_in_shard")} AS chunk_id
        |FROM off ORDER BY doc_id ASC""".stripMargin
 
   // --- pipe_pack_efficiency: packing-quality audit per shard --------------
@@ -197,9 +197,8 @@ object Pipeline {
   def pipePackEfficiency(spark: SparkSession, dir: String): DataFrame = {
     val plan = pipePackPlan(spark, dir)
     plan
-      .withColumn("end_chunk",
-        floor((col("offset_in_shard") + greatest(col("n_tokens"), lit(1L))
-          - 1L) / ChunkTokens.toDouble).cast("bigint"))
+      .withColumn("end_chunk", chunkOf(
+        col("offset_in_shard") + greatest(col("n_tokens"), lit(1L)) - 1L))
       .withColumn("straddles",
         (col("n_tokens") > 0L && col("end_chunk") > col("chunk_id"))
           .cast("bigint"))
@@ -221,8 +220,7 @@ object Pipeline {
   val pipePackEfficiencySql: String =
     s"""WITH plan AS ($pipePackPlanSql), e AS (
        |  SELECT source, n_tokens, chunk_id,
-       |    CAST(floor((offset_in_shard + greatest(n_tokens, 1) - 1)
-       |      / ${ChunkTokens.toDouble}) AS BIGINT) AS end_chunk
+       |    ${chunkOfSql("offset_in_shard + greatest(n_tokens, 1) - 1")} AS end_chunk
        |  FROM plan
        |), agg AS (
        |  SELECT source, COUNT(*) AS n_docs,
@@ -250,24 +248,19 @@ object Pipeline {
     * pushed over the corpus scan.
     */
   def pipeSample(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), lower(trim(col("text"))).as("norm"))
-      .select(col("doc_id"), col("lang"),
-        (graft.functions.Codes.foldCode(col("norm"), 31L,
-          graft.functions.Codes.P) % 100).as("sample_bucket"))
+    Dedup.fingerprints(Tables.documents(spark, dir), "lang")
+      .select(col("doc_id"), col("lang"), (col("h1") % 100).as("sample_bucket"))
       .withColumn("keep_rate", when(col("lang") === "en", 10L).otherwise(50L))
       .withColumn("sampled", col("sample_bucket") < col("keep_rate"))
       .select("doc_id", "lang", "sample_bucket", "keep_rate", "sampled")
       .orderBy(col("doc_id").asc)
 
-  val pipeSampleSql: String = {
-    val h1 = graft.functions.Codes.foldCodeSql("lower(trim(text))", 31L,
-      graft.functions.Codes.P)
-    s"""SELECT doc_id, lang, $h1 % 100 AS sample_bucket,
+  val pipeSampleSql: String =
+    s"""WITH ${Dedup.fingerprintsOf("lang")}
+       |SELECT doc_id, lang, h1 % 100 AS sample_bucket,
        |  CAST(CASE WHEN lang = 'en' THEN 10 ELSE 50 END AS BIGINT) AS keep_rate,
-       |  ($h1 % 100) < (CASE WHEN lang = 'en' THEN 10 ELSE 50 END) AS sampled
-       |FROM documents ORDER BY doc_id ASC""".stripMargin
-  }
+       |  (h1 % 100) < (CASE WHEN lang = 'en' THEN 10 ELSE 50 END) AS sampled
+       |FROM fp ORDER BY doc_id ASC""".stripMargin
 
   // --- pipe_mixture_weights: training-mix composition table ---------------
   /** The dataset-mixture table a training run samples from: per
@@ -283,8 +276,7 @@ object Pipeline {
         when(col("n_chars") < 200, "short")
           .when(col("n_chars") < 400, "medium")
           .otherwise("long").as("len_class"),
-        size(graft.functions.Codes.tokens(col("text"))).cast("bigint")
-          .as("n_tokens"))
+        Codes.tokenCount(col("text")).as("n_tokens"))
     val grp = d.groupBy(col("lang"), col("len_class"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
     val tot = grp.agg(sum(col("n_docs")).as("total_docs"))
@@ -300,8 +292,7 @@ object Pipeline {
        |    CASE WHEN n_chars < 200 THEN 'short'
        |      WHEN n_chars < 400 THEN 'medium'
        |      ELSE 'long' END AS len_class,
-       |    CAST(len(${graft.functions.Codes.tokensSql("text")}) AS BIGINT)
-       |      AS n_tokens
+       |    ${Codes.tokenCountSql("text")} AS n_tokens
        |  FROM documents
        |), grp AS (
        |  SELECT lang, len_class, COUNT(*) AS n_docs,
@@ -329,10 +320,9 @@ object Pipeline {
     * shard at 100 TB.
     */
   def pipeDatasetStats(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
-        size(Codes.tokens(col("text"))).cast("bigint").as("tc"))
+        Codes.tokenCount(col("text")).as("tc"))
     val agg = d.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
@@ -359,10 +349,9 @@ object Pipeline {
   }
 
   val pipeDatasetStatsSql: String = {
-    import graft.functions.Codes
     s"""WITH d AS (
        |  SELECT doc_id, source, lang, n_chars,
-       |    CAST(len(${Codes.tokensSql("text")}) AS BIGINT) AS tc
+       |    ${Codes.tokenCountSql("text")} AS tc
        |  FROM documents
        |), agg AS (
        |  SELECT source, lang, COUNT(*) AS n_docs,
@@ -413,7 +402,8 @@ object Pipeline {
     * #shards-row offsets frame (bounded by cluster partitions, not data).
     */
   def pipeCurriculum(spark: SparkSession, dir: String): DataFrame = {
-    val q = TextOps.txQuality(spark, dir).select("doc_id", "quality_score")
+    val q = TextOps.qualityScores(Tables.documents(spark, dir))
+      .select("doc_id", "quality_score")
     val sharded = q
       .repartitionByRange(col("quality_score").asc, col("doc_id").asc)
       .withColumn("shard", spark_partition_id())
@@ -451,10 +441,8 @@ object Pipeline {
       .orderBy(col("doc_id").asc)
   }
 
-  val pipeCurriculumSql: String = {
-    val qualityCte = TextOps.txQualitySql
-      .replace("ORDER BY doc_id ASC", "")
-    s"""WITH q AS ($qualityCte), p AS (
+  val pipeCurriculumSql: String =
+    s"""WITH q AS (${TextOps.qualityScoresSql}), p AS (
        |  SELECT doc_id, quality_score,
        |    CAST(NTILE(4) OVER (ORDER BY quality_score ASC, doc_id ASC)
        |      AS BIGINT) AS phase
@@ -464,7 +452,6 @@ object Pipeline {
        |  MIN(quality_score) OVER (PARTITION BY phase) AS phase_min,
        |  MAX(quality_score) OVER (PARTITION BY phase) AS phase_max
        |FROM p ORDER BY doc_id ASC""".stripMargin
-  }
 
   // --- pipe_token_budget: quality-greedy selection to a token budget ------
   private val BudgetPct = 60L
@@ -481,13 +468,10 @@ object Pipeline {
     * The naive total-order window is kept as the oracle.
     */
   def pipeTokenBudget(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     val d = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        size(Codes.tokens(col("text"))).cast("bigint").as("n_tokens"))
-    val scored = d.join(
-      TextOps.txQuality(spark, dir).select("doc_id", "quality_score"),
-      "doc_id")
+      .select(col("doc_id"), Codes.tokenCount(col("text")).as("n_tokens"))
+    val scored = d.join(TextOps.qualityScores(Tables.documents(spark, dir))
+      .select("doc_id", "quality_score"), "doc_id")
     val tot = scored.agg(sum(col("n_tokens")).as("total_tokens"))
     PrefixScan.scanState(scored, Seq.empty,
         Seq(negate(col("quality_score")), col("doc_id")), col("n_tokens"),
@@ -500,12 +484,9 @@ object Pipeline {
       .orderBy(col("doc_id").asc)
   }
 
-  val pipeTokenBudgetSql: String = {
-    import graft.functions.Codes
-    val qualityCte = TextOps.txQualitySql.replace("ORDER BY doc_id ASC", "")
-    s"""WITH q AS ($qualityCte), d AS (
-       |  SELECT doc_id,
-       |    CAST(len(${Codes.tokensSql("text")}) AS BIGINT) AS n_tokens
+  val pipeTokenBudgetSql: String =
+    s"""WITH q AS (${TextOps.qualityScoresSql}), d AS (
+       |  SELECT doc_id, ${Codes.tokenCountSql("text")} AS n_tokens
        |  FROM documents
        |), scored AS (
        |  SELECT d.doc_id, q.quality_score, d.n_tokens
@@ -522,7 +503,6 @@ object Pipeline {
        |SELECT doc_id, quality_score, n_tokens, cum_before,
        |  cum_before + n_tokens <= total_tokens * $BudgetPct // 100 AS selected
        |FROM cum ORDER BY doc_id ASC""".stripMargin
-  }
 
   // --- pipe_token_yield: curation cost in tokens ----------------------------
   /** What curation costs in TOKENS rather than documents (the number that
@@ -534,10 +514,8 @@ object Pipeline {
     * joined with per-doc token counts.
     */
   def pipeTokenYield(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        size(Codes.tokens(col("text"))).cast("bigint").as("nt"))
+      .select(col("doc_id"), Codes.tokenCount(col("text")).as("nt"))
     pipeCurate(spark, dir).join(toks, "doc_id")
       .agg(sum(col("nt")).as("total_tokens"),
         sum(when(col("kept"), col("nt")).otherwise(0L)).as("kept_tokens"),
@@ -547,21 +525,18 @@ object Pipeline {
           .otherwise(0L)).as("near_dup_tokens"),
         sum(when(!col("is_exact_dup") && !col("is_near_dup") && !col("kept"),
           col("nt")).otherwise(0L)).as("quality_tokens"))
-      .withColumn("kept_ppm", expr(graft.functions.Codes
-        .sharePpmExpr("kept_tokens", "total_tokens")))
+      .withColumn("kept_ppm",
+        expr(Codes.sharePpmExpr("kept_tokens", "total_tokens")))
       .select("total_tokens", "kept_tokens", "exact_dup_tokens",
         "near_dup_tokens", "quality_tokens", "kept_ppm")
   }
 
   val pipeTokenYieldSql: String = {
-    import graft.functions.Codes
     // ytoks, not toks: the inlined pipeCurateSql subquery carries the
     // canonical chain's own `toks` CTE, and duplicate aliases break once
     // the oracles are CTE-materialized.
     s"""WITH ytoks AS (
-       |  SELECT doc_id,
-       |    CAST(len(${Codes.tokensSql("text")}) AS BIGINT) AS nt
-       |  FROM documents
+       |  SELECT doc_id, ${Codes.tokenCountSql("text")} AS nt FROM documents
        |), agg AS (
        |  SELECT CAST(SUM(nt) AS BIGINT) AS total_tokens,
        |    CAST(SUM(CASE WHEN c.kept THEN nt ELSE 0 END) AS BIGINT)
@@ -595,7 +570,6 @@ object Pipeline {
     * DuckDB oracle replays the identical orders.
     */
   def pipeEpochShuffle(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     val fp = Dedup.fingerprints(Tables.documents(spark, dir))
       .select(col("doc_id"), col("h1"))
     val salted = fp.select(col("doc_id"), explode(array(
@@ -609,7 +583,6 @@ object Pipeline {
   }
 
   val pipeEpochShuffleSql: String = {
-    import graft.functions.Codes
     val arms = (0 until Epochs)
       .map(e => s"SELECT doc_id, $e AS epoch, ${Codes.hashSql(e, "h1")} AS he FROM fp")
       .mkString("\n       |  UNION ALL\n       |  ")
@@ -638,7 +611,8 @@ object Pipeline {
     * the quantiles hash-match.
     */
   def pipeQualityCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val scored = TextOps.txQuality(spark, dir).select("doc_id", "quality_score")
+    val scored = TextOps.qualityScores(Tables.documents(spark, dir))
+      .select("doc_id", "quality_score")
       .join(Tables.documents(spark, dir).select("doc_id", "lang"), "doc_id")
     val ranked = PrefixScan.scanState(scored, Seq("lang"),
       Seq(col("quality_score"), col("doc_id")), lit(1L),
@@ -650,9 +624,8 @@ object Pipeline {
       .orderBy(col("lang").asc)
   }
 
-  val pipeQualityCalibrationSql: String = {
-    val qualityCte = TextOps.txQualitySql.replace("ORDER BY doc_id ASC", "")
-    s"""WITH q AS ($qualityCte), ranked AS (
+  val pipeQualityCalibrationSql: String =
+    s"""WITH q AS (${TextOps.qualityScoresSql}), ranked AS (
        |  SELECT d.lang, q.quality_score,
        |    ROW_NUMBER() OVER (PARTITION BY d.lang
        |      ORDER BY q.quality_score ASC, q.doc_id ASC) AS rn,
@@ -668,7 +641,6 @@ object Pipeline {
        |    AS p90
        |FROM ranked GROUP BY lang, n
        |ORDER BY lang ASC""".stripMargin
-  }
 
   // --- pipe_vocab_coverage: tokenizer-vocabulary OOV report ---------------
 
@@ -683,7 +655,6 @@ object Pipeline {
     * doc_id partitioning. OOV rate emitted as exact integer ppm.
     */
   def pipeVocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(Codes.tokens(col("text"))).as("tok"))
     val vocab = toks.groupBy(col("tok"))
@@ -701,7 +672,6 @@ object Pipeline {
   }
 
   val pipeVocabCoverageSql: String = {
-    import graft.functions.Codes
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(${Codes.tokensSql("text")}) AS tok
        |  FROM documents
@@ -756,29 +726,14 @@ object Pipeline {
   }
 
   val pipeDedupFunnelSql: String =
-    s"""WITH ${Dedup.canonicalCtes}, ${Dedup.fingerprintsSql}, exact AS (
-       |  SELECT doc_id,
-       |    doc_id <> MIN(doc_id) OVER (PARTITION BY h1, h2) AS is_exact_dup
-       |  FROM fp
-       |), near AS (
-       |  SELECT doc_id, doc_id <> label AS is_near_dup FROM lab3
-       |), quality AS (
-       |  SELECT doc_id, quality_score FROM (${TextOps.txQualitySql}) q
-       |), curated AS (
-       |  SELECT e.is_exact_dup, n.is_near_dup,
-       |    (NOT e.is_exact_dup) AND (NOT n.is_near_dup)
-       |      AND q.quality_score >= $QualityMin AS kept
-       |  FROM exact e
-       |  JOIN near n ON e.doc_id = n.doc_id
-       |  JOIN quality q ON e.doc_id = q.doc_id
-       |), agg AS (
+    s"""WITH agg AS (
        |  SELECT COUNT(*) AS n_raw,
        |    CAST(SUM(CASE WHEN NOT is_exact_dup THEN 1 ELSE 0 END) AS BIGINT)
        |      AS n_exact,
        |    CAST(SUM(CASE WHEN NOT is_exact_dup AND NOT is_near_dup
        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_near,
        |    CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_quality
-       |  FROM curated
+       |  FROM ($pipeCurateSql) c
        |), stages AS (
        |  SELECT 1 AS stage_idx, 'raw' AS stage, n_raw AS docs_out FROM agg
        |  UNION ALL
@@ -805,7 +760,6 @@ object Pipeline {
     * downstream dedup ships 8-byte codes, never chunk text.
     */
   private def chunkFrame(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     Tables.documents(spark, dir)
       .select(col("doc_id"), Codes.tokens(col("text")).as("toks"))
       .withColumn("n_tokens", size(col("toks")).cast("bigint"))
@@ -823,7 +777,6 @@ object Pipeline {
   }
 
   private val chunkFrameSql: String = {
-    import graft.functions.Codes
     s"""ctok AS (
        |  SELECT doc_id, ${Codes.tokensSql("text")} AS toks FROM documents
        |), cexp AS (
@@ -921,10 +874,9 @@ object Pipeline {
     * projection over ≤|sources| rows.
     */
   def pipeSourceEpochs(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     val bySource = Tables.documents(spark, dir)
       .select(col("source"),
-        size(Codes.tokens(col("text"))).cast("bigint").as("nt"))
+        Codes.tokenCount(col("text")).as("nt"))
       .groupBy(col("source"))
       .agg(sum(col("nt")).as("avail_tokens"))
     val nSrc = bySource.agg(count(lit(1)).as("n_sources"))
@@ -942,10 +894,9 @@ object Pipeline {
   }
 
   val pipeSourceEpochsSql: String = {
-    import graft.functions.Codes
     s"""WITH bysrc AS (
        |  SELECT source,
-       |    CAST(SUM(CAST(len(${Codes.tokensSql("text")}) AS BIGINT))
+       |    CAST(SUM(${Codes.tokenCountSql("text")})
        |      AS BIGINT) AS avail_tokens
        |  FROM documents GROUP BY source
        |), nsrc AS (
@@ -985,11 +936,10 @@ object Pipeline {
     * rollup after is map-side combinable on shard_id.
     */
   def pipeShardManifest(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Codes
     val docs = Tables.documents(spark, dir)
     val ord = Dedup.fingerprints(docs).select(col("doc_id"), col("h1"))
       .join(docs.select(col("doc_id"),
-        size(Codes.tokens(col("text"))).cast("bigint").as("nt")), "doc_id")
+        Codes.tokenCount(col("text")).as("nt")), "doc_id")
       .withColumn("he", Codes.hash(0, col("h1")))
     PrefixScan.scanState(ord, Seq(), Seq(col("he"), col("doc_id")),
         col("nt"), rankOut = Some("pos"), cumOut = Some("cum"))
@@ -1001,10 +951,9 @@ object Pipeline {
   }
 
   val pipeShardManifestSql: String = {
-    import graft.functions.Codes
     s"""WITH ${Dedup.fingerprintsSql}, ord AS (
        |  SELECT f.doc_id, ${Codes.hashSql(0, "f.h1")} AS he,
-       |    CAST(len(${Codes.tokensSql("d.text")}) AS BIGINT) AS nt
+       |    ${Codes.tokenCountSql("d.text")} AS nt
        |  FROM fp f JOIN documents d ON f.doc_id = d.doc_id
        |), scanned AS (
        |  SELECT doc_id, nt,
@@ -1053,10 +1002,9 @@ object Pipeline {
     * corpus has near-dup pairs but no exact copies.
     */
   private[graft] def dedupWeights(docs: DataFrame): DataFrame = {
-    import graft.functions.Codes
     val lab = Dedup.canonicalLabels(docs)
     val meta = docs.select(col("doc_id"), col("source"),
-      size(Codes.tokens(col("text"))).cast("long").as("nt"))
+      Codes.tokenCount(col("text")).as("nt"))
     val sizes = lab.groupBy(col("label")).agg(count(lit(1)).as("c"))
     lab.join(sizes, Seq("label"))
       .join(meta, Seq("doc_id"))
@@ -1071,12 +1019,11 @@ object Pipeline {
   }
 
   val pipeDedupWeightsSql: String = {
-    import graft.functions.Codes
     s"""WITH ${Dedup.canonicalCtes}, cs AS (
        |  SELECT label, COUNT(*) AS c FROM lab3 GROUP BY label
        |), d AS (
        |  SELECT l.doc_id, d0.source,
-       |    CAST(len(${Codes.tokensSql("d0.text")}) AS BIGINT) AS nt, cs.c
+       |    ${Codes.tokenCountSql("d0.text")} AS nt, cs.c
        |  FROM lab3 l
        |  JOIN cs ON l.label = cs.label
        |  JOIN documents d0 ON l.doc_id = d0.doc_id
@@ -1111,10 +1058,9 @@ object Pipeline {
   def pipeLengthBuckets(spark: SparkSession, dir: String): DataFrame = {
     val ladder = Seq(8L, 16L, 32L, 64L, 128L, 256L, 512L, 1024L)
     val d = Tables.documents(spark, dir)
-      .withColumn("n_tokens",
-        size(graft.functions.Codes.tokens(col("text"))).cast("bigint"))
+      .withColumn("n_tokens", Codes.tokenCount(col("text")))
       .withColumn("bucket_max",
-        ladder.foldRight(lit(-1L): org.apache.spark.sql.Column) { (b, acc) =>
+        ladder.foldRight(lit(-1L): Column) { (b, acc) =>
           when(col("n_tokens") <= b, b).otherwise(acc)
         })
     d.groupBy(col("bucket_max"))
@@ -1130,7 +1076,7 @@ object Pipeline {
     val ladder = Seq(8, 16, 32, 64, 128, 256, 512, 1024)
     val cases = ladder.map(b => s"WHEN n_tokens <= $b THEN $b").mkString(" ")
     s"""WITH d AS (
-       |  SELECT CAST(len(${graft.functions.Codes.tokensSql("text")}) AS BIGINT) AS n_tokens
+       |  SELECT ${Codes.tokenCountSql("text")} AS n_tokens
        |  FROM documents
        |), bucketed AS (
        |  SELECT CASE $cases ELSE -1 END AS bucket_max, n_tokens FROM d
@@ -1164,10 +1110,8 @@ object Pipeline {
     */
   def pipeFilterAblation(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val canon = Dedup.fingerprints(docs)
-      .withColumn("grp_min",
-        min(col("doc_id")).over(Window.partitionBy(col("h1"), col("h2"))))
-      .select(col("doc_id"), (col("doc_id") === col("grp_min")).as("is_canon"))
+    val canon = Dedup.exactDups(Dedup.fingerprints(docs))
+      .select(col("doc_id"), (!col("is_exact_dup")).as("is_canon"))
     val flags = docs.join(canon, "doc_id").select(
       when(col("lang") === "en", "y").otherwise("n").as("f_en"),
       when(col("n_chars") >= 200, "y").otherwise("n").as("f_long"),
@@ -1184,16 +1128,11 @@ object Pipeline {
   }
 
   val pipeFilterAblationSql: String =
-    s"""WITH ${Dedup.fingerprintsSql}, canon AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id = MIN(doc_id) OVER (PARTITION BY h1, h2)
-       |      THEN 'y' ELSE 'n' END AS f_unique
-       |  FROM fp
-       |), flags AS (
+    s"""WITH ${Dedup.fingerprintsSql}, ${Dedup.exactDupsSql}, flags AS (
        |  SELECT CASE WHEN d.lang = 'en' THEN 'y' ELSE 'n' END AS f_en,
        |    CASE WHEN d.n_chars >= 200 THEN 'y' ELSE 'n' END AS f_long,
-       |    c.f_unique, d.n_chars
-       |  FROM documents d JOIN canon c ON d.doc_id = c.doc_id
+       |    CASE WHEN e.is_exact_dup THEN 'n' ELSE 'y' END AS f_unique, d.n_chars
+       |  FROM documents d JOIN exact e ON d.doc_id = e.doc_id
        |)
        |SELECT coalesce(f_en, 'all') AS f_en, coalesce(f_long, 'all') AS f_long,
        |  coalesce(f_unique, 'all') AS f_unique,
@@ -1217,10 +1156,8 @@ object Pipeline {
     */
   def pipeStratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     val Quota = 20
-    val hashed = Tables.documents(spark, dir).select(
-      col("doc_id"), col("lang"), col("n_chars"),
-      graft.functions.Codes.foldCode(lower(trim(col("text"))), 131L,
-        graft.functions.Codes.P2).as("h"))
+    val hashed = Dedup.fingerprints(Tables.documents(spark, dir), "lang", "n_chars")
+      .select(col("doc_id"), col("lang"), col("n_chars"), col("h2").as("h"))
     val top = GraftTopK.topKPerGroup(hashed, Seq("lang"),
       Seq(("h", false), ("doc_id", false)), Quota)
     val w = Window.partitionBy(col("lang"))
@@ -1230,21 +1167,16 @@ object Pipeline {
       .orderBy(col("lang").asc, col("sample_rank").asc)
   }
 
-  val pipeStratifiedSampleSql: String = {
-    val h = graft.functions.Codes.foldCodeSql("lower(trim(text))", 131L,
-      graft.functions.Codes.P2)
-    s"""WITH hashed AS (
-       |  SELECT doc_id, lang, n_chars, $h AS h FROM documents
-       |), ranked AS (
+  val pipeStratifiedSampleSql: String =
+    s"""WITH ${Dedup.fingerprintsOf("lang", "n_chars")}, ranked AS (
        |  SELECT lang, doc_id, n_chars,
        |    CAST(ROW_NUMBER() OVER (PARTITION BY lang
-       |      ORDER BY h ASC, doc_id ASC) AS BIGINT) AS sample_rank
-       |  FROM hashed
+       |      ORDER BY h2 ASC, doc_id ASC) AS BIGINT) AS sample_rank
+       |  FROM fp
        |)
        |SELECT lang, sample_rank, doc_id, n_chars FROM ranked
        |WHERE sample_rank <= 20
        |ORDER BY lang ASC, sample_rank ASC""".stripMargin
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipe_stratified_sample" -> pipeStratifiedSample,

@@ -20,50 +20,67 @@ object TextOps {
     ws.map(w => s"'$w'").mkString("[", ", ", "]")
 
   // --- tx_langid: stopword-marker heuristic language/domain ID -----------
-  def txLangid(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-      .withColumn("ts", tokens(col("text")))
-    d.withColumn("en_hits",
-        size(array_intersect(array_distinct(col("ts")), arrLit(EnStop))))
-      .withColumn("data_hits",
-        size(array_intersect(array_distinct(col("ts")), arrLit(DataWords))))
+  /** The language-ID rule: en_hits and data_hits count a document's
+    * distinct EnStop and DataWords tokens; pred_lang is en at ≥ 2
+    * stopwords, else data-domain at ≥ 3 data words, else unknown.
+    */
+  private def langId(docs: DataFrame): DataFrame = {
+    def hits(ws: Seq[String]) =
+      size(array_intersect(array_distinct(col("ts")), arrLit(ws)))
+    docs.withColumn("ts", tokens(col("text")))
+      .withColumn("en_hits", hits(EnStop))
+      .withColumn("data_hits", hits(DataWords))
       .withColumn("pred_lang",
         when(col("en_hits") >= 2, "en")
           .when(col("data_hits") >= 3, "data-domain")
           .otherwise("unknown"))
+  }
+
+  /** SQL twin of [[langId]]: (doc_id, lang, en_hits, data_hits, pred_lang). */
+  private val langIdSql: String = {
+    def hits(ws: Seq[String]) =
+      s"len(list_intersect(list_distinct(${tokensSql("text")}), ${listLit(ws)}))"
+    s"""SELECT doc_id, lang, en_hits, data_hits,
+       |  CASE WHEN en_hits >= 2 THEN 'en' WHEN data_hits >= 3 THEN 'data-domain'
+       |    ELSE 'unknown' END AS pred_lang
+       |FROM (SELECT doc_id, lang, ${hits(EnStop)} AS en_hits,
+       |  ${hits(DataWords)} AS data_hits FROM documents) h""".stripMargin
+  }
+
+  def txLangid(spark: SparkSession, dir: String): DataFrame =
+    langId(Tables.documents(spark, dir))
       .withColumn("match_truth",
         when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
       .select("doc_id", "pred_lang", "en_hits", "data_hits", "match_truth")
       .orderBy(col("doc_id").asc)
-  }
 
   val txLangidSql: String =
-    s"""WITH t AS (
-       |  SELECT doc_id, lang,
-       |    len(list_intersect(list_distinct(${tokensSql("text")}), ${listLit(EnStop)})) AS en_hits,
-       |    len(list_intersect(list_distinct(${tokensSql("text")}), ${listLit(DataWords)})) AS data_hits
-       |  FROM documents
-       |)
-       |SELECT doc_id,
-       |  CASE WHEN en_hits >= 2 THEN 'en'
-       |       WHEN data_hits >= 3 THEN 'data-domain'
-       |       ELSE 'unknown' END AS pred_lang,
+    s"""WITH t AS ($langIdSql)
+       |SELECT doc_id, pred_lang,
        |  CAST(en_hits AS INTEGER) AS en_hits,
        |  CAST(data_hits AS INTEGER) AS data_hits,
-       |  CAST(CASE WHEN (CASE WHEN en_hits >= 2 THEN 'en'
-       |       WHEN data_hits >= 3 THEN 'data-domain'
-       |       ELSE 'unknown' END) = lang THEN 1 ELSE 0 END AS BIGINT) AS match_truth
+       |  CAST(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END AS BIGINT) AS match_truth
        |FROM t ORDER BY doc_id ASC""".stripMargin
 
   // --- tx_quality: length/diversity/stopword composite score -------------
-  def txQuality(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
+  /** A document's EnStop token count over its token array, BIGINT. */
+  private def stopHits(ts: Column): Column =
+    size(filter(ts, t => array_contains(arrLit(EnStop), t))).cast("bigint")
+
+  private def stopHitsSql(ts: String): String =
+    s"CAST(len(list_filter($ts, x -> list_contains(${listLit(EnStop)}, x))) AS BIGINT)"
+
+  /** The quality score per document, unordered: (doc_id, n_tokens,
+    * distinct_ratio, stop_ratio, quality_score), the score weighing length
+    * (saturating at 50 tokens), token diversity and a stopword share near
+    * 10%. Curation, curriculum, token budget and calibration rank by it.
+    */
+  private[graft] def qualityScores(docs: DataFrame): DataFrame = {
+    val d = docs
       .withColumn("ts", tokens(col("text")))
       .withColumn("n_tokens", size(col("ts")).cast("bigint"))
       .withColumn("n_distinct", size(array_distinct(col("ts"))).cast("bigint"))
-      .withColumn("stop_hits",
-        size(filter(col("ts"), t => array_contains(arrLit(EnStop), t)))
-          .cast("bigint"))
+      .withColumn("stop_hits", stopHits(col("ts")))
     d.withColumn("distinct_ratio",
         round(col("n_distinct").cast("double") / greatest(col("n_tokens"), lit(1L)), 6))
       .withColumn("stop_ratio",
@@ -74,16 +91,15 @@ object TextOps {
             + col("distinct_ratio") * 0.4
             + (lit(1.0) - abs(col("stop_ratio") - 0.1)) * 0.2, 6))
       .select("doc_id", "n_tokens", "distinct_ratio", "stop_ratio", "quality_score")
-      .orderBy(col("doc_id").asc)
   }
 
-  val txQualitySql: String =
+  /** SQL twin of [[qualityScores]], unordered. */
+  private[graft] val qualityScoresSql: String =
     s"""WITH t AS (
        |  SELECT doc_id,
-       |    CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tokens,
+       |    ${tokenCountSql("text")} AS n_tokens,
        |    CAST(len(list_distinct(${tokensSql("text")})) AS BIGINT) AS n_distinct,
-       |    CAST(len(list_filter(${tokensSql("text")},
-       |      x -> list_contains(${listLit(EnStop)}, x))) AS BIGINT) AS stop_hits
+       |    ${stopHitsSql(tokensSql("text"))} AS stop_hits
        |  FROM documents
        |), r AS (
        |  SELECT doc_id, n_tokens,
@@ -95,14 +111,27 @@ object TextOps {
        |  round(least(CAST(n_tokens AS DOUBLE) / 50, 1.0) * 0.4
        |    + distinct_ratio * 0.4
        |    + (1.0 - abs(stop_ratio - 0.1)) * 0.2, 6) AS quality_score
-       |FROM r ORDER BY doc_id ASC""".stripMargin
+       |FROM r""".stripMargin
+
+  def txQuality(spark: SparkSession, dir: String): DataFrame =
+    qualityScores(Tables.documents(spark, dir)).orderBy(col("doc_id").asc)
+
+  val txQualitySql: String = s"$qualityScoresSql ORDER BY doc_id ASC"
 
   // --- tx_tokens: whitespace + regex token counting -----------------------
+  /** A document's alphabetic-token count ([a-z]+ runs of its lower-cased
+    * text), BIGINT.
+    */
+  private def alphaTokens(text: Column): Column =
+    size(regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))).cast("bigint")
+
+  private def alphaTokensSql(e: String): String =
+    s"CAST(len(regexp_extract_all(lower($e), '[a-z]+')) AS BIGINT)"
+
   def txTokens(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("n_ws_tokens", size(tokens(col("text"))).cast("bigint"))
-      .withColumn("n_alpha_tokens",
-        size(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).cast("bigint"))
+      .withColumn("n_ws_tokens", tokenCount(col("text")))
+      .withColumn("n_alpha_tokens", alphaTokens(col("text")))
       .withColumn("n_num_tokens",
         size(regexp_extract_all(col("text"), lit("[0-9]+"), lit(0))).cast("bigint"))
       .withColumn("n_chars_actual", length(col("text")).cast("bigint"))
@@ -112,8 +141,8 @@ object TextOps {
 
   val txTokensSql: String =
     s"""SELECT doc_id,
-       |  CAST(len(${tokensSql("text")}) AS BIGINT) AS n_ws_tokens,
-       |  CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS n_alpha_tokens,
+       |  ${tokenCountSql("text")} AS n_ws_tokens,
+       |  ${alphaTokensSql("text")} AS n_alpha_tokens,
        |  CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) AS n_num_tokens,
        |  CAST(length(text) AS BIGINT) AS n_chars_actual
        |FROM documents ORDER BY doc_id ASC""".stripMargin
@@ -132,9 +161,8 @@ object TextOps {
     Tables.documents(spark, dir)
       .select(col("lang"),
         length(col("text")).cast("long").as("nc"),
-        size(tokens(col("text"))).cast("long").as("nt"),
-        size(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-          .cast("long").as("na"))
+        tokenCount(col("text")).as("nt"),
+        alphaTokens(col("text")).as("na"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("nc")).as("n_chars"),
@@ -151,9 +179,8 @@ object TextOps {
   val txFertilitySql: String =
     s"""WITH per AS (
        |  SELECT lang, CAST(length(text) AS BIGINT) AS nc,
-       |    CAST(len(${tokensSql("text")}) AS BIGINT) AS nt,
-       |    CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)
-       |      AS na
+       |    ${tokenCountSql("text")} AS nt,
+       |    ${alphaTokensSql("text")} AS na
        |  FROM documents
        |), rolled AS (
        |  SELECT lang, COUNT(*) AS n_docs, CAST(SUM(nc) AS BIGINT) AS n_chars,
@@ -767,36 +794,18 @@ object TextOps {
     * before re-labeling a corpus. One aggregate over the shared prediction
     * projection; the row-share window runs over the ≤|langs|² cell frame.
     */
-  def txLangConfusion(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-      .withColumn("ts", tokens(col("text")))
-      .withColumn("en_hits",
-        size(array_intersect(array_distinct(col("ts")), arrLit(EnStop))))
-      .withColumn("data_hits",
-        size(array_intersect(array_distinct(col("ts")), arrLit(DataWords))))
-      .withColumn("pred_lang",
-        when(col("en_hits") >= 2, "en")
-          .when(col("data_hits") >= 3, "data-domain")
-          .otherwise("unknown"))
-    d.groupBy(col("lang"), col("pred_lang"))
+  def txLangConfusion(spark: SparkSession, dir: String): DataFrame =
+    langId(Tables.documents(spark, dir))
+      .groupBy(col("lang"), col("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
       .withColumn("row_ppm", expr(
         "n_docs * 1000000 DIV sum(n_docs) OVER (PARTITION BY lang)"))
       .withColumn("correct", col("lang") === col("pred_lang"))
       .select("lang", "pred_lang", "n_docs", "row_ppm", "correct")
       .orderBy(col("lang").asc, col("pred_lang").asc)
-  }
 
   val txLangConfusionSql: String =
-    s"""WITH t AS (
-       |  SELECT lang,
-       |    CASE WHEN len(list_intersect(list_distinct(${tokensSql("text")}),
-       |        ${listLit(EnStop)})) >= 2 THEN 'en'
-       |      WHEN len(list_intersect(list_distinct(${tokensSql("text")}),
-       |        ${listLit(DataWords)})) >= 3 THEN 'data-domain'
-       |      ELSE 'unknown' END AS pred_lang
-       |  FROM documents
-       |), cell AS (
+    s"""WITH t AS ($langIdSql), cell AS (
        |  SELECT lang, pred_lang, COUNT(*) AS n_docs FROM t
        |  GROUP BY lang, pred_lang
        |)
@@ -919,8 +928,7 @@ object TextOps {
         lit(0L), (a, v) => a + v).as("word_chars"),
       size(filter(col("ts"), x => x.rlike("^[a-z]+$"))).cast("bigint")
         .as("alpha_words"),
-      size(filter(col("ts"), x => array_contains(arrLit(EnStop), x)))
-        .cast("bigint").as("stop_hits"))
+      stopHits(col("ts")).as("stop_hits"))
     d.withColumn("f_word_count", col("n_words").between(20L, 1000L))
       .withColumn("f_mean_word_len",
         col("word_chars") >= col("n_words") * 3 &&
@@ -946,8 +954,7 @@ object TextOps {
        |      AS BIGINT) AS word_chars,
        |    CAST(len(list_filter(ts, x -> regexp_full_match(x, '[a-z]+')))
        |      AS BIGINT) AS alpha_words,
-       |    CAST(len(list_filter(ts, x -> list_contains(${listLit(EnStop)}, x)))
-       |      AS BIGINT) AS stop_hits
+       |    ${stopHitsSql("ts")} AS stop_hits
        |  FROM t
        |)
        |SELECT doc_id, n_words, word_chars, alpha_words, stop_hits,
@@ -1300,7 +1307,7 @@ object TextOps {
   private[graft] def readabilityOf(docs: DataFrame): DataFrame =
     docs
       .select(col("lang"),
-        size(tokens(col("text"))).cast("long").as("nw"),
+        tokenCount(col("text")).as("nw"),
         (length(regexp_replace(lower(col("text")), "[aeiouy]+", "#")) -
           length(regexp_replace(lower(col("text")), "[aeiouy]+", "")))
           .cast("long").as("sy"))
@@ -1322,7 +1329,7 @@ object TextOps {
   val txReadabilitySql: String =
     s"""WITH d AS (
        |  SELECT lang,
-       |    CAST(len(${tokensSql("text")}) AS BIGINT) AS nw,
+       |    ${tokenCountSql("text")} AS nw,
        |    CAST(length(regexp_replace(lower(text), '[aeiouy]+', '#', 'g'))
        |      - length(regexp_replace(lower(text), '[aeiouy]+', '', 'g'))
        |      AS BIGINT) AS sy

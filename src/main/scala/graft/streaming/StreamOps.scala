@@ -285,12 +285,7 @@ object StreamOps {
     * production).
     */
   def dedupStream(docs: DataFrame): DataFrame = {
-    import graft.functions.Codes
-    docs
-      .select(col("doc_id"), col("ts"), lower(trim(col("text"))).as("norm"))
-      .select(col("doc_id"), col("ts"),
-        Codes.foldCode(col("norm"), 31L, Codes.P).as("h1"),
-        Codes.foldCode(col("norm"), 131L, Codes.P2).as("h2"))
+    graft.operators.Dedup.fingerprints(docs, "ts")
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("h1", "h2")
   }
@@ -382,6 +377,29 @@ object StreamOps {
       new Timestamp(st.start / 1000L), new Timestamp(st.lastTs / 1000L),
       st.sumCents / 100.0)
 
+  /** Advances `user`'s sessions over a slice of events from `open` (null
+    * if none): sorts the slice by time (rows are not ordered within a
+    * micro-batch; the slice is bounded by batch size, not total history),
+    * then each event opens a session, extends it, or, past the gap, closes
+    * it and opens the next. Returns the closed sessions and the open one.
+    */
+  private def advance(user: Long, rows: Iterator[Ev], open: SessionState)
+      : (Seq[SessionOut], SessionState) = {
+    var st = open
+    val closed = scala.collection.mutable.ArrayBuffer[SessionOut]()
+    for (e <- rows.toSeq.sortBy(e => (e.ts.getTime, e.value))) {
+      val tsMicros = e.ts.getTime * 1000L
+      val cents = math.round(e.value * 100)
+      if (st == null) st = SessionState(1L, tsMicros, tsMicros, 1L, cents)
+      else if (tsMicros - st.lastTs > SessionGapUs) {
+        closed += emit(user, st)
+        st = SessionState(st.sessionSeq + 1, tsMicros, tsMicros, 1L, cents)
+      } else st = st.copy(lastTs = tsMicros, n = st.n + 1,
+        sumCents = st.sumCents + cents)
+    }
+    (closed.toSeq, st)
+  }
+
   /** Gap-based sessionization with explicit keyed state — the streaming twin
     * of EventOps.evSessionize. Emits a session when a gap closes it; the
     * open session flushes on EVENT-TIME TIMEOUT once the watermark passes
@@ -405,30 +423,13 @@ object StreamOps {
             state.remove()
             Iterator.single(emit(user, st))
           } else {
-            // Within a micro-batch rows are not ordered; sort this group's
-            // slice (bounded by batch size, not total history).
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.value))
-            var st = state.getOption.orNull
-            val out = scala.collection.mutable.ArrayBuffer[SessionOut]()
-            for (e <- sorted) {
-              val tsMicros = e.ts.getTime * 1000L
-              val cents = math.round(e.value * 100)
-              if (st == null) {
-                st = SessionState(1L, tsMicros, tsMicros, 1L, cents)
-              } else if (tsMicros - st.lastTs > SessionGapUs) {
-                out += emit(user, st)
-                st = SessionState(st.sessionSeq + 1, tsMicros, tsMicros, 1L, cents)
-              } else {
-                st = st.copy(lastTs = tsMicros, n = st.n + 1,
-                  sumCents = st.sumCents + cents)
-              }
-            }
+            val (closed, st) = advance(user, rows, state.getOption.orNull)
             if (st != null) {
               state.update(st)
               // Flush when the watermark passes last event + gap.
               state.setTimeoutTimestamp(st.lastTs / 1000L + SessionGapUs / 1000L)
             }
-            out.iterator
+            closed.iterator
           }
       }.toDF()
   }
@@ -675,21 +676,8 @@ object StreamOps {
     events.select(col("user_id"), col("ts"), col("value")).as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroups { (user: Long, rows: Iterator[Ev]) =>
-        val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.value))
-        val out = scala.collection.mutable.ArrayBuffer[SessionOut]()
-        var st: SessionState = null
-        for (e <- sorted) {
-          val tsMicros = e.ts.getTime * 1000L
-          val cents = math.round(e.value * 100)
-          if (st == null) st = SessionState(1L, tsMicros, tsMicros, 1L, cents)
-          else if (tsMicros - st.lastTs > SessionGapUs) {
-            out += emit(user, st)
-            st = SessionState(st.sessionSeq + 1, tsMicros, tsMicros, 1L, cents)
-          } else st = st.copy(lastTs = tsMicros, n = st.n + 1,
-            sumCents = st.sumCents + cents)
-        }
-        if (st != null) out += emit(user, st)
-        out.iterator
+        val (closed, st) = advance(user, rows, null)
+        (closed ++ Option(st).map(emit(user, _))).iterator
       }.toDF()
   }
 
