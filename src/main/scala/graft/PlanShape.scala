@@ -179,9 +179,9 @@ object PlanProbe {
     * LogicalRDD and the exchange-regression gate cannot see the stages
     * before it). Keys carry a `__pre_ckpt` suffix so they can never
     * collide with registry names (SurveySyncSpec owns that namespace).
-    * Each subtree is built under [[Tables.withQuery]] of its registered
-    * query, so it takes that query's scan fan-out decision and the probe
-    * records the plan the query actually checkpoints.
+    * Each subtree is built under its registered query's scan fan-out
+    * decision (its record's `fanout`), so the probe records the plan the
+    * query actually checkpoints.
     */
   type Plan = (SparkSession, String) => DataFrame
   val extraPlans: Map[String, Plan] = Map[String, Plan](
@@ -206,8 +206,10 @@ object PlanProbe {
     "ns_fso_paths__pre_ckpt" ->
       ((s, dir) => graft.ObjectStoreView.dirTable(s, dir)))
     .map { case (key, fn) =>
+      val floor = SparkEntry.registry
+        .find(_.name == key.stripSuffix("__pre_ckpt")).get.fanout
       key -> ((s: SparkSession, dir: String) =>
-        Tables.withQuery(key.stripSuffix("__pre_ckpt"))(fn(s, dir)))
+        Tables.withFanout(floor)(fn(s, dir)))
     }
   /** `runMain graft.PlanProbe [out.json] [sfDir ...]` — one section per sf
     * directory (default: sf0.001 AND sf0.1, VERDICT r13 #1: static

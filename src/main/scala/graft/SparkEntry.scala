@@ -38,22 +38,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
+  /** Every registered query's record, one operator object after another
+    * (SURVEY.md §2 is the inventory).
+    */
+  private[graft] def registry: Seq[Query] =
+    Relational.registry ++ RelationalExt.registry ++
+      Namespace.registry ++ Containers.registry ++ Fso.registry ++
+      Audit.registry ++ Entities.registry ++ EventOps.registry ++
+      Temporal.registry ++ Dedup.registry ++ Similarity.registry ++
+      TextOps.registry ++ Multimodal.registry ++ ImageCodec.registry ++
+      AudioCodec.registry ++ Pipeline.registry
+
   /** One entry per implemented operator from SURVEY.md §2. Each query is
-    * wrapped in [[Tables.withQuery]] so construction-time plan choices
-    * with measured per-operator outcomes (the scan fan-out allowlist,
-    * Tables.fanoutQueries) know which registry query they serve.
+    * built under its record's scan fan-out decision
+    * ([[Tables.withFanout]]), a construction-time plan choice with a
+    * measured per-operator outcome.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (Relational.queries ++ RelationalExt.queries ++
-      Namespace.queries ++ Containers.queries ++ Fso.queries ++ Audit.queries ++
-      Entities.queries ++ EventOps.queries ++ Temporal.queries ++
-      Dedup.queries ++ Similarity.queries ++ TextOps.queries ++
-      Multimodal.queries ++ ImageCodec.queries ++ AudioCodec.queries ++
-      Pipeline.queries)
-      .map { case (name, fn) =>
-        name -> ((s: SparkSession, d: String) =>
-          Tables.withQuery(name)(fn(s, d)))
-      }
+    registry.map(q => q.name -> ((s: SparkSession, d: String) =>
+      Tables.withFanout(q.fanout)(q.build(s, d)))).toMap
 
   /** CTE heads rewritten to DuckDB's `AS MATERIALIZED` form. DuckDB
     * INLINES every CTE reference by default, so a chain referenced k
@@ -79,11 +82,6 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    (Relational.oracles ++ RelationalExt.oracles ++
-      Namespace.oracles ++ Containers.oracles ++ Fso.oracles ++ Audit.oracles ++
-      Entities.oracles ++ EventOps.oracles ++ Temporal.oracles ++
-      Dedup.oracles ++ Similarity.oracles ++ TextOps.oracles ++
-      Multimodal.oracles ++ ImageCodec.oracles ++ AudioCodec.oracles ++
-      Pipeline.oracles)
-      .view.mapValues(materializeCtes).toMap
+    registry.flatMap(q =>
+      q.oracle.map(sql => q.name -> materializeCtes(sql))).toMap
 }

@@ -19,110 +19,22 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Registry queries where the scan fan-out measurably pays — the
-    * allowlist driving [[maybeFanout]] when construction runs under
-    * [[withQuery]] (i.e. through `SparkEntry.queries`). Decision data:
-    * the r17 A/B benches (full suite at sf0.1 3-pass min and the 10×
-    * replica, plus paired min-of-3 probes for every borderline query;
-    * tables in OPTIMIZATION_r17.md). The mechanism behind the split:
-    * fan-out pays when per-row scan-stage work dominates (namespace key
-    * derivation, text/hash kernels, decimal chains, per-user windows over
-    * full rows) and loses when the first operation collapses the corpus
-    * with map-side partial aggregation/dedup over cheap narrow columns
-    * (global stats/sketches, container-arithmetic rollups, hour-bucket
-    * counts) — there the fan-out replaces a collapsed-partials shuffle
-    * with a full-corpus one. Queries built OUTSIDE the registry default
-    * to fan-out on (the layout mechanism is the right library default;
-    * the list encodes measured per-operator exceptions).
+  /** The scan fan-out floor of the query under construction: its
+    * record's decision while [[withFanout]] runs it (a registry query),
+    * else the library default, [[Query.fanned]].
     */
-  private[graft] val fanoutQueries: Set[String] = Set(
-    // text analysis: tokenize/regex/ngram kernels over the text column
-    "tx_bigram_freq_score", "tx_bigram_stats", "tx_charset_profile",
-    "tx_contamination", "tx_countmin_freq", "tx_crossdup", "tx_diversity",
-    "tx_fertility", "tx_fingerprint", "tx_gopher_rules", "tx_lang_confusion",
-    "tx_langid", "tx_novelty", "tx_pii", "tx_quality", "tx_readability",
-    "tx_repetition", "tx_tfidf_top_terms", "tx_tokens", "tx_zipf",
-    // dedup: minhash/simhash/winnow/jaccard verify pipelines
-    "dd_band_sweep", "dd_candidate_graph", "dd_canonical", "dd_chunk_exact",
-    "dd_cluster_sizes", "dd_components", "dd_containment", "dd_cosine_sweep",
-    "dd_embed_cosine", "dd_incremental", "dd_lsh_audit", "dd_minhash_est",
-    "dd_minhash_lsh", "dd_modality_agreement", "dd_ngram_jaccard",
-    // dd_rep_selection dropped r18: the 10× paired probe (min-of-3, both
-    // ways) reads +0.57 s — under the 0.8 s keep bar — while the driver's
-    // sf0.1 bench regressed 12.5% with it fanned (VERDICT r17 #5).
-    "dd_phrase_hotlist", "dd_semantic_clusters",
-    "dd_shingle_hist", "dd_sig_width_sweep", "dd_source_dup_matrix",
-    "dd_substring_containment",
-    // similarity: per-vector quantize/assign/ADC math
-    "sim_knn_ivf_trained", "sim_knn_ivfpq", "sim_knn_lsh", "sim_knn_pq",
-    "sim_mips_topk", "sim_pq_codes", "sim_pq_m_sweep", "sim_probe_sweep",
-    "sim_range_audit", "sim_range_search", "sim_recall_report",
-    "sim_topk_bruteforce",
-    // pipeline: tokenization-fed curation/packing passes
-    "pipe_chunk", "pipe_curate", "pipe_curriculum", "pipe_dedup_funnel",
-    "pipe_dedup_weights", "pipe_pack_efficiency", "pipe_pack_plan",
-    "pipe_quality_calibration", "pipe_token_budget", "pipe_token_yield",
-    "pipe_vocab_coverage",
-    // namespace: key-string derivation feeds the scan stage.
-    // ns_du / ns_fso_du / ns_fso_paths dropped r18: their corpus
-    // aggregates were reshaped onto the numeric directory identity
-    // (keyDirNarrow), which removed the per-row string work the fan-out
-    // parallelized — 10× paired probes then read the exchange as a pure
-    // cost (ns_fso_du 5.62 s off vs 9.65 s fanned, ns_fso_paths
-    // 1.71 vs 3.74, ns_du 2.40 vs 3.22).
-    "ns_acl_effective", "ns_common_prefixes", "ns_compaction_plan",
-    "ns_content_summary", "ns_expired_open_keys",
-    "ns_key_versions", "ns_lifecycle_policy",
-    "ns_list_v2_page", "ns_liststatus", "ns_lookup_key", "ns_mpu_list_parts",
-    "ns_mpu_list_uploads", "ns_quota_exhaustion", "ns_scan_plan",
-    "ns_snapshot_diff", "ns_snapshot_diff_chain", "ns_snapshot_diff_summary",
-    "ns_snapshot_space", "ns_top_keys", "ns_top_keys_per_bucket",
-    // events: per-user windows / full-row sequence work (user_id fan-out
-    // key doubles as their required clustering)
-    "ev_ab_guardrail", "ev_ab_timeline", "ev_attribution", "ev_burstiness",
-    "ev_cohort_revenue", "ev_concurrency", "ev_props_stats", "ev_range_join",
-    "ev_sessionize", "ev_session_stats", "ev_sliding_counts",
-    // multimodal codec paths: per-row PNG/WAV encode+decode — fan out only
-    // above fanoutMinBytesOverride (see there; sf0.1 stays single-task)
-    "mm_real_decode", "mm_real_audio",
-    // containers: the key-string-building reports
-    "ct_read_load", "ct_missing_container_keys", "ct_cluster_state",
-    // relational: decimal-chain scans without early collapse
-    "q11_revenue_concentration", "q18_large_volume", "q1_incremental",
-    "q1_pricing_summary", "q21_waiting_supplier", "q_column_corr",
-    "q_column_stats_approx", "q_cube_sales", "q_distinct_counts",
-    "q_grouping_sets", "q_join_skew_salted", "q_order_lateness",
-    "q_promo_revenue", "q_rollup_sales", "q_small_qty_revenue")
+  private val fanoutFloor =
+    ThreadLocal.withInitial[Option[Long]](() => Query.fanned)
 
-  /** Inputs below this size skip the fan-out (see [[maybeFanout]]). */
-  private val fanoutMinBytes: Long = 256L << 10
-
-  /** Per-query OVERRIDE of [[fanoutMinBytes]] (ADVICE r17 /
-    * VERDICT r17 #8): the mm_* codec paths do per-row work (PNG/WAV encode +
-    * decode) whose cost tracks ROW COUNT, not input bytes — at the bench
-    * scale (~0.6 MB documents, 5 k rows) the exchange + 32-task scheduling
-    * costs more than the single-task decode, while at the 10× replica
-    * (~6 MB, 50 k rows) the fanned decode wins several-fold. The input
-    * byte size is the plan-time proxy for row count (same parquet encoding
-    * either side), so these queries fan out only above 4 MiB.
-    */
-  private[graft] val fanoutMinBytesOverride: Map[String, Long] = Map(
-    "mm_real_decode" -> (4L << 20),
-    "mm_real_audio" -> (4L << 20))
-
-  private val currentQuery = new ThreadLocal[String]
-
-  /** Runs `body` with the registry query name visible to [[maybeFanout]]
+  /** Runs `body` under a registry query's fan-out decision
     * (construction-time only; restores the previous value on exit so a
     * registry query constructed inline from another keeps the OUTER
     * query's decision afterwards — ADVICE r17 #2).
     */
-  private[graft] def withQuery[T](name: String)(body: => T): T = {
-    val prev = currentQuery.get()
-    currentQuery.set(name)
-    try body finally {
-      if (prev == null) currentQuery.remove() else currentQuery.set(prev)
-    }
+  private[graft] def withFanout[T](floor: Option[Long])(body: => T): T = {
+    val prev = fanoutFloor.get()
+    fanoutFloor.set(floor)
+    try body finally fanoutFloor.set(prev)
   }
 
   /** Deterministic per-table shuffle keys for the scan fan-out exchange —
@@ -163,8 +75,10 @@ object Tables {
     * more scan tasks than any executor count and the fan-out disables
     * itself; a pathological monolithic input (one giant unsplittable file)
     * fans out, which is exactly the remediation the guide prescribes.
-    * Tiny inputs (< [[fanoutMinBytes]], 256 KiB — broadcast-side
-    * dimensions, sf0.01 correctness tables) skip the exchange;
+    * Tiny inputs (below the query's floor, 256 KiB unless its record
+    * says otherwise — broadcast-side dimensions, sf0.01 correctness
+    * tables) skip the exchange; a query whose record says `None` never
+    * fans out;
     * `spark.graft.scan.fanout=off` disables it globally.
     * Deterministic hash keys keep retries and the cross-layout determinism
     * gates exact (guide §2.5 warns against rand-derived keys).
@@ -175,18 +89,17 @@ object Tables {
     if (mode == "off") return df
     if (!fanoutKeys.contains(name)) return df
     // Under a registry query, apply the measured per-query decision.
-    val q = Option(currentQuery.get())
-    if (q.exists(n => !fanoutQueries.contains(n))) return df
+    val floor = fanoutFloor.get()
+    if (floor.isEmpty) return df
     val keyCols = fanoutKeys(name)
     val para = spark.sparkContext.defaultParallelism
     // "on" forces the exchange regardless of layout (ignores minBytes and
     // the task estimate) — the determinism/oracle gates use it to execute
     // fanned plans at scales where the auto heuristic would skip them
-    // (VERDICT r17 #3). The per-query allowlist still applies: a query
+    // (VERDICT r17 #3). The per-query decision still applies: a query
     // opted out never fans out in any mode, so there is no plan to gate.
     if (mode == "on") return df.repartition(para, keyCols.map(df.col): _*)
-    val minBytes =
-      q.flatMap(fanoutMinBytesOverride.get).getOrElse(fanoutMinBytes)
+    val minBytes = floor.get
     // The data files the scan reads, from the file index Spark listed when
     // it resolved the read (hidden `_`/`.` files already filtered out).
     val files = df.queryExecution.analyzed.collectFirst {
@@ -226,12 +139,11 @@ object Tables {
     else df.repartition(para, keyCols.map(df.col): _*)
   }
 
-  /** `fanout = false` opts a call site out of the scan fan-out: right for
-    * consumers whose FIRST operation collapses the corpus with map-side
-    * partial aggregation/dedup over cheap, narrow columns — there the
-    * fan-out exchange would carry the whole corpus where the collapsed
-    * partials used to travel (q16's (partkey, suppkey) dedup is the
-    * measured case: 2.6× slower fanned at the 10× scale).
+  /** Reads one table, with the scan fan-out the query under construction
+    * decided ([[withFanout]]). `fanout = false` reads the table exactly as
+    * laid out whatever that decision: the benchmark harness's lake writers
+    * (`perfbench/harness`) re-lay tables from such reads. A registry query
+    * opts out through its record's decision, not this argument.
     */
   def load(spark: SparkSession, sfDir: String, name: String,
       fanout: Boolean = true): DataFrame = {

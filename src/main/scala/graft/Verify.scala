@@ -39,8 +39,9 @@ object Verify {
     val threads = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt)
     // SPARK_GRAFT_FANOUT=on (read by the session factory) runs the
-    // forced-fanout oracle gate: every allowlisted query's fanned plan is
-    // hash-checked against DuckDB even where auto would skip the exchange.
+    // forced-fanout oracle gate: every query whose record fans out has its
+    // fanned plan hash-checked against DuckDB even where auto would skip
+    // the exchange.
     val spark = SparkEntry.session(fair = true)
     new java.io.File(outDir).mkdirs()
 

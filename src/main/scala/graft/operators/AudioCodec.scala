@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem, UnsupportedAudioFileException}
 
@@ -201,9 +202,9 @@ object AudioCodec {
       |  CAST(MAX(pk) AS BIGINT) AS peak
       |FROM clip GROUP BY shard ORDER BY shard ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_real_audio" -> realAudioReport)
-
-  val oracles: Map[String, String] = Map(
-    "mm_real_audio" -> realAudioReportSql)
+  /** The registered audio-codec query. */
+  val registry: Seq[Query] = Seq(
+    // Fanned only above 4 MiB: per-row WAV encode + decode, the same
+    // row-count-bound codec work and measurement as ImageCodec's PNG path.
+    Query("mm_real_audio", realAudioReport, realAudioReportSql, Some(4L << 20)))
 }

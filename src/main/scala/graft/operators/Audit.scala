@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{ObjectStoreView, Tables}
+import graft.{ObjectStoreView, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -376,21 +376,14 @@ object Audit {
        |FROM pm GROUP BY volume, bucket, prefix
        |ORDER BY n_requests DESC, volume ASC, bucket ASC, prefix ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ns_prefix_hotspot" -> nsPrefixHotspot,
-    "ins_om_protocol" -> insOmProtocol,
-    "ns_audit_op_mix" -> nsAuditOpMix,
-    "ns_audit_top_users" -> nsAuditTopUsers,
-    "ns_audit_active_seconds" -> nsAuditActiveSeconds,
-    "ns_access_heatmap" -> nsAccessHeatmap,
-    "ins_key_metrics" -> insKeyMetrics)
-
-  val oracles: Map[String, String] = Map(
-    "ns_prefix_hotspot" -> nsPrefixHotspotSql,
-    "ins_om_protocol" -> insOmProtocolSql,
-    "ns_audit_op_mix" -> nsAuditOpMixSql,
-    "ns_audit_top_users" -> nsAuditTopUsersSql,
-    "ns_audit_active_seconds" -> nsAuditActiveSecondsSql,
-    "ns_access_heatmap" -> nsAccessHeatmapSql,
-    "ins_key_metrics" -> insKeyMetricsSql)
+  /** The registered audit-log and OM-protocol queries. */
+  val registry: Seq[Query] = Seq(
+    Query("ns_prefix_hotspot", nsPrefixHotspot, nsPrefixHotspotSql),
+    Query("ins_om_protocol", insOmProtocol, insOmProtocolSql),
+    Query("ns_audit_op_mix", nsAuditOpMix, nsAuditOpMixSql),
+    Query("ns_audit_top_users", nsAuditTopUsers, nsAuditTopUsersSql),
+    Query("ns_audit_active_seconds", nsAuditActiveSeconds,
+      nsAuditActiveSecondsSql),
+    Query("ns_access_heatmap", nsAccessHeatmap, nsAccessHeatmapSql),
+    Query("ins_key_metrics", insKeyMetrics, insKeyMetricsSql))
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.ObjectStoreView
+import graft.{ObjectStoreView, Query}
 import graft.ObjectStoreView.{placedReplicas, placedReplicasSql}
+import graft.Query.fanned
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1434,61 +1435,42 @@ object Containers {
               "SUM(exposure_wide) OVER ()")} AS BIGINT) AS share_ppm
        |FROM per_node ORDER BY node_id ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ct_read_load" -> ctReadLoad,
-    "ct_scrub_report" -> ctScrubReport,
-    "ins_scm_protocol" -> insScmProtocol,
-    "ins_scm_container_protocol" -> insScmContainerProtocol,
-    "ct_block_report" -> ctBlockReport,
-    "ct_container_blocks" -> ctContainerBlocks,
-    "ct_replica_history" -> ctReplicaHistory,
-    "ins_scm_metrics" -> insScmMetrics,
-    "ct_cold_containers" -> ctColdContainers,
-    "ct_rack_report" -> ctRackReport,
-    "ct_task_status" -> ctTaskStatus,
-    "ct_service_list" -> ctServiceList,
-    "ct_ec_storage_overhead" -> ctEcStorageOverhead,
-    "ct_safemode_status" -> ctSafemodeStatus,
-    "ct_balancer_moves" -> ctBalancerMoves,
-    "ct_deleted_blocks_backlog" -> ctDeletedBlocksBacklog,
-    "ct_balancer_report" -> ctBalancerReport,
-    "ct_decommission_impact" -> ctDecommissionImpact,
-    "ct_size_histogram" -> ctSizeHistogram,
-    "ct_placement_violations" -> ctPlacementViolations,
-    "ct_keys_per_container" -> ctKeysPerContainer,
-    "ct_missing_container_keys" -> ctMissingContainerKeys,
-    "ct_unhealthy_containers" -> ctUnhealthyContainers,
-    "ct_repair_priority" -> ctRepairPriority,
-    "ct_cluster_state" -> ctClusterState,
-    "ct_node_report" -> ctNodeReport,
-    "ct_pipeline_report" -> ctPipelineReport)
-
-  val oracles: Map[String, String] = Map(
-    "ct_read_load" -> ctReadLoadSql,
-    "ct_scrub_report" -> ctScrubReportSql,
-    "ins_scm_protocol" -> insScmProtocolSql,
-    "ins_scm_container_protocol" -> insScmContainerProtocolSql,
-    "ct_block_report" -> ctBlockReportSql,
-    "ct_container_blocks" -> ctContainerBlocksSql,
-    "ct_replica_history" -> ctReplicaHistorySql,
-    "ins_scm_metrics" -> insScmMetricsSql,
-    "ct_cold_containers" -> ctColdContainersSql,
-    "ct_rack_report" -> ctRackReportSql,
-    "ct_task_status" -> ctTaskStatusSql,
-    "ct_service_list" -> ctServiceListSql,
-    "ct_ec_storage_overhead" -> ctEcStorageOverheadSql,
-    "ct_safemode_status" -> ctSafemodeStatusSql,
-    "ct_balancer_moves" -> ctBalancerMovesSql,
-    "ct_deleted_blocks_backlog" -> ctDeletedBlocksBacklogSql,
-    "ct_balancer_report" -> ctBalancerReportSql,
-    "ct_decommission_impact" -> ctDecommissionImpactSql,
-    "ct_size_histogram" -> ctSizeHistogramSql,
-    "ct_placement_violations" -> ctPlacementViolationsSql,
-    "ct_keys_per_container" -> ctKeysPerContainerSql,
-    "ct_missing_container_keys" -> ctMissingContainerKeysSql,
-    "ct_unhealthy_containers" -> ctUnhealthyContainersSql,
-    "ct_repair_priority" -> ctRepairPrioritySql,
-    "ct_cluster_state" -> ctClusterStateSql,
-    "ct_node_report" -> ctNodeReportSql,
-    "ct_pipeline_report" -> ctPipelineReportSql)
+  /** The registered container-health and SCM queries. `fanned`: the
+    * reports that build key strings.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("ct_read_load", ctReadLoad, ctReadLoadSql, fanned),
+    Query("ct_scrub_report", ctScrubReport, ctScrubReportSql),
+    Query("ins_scm_protocol", insScmProtocol, insScmProtocolSql),
+    Query("ins_scm_container_protocol", insScmContainerProtocol,
+      insScmContainerProtocolSql),
+    Query("ct_block_report", ctBlockReport, ctBlockReportSql),
+    Query("ct_container_blocks", ctContainerBlocks, ctContainerBlocksSql),
+    Query("ct_replica_history", ctReplicaHistory, ctReplicaHistorySql),
+    Query("ins_scm_metrics", insScmMetrics, insScmMetricsSql),
+    Query("ct_cold_containers", ctColdContainers, ctColdContainersSql),
+    Query("ct_rack_report", ctRackReport, ctRackReportSql),
+    Query("ct_task_status", ctTaskStatus, ctTaskStatusSql),
+    Query("ct_service_list", ctServiceList, ctServiceListSql),
+    Query("ct_ec_storage_overhead", ctEcStorageOverhead,
+      ctEcStorageOverheadSql),
+    Query("ct_safemode_status", ctSafemodeStatus, ctSafemodeStatusSql),
+    Query("ct_balancer_moves", ctBalancerMoves, ctBalancerMovesSql),
+    Query("ct_deleted_blocks_backlog", ctDeletedBlocksBacklog,
+      ctDeletedBlocksBacklogSql),
+    Query("ct_balancer_report", ctBalancerReport, ctBalancerReportSql),
+    Query("ct_decommission_impact", ctDecommissionImpact,
+      ctDecommissionImpactSql),
+    Query("ct_size_histogram", ctSizeHistogram, ctSizeHistogramSql),
+    Query("ct_placement_violations", ctPlacementViolations,
+      ctPlacementViolationsSql),
+    Query("ct_keys_per_container", ctKeysPerContainer, ctKeysPerContainerSql),
+    Query("ct_missing_container_keys", ctMissingContainerKeys,
+      ctMissingContainerKeysSql, fanned),
+    Query("ct_unhealthy_containers", ctUnhealthyContainers,
+      ctUnhealthyContainersSql),
+    Query("ct_repair_priority", ctRepairPriority, ctRepairPrioritySql),
+    Query("ct_cluster_state", ctClusterState, ctClusterStateSql, fanned),
+    Query("ct_node_report", ctNodeReport, ctNodeReportSql),
+    Query("ct_pipeline_report", ctPipelineReport, ctPipelineReportSql))
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.ObjectStoreView
+import graft.{ObjectStoreView, Query}
+import graft.Query.fanned
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -586,29 +587,19 @@ object Entities {
        |FROM gk GROUP BY volume, bucket, gdpr_enabled
        |ORDER BY volume ASC, bucket ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ns_gdpr_compliance" -> nsGdprCompliance,
-    "ns_acl_effective" -> nsAclEffective,
-    "ns_check_access" -> nsCheckAccess,
-    "ns_quota_enforcement" -> nsQuotaEnforcement,
-    "ns_content_summary" -> nsContentSummary,
-    "ns_mpu_list_uploads" -> nsMpuListUploads,
-    "ns_list_volumes" -> nsListVolumes,
-    "ns_list_buckets" -> nsListBuckets,
-    "ns_trash_pending" -> nsTrashPending,
-    "ns_mpu_list_parts" -> nsMpuListParts,
-    "ns_acl_report" -> nsAclReport)
-
-  val oracles: Map[String, String] = Map(
-    "ns_gdpr_compliance" -> nsGdprComplianceSql,
-    "ns_acl_effective" -> nsAclEffectiveSql,
-    "ns_check_access" -> nsCheckAccessSql,
-    "ns_quota_enforcement" -> nsQuotaEnforcementSql,
-    "ns_content_summary" -> nsContentSummarySql,
-    "ns_mpu_list_uploads" -> nsMpuListUploadsSql,
-    "ns_list_volumes" -> nsListVolumesSql,
-    "ns_list_buckets" -> nsListBucketsSql,
-    "ns_trash_pending" -> nsTrashPendingSql,
-    "ns_mpu_list_parts" -> nsMpuListPartsSql,
-    "ns_acl_report" -> nsAclReportSql)
+  /** The registered namespace-entity queries. `fanned`: key-string
+    * derivation feeds the scan stage.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("ns_gdpr_compliance", nsGdprCompliance, nsGdprComplianceSql),
+    Query("ns_acl_effective", nsAclEffective, nsAclEffectiveSql, fanned),
+    Query("ns_check_access", nsCheckAccess, nsCheckAccessSql),
+    Query("ns_quota_enforcement", nsQuotaEnforcement, nsQuotaEnforcementSql),
+    Query("ns_content_summary", nsContentSummary, nsContentSummarySql, fanned),
+    Query("ns_mpu_list_uploads", nsMpuListUploads, nsMpuListUploadsSql, fanned),
+    Query("ns_list_volumes", nsListVolumes, nsListVolumesSql),
+    Query("ns_list_buckets", nsListBuckets, nsListBucketsSql),
+    Query("ns_trash_pending", nsTrashPending, nsTrashPendingSql),
+    Query("ns_mpu_list_parts", nsMpuListParts, nsMpuListPartsSql, fanned),
+    Query("ns_acl_report", nsAclReport, nsAclReportSql))
 }

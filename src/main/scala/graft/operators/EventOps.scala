@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.fanned
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2075,87 +2076,49 @@ object EventOps {
       |FROM armed GROUP BY ts_minute, arm
       |ORDER BY ts_minute ASC, arm ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_ab_srm" -> evAbSrm,
-    "ev_ab_guardrail" -> evAbGuardrail,
-    "ev_ab_timeline" -> evAbTimeline,
-    "ev_ab_significance" -> evAbSignificance,
-    "ev_concurrency" -> evConcurrency,
-    "ev_burstiness" -> evBurstiness,
-    "ev_cumulative_users" -> evCumulativeUsers,
-    "ev_anomaly_robust" -> evAnomalyRobust,
-    "ev_audience_overlap" -> evAudienceOverlap,
-    "ev_ab_test" -> evAbTest,
-    "ev_stickiness" -> evStickiness,
-    "ev_conversion_lag" -> evConversionLag,
-    "ev_attribution" -> evAttribution,
-    "ev_rfm" -> evRfm,
-    "ev_hour_profile" -> evHourProfile,
-    "ev_new_vs_returning" -> evNewVsReturning,
-    "ev_error_rate" -> evErrorRate,
-    "ev_funnel_steps" -> evFunnelSteps,
-    "ev_inactive_users" -> evInactiveUsers,
-    "ev_path_trigrams" -> evPathTrigrams,
-    "ev_bot_detection" -> evBotDetection,
-    "ev_sliding_counts" -> evSlidingCounts,
-    "ev_session_stats" -> evSessionStats,
-    "ev_dau_sketch" -> evDauSketch,
-    "ev_pivot_monthly" -> evPivotMonthly,
-    "ev_value_quantiles" -> evValueQuantiles,
-    "ev_transitions" -> evTransitions,
-    "ev_anomaly" -> evAnomaly,
-    "ev_top_per_hour" -> evTopPerHour,
-    "ev_dau_wau" -> evDauWau,
-    "ev_heatmap" -> evHeatmap,
-    "ev_retention_cohorts" -> evRetentionCohorts,
-    "ev_cohort_revenue" -> evCohortRevenue,
-    "ev_tumbling_counts" -> evTumblingCounts,
-    "ev_sessionize" -> evSessionize,
-    "ev_funnel" -> evFunnel,
-    "ev_funnel_time" -> evFunnelTime,
-    "ev_user_activity" -> evUserActivity,
-    "ev_power_law" -> evPowerLaw,
-    "ev_props_stats" -> evPropsStats)
-
-  val oracles: Map[String, String] = Map(
-    "ev_ab_srm" -> evAbSrmSql,
-    "ev_ab_guardrail" -> evAbGuardrailSql,
-    "ev_ab_timeline" -> evAbTimelineSql,
-    "ev_ab_significance" -> evAbSignificanceSql,
-    "ev_concurrency" -> evConcurrencySql,
-    "ev_burstiness" -> evBurstinessSql,
-    "ev_cumulative_users" -> evCumulativeUsersSql,
-    "ev_anomaly_robust" -> evAnomalyRobustSql,
-    "ev_audience_overlap" -> evAudienceOverlapSql,
-    "ev_ab_test" -> evAbTestSql,
-    "ev_stickiness" -> evStickinessSql,
-    "ev_conversion_lag" -> evConversionLagSql,
-    "ev_attribution" -> evAttributionSql,
-    "ev_rfm" -> evRfmSql,
-    "ev_hour_profile" -> evHourProfileSql,
-    "ev_new_vs_returning" -> evNewVsReturningSql,
-    "ev_error_rate" -> evErrorRateSql,
-    "ev_funnel_steps" -> evFunnelStepsSql,
-    "ev_inactive_users" -> evInactiveUsersSql,
-    "ev_path_trigrams" -> evPathTrigramsSql,
-    "ev_bot_detection" -> evBotDetectionSql,
-    "ev_sliding_counts" -> evSlidingCountsSql,
-    "ev_session_stats" -> evSessionStatsSql,
-    "ev_dau_sketch" -> evDauSketchSql,
-    "ev_pivot_monthly" -> evPivotMonthlySql,
-    "ev_value_quantiles" -> evValueQuantilesSql,
-    "ev_transitions" -> evTransitionsSql,
-    "ev_anomaly" -> evAnomalySql,
-    "ev_top_per_hour" -> evTopPerHourSql,
-    "ev_dau_wau" -> evDauWauSql,
-    "ev_heatmap" -> evHeatmapSql,
-    "ev_retention_cohorts" -> evRetentionCohortsSql,
-    "ev_cohort_revenue" -> evCohortRevenueSql,
-    "ev_tumbling_counts" -> evTumblingCountsSql,
-    "ev_sessionize" -> evSessionizeSql,
-    "ev_funnel" -> evFunnelSql,
-    "ev_funnel_time" -> evFunnelTimeSql,
-    "ev_user_activity" -> evUserActivitySql,
-    "ev_power_law" -> evPowerLawSql,
-    "ev_props_stats" -> evPropsStatsSql)
+  /** The registered events queries. `fanned`: per-user windows and
+    * full-row sequence work; the user_id fan-out key doubles as their
+    * required clustering.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("ev_ab_srm", evAbSrm, evAbSrmSql),
+    Query("ev_ab_guardrail", evAbGuardrail, evAbGuardrailSql, fanned),
+    Query("ev_ab_timeline", evAbTimeline, evAbTimelineSql, fanned),
+    Query("ev_ab_significance", evAbSignificance, evAbSignificanceSql),
+    Query("ev_concurrency", evConcurrency, evConcurrencySql, fanned),
+    Query("ev_burstiness", evBurstiness, evBurstinessSql, fanned),
+    Query("ev_cumulative_users", evCumulativeUsers, evCumulativeUsersSql),
+    Query("ev_anomaly_robust", evAnomalyRobust, evAnomalyRobustSql),
+    Query("ev_audience_overlap", evAudienceOverlap, evAudienceOverlapSql),
+    Query("ev_ab_test", evAbTest, evAbTestSql),
+    Query("ev_stickiness", evStickiness, evStickinessSql),
+    Query("ev_conversion_lag", evConversionLag, evConversionLagSql),
+    Query("ev_attribution", evAttribution, evAttributionSql, fanned),
+    Query("ev_rfm", evRfm, evRfmSql),
+    Query("ev_hour_profile", evHourProfile, evHourProfileSql),
+    Query("ev_new_vs_returning", evNewVsReturning, evNewVsReturningSql),
+    Query("ev_error_rate", evErrorRate, evErrorRateSql),
+    Query("ev_funnel_steps", evFunnelSteps, evFunnelStepsSql),
+    Query("ev_inactive_users", evInactiveUsers, evInactiveUsersSql),
+    Query("ev_path_trigrams", evPathTrigrams, evPathTrigramsSql),
+    Query("ev_bot_detection", evBotDetection, evBotDetectionSql),
+    Query("ev_sliding_counts", evSlidingCounts, evSlidingCountsSql, fanned),
+    Query("ev_session_stats", evSessionStats, evSessionStatsSql, fanned),
+    Query("ev_dau_sketch", evDauSketch, evDauSketchSql),
+    Query("ev_pivot_monthly", evPivotMonthly, evPivotMonthlySql),
+    Query("ev_value_quantiles", evValueQuantiles, evValueQuantilesSql),
+    Query("ev_transitions", evTransitions, evTransitionsSql),
+    Query("ev_anomaly", evAnomaly, evAnomalySql),
+    Query("ev_top_per_hour", evTopPerHour, evTopPerHourSql),
+    Query("ev_dau_wau", evDauWau, evDauWauSql),
+    Query("ev_heatmap", evHeatmap, evHeatmapSql),
+    Query("ev_retention_cohorts", evRetentionCohorts, evRetentionCohortsSql),
+    Query("ev_cohort_revenue", evCohortRevenue, evCohortRevenueSql, fanned),
+    Query("ev_tumbling_counts", evTumblingCounts, evTumblingCountsSql),
+    Query("ev_sessionize", evSessionize, evSessionizeSql, fanned),
+    Query("ev_funnel", evFunnel, evFunnelSql),
+    Query("ev_funnel_time", evFunnelTime, evFunnelTimeSql),
+    Query("ev_user_activity", evUserActivity, evUserActivitySql),
+    Query("ev_power_law", evPowerLaw, evPowerLawSql),
+    Query("ev_props_stats", evPropsStats, evPropsStatsSql, fanned))
 }

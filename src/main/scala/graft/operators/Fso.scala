@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.ObjectStoreView
+import graft.{ObjectStoreView, Query}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -161,11 +161,13 @@ object Fso {
        |  AND r.abs_path = s.abs_path
        |ORDER BY r.volume ASC, r.bucket ASC, r.abs_path ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ns_fso_paths" -> nsFsoPaths,
-    "ns_fso_du" -> nsFsoDu)
-
-  val oracles: Map[String, String] = Map(
-    "ns_fso_paths" -> nsFsoPathsSql,
-    "ns_fso_du" -> nsFsoDuSql)
+  /** The registered FSO (parent-pointer namespace) queries. */
+  val registry: Seq[Query] = Seq(
+    // Neither is fanned since r18: their corpus aggregates moved onto the
+    // numeric directory identity (keyDirNarrow), which removed the per-row
+    // string work the fan-out parallelized; 10× paired probes then read
+    // the exchange as a pure cost (ns_fso_paths 1.71 s off vs 3.74 s
+    // fanned, ns_fso_du 5.62 vs 9.65).
+    Query("ns_fso_paths", nsFsoPaths, nsFsoPathsSql),
+    Query("ns_fso_du", nsFsoDu, nsFsoDuSql))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
@@ -260,9 +261,14 @@ object ImageCodec {
       |  CAST(SUM(brightness) AS BIGINT) AS brightness_total
       |FROM px GROUP BY shard ORDER BY shard ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_real_decode" -> realDecodeReport)
-
-  val oracles: Map[String, String] = Map(
-    "mm_real_decode" -> realDecodeReportSql)
+  /** The registered image-codec query. */
+  val registry: Seq[Query] = Seq(
+    // Fanned only above 4 MiB (ADVICE r17 / VERDICT r17 #8): per-row PNG
+    // encode + decode costs track row count, not input bytes. At sf0.1
+    // (~0.6 MB documents, 5 k rows) the exchange and 32-task scheduling
+    // cost more than the single-task decode; at the 10× replica (~6 MB,
+    // 50 k rows) the fanned decode wins several-fold. Input bytes are the
+    // plan-time proxy for row count (same parquet encoding either side).
+    Query("mm_real_decode", realDecodeReport,
+      realDecodeReportSql, Some(4L << 20)))
 }

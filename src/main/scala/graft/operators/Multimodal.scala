@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -533,25 +533,16 @@ object Multimodal {
       |FROM c GROUP BY size_class, orientation
       |ORDER BY size_class ASC, orientation ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_resolution_histogram" -> mmResolutionHistogram,
-    "mm_trim_plan" -> mmTrimPlan,
-    "mm_decode_stub" -> mmDecodeStub,
-    "mm_frame_sample" -> mmFrameSample,
-    "mm_scene_cut" -> mmSceneCut,
-    "mm_resize_plan" -> mmResizePlan,
-    "mm_ahash" -> mmAhash,
-    "mm_phash_dedup" -> mmPhashDedup,
-    "mm_audio_energy" -> mmAudioEnergy)
-
-  val oracles: Map[String, String] = Map(
-    "mm_resolution_histogram" -> mmResolutionHistogramSql,
-    "mm_trim_plan" -> mmTrimPlanSql,
-    "mm_decode_stub" -> mmDecodeStubSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_scene_cut" -> mmSceneCutSql,
-    "mm_resize_plan" -> mmResizePlanSql,
-    "mm_ahash" -> mmAhashSql,
-    "mm_phash_dedup" -> mmPhashDedupSql,
-    "mm_audio_energy" -> mmAudioEnergySql)
+  /** The registered multimodal metadata queries. */
+  val registry: Seq[Query] = Seq(
+    Query("mm_resolution_histogram", mmResolutionHistogram,
+      mmResolutionHistogramSql),
+    Query("mm_trim_plan", mmTrimPlan, mmTrimPlanSql),
+    Query("mm_decode_stub", mmDecodeStub, mmDecodeStubSql),
+    Query("mm_frame_sample", mmFrameSample, mmFrameSampleSql),
+    Query("mm_scene_cut", mmSceneCut, mmSceneCutSql),
+    Query("mm_resize_plan", mmResizePlan, mmResizePlanSql),
+    Query("mm_ahash", mmAhash, mmAhashSql),
+    Query("mm_phash_dedup", mmPhashDedup, mmPhashDedupSql),
+    Query("mm_audio_energy", mmAudioEnergy, mmAudioEnergySql))
 }

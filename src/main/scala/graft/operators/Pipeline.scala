@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.fanned
 import graft.functions.Codes
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1178,53 +1179,35 @@ object Pipeline {
        |WHERE sample_rank <= 20
        |ORDER BY lang ASC, sample_rank ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe_stratified_sample" -> pipeStratifiedSample,
-    "pipe_length_buckets" -> pipeLengthBuckets,
-    "pipe_filter_ablation" -> pipeFilterAblation,
-    "pipe_shard_manifest" -> pipeShardManifest,
-    "pipe_chunk" -> pipeChunk,
-    "dd_chunk_exact" -> ddChunkExact,
-    "pipe_source_epochs" -> pipeSourceEpochs,
-    "pipe_dedup_funnel" -> pipeDedupFunnel,
-    "pipe_token_budget" -> pipeTokenBudget,
-    "pipe_quality_calibration" -> pipeQualityCalibration,
-    "pipe_epoch_shuffle" -> pipeEpochShuffle,
-    "pipe_token_yield" -> pipeTokenYield,
-    "pipe_vocab_coverage" -> pipeVocabCoverage,
-    "pipe_curriculum" -> pipeCurriculum,
-    "pipe_dataset_stats" -> pipeDatasetStats,
-    "pipe_mixture_weights" -> pipeMixtureWeights,
-    "pipe_curate" -> pipeCurate,
-    "pipe_split" -> pipeSplit,
-    "pipe_split_drift" -> pipeSplitDrift,
-    "pipe_pack_plan" -> pipePackPlan,
-    "pipe_pack_efficiency" -> pipePackEfficiency,
-    "pipe_dedup_weights" -> pipeDedupWeights,
-    "pipe_sample" -> pipeSample)
-
-  val oracles: Map[String, String] = Map(
-    "pipe_stratified_sample" -> pipeStratifiedSampleSql,
-    "pipe_length_buckets" -> pipeLengthBucketsSql,
-    "pipe_filter_ablation" -> pipeFilterAblationSql,
-    "pipe_dedup_funnel" -> pipeDedupFunnelSql,
-    "pipe_token_budget" -> pipeTokenBudgetSql,
-    "pipe_quality_calibration" -> pipeQualityCalibrationSql,
-    "pipe_epoch_shuffle" -> pipeEpochShuffleSql,
-    "pipe_token_yield" -> pipeTokenYieldSql,
-    "pipe_vocab_coverage" -> pipeVocabCoverageSql,
-    "pipe_curriculum" -> pipeCurriculumSql,
-    "pipe_dataset_stats" -> pipeDatasetStatsSql,
-    "pipe_mixture_weights" -> pipeMixtureWeightsSql,
-    "pipe_curate" -> pipeCurateSql,
-    "pipe_split" -> pipeSplitSql,
-    "pipe_split_drift" -> pipeSplitDriftSql,
-    "pipe_pack_plan" -> pipePackPlanSql,
-    "pipe_pack_efficiency" -> pipePackEfficiencySql,
-    "pipe_sample" -> pipeSampleSql,
-    "pipe_shard_manifest" -> pipeShardManifestSql,
-    "pipe_chunk" -> pipeChunkSql,
-    "dd_chunk_exact" -> ddChunkExactSql,
-    "pipe_dedup_weights" -> pipeDedupWeightsSql,
-    "pipe_source_epochs" -> pipeSourceEpochsSql)
+  /** The registered training-data pipeline queries. `fanned`: curation
+    * and packing passes fed by per-document tokenization.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("pipe_stratified_sample", pipeStratifiedSample,
+      pipeStratifiedSampleSql),
+    Query("pipe_length_buckets", pipeLengthBuckets, pipeLengthBucketsSql),
+    Query("pipe_filter_ablation", pipeFilterAblation, pipeFilterAblationSql),
+    Query("pipe_shard_manifest", pipeShardManifest, pipeShardManifestSql),
+    Query("pipe_chunk", pipeChunk, pipeChunkSql, fanned),
+    Query("dd_chunk_exact", ddChunkExact, ddChunkExactSql, fanned),
+    Query("pipe_source_epochs", pipeSourceEpochs, pipeSourceEpochsSql),
+    Query("pipe_dedup_funnel", pipeDedupFunnel, pipeDedupFunnelSql, fanned),
+    Query("pipe_token_budget", pipeTokenBudget, pipeTokenBudgetSql, fanned),
+    Query("pipe_quality_calibration", pipeQualityCalibration,
+      pipeQualityCalibrationSql, fanned),
+    Query("pipe_epoch_shuffle", pipeEpochShuffle, pipeEpochShuffleSql),
+    Query("pipe_token_yield", pipeTokenYield, pipeTokenYieldSql, fanned),
+    Query("pipe_vocab_coverage", pipeVocabCoverage,
+      pipeVocabCoverageSql, fanned),
+    Query("pipe_curriculum", pipeCurriculum, pipeCurriculumSql, fanned),
+    Query("pipe_dataset_stats", pipeDatasetStats, pipeDatasetStatsSql),
+    Query("pipe_mixture_weights", pipeMixtureWeights, pipeMixtureWeightsSql),
+    Query("pipe_curate", pipeCurate, pipeCurateSql, fanned),
+    Query("pipe_split", pipeSplit, pipeSplitSql),
+    Query("pipe_split_drift", pipeSplitDrift, pipeSplitDriftSql),
+    Query("pipe_pack_plan", pipePackPlan, pipePackPlanSql, fanned),
+    Query("pipe_pack_efficiency", pipePackEfficiency,
+      pipePackEfficiencySql, fanned),
+    Query("pipe_dedup_weights", pipeDedupWeights, pipeDedupWeightsSql, fanned),
+    Query("pipe_sample", pipeSample, pipeSampleSql))
 }

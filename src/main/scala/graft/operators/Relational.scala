@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.fanned
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -681,46 +682,29 @@ object Relational {
       |FROM rich r LEFT JOIN o ON r.c_custkey = o.o_custkey
       |GROUP BY c_nationkey ORDER BY c_nationkey ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cheapest_supplier" -> qCheapestSupplier,
-    "q_idle_rich_custs" -> qIdleRichCusts,
-    "q_promo_revenue" -> qPromoRevenue,
-    "q_disjunctive_revenue" -> qDisjunctiveRevenue,
-    "q_median_order_value" -> qMedianOrderValue,
-    "q_cumulative_revenue" -> qCumulativeRevenue,
-    "q_small_qty_revenue" -> qSmallQtyRevenue,
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q1_incremental" -> q1Incremental,
-    "q3_shipping_priority" -> q3ShippingPriority,
-    "q5_local_supplier_volume" -> q5LocalSupplierVolume,
-    "q_market_segment_share" -> qMarketSegmentShare,
-    "q_top_orders_per_cust" -> qTopOrdersPerCust,
-    "q_rollup_sales" -> qRollupSales,
-    "q_distinct_counts" -> qDistinctCounts,
-    "q_approx_distinct" -> qApproxDistinct,
-    "q_cust_no_orders" -> qCustNoOrders,
-    "q_cust_with_big_orders" -> qCustWithBigOrders,
-    "q_set_ops" -> qSetOps,
-    "q_order_lateness" -> qOrderLateness)
-
-  val oracles: Map[String, String] = Map(
-    "q_cheapest_supplier" -> qCheapestSupplierSql,
-    "q_idle_rich_custs" -> qIdleRichCustsSql,
-    "q_promo_revenue" -> qPromoRevenueSql,
-    "q_disjunctive_revenue" -> qDisjunctiveRevenueSql,
-    "q_median_order_value" -> qMedianOrderValueSql,
-    "q_cumulative_revenue" -> qCumulativeRevenueSql,
-    "q_small_qty_revenue" -> qSmallQtyRevenueSql,
-    "q1_pricing_summary" -> q1Sql,
-    "q1_incremental" -> q1IncrementalSql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier_volume" -> q5Sql,
-    "q_market_segment_share" -> qMarketSegmentShareSql,
-    "q_top_orders_per_cust" -> qTopOrdersPerCustSql,
-    "q_rollup_sales" -> qRollupSalesSql,
-    "q_distinct_counts" -> qDistinctCountsSql,
-    "q_cust_no_orders" -> qCustNoOrdersSql,
-    "q_cust_with_big_orders" -> qCustWithBigOrdersSql,
-    "q_set_ops" -> qSetOpsSql,
-    "q_order_lateness" -> qOrderLatenessSql)
+  /** The registered relational queries. `fanned`: decimal-chain scans
+    * without an early collapse of the corpus.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("q_cheapest_supplier", qCheapestSupplier, qCheapestSupplierSql),
+    Query("q_idle_rich_custs", qIdleRichCusts, qIdleRichCustsSql),
+    Query("q_promo_revenue", qPromoRevenue, qPromoRevenueSql, fanned),
+    Query("q_disjunctive_revenue", qDisjunctiveRevenue, qDisjunctiveRevenueSql),
+    Query("q_median_order_value", qMedianOrderValue, qMedianOrderValueSql),
+    Query("q_cumulative_revenue", qCumulativeRevenue, qCumulativeRevenueSql),
+    Query("q_small_qty_revenue", qSmallQtyRevenue, qSmallQtyRevenueSql, fanned),
+    Query("q1_pricing_summary", q1PricingSummary, q1Sql, fanned),
+    Query("q1_incremental", q1Incremental, q1IncrementalSql, fanned),
+    Query("q3_shipping_priority", q3ShippingPriority, q3Sql),
+    Query("q5_local_supplier_volume", q5LocalSupplierVolume, q5Sql),
+    Query("q_market_segment_share", qMarketSegmentShare,
+      qMarketSegmentShareSql),
+    Query("q_top_orders_per_cust", qTopOrdersPerCust, qTopOrdersPerCustSql),
+    Query("q_rollup_sales", qRollupSales, qRollupSalesSql, fanned),
+    Query("q_distinct_counts", qDistinctCounts, qDistinctCountsSql, fanned),
+    new Query("q_approx_distinct", qApproxDistinct, None, None),
+    Query("q_cust_no_orders", qCustNoOrders, qCustNoOrdersSql),
+    Query("q_cust_with_big_orders", qCustWithBigOrders, qCustWithBigOrdersSql),
+    Query("q_set_ops", qSetOps, qSetOpsSql),
+    Query("q_order_lateness", qOrderLateness, qOrderLatenessSql, fanned))
 }

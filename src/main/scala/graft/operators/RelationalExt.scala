@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.fanned
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -334,11 +335,7 @@ object RelationalExt {
     // downstream distinct-agg expand see one row per relationship, not one
     // per lineitem (at 100 TB that's orders of magnitude fewer rows into
     // the countDistinct shuffle).
-    // fanout=false: the dedup's map-side partials collapse the corpus to
-    // ~|part×supp| pairs BEFORE any exchange; a scan fan-out would shuffle
-    // every raw (partkey, suppkey) row instead (measured 2.6× slower at
-    // the 10× scale) for per-row work that is two column reads.
-    val l = Tables.load(spark, dir, "lineitem", fanout = false)
+    val l = Tables.lineitem(spark, dir)
       .select("l_partkey", "l_suppkey").dropDuplicates("l_partkey", "l_suppkey")
     l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_type"), col("p_size"))
@@ -1795,75 +1792,46 @@ object RelationalExt {
       |    AS drawdown_cents
       |FROM d ORDER BY day ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_customer_deciles" -> qCustomerDeciles,
-    "q_skyline" -> qSkyline,
-    "q_revenue_drawdown" -> qRevenueDrawdown,
-    "q_null_profile" -> qNullProfile,
-    "q_integrity_audit" -> qIntegrityAudit,
-    "q_join_skew" -> qJoinSkew,
-    "q_join_skew_salted" -> qJoinSkewSalted,
-    "q_bloom_semijoin" -> qBloomSemijoin,
-    "q_seasonality" -> qSeasonality,
-    "q_revenue_topdecile" -> qRevenueTopdecile,
-    "q_sample_estimate" -> qSampleEstimate,
-    "q_histogram_equidepth" -> qHistogramEquidepth,
-    "q_moving_revenue" -> qMovingRevenue,
-    "q_cube_sales" -> qCubeSales,
-    "q_grouping_sets" -> qGroupingSets,
-    "q_column_corr" -> qColumnCorr,
-    "q_column_stats" -> qColumnStats,
-    "q_column_stats_approx" -> qColumnStatsApprox,
-    "q12_late_priority" -> q12LatePriority,
-    "q20_dominant_supplier" -> q20DominantSupplier,
-    "q_hll_distinct" -> qHllDistinct,
-    "q4_order_priority" -> q4OrderPriority,
-    "q6_forecast_revenue" -> q6ForecastRevenue,
-    "q11_revenue_concentration" -> q11RevenueConcentration,
-    "q18_large_volume" -> q18LargeVolume,
-    "q21_waiting_supplier" -> q21WaitingSupplier,
-    "q7_nation_trade" -> q7NationTrade,
-    "q8_market_share" -> q8MarketShare,
-    "q9_product_profit" -> q9ProductProfit,
-    "q10_returned_items" -> q10ReturnedItems,
-    "q13_order_count_dist" -> q13OrderCountDist,
-    "q15_top_supplier" -> q15TopSupplier,
-    "q16_supplier_variety" -> q16SupplierVariety,
-    "q_order_gap" -> qOrderGap)
-
-  val oracles: Map[String, String] = Map(
-    "q_customer_deciles" -> qCustomerDecilesSql,
-    "q_skyline" -> qSkylineSql,
-    "q_revenue_drawdown" -> qRevenueDrawdownSql,
-    "q_seasonality" -> qSeasonalitySql,
-    "q_revenue_topdecile" -> qRevenueTopdecileSql,
-    "q_sample_estimate" -> qSampleEstimateSql,
-    "q_histogram_equidepth" -> qHistogramEquidepthSql,
-    "q_moving_revenue" -> qMovingRevenueSql,
-    "q_cube_sales" -> qCubeSalesSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_column_corr" -> qColumnCorrSql,
-    "q_column_stats" -> qColumnStatsSql,
-    "q_column_stats_approx" -> qColumnStatsApproxSql,
-    "q12_late_priority" -> q12Sql,
-    "q20_dominant_supplier" -> q20Sql,
-    "q_hll_distinct" -> qHllSql,
-    "q4_order_priority" -> q4Sql,
-    "q6_forecast_revenue" -> q6Sql,
-    "q11_revenue_concentration" -> q11Sql,
-    "q18_large_volume" -> q18Sql,
-    "q21_waiting_supplier" -> q21Sql,
-    "q7_nation_trade" -> q7Sql,
-    "q8_market_share" -> q8Sql,
-    "q9_product_profit" -> q9Sql,
-    "q10_returned_items" -> q10Sql,
-    "q13_order_count_dist" -> q13Sql,
-    "q15_top_supplier" -> q15Sql,
-    "q16_supplier_variety" -> q16Sql,
-    "q_order_gap" -> qOrderGapSql,
-    "q_join_skew" -> qJoinSkewSql,
-    "q_join_skew_salted" -> qJoinSkewSaltedSql,
-    "q_bloom_semijoin" -> qBloomSemijoinSql,
-    "q_integrity_audit" -> qIntegrityAuditSql,
-    "q_null_profile" -> qNullProfileSql)
+  /** The registered extended relational queries. `fanned`: decimal-chain
+    * scans without an early collapse of the corpus.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("q_customer_deciles", qCustomerDeciles, qCustomerDecilesSql),
+    Query("q_skyline", qSkyline, qSkylineSql),
+    Query("q_revenue_drawdown", qRevenueDrawdown, qRevenueDrawdownSql),
+    Query("q_null_profile", qNullProfile, qNullProfileSql),
+    Query("q_integrity_audit", qIntegrityAudit, qIntegrityAuditSql),
+    Query("q_join_skew", qJoinSkew, qJoinSkewSql),
+    Query("q_join_skew_salted", qJoinSkewSalted, qJoinSkewSaltedSql, fanned),
+    Query("q_bloom_semijoin", qBloomSemijoin, qBloomSemijoinSql),
+    Query("q_seasonality", qSeasonality, qSeasonalitySql),
+    Query("q_revenue_topdecile", qRevenueTopdecile, qRevenueTopdecileSql),
+    Query("q_sample_estimate", qSampleEstimate, qSampleEstimateSql),
+    Query("q_histogram_equidepth", qHistogramEquidepth, qHistogramEquidepthSql),
+    Query("q_moving_revenue", qMovingRevenue, qMovingRevenueSql),
+    Query("q_cube_sales", qCubeSales, qCubeSalesSql, fanned),
+    Query("q_grouping_sets", qGroupingSets, qGroupingSetsSql, fanned),
+    Query("q_column_corr", qColumnCorr, qColumnCorrSql, fanned),
+    Query("q_column_stats", qColumnStats, qColumnStatsSql),
+    Query("q_column_stats_approx", qColumnStatsApprox,
+      qColumnStatsApproxSql, fanned),
+    Query("q12_late_priority", q12LatePriority, q12Sql),
+    Query("q20_dominant_supplier", q20DominantSupplier, q20Sql),
+    Query("q_hll_distinct", qHllDistinct, qHllSql),
+    Query("q4_order_priority", q4OrderPriority, q4Sql),
+    Query("q6_forecast_revenue", q6ForecastRevenue, q6Sql),
+    Query("q11_revenue_concentration", q11RevenueConcentration, q11Sql, fanned),
+    Query("q18_large_volume", q18LargeVolume, q18Sql, fanned),
+    Query("q21_waiting_supplier", q21WaitingSupplier, q21Sql, fanned),
+    Query("q7_nation_trade", q7NationTrade, q7Sql),
+    Query("q8_market_share", q8MarketShare, q8Sql),
+    Query("q9_product_profit", q9ProductProfit, q9Sql),
+    Query("q10_returned_items", q10ReturnedItems, q10Sql),
+    Query("q13_order_count_dist", q13OrderCountDist, q13Sql),
+    Query("q15_top_supplier", q15TopSupplier, q15Sql),
+    // Not fanned: the (partkey, suppkey) dedup's map-side partials collapse
+    // the corpus before any exchange, and a scan fan-out would shuffle
+    // every raw row instead (measured 2.6× slower at the 10× scale).
+    Query("q16_supplier_variety", q16SupplierVariety, q16Sql),
+    Query("q_order_gap", qOrderGap, qOrderGapSql))
 }

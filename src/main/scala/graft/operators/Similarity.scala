@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.Query
+import graft.Query.fanned
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1394,41 +1396,26 @@ object Similarity {
        |FROM marked m JOIN nn ON m.src_label = nn.label
        |GROUP BY m.src_label, nn.n_nodes ORDER BY label ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_knn_graph" -> simKnnGraph,
-    "sim_probe_sweep" -> simProbeSweep,
-    "sim_pq_m_sweep" -> simPqMSweep,
-    "sim_knn_ivfpq" -> simKnnIvfPq,
-    "sim_cluster_purity" -> simClusterPurity,
-    "sim_knn_pq" -> simKnnPq,
-    "sim_pq_codes" -> simPqCodes,
-    "sim_recall_report" -> simRecallReport,
-    "sim_knn_ivf_trained" -> simKnnIvfTrained,
-    "sim_ivf_balance" -> simIvfBalance,
-    "sim_dim_stats" -> simDimStats,
-    "sim_topk_bruteforce" -> simTopkBruteforce,
-    "sim_mips_topk" -> simMipsTopk,
-    "sim_knn_lsh" -> simKnnLsh,
-    "sim_range_search" -> simRangeSearch,
-    "sim_range_audit" -> simRangeAudit,
-    "sim_knn_ivf" -> simKnnIvf)
-
-  val oracles: Map[String, String] = Map(
-    "sim_knn_graph" -> simKnnGraphSql,
-    "sim_probe_sweep" -> simProbeSweepSql,
-    "sim_pq_m_sweep" -> simPqMSweepSql,
-    "sim_knn_ivfpq" -> simKnnIvfPqSql,
-    "sim_cluster_purity" -> simClusterPuritySql,
-    "sim_knn_pq" -> simKnnPqSql,
-    "sim_pq_codes" -> simPqCodesSql,
-    "sim_recall_report" -> simRecallReportSql,
-    "sim_knn_ivf_trained" -> simKnnIvfTrainedSql,
-    "sim_ivf_balance" -> simIvfBalanceSql,
-    "sim_dim_stats" -> simDimStatsSql,
-    "sim_topk_bruteforce" -> simTopkBruteforceSql,
-    "sim_mips_topk" -> simMipsTopkSql,
-    "sim_knn_lsh" -> simKnnLshSql,
-    "sim_range_search" -> simRangeSearchSql,
-    "sim_range_audit" -> simRangeAuditSql,
-    "sim_knn_ivf" -> simKnnIvfSql)
+  /** The registered vector-similarity queries. `fanned`: per-vector
+    * quantize, assign and ADC math.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("sim_knn_graph", simKnnGraph, simKnnGraphSql),
+    Query("sim_probe_sweep", simProbeSweep, simProbeSweepSql, fanned),
+    Query("sim_pq_m_sweep", simPqMSweep, simPqMSweepSql, fanned),
+    Query("sim_knn_ivfpq", simKnnIvfPq, simKnnIvfPqSql, fanned),
+    Query("sim_cluster_purity", simClusterPurity, simClusterPuritySql),
+    Query("sim_knn_pq", simKnnPq, simKnnPqSql, fanned),
+    Query("sim_pq_codes", simPqCodes, simPqCodesSql, fanned),
+    Query("sim_recall_report", simRecallReport, simRecallReportSql, fanned),
+    Query("sim_knn_ivf_trained", simKnnIvfTrained, simKnnIvfTrainedSql, fanned),
+    Query("sim_ivf_balance", simIvfBalance, simIvfBalanceSql),
+    Query("sim_dim_stats", simDimStats, simDimStatsSql),
+    Query("sim_topk_bruteforce", simTopkBruteforce,
+      simTopkBruteforceSql, fanned),
+    Query("sim_mips_topk", simMipsTopk, simMipsTopkSql, fanned),
+    Query("sim_knn_lsh", simKnnLsh, simKnnLshSql, fanned),
+    Query("sim_range_search", simRangeSearch, simRangeSearchSql, fanned),
+    Query("sim_range_audit", simRangeAudit, simRangeAuditSql, fanned),
+    Query("sim_knn_ivf", simKnnIvf, simKnnIvfSql))
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.Query
+import graft.Query.fanned
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -136,11 +138,10 @@ object Temporal {
        |  AND p.us >= r.err_us AND p.us <= r.err_us + $WindowUs
        |GROUP BY r.err_id ORDER BY r.err_id ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_asof_join" -> evAsofJoin,
-    "ev_range_join" -> evRangeJoin)
-
-  val oracles: Map[String, String] = Map(
-    "ev_asof_join" -> evAsofJoinSql,
-    "ev_range_join" -> evRangeJoinSql)
+  /** The registered temporal-join queries. `fanned`: per-user full-row
+    * sequence work, clustered by the user_id fan-out key.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("ev_asof_join", evAsofJoin, evAsofJoinSql),
+    Query("ev_range_join", evRangeJoin, evRangeJoinSql, fanned))
 }

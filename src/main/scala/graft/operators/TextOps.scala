@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.fanned
 import graft.functions.Codes._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1349,57 +1350,34 @@ object TextOps {
        |    AS flesch_milli
        |FROM g ORDER BY lang ASC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tx_readability" -> txReadability,
-    "tx_unigram_logprob" -> txUnigramLogprob,
-    "tx_zipf" -> txZipf,
-    "tx_bigram_stats" -> txBigramStats,
-    "tx_novelty" -> txNovelty,
-    "tx_lang_confusion" -> txLangConfusion,
-    "tx_sentence_stats" -> txSentenceStats,
-    "tx_charset_profile" -> txCharsetProfile,
-    "tx_gopher_rules" -> txGopherRules,
-    "tx_rarity" -> txRarity,
-    "tx_bpe_merges" -> txBpeMerges,
-    "tx_crossdup" -> txCrossdup,
-    "tx_diversity" -> txDiversity,
-    "tx_countmin_freq" -> txCountminFreq,
-    "tx_length_histogram" -> txLengthHistogram,
-    "tx_pii" -> txPii,
-    "tx_contamination" -> txContamination,
-    "tx_repetition" -> txRepetition,
-    "tx_tfidf_top_terms" -> txTfidfTopTerms,
-    "tx_bigram_freq_score" -> txBigramFreqScore,
-    "tx_langid" -> txLangid,
-    "tx_quality" -> txQuality,
-    "tx_tokens" -> txTokens,
-    "tx_fertility" -> txFertility,
-    "tx_fingerprint" -> txFingerprint)
-
-  val oracles: Map[String, String] = Map(
-    "tx_readability" -> txReadabilitySql,
-    "tx_unigram_logprob" -> txUnigramLogprobSql,
-    "tx_zipf" -> txZipfSql,
-    "tx_bigram_stats" -> txBigramStatsSql,
-    "tx_lang_confusion" -> txLangConfusionSql,
-    "tx_sentence_stats" -> txSentenceStatsSql,
-    "tx_charset_profile" -> txCharsetProfileSql,
-    "tx_gopher_rules" -> txGopherRulesSql,
-    "tx_rarity" -> txRaritySql,
-    "tx_bpe_merges" -> txBpeMergesSql,
-    "tx_crossdup" -> txCrossdupSql,
-    "tx_novelty" -> txNoveltySql,
-    "tx_diversity" -> txDiversitySql,
-    "tx_countmin_freq" -> txCountminFreqSql,
-    "tx_length_histogram" -> txLengthHistogramSql,
-    "tx_pii" -> txPiiSql,
-    "tx_contamination" -> txContaminationSql,
-    "tx_repetition" -> txRepetitionSql,
-    "tx_tfidf_top_terms" -> txTfidfTopTermsSql,
-    "tx_bigram_freq_score" -> txBigramFreqScoreSql,
-    "tx_langid" -> txLangidSql,
-    "tx_quality" -> txQualitySql,
-    "tx_tokens" -> txTokensSql,
-    "tx_fertility" -> txFertilitySql,
-    "tx_fingerprint" -> txFingerprintSql)
+  /** The registered text-analysis queries. `fanned`: tokenize, regex
+    * and n-gram kernels over the text column.
+    */
+  val registry: Seq[Query] = Seq(
+    Query("tx_readability", txReadability, txReadabilitySql, fanned),
+    Query("tx_unigram_logprob", txUnigramLogprob, txUnigramLogprobSql),
+    Query("tx_zipf", txZipf, txZipfSql, fanned),
+    Query("tx_bigram_stats", txBigramStats, txBigramStatsSql, fanned),
+    Query("tx_novelty", txNovelty, txNoveltySql, fanned),
+    Query("tx_lang_confusion", txLangConfusion, txLangConfusionSql, fanned),
+    Query("tx_sentence_stats", txSentenceStats, txSentenceStatsSql),
+    Query("tx_charset_profile", txCharsetProfile, txCharsetProfileSql, fanned),
+    Query("tx_gopher_rules", txGopherRules, txGopherRulesSql, fanned),
+    Query("tx_rarity", txRarity, txRaritySql),
+    Query("tx_bpe_merges", txBpeMerges, txBpeMergesSql),
+    Query("tx_crossdup", txCrossdup, txCrossdupSql, fanned),
+    Query("tx_diversity", txDiversity, txDiversitySql, fanned),
+    Query("tx_countmin_freq", txCountminFreq, txCountminFreqSql, fanned),
+    Query("tx_length_histogram", txLengthHistogram, txLengthHistogramSql),
+    Query("tx_pii", txPii, txPiiSql, fanned),
+    Query("tx_contamination", txContamination, txContaminationSql, fanned),
+    Query("tx_repetition", txRepetition, txRepetitionSql, fanned),
+    Query("tx_tfidf_top_terms", txTfidfTopTerms, txTfidfTopTermsSql, fanned),
+    Query("tx_bigram_freq_score", txBigramFreqScore,
+      txBigramFreqScoreSql, fanned),
+    Query("tx_langid", txLangid, txLangidSql, fanned),
+    Query("tx_quality", txQuality, txQualitySql, fanned),
+    Query("tx_tokens", txTokens, txTokensSql, fanned),
+    Query("tx_fertility", txFertility, txFertilitySql, fanned),
+    Query("tx_fingerprint", txFingerprint, txFingerprintSql, fanned))
 }

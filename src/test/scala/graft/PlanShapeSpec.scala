@@ -239,14 +239,14 @@ class PlanShapeSpec extends SparkSpec {
     // The exchange keys for dd_exact are the two fingerprint columns. The
     // one allowed text-carrying exchange is the layout-conditional scan
     // fan-out (REPARTITION_BY_NUM origin, Tables.maybeFanout) — but
-    // dd_exact is NOT in Tables.fanoutQueries (its first operation is a
+    // dd_exact's record does not fan out (its first operation is a
     // map-side fingerprint dedup), so for THIS query no text-carrying
     // exchange of any origin is legitimate (ADVICE r17 #5: a blanket
     // REPARTITION_BY_NUM waiver would hide a future bug that accidentally
     // fans dd_exact's text out). An algorithmic (ENSURE_REQUIREMENTS)
     // reshuffle of text stays a failure for every dedup query.
-    assert(!Tables.fanoutQueries.contains("dd_exact"),
-      "dd_exact joined the fan-out allowlist — re-tighten this gate")
+    assert(SparkEntry.registry.find(_.name == "dd_exact").get.fanout.isEmpty,
+      "dd_exact's record now fans out — re-tighten this gate")
     val p = plan("dd_exact")
     val exchanges = p.linesIterator.filter(_.contains("Exchange hashpartitioning"))
     assert(exchanges.forall(l => !l.contains("text#")),

@@ -699,7 +699,7 @@ class StreamingSpec extends SparkSpec {
         r.getLong(r.fieldIndex("n_purchases")),
         r.getLong(r.fieldIndex("n_errors")))
     val streamed = spark.table("ab_timeline_test").collect().map(key).toSet
-    val batch = EventOps.queries("ev_ab_timeline")(spark, sf)
+    val batch = SparkEntry.queries("ev_ab_timeline")(spark, sf)
       .collect().map(key).toSet
     assert(batch.nonEmpty && streamed == batch,
       s"${(streamed -- batch).size} extra / ${(batch -- streamed).size} missing")

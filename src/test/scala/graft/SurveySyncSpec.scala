@@ -57,17 +57,25 @@ class SurveySyncSpec extends AnyFunSuite {
   /** Registering a query without wiring its oracle silently downgrades the
     * driver's gate to a rows-only check (caught live in r15: ct_read_load
     * shipped with a written-but-unregistered oracle and the full-gate OK
-    * count just looked one lower). Every registered query must have an
-    * oracleSql entry unless it is on the DECLARED rows-only list.
+    * count just looked one lower). Every record must carry an oracle
+    * unless it is on the DECLARED rows-only list.
     */
   test("every registered query has an oracle unless declared rows-only") {
     val rowsOnly = Set("q_approx_distinct") // approximate by design (§2)
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnly
-    val phantom = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty,
-      s"registered without an oracle: ${missing.toSeq.sorted.mkString(", ")}")
-    assert(phantom.isEmpty,
-      s"oracle without a registered query: ${phantom.toSeq.sorted.mkString(", ")}")
+    val without = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
+    assert(without.toSet == rowsOnly,
+      s"records without an oracle: ${without.sorted.mkString(", ")}; " +
+        s"declared rows-only: ${rowsOnly.mkString(", ")}")
+  }
+
+  /** `SparkEntry.queries` is a map over the concatenated records of all
+    * operator objects, so two records with one name would silently keep
+    * one builder and one oracle.
+    */
+  test("record names are unique across all operator objects") {
+    val dups = SparkEntry.registry.groupBy(_.name).filter(_._2.size > 1).keys
+    assert(dups.isEmpty,
+      s"names registered more than once: ${dups.toSeq.sorted.mkString(", ")}")
   }
 
   /** ADVICE r16 #2: `SparkEntry.materializeCtes` is a regex rewrite keyed
@@ -170,16 +178,5 @@ class SurveySyncSpec extends AnyFunSuite {
       s"ORACLE_TIMES.json trails the registry by ${missing.size}: " +
         missing.toSeq.sorted.take(5).mkString(", ") +
         " — regenerate after the last oracle lands")
-  }
-
-  /** The scan fan-out allowlist is keyed by registry names; a rename that
-    * misses the list would silently turn the per-query decision into the
-    * default. Typos/stale names fail here.
-    */
-  test("fan-out allowlist names are registered queries") {
-    val stale = Tables.fanoutQueries -- SparkEntry.queries.keySet
-    assert(stale.isEmpty,
-      s"Tables.fanoutQueries entries not in the registry: " +
-        stale.toSeq.sorted.mkString(", "))
   }
 }
